@@ -151,11 +151,11 @@ def run() -> dict:
     # --- flagship: pages geocoded + cover-joined per second -----------------
     # Input is the STORED pages table (materialized to parquet untimed — the
     # north-rule input is an Iceberg table of pages, so the timed section is
-    # scan -> fused geocode UDF -> broadcast cover join -> tiny agg, not the
+    # scan -> fused geocode UDF -> cover lookup kernel -> tiny agg, not the
     # synthetic fixture's generation).  geoparse+project+encode fused in ONE
-    # Arrow crossing; cover lookup is per-depth broadcast left-joins (zero
-    # shuffle of the fact table); the only shuffle is the final tiny
-    # per-municipality agg.
+    # Arrow crossing; the cover lookup is a second Arrow UDF (per-depth
+    # searchsorted, no join, zero shuffle of the fact table); the only
+    # shuffle is the final tiny per-municipality agg.
     from co_new_spark.sources.pages import materialize_pages
 
     cover = load_citycover(spark)
@@ -385,7 +385,7 @@ def run() -> dict:
         out["scaling"] = run_pairs({**env, "SCALING_JOB": "flagship"})
         # Optional second pair on a SHUFFLE-BOUND job (exact-dedup shape:
         # the full fact table exchanges on its fingerprint) — the flagship's
-        # cover join is broadcast-only, so this evidences the exchange path
+        # cover lookup shuffles nothing, so this evidences the exchange path
         # separately.  Off by default to bound bench wall time.
         if os.environ.get("SPARK_GRAFT_SCALING_SHUFFLE", "0") == "1":
             out["scaling_shuffle"] = run_pairs({**env, "SCALING_JOB": "shuffle"})

@@ -57,6 +57,18 @@ def _to_np(s: pd.Series) -> np.ndarray:
     return s.to_numpy(dtype=np.float64, na_value=np.nan)
 
 
+def single_eval(udf):
+    """Mark a deterministic UDF so every row evaluates it exactly once.
+
+    Catalyst pushes a filter on a UDF's output below its projection by
+    copying the UDF into the filter, so ``filter(cell >= 0)`` would run the
+    kernel twice (two ArrowEvalPython nodes).  A non-deterministic
+    expression is a boundary no filter crosses.  The costs: filters on other
+    columns stay above the UDF too (apply them first), and a stage retry
+    treats a shuffle keyed on the output as indeterminate and re-runs it."""
+    return udf.asNondeterministic()
+
+
 @lru_cache(maxsize=None)
 def _encode_a_udf(ndigits: int):
     @F.pandas_udf(StringType())
@@ -87,7 +99,7 @@ def _encode_b_cell_udf(rbits: int):
         cell = cells.pack(bits, np.full(bits.shape, 4 + rbits, dtype=np.int64))
         return pd.Series(np.where(valid & finite, cell, -1))
 
-    return enc
+    return single_eval(enc)
 
 
 def encode_b_cell(lat: Column, lon: Column, rbits: int) -> Column:
@@ -103,7 +115,7 @@ def _xy_cell_udf(rbits: int):
         cell = cells.pack(bits, np.full(bits.shape, 4 + rbits, dtype=np.int64))
         return pd.Series(np.where(valid, cell, -1))
 
-    return enc
+    return single_eval(enc)
 
 
 def xy_to_cell_b(x: Column, y: Column, rbits: int) -> Column:
@@ -131,7 +143,7 @@ def _latlon_to_xy_cell_udf(rbits: int):
         return pd.DataFrame({"x": x, "y": y,
                              "cell": np.where(valid & finite, cell, -1)})
 
-    return enc
+    return single_eval(enc)
 
 
 def latlon_to_xy_cell(lat: Column, lon: Column, rbits: int) -> Column:
@@ -224,7 +236,7 @@ def _encode_b_cell_from_text_udf(rbits: int):
         cell = cells.pack(bits, np.full(bits.shape, 4 + rbits, dtype=np.int64))
         return pd.Series(np.where(valid & f, cell, -1))
 
-    return enc
+    return single_eval(enc)
 
 
 def encode_b_cell_from_text(text: Column, rbits: int) -> Column:
@@ -232,7 +244,7 @@ def encode_b_cell_from_text(text: Column, rbits: int) -> Column:
     fallback — same precedence as functions.text.parse_lat) + project +
     encode to a Grid B cell in ONE Arrow crossing; -1 where no coordinates
     or off-grid.  This is the flagship hot path: regex runs vectorized in
-    pandas instead of four interpreted JVM regexp_extracts per row.
+    pyarrow's RE2 instead of four interpreted JVM regexp_extracts per row.
     """
     return _encode_b_cell_from_text_udf(rbits)(text)
 

@@ -21,8 +21,8 @@ Two tiers, by float contract:
 
 Why: the fused Arrow kernel is fast (one crossing), but a crossing is still
 32 python workers, serialization, and GIL-bound regex; the native path keeps
-the ENTIRE flagship — regexp_extract -> trig series -> lattice/Morton bit
-math -> broadcast cover join — inside one codegen stage, the design rule
+the ENTIRE flagship geocode — regexp_extract -> trig series ->
+lattice/Morton bit math — inside one codegen stage, the design rule
 README.md states ("the fact table crosses the Python boundary at most once";
 here: zero times).
 """

@@ -1,29 +1,41 @@
 """Cell-cover join: point-cells vs mixed-precision jurisdiction covers (A21/B8).
 
-Semantics from /root/reference/data/citycover.csv: each municipality's
+Semantics from the reference's citycover.csv: each municipality's
 footprint is a set of Grid B cells at *mixed* depths (3-hex cells next to
 4-hex+half-bit cells).  A point matches a municipality when any cover cell is
 a prefix-ancestor of the point's cell.
 
-Scale strategy (SURVEY.md §2.B8): the naive formulation is an interval join
-(point_key BETWEEN cover.lo AND cover.hi) -> BroadcastNestedLoopJoin, which
-dies at 10^12 rows.  Rewrite: covers exist at only a handful of distinct
-depths D (|D| <= ~8), so compute each point-cell's ancestor at every d in D
-(cheap native bit-shifts, map-side) and do ONE hash equi-join on the ancestor
-cell id against the broadcast cover dim.  No shuffle of the fact table at all
-when the dim is broadcast.
+Scale strategy (SURVEY.md §2.B8): the cover is driver-tiny (~14k cells) and
+occurs at a handful of distinct depths; the points are fact-sized.  So the
+lookup is array work, not a join: ``_cover_kernel`` collects the cover once
+per call (no shuffle), keeps the min isolabel per cover cell in one sorted
+cell array per depth, and ships those arrays inside ONE Arrow-batched UDF.
+Per batch, a point's ancestor at each cover depth is a bit-shift and its
+match is one ``np.searchsorted``.  The fact table is never shuffled or
+joined, and no broadcast is built.  A single sweep over disjoint Morton
+segments would be one search instead of one per depth, but it can match a
+point shallower than the deepest cover cell to a cell that does not contain
+it; ancestor equality per depth is exactly the prefix join at any depth.
 
-Border cells legitimately appear in several municipalities' covers; the join
-therefore yields candidate sets.  ``cover_lookup_best`` picks the
-deterministic min(isolabel_ext) (exact disambiguation = PIP refinement, A20).
+Border cells legitimately appear in several municipalities' covers.
+``cover_lookup_best`` picks the deterministic min(isolabel_ext) (exact
+disambiguation = PIP refinement, A20); ``cover_join_candidates`` keeps them all.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..functions import cells_sql
+from ..functions.geo import single_eval
+from ..grid import cells
+
+_BEST = StructType([StructField("isolabel_ext", StringType()),
+                    StructField("cover_cell", LongType())])
 
 
 def cover_depths(cover: DataFrame) -> list[int]:
@@ -48,121 +60,94 @@ def cover_join_candidates(points: DataFrame, cover: DataFrame,
     return exploded.join(F.broadcast(dim), "__anc").drop("__anc")
 
 
+def _cover_kernel(cover: DataFrame, deepest: bool):
+    """The shared lookup UDF over ``cover`` (overlay rows dropped): point
+    cell -> min isolabel over all containing cover cells, or, with
+    ``deepest``, struct(isolabel_ext, cover_cell) of the deepest containing
+    cell (min isolabel on ties).  NULL isolabel where nothing contains it."""
+    if "kind" in cover.columns:
+        cover = cover.filter(F.col("kind") == "cover")
+    pdf = cover.select("cell", "isolabel_ext").toPandas()
+    cell = pdf["cell"].to_numpy(dtype=np.int64, na_value=-1)
+    if ((cell < 0) | (cells.depth(cell) > cells.MAXB)).any():
+        raise ValueError(f"cover column 'cell' must hold cells >= 0 of depth <= {cells.MAXB}")
+    if pdf["isolabel_ext"].isna().any():
+        raise ValueError("cover column 'isolabel_ext' must be non-null")
+    names, rank = np.unique(pdf["isolabel_ext"].to_numpy(dtype=object),
+                            return_inverse=True)
+    order = np.lexsort((rank, cell))          # min rank first within a cell
+    cell, first = np.unique(cell[order], return_index=True)
+    rank = rank[order][first]
+    depth = cells.depth(cell)
+    levels = [(d, cell[depth == d], rank[depth == d])
+              for d in sorted(set(depth.tolist()), reverse=deepest)]
+    none = len(names)
+    labels = np.append(names, None)
+
+    def lookup(c: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        best = np.full(len(c), none)
+        hit_cell = np.full(len(c), -1, dtype=np.int64)
+        nb = cells.depth(c)
+        for d, keys, ranks in levels:   # each cell's keys are sorted
+            anc = (((c >> 6) >> np.maximum(nb - d, 0)) << 6) | d
+            i = np.minimum(np.searchsorted(keys, anc), len(keys) - 1)
+            better = (best == none) if deepest else (ranks[i] < best)
+            hit = (c >= 0) & (nb >= d) & (keys[i] == anc) & better
+            best = np.where(hit, ranks[i], best)
+            hit_cell = np.where(hit, anc, hit_cell)
+        return best, hit_cell
+
+    if deepest:
+        @F.pandas_udf(_BEST)
+        def kernel(c: pd.Series) -> pd.DataFrame:
+            best, hit_cell = lookup(c.to_numpy(dtype=np.int64, na_value=-1))
+            return pd.DataFrame({"isolabel_ext": labels[best], "cover_cell": hit_cell})
+    else:
+        @F.pandas_udf(StringType())
+        def kernel(c: pd.Series) -> pd.Series:
+            return pd.Series(labels[lookup(c.to_numpy(dtype=np.int64, na_value=-1))[0]])
+
+    return single_eval(kernel)
+
+
 def cover_best_with_cell(points: DataFrame, cover: DataFrame,
                          cell_col: str = "cell") -> DataFrame:
     """points + (isolabel_ext, cover_cell): the DEEPEST cover cell containing
     each point (tie-break min isolabel), with zero fact-table shuffle.
-
-    A point's ancestor at any depth is unique, so "deepest match, then min
-    isolabel" decomposes row-locally: per-(cell, depth) min-isolabel dim
-    (driver-tiny) -> one broadcast LEFT join per distinct cover depth -> a
-    depth-DESCENDING coalesce picking the first (deepest) hit.  Same plan
-    shape as cover_lookup_best, but carries WHICH cover cell won — the
-    prefix the short-code suffix is computed against (A23).
-    """
-    joined = _per_depth_left_joins(points, cover, cell_col,
-                                   keep_anchor=True, descending=True)
-    if joined is None:
-        return (points.withColumn("isolabel_ext", F.lit(None).cast("string"))
-                .withColumn("cover_cell", F.lit(None).cast("long")).limit(0))
-    out, _iso_cols, depths = joined
-    structs = [F.when(
-        F.col(f"__i{d}").isNotNull(),
-        F.struct(F.col(f"__i{d}").alias("iso"),
-                 F.col(f"__a{d}").alias("cc"))) for d in depths]
-    best = F.coalesce(*structs) if len(structs) > 1 else structs[0]
-    return (out.withColumn("__best", best)
-            .filter(F.col("__best").isNotNull())
-            .withColumn("isolabel_ext", F.col("__best.iso"))
-            .withColumn("cover_cell", F.col("__best.cc"))
-            .drop("__best", *[c for d in depths for c in (f"__a{d}", f"__i{d}")]))
-
-
-def _per_depth_left_joins(points: DataFrame, cover: DataFrame,
-                          cell_col: str = "cell", keep_anchor: bool = False,
-                          descending: bool = False):
-    """Shared plan core (the ONLY builder of the per-depth min-iso dim):
-    one broadcast LEFT join per distinct cover depth against a per-cell
-    pre-minimized dim (min isolabel per cover cell — driver-tiny).
-    Returns (df, per-depth iso Columns, depths in join order), or None for
-    an empty cover dim.  ZERO shuffle of the fact table.
-
-    ``keep_anchor`` keeps the per-depth ancestor column ``__a{d}`` (callers
-    that need WHICH cover cell won, e.g. cover_best_with_cell); otherwise
-    it is dropped after each join.  ``descending`` joins deepest-first (the
-    coalesce order for deepest-match semantics)."""
-    spark = points.sparkSession
-    cov = cover.filter(F.col("kind") == "cover") if "kind" in cover.columns else cover
-    # ONE driver-side job builds the minimized dim; per-depth slices become
-    # local relations, so the N broadcast exchanges cost no extra Spark jobs.
-    dim_pdf = (cov.groupBy("cell", "depth")
-               .agg(F.min("isolabel_ext").alias("__iso")).toPandas())
-    depths = sorted((int(d) for d in dim_pdf["depth"].unique()),
-                    reverse=descending)
-    if not depths:
-        return None
-    out = points
-    iso_cols = []
-    for d in depths:
-        pdf_d = dim_pdf[dim_pdf.depth == d][["cell", "__iso"]].rename(
-            columns={"cell": f"__a{d}", "__iso": f"__i{d}"})
-        dim_d = spark.createDataFrame(pdf_d)
-        out = (out.withColumn(f"__a{d}", cells_sql.cell_ancestor_at(F.col(cell_col), d))
-               .join(F.broadcast(dim_d), f"__a{d}", "left"))
-        if not keep_anchor:
-            out = out.drop(f"__a{d}")
-        iso_cols.append(F.col(f"__i{d}"))
-    return out, iso_cols, depths
+    ``cover_cell`` is the prefix the short-code suffix is computed
+    against (A23)."""
+    best = _cover_kernel(cover, deepest=True)(F.col(cell_col))
+    return (points.withColumn("__best", best)
+            .filter(F.col("__best.isolabel_ext").isNotNull())
+            .withColumns({"isolabel_ext": F.col("__best.isolabel_ext"),
+                          "cover_cell": F.col("__best.cover_cell")})
+            .drop("__best"))
 
 
 def cover_anti(points: DataFrame, cover: DataFrame,
                cell_col: str = "cell", keep: list[str] | None = None) -> DataFrame:
     """Spatial ANTI-join: the points matched by NO cover cell at any depth
     (the complement of cover_lookup_best) — uncovered/out-of-jurisdiction
-    detection.  Identical per-depth broadcast LEFT-join plan, keeping the
-    all-NULL rows instead: still zero shuffle of the fact table, unlike a
-    generic left_anti against a materialized hit set (which would shuffle
-    fact-sized data on the join key)."""
+    detection, with zero fact-table shuffle (a generic left_anti against a
+    materialized hit set would shuffle fact-sized data on the join key)."""
     keep = keep or list(points.columns)
-    joined = _per_depth_left_joins(points, cover, cell_col)
-    if joined is None:  # empty cover: every point is uncovered
-        return points.select(*keep)
-    out, iso_cols, depths = joined
-    null_all = iso_cols[0].isNull() if len(iso_cols) == 1 else (
-        F.least(*iso_cols).isNull())
-    return (out.filter(null_all)
-               .drop(*[f"__i{d}" for d in depths])
-               .select(*keep))
+    best = _cover_kernel(cover, deepest=False)(F.col(cell_col))
+    return points.withColumn("__iso", best).filter(F.col("__iso").isNull()).select(*keep)
 
 
 def cover_lookup_best(points: DataFrame, cover: DataFrame,
                       cell_col: str = "cell", keep: list[str] | None = None,
                       dedup: bool = True) -> DataFrame:
-    """Deterministic single-match cover lookup (min isolabel per point).
-
-    Fast path: one broadcast LEFT join per distinct cover depth against a
-    per-cell pre-minimized dim (min isolabel per cover cell — driver-tiny),
-    then ``least`` across depths.  min-per-cell then min-across-depths ==
-    min over all candidates, so semantics match the explode+groupBy
-    formulation exactly — but with ZERO shuffle of the fact table and no
-    explode blow-up (measured ~5x on the 1M-page flagship).
+    """Deterministic single-match cover lookup (min isolabel per point),
+    with zero fact-table shuffle and no explode blow-up.
 
     ``dedup=True`` additionally collapses duplicate ``keep`` tuples (the
     historical contract); pass False on row-level pipelines to stay
     shuffle-free.
     """
     keep = keep or list(points.columns)
-    joined = _per_depth_left_joins(points, cover, cell_col)
-    if joined is None:  # empty cover dim: zero matches, stable schema
-        return points.select(*keep).withColumn(
-            "isolabel_ext", F.lit(None).cast("string")).limit(0)
-    out, iso_cols, depths = joined
-    best = iso_cols[0] if len(iso_cols) == 1 else F.least(*iso_cols)
-    out = (out.withColumn("isolabel_ext", best)
-           .filter(F.col("isolabel_ext").isNotNull())
-           .drop(*[f"__i{d}" for d in depths]))
+    best = _cover_kernel(cover, deepest=False)(F.col(cell_col))
+    out = points.withColumn("isolabel_ext", best).filter(F.col("isolabel_ext").isNotNull())
     if dedup:
-        out = out.groupBy(*keep).agg(F.min("isolabel_ext").alias("isolabel_ext"))
-    else:
-        out = out.select(*keep, "isolabel_ext")
-    return out
+        return out.groupBy(*keep).agg(F.min("isolabel_ext").alias("isolabel_ext"))
+    return out.select(*keep, "isolabel_ext")

@@ -146,7 +146,7 @@ def _default_syn(spark: SparkSession) -> DataFrame:
 
 
 def g_cover_lookup_events(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-municipality point counts via the per-depth broadcast cover join,
+    """Per-municipality point counts via the per-depth cover lookup kernel,
     value-checked against the SQL restatement of the same prefix algebra."""
     cells = _points_cells(spark, sf)
     hit = cover_lookup_best(cells, load_citycover(spark), keep=["event_id"],
@@ -407,8 +407,8 @@ def _g_seat_cells(spark: SparkSession, sf: str) -> DataFrame:
 def g_cover_anti(spark: SparkSession, sf: str) -> DataFrame:
     """B10 spatially: grid-valid points covered by NO jurisdiction, rolled up
     per L0 — uncovered-territory detection.  Zero fact-table shuffle
-    (operators.cover.cover_anti keeps the all-NULL rows of the same
-    per-depth broadcast LEFT-join plan)."""
+    (operators.cover.cover_anti keeps the unmatched rows of the same
+    per-depth lookup kernel)."""
     cells = _points_cells(spark, sf)
     un = cover_anti(cells, load_citycover(spark), keep=["event_id", "cell"])
     return un.groupBy(cells_sql.cell_l0_digit(F.col("cell")).alias("l0")).agg(
@@ -431,7 +431,7 @@ GROUP BY 1
 # ---------------------------------------------------------------------------
 # geo_cover_suffix_probe — all FOUR base16h suffix families (plain hex,
 # G/Q 1-bit, H/M/R/V 2-bit, J..Z 3-bit) exercised through the real per-depth
-# broadcast cover join.  The synthetic events only ever land in depth-7/12/17
+# cover lookup.  The synthetic events only ever land in depth-7/12/17
 # covers, so the 2-bit family (e.g. CO-ANT-Sabaneta, citycover.csv:99 — all
 # 25 cells are 5-hex+2-bit) was previously pytest-only.  Probe points sit at
 # cover-cell centers; the center of a depth-d cell encodes at depth 30 as
@@ -445,8 +445,8 @@ _PROBE_CAP = 50  # cap the populous depths (12, 17); 7 and 22 run complete
 
 def g_cover_suffix_probe(spark: SparkSession, sf: str) -> DataFrame:
     """Probe points at cover-cell centers of every suffix family, resolved
-    against the FULL dims via cover_best_with_cell (per-depth broadcast
-    joins, zero fact shuffle).  ``sf`` is unused: the probe set derives from
+    against the FULL dims via cover_best_with_cell (per-depth lookup
+    kernel, zero fact shuffle).  ``sf`` is unused: the probe set derives from
     the reference dims alone (same registry signature as every entry)."""
     import numpy as np
     import pandas as pd
@@ -554,7 +554,7 @@ FROM ex GROUP BY isolabel_ext ORDER BY isolabel_ext
 # geo_zonal_stats — raster -> vector zonal statistics (the canonical
 # raster<->vector analysis op): per-cell event raster aggregated into
 # jurisdiction zones by the cell-CENTER rule (the standard GIS rasterization
-# rule), zones resolved through the same per-depth broadcast cover join as
+# rule), zones resolved through the same per-depth cover lookup kernel as
 # A21.  Reference semantics: the jurisdiction covers of
 # /root/reference/data/citycover.csv are the zone layer.
 #
@@ -720,7 +720,7 @@ SQL_DISSOLVE = _sql_dissolve()
 # (the registry's integer float-protocol).
 #
 # Scale design: the only fact-sized work is the same per-municipality count
-# cover_lookup_events performs (per-depth broadcast cover join + ONE map-
+# cover_lookup_events performs (per-depth cover lookup kernel + ONE map-
 # side-combined groupBy).  Everything after runs on the cover dim (~5k
 # rows) and the municipality totals (~1.1k rows) — both bounded by the
 # FIXED reference dims, so the allocation joins are broadcast-sized by

@@ -131,8 +131,8 @@ _CV_R = 26  # refinement bits -> point depth 30 (> max cover depth 22)
 
 
 def g_cover_lookup(spark: SparkSession, sf: str) -> DataFrame:
-    """Fixture pages -> fused geoparse+geocode kernel -> the prefix-rewritten
-    broadcast cover join -> top-50 municipalities by page count."""
+    """Fixture pages -> fused geoparse+geocode kernel -> the per-depth
+    cover lookup kernel -> top-50 municipalities by page count."""
     cover = load_citycover(spark)
     pg = _fixture(spark)
     pts = pg.select(
@@ -229,7 +229,7 @@ def g_lang_mix(spark: SparkSession, sf: str) -> DataFrame:
     """Per-municipality language mixture of geocoded pages: the composition a
     geo-aware curation pipeline runs to pick per-region language quotas.
     Everything LIVE: stopword-ratio lang-ID (functions/text.py), fused
-    geoparse+TM+encode kernel, per-depth broadcast cover join.  ``share`` is
+    geoparse+TM+encode kernel, per-depth cover lookup kernel.  ``share`` is
     one double division of two BIGINTs, rounded — hash-stable."""
     from pyspark.sql import Window
 

@@ -1,7 +1,7 @@
 """Flagship end-to-end pipeline (SURVEY.md §3.4) with lineage + resume (M5).
 
-pages -> geoparse -> Grid B geocode (one Arrow crossing) -> broadcast cover
-join -> per-cell agg -> resumable partitioned write (L0-digit buckets) with
+pages -> geoparse -> Grid B geocode (one Arrow crossing) -> cover lookup
+kernel -> per-cell agg -> resumable partitioned write (L0-digit buckets) with
 the per-bucket lineage ledger.  Registered rows-only: the returned DataFrame
 is the METRICS LEDGER (bucket, n_rows, ...) so the driver check asserts the
 whole pipeline ran and committed every bucket.

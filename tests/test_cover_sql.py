@@ -167,7 +167,7 @@ def test_sabaneta_2bit_cover_end_to_end(spark):
     """The 2-bit suffix family (H/M/R/V, depth 22) exercised through the real
     cover path: CO-ANT-Sabaneta's cover (citycover.csv:99) is ENTIRELY
     5-hex+2-bit cells — a point at every cover-cell center resolves through
-    the per-depth broadcast join to exactly that cell, matching an
+    the per-depth cover lookup to exactly that cell, matching an
     independent python prefix-scan over the whole dim."""
     import pandas as pd
 
@@ -218,14 +218,24 @@ def test_sabaneta_2bit_cover_end_to_end(spark):
 def test_cover_anti_partitions_points(spark):
     """covered + uncovered == all grid-valid points; the two sets are disjoint
     (cover_anti is the exact complement of cover_lookup_best)."""
-    from pyspark.sql import functions as F
+    import pandas as pd
 
+    from co_new_spark.functions import geo
+    from co_new_spark.grid import cells as C
     from co_new_spark.operators.cover import cover_anti, cover_lookup_best
-    from co_new_spark.queries.geo_cover_sql import _points_cells
-    from co_new_spark.sources.reference_data import load_citycover
 
-    cells = _points_cells(spark, SF_SMALL)
-    cov = load_citycover(spark)
+    rng = np.random.default_rng(7)
+    lat, lon = rng.uniform(-4.2, 12.4, 2000), rng.uniform(-79.0, -66.9, 2000)
+    cells = (spark.createDataFrame(pd.DataFrame(
+                 {"event_id": np.arange(2000), "lat": lat, "lon": lon}))
+             .withColumn("cell", geo.encode_b_cell(F.col("lat"), F.col("lon"), 26))
+             .filter(F.col("cell") >= 0))
+    # mixed-depth cover over every third point's ancestors, two labels each
+    leaf = np.array(sorted(r.cell for r in cells.select("cell").collect()))[::3]
+    anc = C.parent(leaf, 30 - rng.choice([12, 17, 22, 26], len(leaf)))
+    cov = spark.createDataFrame(pd.DataFrame(
+        {"isolabel_ext": [f"CO-{k % 50:02d}" for k in range(2 * len(anc))],
+         "kind": "cover", "cell": np.concatenate([anc, anc])}))
     hit = {r.event_id for r in
            cover_lookup_best(cells, cov, keep=["event_id"], dedup=False)
            .select("event_id").collect()}
@@ -234,7 +244,7 @@ def test_cover_anti_partitions_points(spark):
     allv = {r.event_id for r in cells.select("event_id").collect()}
     assert hit | miss == allv
     assert not (hit & miss)
-    assert miss  # the fixture layout leaves genuinely uncovered territory
+    assert hit and miss  # the cover leaves genuinely uncovered territory
 
 
 def test_areal_interp_conserves_mass_and_orders_by_area(spark):

@@ -9,8 +9,8 @@ from pyspark.sql import functions as F
 
 from co_new_spark.functions import geo
 from co_new_spark.operators.cover import cover_lookup_best
+from co_new_spark.plans.audit import repeated_python_udfs
 from co_new_spark.sources.pages import pages
-from co_new_spark.sources.reference_data import load_citycover
 
 SF = "/root/testdata/sf0.01"
 SF_SMALL = "/root/testdata/sf0.001"
@@ -24,30 +24,57 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
-def test_cover_join_is_broadcast_only(spark):
-    """The cover lookup must never shuffle or sort-merge the fact table."""
-    cover = load_citycover(spark)
-    pg = pages(spark, 1000)
-    pts = pg.select("url", geo.encode_b_cell_from_text(F.col("text"), 26).alias("cell")) \
-            .filter(F.col("cell") >= 0)
-    hit = cover_lookup_best(pts, cover, keep=["url", "cell"], dedup=False)
-    plan = _plan(hit)
-    assert plan.count("BroadcastHashJoin") >= 4
-    assert "SortMergeJoin" not in plan
-    assert "Exchange hashpartitioning" not in plan  # zero fact-table shuffle
+def _cover(spark):
+    """Small mixed-depth cover: the 16 L0 cells (depth 4), one of them under
+    two labels, plus a nested depth-12 cell and an overlay row."""
+    l0 = [((k << 6) | 4, f"CO-{k:02d}") for k in range(16)]
+    rows = [(iso, "cover", c, 4) for c, iso in l0] + [
+        ("CO-00A", "cover", (0xC55 << 6) | 12, 12),
+        ("CO-XX", "cover", (12 << 6) | 4, 4),
+        ("CO-SEAT", "overlay", (13 << 6) | 4, 4)]
+    return spark.createDataFrame(rows, ["isolabel_ext", "kind", "cell", "depth"])
+
+
+def _geocoded(spark):
+    """Flagship geocode: pages -> fused geocode UDF -> filter on the cell."""
+    return pages(spark, 1000).select(
+        "url", geo.encode_b_cell_from_text(F.col("text"), 26).alias("cell")) \
+        .filter(F.col("cell") >= 0)
+
+
+def _lookup(spark):
+    return cover_lookup_best(_geocoded(spark), _cover(spark), keep=["url", "cell"], dedup=False)
+
+
+def _flagship(spark):
+    """geocode -> filter -> cover lookup -> filter -> per-label count."""
+    return _lookup(spark).groupBy("isolabel_ext").agg(F.count("*").alias("n"))
+
+
+def test_cover_lookup_is_join_free(spark):
+    """The cover lookup is one Arrow kernel: no join of any kind, no
+    broadcast and no shuffle of the fact table."""
+    plan = _plan(_lookup(spark))
+    for node in ("BroadcastHashJoin", "SortMergeJoin", "BroadcastNestedLoopJoin",
+                 "BroadcastExchange", "Exchange hashpartitioning"):
+        assert node not in plan, node
+    assert plan.count("ArrowEvalPython") == 2
 
 
 def test_flagship_has_single_shuffle(spark):
-    """geocode -> cover join -> agg: exactly ONE exchange (the final agg)."""
-    cover = load_citycover(spark)
-    pg = pages(spark, 1000)
-    pts = pg.select("url", geo.encode_b_cell_from_text(F.col("text"), 26).alias("cell")) \
-            .filter(F.col("cell") >= 0)
-    hit = cover_lookup_best(pts, cover, keep=["url", "cell"], dedup=False)
-    agg = hit.groupBy("isolabel_ext").agg(F.count("*").alias("n"))
-    plan = _plan(agg)
+    """geocode -> filter -> lookup -> filter -> agg: exactly ONE exchange
+    (the final agg), no join, and one Python crossing per UDF."""
+    plan = _plan(_flagship(spark))
+    for node in ("BroadcastHashJoin", "SortMergeJoin", "BroadcastNestedLoopJoin"):
+        assert node not in plan, node
     assert plan.count("Exchange hashpartitioning") == 1
+    assert plan.count("ArrowEvalPython") == 2
     assert "partial_count" in plan or "partial" in plan  # map-side combine
+
+
+def test_flagship_evaluates_each_udf_once(spark):
+    """The copied-UDF hazard gate on the flagship shape."""
+    assert repeated_python_udfs(_flagship(spark)) == []
 
 
 def test_parquet_filter_pushdown(spark):
@@ -99,10 +126,20 @@ def test_whole_stage_codegen_covers_generator(spark):
 
 
 def test_fused_udf_single_arrow_crossing(spark):
-    """Flagship geocode: exactly one ArrowEvalPython node (one crossing)."""
-    pg = pages(spark, 1000)
-    pts = pg.select("url", geo.encode_b_cell_from_text(F.col("text"), 26).alias("cell"))
-    assert _plan(pts).count("ArrowEvalPython") == 1
+    """Flagship geocode: exactly one ArrowEvalPython node (one crossing),
+    also when a filter on the cell could be pushed below the projection."""
+    assert _plan(_geocoded(spark)).count("ArrowEvalPython") == 1
+
+
+def test_sql_registered_geocode_single_arrow_crossing(spark):
+    """The same gate through the SQL surface (co_cell_from_text)."""
+    from co_new_spark.plans.register import register_functions
+
+    register_functions(spark)
+    pages(spark, 1000).createOrReplaceTempView("plan_shape_pages")
+    q = spark.sql("SELECT url, cell FROM (SELECT url, co_cell_from_text(text) AS cell "
+                  "FROM plan_shape_pages) WHERE cell >= 0")
+    assert _plan(q).count("ArrowEvalPython") == 1
 
 
 def test_bucketed_join_avoids_shuffle(spark, tmp_path):

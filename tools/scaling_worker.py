@@ -55,7 +55,7 @@ def main(cpus: int, n_pages: int) -> dict:
     def shuffle_job(src):
         # SHUFFLE-BOUND scaling evidence (SCALING_JOB=shuffle): exact-dedup
         # shape — fingerprint every page and shuffle the FULL fact table on
-        # the fingerprint (the flagship's cover join is broadcast-only, so
+        # the fingerprint (the flagship's cover lookup shuffles nothing, so
         # it exercises the map path; this pair exercises the exchange path).
         f = src.select(F.md5(F.col("text")).alias("fp"))
         per = f.groupBy("fp").agg(F.count("*").alias("n"))
