@@ -27,6 +27,7 @@ from pyspark.sql.types import (
 )
 
 from ..grid import cells, grids, proj
+from . import text as tx
 
 # ---------------------------------------------------------------------------
 # A1: geo-URI parsing — pure native Columns (no UDF)
@@ -36,16 +37,12 @@ def geo_uri_lat(uri: Column) -> Column:
     """'geo:LAT,LON' -> lat double (NULL if not a geo URI).
 
     Pattern shared with functions.text (single grammar source)."""
-    from .text import GEO_URI_RE
-
-    s = F.regexp_extract(uri, GEO_URI_RE, 1)
+    s = F.regexp_extract(uri, tx.GEO_URI_RE, 1)
     return F.when(s != "", s.cast("double"))
 
 
 def geo_uri_lon(uri: Column) -> Column:
-    from .text import GEO_URI_RE
-
-    s = F.regexp_extract(uri, GEO_URI_RE, 2)
+    s = F.regexp_extract(uri, tx.GEO_URI_RE, 2)
     return F.when(s != "", s.cast("double"))
 
 
@@ -90,14 +87,8 @@ def encode_a(lat: Column, lon: Column, ndigits: int = 9) -> Column:
 def _encode_b_cell_udf(rbits: int):
     @F.pandas_udf(LongType())
     def enc(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        la, lo = _to_np(lat), _to_np(lon)
-        x, y = proj.forward(la, lo)
-        finite = np.isfinite(x) & np.isfinite(y)
-        bits, valid = grids.grid_b_encode_xy(
-            np.where(finite, x, 0.0), np.where(finite, y, 0.0), rbits
-        )
-        cell = cells.pack(bits, np.full(bits.shape, 4 + rbits, dtype=np.int64))
-        return pd.Series(np.where(valid & finite, cell, -1))
+        x, y = proj.forward(_to_np(lat), _to_np(lon))
+        return pd.Series(cells.cell_b_from_xy(x, y, rbits))
 
     return single_eval(enc)
 
@@ -111,9 +102,7 @@ def encode_b_cell(lat: Column, lon: Column, rbits: int) -> Column:
 def _xy_cell_udf(rbits: int):
     @F.pandas_udf(LongType())
     def enc(x: pd.Series, y: pd.Series) -> pd.Series:
-        bits, valid = grids.grid_b_encode_xy(_to_np(x), _to_np(y), rbits)
-        cell = cells.pack(bits, np.full(bits.shape, 4 + rbits, dtype=np.int64))
-        return pd.Series(np.where(valid, cell, -1))
+        return pd.Series(cells.cell_b_from_xy(_to_np(x), _to_np(y), rbits))
 
     return single_eval(enc)
 
@@ -134,14 +123,9 @@ _BOX = StructType([StructField(n, DoubleType()) for n in ("xmin", "ymin", "xmax"
 def _latlon_to_xy_cell_udf(rbits: int):
     @F.pandas_udf(_XYC)
     def enc(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
-        la, lo = _to_np(lat), _to_np(lon)
-        x, y = proj.forward(la, lo)
-        finite = np.isfinite(x) & np.isfinite(y)
-        bits, valid = grids.grid_b_encode_xy(
-            np.where(finite, x, 0.0), np.where(finite, y, 0.0), rbits)
-        cell = cells.pack(bits, np.full(bits.shape, 4 + rbits, dtype=np.int64))
+        x, y = proj.forward(_to_np(lat), _to_np(lon))
         return pd.DataFrame({"x": x, "y": y,
-                             "cell": np.where(valid & finite, cell, -1)})
+                             "cell": cells.cell_b_from_xy(x, y, rbits)})
 
     return single_eval(enc)
 
@@ -205,36 +189,42 @@ def cell_b_center(cell: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"x": cx, "y": cy})
 
 
+def _parse_latlon(text: pd.Series, *patterns: str):
+    """Text -> (lat, lon) float64 arrays, NaN where no pattern matches.
+
+    ``patterns`` are functions.text's named-group grammars (single source;
+    RE2-safe constructs, so Java/RE2/Python engines agree — see text.py
+    note), tried in order; a later one runs only when some rows missed.
+    RE2 via pyarrow.compute (~4x pandas str.extract)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    arr = pa.Array.from_pandas(text.fillna("").astype(str), type=pa.string())
+    lat = lon = None
+    for pat in patterns:
+        g = pc.extract_regex(arr, pat)
+        if lat is None:
+            lat, lon = pc.struct_field(g, "lat"), pc.struct_field(g, "lon")
+        else:
+            lat = pc.coalesce(lat, pc.struct_field(g, "lat"))
+            lon = pc.coalesce(lon, pc.struct_field(g, "lon"))
+        if not lat.null_count:
+            break
+    return (pc.cast(lat, pa.float64()).to_numpy(zero_copy_only=False),
+            pc.cast(lon, pa.float64()).to_numpy(zero_copy_only=False))
+
+
 @lru_cache(maxsize=None)
 def _encode_b_cell_from_text_udf(rbits: int):
-    # RE2 via pyarrow.compute (~4x pandas str.extract).  Patterns come from
-    # functions.text (single source; RE2-safe constructs + explicit [ \t]
-    # separator so Java/RE2/Python engines agree — see text.py note).
-    from . import text as _tx
-
     @F.pandas_udf(LongType())
     def enc(text: pd.Series) -> pd.Series:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        arr = pa.Array.from_pandas(text.fillna("").astype(str))
-        g = pc.extract_regex(arr, _tx.GEO_URI_RE_NAMED)
-        g_lat = pc.struct_field(g, "lat")
-        if g_lat.null_count:  # pair fallback only when some rows missed geo:
-            p = pc.extract_regex(arr, _tx.PLAIN_PAIR_RE_NAMED)
-            lat_s = pc.coalesce(g_lat, pc.struct_field(p, "lat"))
-            lon_s = pc.coalesce(pc.struct_field(g, "lon"), pc.struct_field(p, "lon"))
-        else:
-            lat_s, lon_s = g_lat, pc.struct_field(g, "lon")
-        lat = pc.cast(lat_s, pa.float64()).to_numpy(zero_copy_only=False)
-        lon = pc.cast(lon_s, pa.float64()).to_numpy(zero_copy_only=False)
+        lat, lon = _parse_latlon(text, tx.GEO_URI_RE_NAMED,
+                                 tx.PLAIN_PAIR_RE_NAMED)
+        # rows without coordinates project as (0, 0) and are masked after:
+        # NaN inputs take a slow path through the TM transcendentals
         ok = np.isfinite(lat) & np.isfinite(lon)
         x, y = proj.forward(np.where(ok, lat, 0.0), np.where(ok, lon, 0.0))
-        f = ok & np.isfinite(x) & np.isfinite(y)
-        bits, valid = grids.grid_b_encode_xy(
-            np.where(f, x, 0.0), np.where(f, y, 0.0), rbits)
-        cell = cells.pack(bits, np.full(bits.shape, 4 + rbits, dtype=np.int64))
-        return pd.Series(np.where(valid & f, cell, -1))
+        return pd.Series(np.where(ok, cells.cell_b_from_xy(x, y, rbits), -1))
 
     return single_eval(enc)
 
@@ -319,12 +309,10 @@ def encode_a_from_uri(uri: pd.Series) -> pd.Series:
     """'geo:LAT,LON' -> 9-digit Grid A code in ONE Arrow crossing (A8 fused).
 
     The fully-fused fast path for the flagship pipeline: regex parse is also
-    available natively (geo_uri_lat/lon) when the plan wants pushdown first.
+    available natively (geo_uri_lat/lon) when the plan wants pushdown first;
+    both read the one geo: URI grammar, so they agree on every input.
     """
-    s = uri.fillna("").astype(str)
-    m = s.str.extract(r"geo:(-?\d+\.?\d*),(-?\d+\.?\d*)")
-    lat = pd.to_numeric(m[0], errors="coerce").to_numpy(dtype=np.float64)
-    lon = pd.to_numeric(m[1], errors="coerce").to_numpy(dtype=np.float64)
+    lat, lon = _parse_latlon(uri, tx.GEO_URI_RE_NAMED)
     codes = grids.osmcode_encode_a(lat, lon, 9)
     out = pd.Series(codes, dtype="object")
     out[(out == "") | ~np.isfinite(lat)] = None

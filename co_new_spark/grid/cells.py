@@ -31,6 +31,15 @@ def pack(bits, nbits) -> np.ndarray:
     return np.where(nbits >= 0, out, np.int64(-1))
 
 
+def cell_b_from_xy(x, y, rbits: int) -> np.ndarray:
+    """EPSG:9377 (x, y) -> Grid B cell at depth 4 + rbits; -1 for non-finite
+    or off-grid input.  The one numpy point-to-cell encoder."""
+    ok = np.isfinite(x) & np.isfinite(y)
+    bits, valid = grids.grid_b_encode_xy(np.where(ok, x, 0.0),
+                                         np.where(ok, y, 0.0), rbits)
+    return np.where(valid & ok, pack(bits, 4 + rbits), np.int64(-1))
+
+
 def unpack(cell) -> tuple[np.ndarray, np.ndarray]:
     cell = np.asarray(cell, dtype=np.int64)
     return (cell.astype(U) >> U(6)), (cell & np.int64(63))

@@ -264,16 +264,11 @@ def g_decode_geojson(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _sql_decode_geojson() -> str:
-    """VALUES oracle: every published L0 cell must have all 4 corners ok."""
-    import json as _json
-
-    ref = os.environ.get("CO_REFERENCE_DIR", "/root/reference")
-    with open(os.path.join(ref, "data", "grid256L0.geojson")) as fh:
-        feats = _json.load(fh)["features"]
-    vals = []
-    for f in feats:
-        code = f["properties"]["code"]
-        vals.append(f"({'0123456789abcdef'.index(code) * 64 + 4}, '{code}', 4)")
+    """VALUES oracle: every L0 cell must have all 4 corners ok.  The 16 L0
+    digits come from the grid spec (grids.L0_DIGIT_BY_JI), so building the
+    registry reads no file."""
+    digits = sorted(int(d) for d in grids.L0_DIGIT_BY_JI.ravel() if d >= 0)
+    vals = [f"({d * 64 + 4}, '{d:x}', 4)" for d in digits]
     return ("SELECT cell, code, n_corners_ok FROM (VALUES "
             + ", ".join(vals)
             + ") t(cell, code, n_corners_ok) ORDER BY cell")

@@ -311,29 +311,25 @@ _NG_RBITS = 26
 
 
 def g_native_geocode(spark: SparkSession, sf: str) -> DataFrame:
-    """The flagship geocode with ZERO Python crossings (functions/geo_native):
-    native regexp geoparse -> native Karney/Krueger TM forward -> native
-    lattice/Morton encode -> per-L0 rollup with cell extrema.
+    """Pins the flagship kernel's depth-26 encode (geo.xy_to_cell_b) against
+    SQL: fixture pages -> native geoparse -> forward TM (geo.latlon_to_xy)
+    -> depth-26 cell -> per-L0 rollup with cell extrema.
 
     Oracle split (mat.py protocol): the transcendental part — the projected
     (url, x, y) — is materialized, and the oracle re-derives the ENTIRE
-    depth-30 encode from those bytes through the SQL grid fragments
-    (l0_case/morton_ref — IEEE-exact ops only, so bit-identical by
-    construction).  The TM floats themselves are gated by the pytest parity
-    vs the Arrow kernel (0 mismatches measured on 1M synthetic pages) whose
-    projection is reference-verified (gridLib golden vectors)."""
-    from ..functions import geo_native
-    from ..functions import text as tx
+    encode from those bytes through the SQL grid fragments (l0_case/
+    morton_ref — IEEE-exact ops only, so bit-identical by construction).
+    The projection itself is reference-verified (gridLib golden vectors)."""
     from .mat import materialize
 
     pg = _fixture(spark).select("url", "text").distinct()
-    d = pg.withColumns({"lat": tx.parse_lat(F.col("text")),
-                        "lon": tx.parse_lon(F.col("text"))})
-    d = geo_native.with_tm_forward(d, "lat", "lon", "x", "y") \
-                  .select("url", "x", "y")
+    xy = geo.latlon_to_xy(txf.parse_lat(F.col("text")),
+                          txf.parse_lon(F.col("text")))
+    d = pg.select("url", xy.x.alias("x"), xy.y.alias("y"))
     d = materialize(d, "native_geocode_xy", key=sf)
-    d = geo_native.with_cell_from_xy(d, "x", "y", _NG_RBITS, "cell") \
-                  .filter(F.col("cell") >= 0)
+    d = d.withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"),
+                                              _NG_RBITS)) \
+         .filter(F.col("cell") >= 0)
     return (d.groupBy(cells_sql.cell_l0_digit(F.col("cell")).alias("l0"))
              .agg(F.count("*").alias("n_pages"),
                   F.min("cell").alias("min_cell"),
@@ -348,13 +344,13 @@ def _sql_native_geocode() -> str:
     ny, nx = (r + 1) // 2, r // 2
     return f"""
 WITH xy AS (
-  -- bounds tested on DOUBLES before any cast, mirroring with_cell_from_xy's
-  -- inb guard: an extreme-but-finite projected coordinate must MISMATCH as
-  -- an absent row (Spark yields -1), never crash the oracle's BIGINT cast.
-  -- The guard tests the DERIVED (x-X0)/SIDE — the exact expression Spark's
-  -- fi/fj check uses — so both engines share the same IEEE rounding at the
-  -- cell-matrix edge (raw-x bounds could round across the boundary within
-  -- ~1 ulp and admit a row on one side only)
+  -- bounds tested on DOUBLES before any cast, mirroring the inb guard of
+  -- grids.grid_b_encode_xy: an extreme-but-finite projected coordinate must
+  -- MISMATCH as an absent row (Spark yields -1), never crash the oracle's
+  -- BIGINT cast.  The guard tests the DERIVED (x-X0)/SIDE — the exact
+  -- expression the kernel's fi/fj check uses — so both engines share the
+  -- same IEEE rounding at the cell-matrix edge (raw-x bounds could round
+  -- across the boundary within ~1 ulp and admit a row on one side only)
   SELECT url, x, y FROM read_parquet('{mat_glob("native_geocode_xy")}')
   WHERE isfinite(x) AND isfinite(y)
     AND (x - {_X0!r}) / {_SIDE!r} >= 0.0

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions import cells_sql, geo
 from ..grid import grids
+from ..grid.cells import cell_b_from_xy
 from ..operators import tiles
 from ..sources.tables import load
 
@@ -261,7 +262,7 @@ def _bbox_cover_cells(xmin: float, ymin: float, xmax: float, ymax: float,
     The inclusive max lattice index is ceil(max/w) - 1: a box edge exactly on
     a cell boundary excludes that boundary's cell, an edge any amount above
     it includes it — no epsilon.  Cell ids come from the ONE canonical
-    encode (grids.grid_b_encode_xy on cell centers), not a re-derivation.
+    encode (cells.cell_b_from_xy on cell centers), not a re-derivation.
     """
     import math
 
@@ -276,9 +277,8 @@ def _bbox_cover_cells(xmin: float, ymin: float, xmax: float, ymax: float,
     gx, gy = np.meshgrid(np.arange(gx0, gx1 + 1), np.arange(gy0, gy1 + 1))
     cx = grids.L0_ORIGIN_X + (gx.ravel() + 0.5) * w
     cy = grids.L0_ORIGIN_Y + (gy.ravel() + 0.5) * w
-    bits, valid = grids.grid_b_encode_xy(cx, cy, rbits)
-    cells = (bits[valid] << 6) | (4 + rbits)
-    return [int(c) for c in cells]
+    cell = cell_b_from_xy(cx, cy, rbits)
+    return [int(c) for c in cell[cell >= 0]]
 
 
 def g_bbox_query(spark: SparkSession, sf: str) -> DataFrame:

@@ -17,12 +17,14 @@ ASSERTS = [
 
 
 def test_encode_a_udf(spark):
-    df = spark.createDataFrame([(u,) for u, _ in ASSERTS], ["uri"])
+    # "geo:4.,-74.1" is outside the geo: URI grammar (a dot needs digits)
+    cases = ASSERTS + [("geo:4.,-74.1", None)]
+    df = spark.createDataFrame([(u,) for u, _ in cases], ["uri"])
     out = df.select(
         geo.encode_a(geo.geo_uri_lat(F.col("uri")), geo.geo_uri_lon(F.col("uri"))).alias("c1"),
         geo.encode_a_from_uri(F.col("uri")).alias("c2"),
     ).collect()
-    exp = [c for _, c in ASSERTS]
+    exp = [c for _, c in cases]
     assert [r.c1 for r in out] == exp
     assert [r.c2 for r in out] == exp
 
@@ -45,6 +47,24 @@ def test_cell_b_udf_and_native_algebra(spark):
     assert out[1].code == "c358" and out[1].l0 == 0xC
     assert out[0].contained and out[1].contained
     assert out[2].cell == -1 and out[2].code is None and out[2].l0 == -1
+
+
+def test_xy_to_cell_b_matches_sql_every_depth(spark):
+    """The kernel's point-to-cell encode equals the SQL restatement of the
+    grid spec at even and odd refinement (11: n_first != n_second)."""
+    import duckdb
+
+    from co_new_spark.queries import geo_pages
+
+    xy = spark.read.parquet(geo_pages.FIXTURE_XY)
+    for r in (4, 8, 11, 26):
+        got = {row.url: row.cell for row in xy.select(
+            "url", geo.xy_to_cell_b(F.col("x"), F.col("y"), r).alias("cell"))
+            .collect()}
+        exp = dict(duckdb.sql(f"WITH {geo_pages._sql_xy_cells(r)} "
+                              "SELECT url, cell FROM cells").fetchall())
+        assert got == exp, r
+        assert sum(c >= 0 for c in got.values()) > len(got) // 2, r
 
 
 def test_native_interval_matches_numpy(spark):
@@ -258,3 +278,20 @@ def test_bench_headline_names_resolve():
     missing = [n for n in bench.HEADLINE if n not in REGISTRY]
     assert not missing, missing
     assert len(set(bench.HEADLINE)) == len(bench.HEADLINE)  # no dup timings
+
+
+def test_registry_import_reads_no_reference_file(tmp_path):
+    """Building the registry reads no file: it must import with the
+    reference directory empty."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = ("from co_new_spark.queries import REGISTRY; "
+            "print(len(REGISTRY))")
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True,
+        text=True, env={**os.environ, "CO_REFERENCE_DIR": str(tmp_path)})
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.split() == ["262"]
