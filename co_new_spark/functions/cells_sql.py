@@ -68,23 +68,12 @@ def cell_interval(cell: Column, maxb: int = MAXB) -> tuple[Column, Column]:
     return lo, hi
 
 
-def cell_point_key(cell: Column, maxb: int = MAXB) -> Column:
-    """Leaf-depth position key (== interval lo) for prefix joins."""
-    return cell_interval(cell, maxb)[0]
-
-
 def cell_contains(anc: Column, desc: Column) -> Column:
     """Prefix containment: anc is ancestor-or-equal of desc (native codegen)."""
     dk = cell_depth(desc) - cell_depth(anc)
     return (anc >= 0) & (desc >= 0) & (dk >= 0) & (
         _shiftright(cell_bits(desc), dk) == cell_bits(anc)
     )
-
-
-def cell_truncate_bits(cell: Column, depth) -> Column:
-    """Leading ``depth`` bits of the cell's bit string (for per-level equi-joins)."""
-    depth = depth if isinstance(depth, Column) else F.lit(depth)
-    return _shiftright(cell_bits(cell), cell_depth(cell) - depth)
 
 
 def cell_children(cell: Column, k: int = 2) -> Column:

@@ -84,11 +84,6 @@ def interval(cell, maxb: int = MAXB) -> tuple[np.ndarray, np.ndarray]:
     return lo, hi
 
 
-def point_key(cell, maxb: int = MAXB) -> np.ndarray:
-    """A leaf-depth point cell -> its position key at depth maxb (== interval lo)."""
-    return interval(cell, maxb)[0]
-
-
 # ---------------------------------------------------------------------------
 # Grid-B global lattice coordinates (for neighbors / ring expansion)
 # ---------------------------------------------------------------------------

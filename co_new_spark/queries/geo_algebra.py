@@ -20,7 +20,8 @@ from ..functions import cells_sql, geo
 from ..grid import grids
 from ..operators import pip
 from ..operators.knn import ring_cells_udf
-from .geospatial import _XENG, _YENG, _event_points
+from .geospatial import _EVENT_XY, _XENG, _YENG, _event_points
+from .sql_grid import cells_cte
 
 X0 = grids.L0_ORIGIN_X
 Y0 = grids.L0_ORIGIN_Y
@@ -52,40 +53,6 @@ def _digit_to_i_case(d: str = "digit") -> str:
 from .sql_grid import morton_ref as _sql_ref  # single-source Morton SQL
 
 
-def _sql_cells_cte(r: int, src: str | None = None) -> str:
-    """CTE chain computing the depth-(4+r) packed cell per point (SQL spec).
-
-    ``src``: a SELECT yielding (event_id, x, y); defaults to the shared
-    event-point derivation, so every caller shares ONE copy of the
-    floor/Morton/L0-case arithmetic regardless of where its points come from
-    (events, raster-cell centers, ...).
-    """
-    ny, nx = (r + 1) // 2, r // 2
-    if src is None:
-        src = f"SELECT event_id, {_XENG} AS x, {_YENG} AS y FROM events"
-    return f"""
-pts AS ({src}),
-fr AS (
-  SELECT event_id, x, y,
-         CAST(floor((x - {X0!r}) / {SIDE!r}) AS BIGINT) AS i,
-         CAST(floor((y - {Y0!r}) / {SIDE!r}) AS BIGINT) AS j,
-         (x - {X0!r}) / {SIDE!r} - floor((x - {X0!r}) / {SIDE!r}) AS u,
-         (y - {Y0!r}) / {SIDE!r} - floor((y - {Y0!r}) / {SIDE!r}) AS v
-  FROM pts),
-dg AS (
-  SELECT event_id, x, y, i, j, {_l0_case()} AS digit,
-         CAST(floor(u * {1 << nx}) AS BIGINT) AS ix,
-         CAST(floor(v * {1 << ny}) AS BIGINT) AS iy
-  FROM fr),
-cells AS (
-  SELECT event_id, x, y, i, j, digit, ix, iy,
-         CASE WHEN digit >= 0
-              THEN ((digit * {1 << r} + {_sql_ref(r)}) * 64 + {4 + r})
-              ELSE -1 END AS cell
-  FROM dg)
-"""
-
-
 # ---------------------------------------------------------------------------
 # geo_parent_rollup — leaf agg at depth 12, native re-agg at depths 8 and 4
 # (A13/B15: hierarchy rollup = shift arithmetic, no re-scan of the fact table)
@@ -106,7 +73,7 @@ def g_parent_rollup(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_PARENT_ROLLUP = f"""
-WITH {_sql_cells_cte(8)},
+WITH {cells_cte(_EVENT_XY, 8, ['event_id'])},
 leaf AS (SELECT cell, count(*) AS n FROM cells WHERE cell >= 0 GROUP BY cell)
 SELECT ((cell >> 6) >> 8) * 64 + 4 AS cell_l0,
        ((cell >> 6) >> 4) * 64 + 8 AS cell_l1,
@@ -130,7 +97,7 @@ def g_children(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_CHILDREN = f"""
-WITH {_sql_cells_cte(2)},
+WITH {cells_cte(_EVENT_XY, 2, ['event_id'])},
 par AS (SELECT DISTINCT cell FROM cells WHERE cell >= 0)
 SELECT cell AS parent,
        (((cell >> 6) * 4 + o) * 64 + (cell & 63) + 2) AS child
@@ -152,7 +119,7 @@ def g_neighbors(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_NEIGHBORS = f"""
-WITH {_sql_cells_cte(4)},
+WITH {cells_cte(_EVENT_XY, 4, ['event_id'])},
 cc AS (SELECT DISTINCT cell, j * 4 + iy AS gy, i * 4 + ix AS gx
        FROM cells WHERE cell >= 0),
 cand AS (
@@ -196,7 +163,7 @@ def g_cell_box(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_CELL_BOX = f"""
-WITH {_sql_cells_cte(4)},
+WITH {cells_cte(_EVENT_XY, 4, ['event_id'])},
 cc AS (SELECT DISTINCT cell, i * 4 + ix AS gx, j * 4 + iy AS gy
        FROM cells WHERE cell >= 0),
 b AS (
@@ -258,7 +225,7 @@ def _sql_codec_one(r: int, alias: str) -> str:
 
 
 def _only_cells_subq(r: int) -> str:
-    return f"WITH {_sql_cells_cte(r)} SELECT event_id, cell FROM cells"
+    return f"WITH {cells_cte(_EVENT_XY, r, ['event_id'])} SELECT event_id, cell FROM cells"
 
 
 SQL_CELL_CODEC = f"""
@@ -644,7 +611,7 @@ def _sql_codec_b32() -> str:
     from ..grid.codec import B32NVU_ALPHABET, GEOHASH_ALPHABET
 
     return f"""
-WITH {_sql_cells_cte(6)}
+WITH {cells_cte(_EVENT_XY, 6, ['event_id'])}
 SELECT event_id, cell,
        substring('{B32NVU_ALPHABET}', CAST(((cell >> 6) >> 5) & 31 AS INT) + 1, 1)
        || substring('{B32NVU_ALPHABET}', CAST((cell >> 6) & 31 AS INT) + 1, 1) AS code_nvu,
@@ -717,7 +684,7 @@ def _sql_hilbert() -> str:
          CAST(0 AS BIGINT) AS hd
   FROM cells WHERE cell >= 0)"""
     chain, last = hilbert_iter_sql(_HILBERT_ORDER, "it0", "event_id, cell")
-    return (f"WITH {_sql_cells_cte(_HILBERT_R)},\n{it0},\n{chain}"
+    return (f"WITH {cells_cte(_EVENT_XY, _HILBERT_R, ['event_id'])},\n{it0},\n{chain}"
             + f"\nSELECT event_id, cell, hd FROM {last}")
 
 
@@ -748,7 +715,7 @@ def g_knn_ring_events(spark: SparkSession, sf: str) -> DataFrame:
 def _sql_knn_ring() -> str:
     ny = nx = _KNN_R // 2
     return f"""
-WITH {_sql_cells_cte(_KNN_R)},
+WITH {cells_cte(_EVENT_XY, _KNN_R, ['event_id'])},
 cc AS (
   SELECT event_id, x, y, j * {1 << ny} + iy AS gy, i * {1 << nx} + ix AS gx
   FROM cells WHERE cell >= 0),
@@ -786,7 +753,7 @@ def g_cover_dilate(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_COVER_DILATE = f"""
-WITH {_sql_cells_cte(4)},
+WITH {cells_cte(_EVENT_XY, 4, ['event_id'])},
 cc AS (SELECT DISTINCT cell, j * 4 + iy AS gy, i * 4 + ix AS gx
        FROM cells WHERE cell >= 0),
 cand AS (
@@ -835,7 +802,7 @@ def g_cover_erode(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_COVER_ERODE = f"""
-WITH {_sql_cells_cte(4)},
+WITH {cells_cte(_EVENT_XY, 4, ['event_id'])},
 cc AS (SELECT DISTINCT cell, j * 4 + iy AS gy, i * 4 + ix AS gx
        FROM cells WHERE cell >= 0),
 er AS (
@@ -894,9 +861,9 @@ def _montanitas_ring_xy() -> np.ndarray:
     import os
 
     from ..grid import proj
+    from ..sources.reference_data import REF_DIR
 
-    ref = os.environ.get("CO_REFERENCE_DIR", "/root/reference")
-    with open(os.path.join(ref, "data", "montañitas.geojson"),
+    with open(os.path.join(REF_DIR, "data", "montañitas.geojson"),
               encoding="utf-8") as f:
         gj = json.load(f)
     coords = np.asarray(gj["features"][0]["geometry"]["coordinates"],

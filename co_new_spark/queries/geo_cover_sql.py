@@ -31,10 +31,9 @@ from pyspark.sql import functions as F
 from ..functions import cells_sql, geo
 from ..operators.cover import cover_anti, cover_best_with_cell, cover_lookup_best
 from ..sources.reference_data import load_citycover, load_synonym, load_synonym_ref
-from .geo_algebra import (SIDE, X0, Y0, _d, _digit_to_i_case, _digit_to_j_case,
-                          _sql_cells_cte)
-from .geospatial import _XENG, _YENG
-from .sql_grid import morton_deref_x, morton_deref_y
+from .geo_algebra import SIDE, X0, Y0, _d, _digit_to_i_case, _digit_to_j_case
+from .geospatial import _EVENT_XY, _XENG, _YENG
+from .sql_grid import cells_cte, morton_deref_x, morton_deref_y
 
 _PT_R = 26            # refinement bits -> point depth 30 (> max cover depth 22)
 _PT_DEPTH = 4 + _PT_R
@@ -156,7 +155,7 @@ def g_cover_lookup_events(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_COVER_LOOKUP_EVENTS = f"""
-WITH {_sql_cells_cte(_PT_R)},
+WITH {cells_cte(_EVENT_XY, _PT_R, ['event_id'])},
 {_SQL_COV},
 best AS (
   SELECT event_id, min(isolabel_ext) AS isolabel_ext FROM hits GROUP BY event_id
@@ -218,7 +217,7 @@ withsyn AS (
 """
 
 SQL_SHORTCODE_SCI = f"""
-WITH {_sql_cells_cte(_PT_R)},
+WITH {cells_cte(_EVENT_XY, _PT_R, ['event_id'])},
 {_SQL_COV},
 {_SQL_SYN},
 {_SQL_BEST_COVER},
@@ -291,7 +290,7 @@ array_to_string(list_transform(range(nsfx // 5),
 """
 
 SQL_SHORTCODE_LOG = f"""
-WITH {_sql_cells_cte(_PT_R)},
+WITH {cells_cte(_EVENT_XY, _PT_R, ['event_id'])},
 {_SQL_COV},
 {_SQL_SYN},
 {_SQL_BEST_COVER},
@@ -416,7 +415,7 @@ def g_cover_anti(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_COVER_ANTI = f"""
-WITH {_sql_cells_cte(_PT_R)},
+WITH {cells_cte(_EVENT_XY, _PT_R, ['event_id'])},
 {_SQL_COV}
 SELECT ((cells.cell >> 6) >> {_PT_R}) AS l0,
        CAST(count(*) AS BIGINT) AS n_uncovered,
@@ -617,7 +616,7 @@ WITH raw AS (
          CAST(floor((y - {Y0!r}) / {_Z_S!r}) AS BIGINT) AS gj, v
   FROM raw
 ), occ AS (SELECT gi, gj, count(*) AS n, sum(v) AS sv FROM grz GROUP BY 1, 2),
-{_sql_cells_cte(_PT_R, src=_Z_SRC)},
+{cells_cte(_Z_SRC, _PT_R, ['event_id'])},
 {_SQL_COV},
 best AS (SELECT event_id, min(isolabel_ext) AS isolabel_ext
          FROM hits GROUP BY 1),
@@ -755,7 +754,7 @@ def g_areal_interp(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_AREAL_INTERP = f"""
-WITH {_sql_cells_cte(_PT_R)},
+WITH {cells_cte(_EVENT_XY, _PT_R, ['event_id'])},
 {_SQL_COV},
 best AS (
   SELECT event_id, min(isolabel_ext) AS isolabel_ext FROM hits GROUP BY event_id

@@ -22,8 +22,11 @@ from .mat import run_tmp
 from ..functions import global_grid
 from ..grid import grids
 from ..operators import tiles
+from ..sources.reference_data import REF_DIR
 from ..sources.tables import load
-from .geo_algebra import _d, _l0_case, _sql_cells_cte, _sql_ref
+from .geo_algebra import _d, _l0_case, _sql_ref
+from .geospatial import _EVENT_XY
+from .sql_grid import cells_cte
 
 # deterministic global lat/lon per event (exact in float64 on both engines)
 _LAT = "(-90.0 + ((event_id * 40503) % 180000) / 1000.0)"
@@ -99,7 +102,7 @@ def _sql_cell_to_tile() -> str:
     dy = tiles.Y_EXTENT / n
     side = grids.L0_SIDE / 4.0
     return f"""
-WITH {_sql_cells_cte(4)},
+WITH {cells_cte(_EVENT_XY, 4, ['event_id'])},
 cc AS (SELECT DISTINCT cell, j * 4 + iy AS gy, i * 4 + ix AS gx
        FROM cells WHERE cell >= 0),
 ctr AS (
@@ -186,7 +189,7 @@ def g_partitioned_scan(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_PARTITIONED_SCAN = f"""
-WITH {_sql_cells_cte(4)},
+WITH {cells_cte(_EVENT_XY, 4, ['event_id'])},
 agg AS (
   SELECT cell, count(*) AS n, min(event_id) AS min_ev,
          (cell >> 6) >> 4 AS l0
@@ -203,9 +206,8 @@ SELECT cell, n, min_ev, l0 FROM agg WHERE l0 IN (12, 6, 4)
 def g_geojson_scan(spark: SparkSession, sf: str) -> DataFrame:
     """Scan the reference grid256 GeoJSON as a DataFrame: explode features,
     pull nested properties + ring vertex counts natively."""
-    ref = os.environ.get("CO_REFERENCE_DIR", "/root/reference")
     raw = spark.read.option("multiLine", True).json(
-        os.path.join(ref, "data", "grid256.geojson"))
+        os.path.join(REF_DIR, "data", "grid256.geojson"))
     feats = raw.select(F.explode("features").alias("f"))
     return feats.select(
         F.col("f.properties.code").alias("code"),
@@ -236,9 +238,8 @@ def g_decode_geojson(spark: SparkSession, sf: str) -> DataFrame:
     """
     from ..functions import geo
 
-    ref = os.environ.get("CO_REFERENCE_DIR", "/root/reference")
     raw = spark.read.option("multiLine", True).json(
-        os.path.join(ref, "data", "grid256L0.geojson"))
+        os.path.join(REF_DIR, "data", "grid256L0.geojson"))
     feats = raw.select(F.explode("features").alias("f"))
     rows = feats.select(
         F.col("f.properties.code").alias("code"),

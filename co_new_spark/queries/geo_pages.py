@@ -1,21 +1,20 @@
-"""Pages-pipeline geospatial entries over the COMMITTED fixtures — the
-round-2 VERDICT ask #1: geo_pages_l0_histogram / geo_cover_lookup /
-geo_knn_ring move from rows-only to full DuckDB hash checks.
+"""Pages-pipeline geospatial entries over the committed fixtures, each
+hash-checked against a DuckDB oracle.
 
-Mechanism: the Spark side reads tests/fixtures/pages2k.parquet and runs the
-LIVE kernels end to end (regex geoparse -> fused TM projection + Grid B
-encode -> cover join / ring kNN).  The oracle reads the same fixture PLUS
-tests/fixtures/pages2k_xy.parquet — the per-url parsed lat/lon and forward
-EPSG:9377 projection frozen at fixture-generation time (tools/
-make_fixtures.py) — and restates everything else in SQL: the geoparse regex
-(same single-source grammar as web_geoparse), the grid-spec encode
-(/root/reference/conf.yaml:21-26 via queries.sql_grid), the citycover.csv
-prefix-cover join (decoded in SQL, queries.geo_cover_sql), and the lattice
-ring-1 kNN.  The one link the oracle takes from the frozen fixture — the TM
-series itself — is pinned separately by the reference's assert vectors
-(geo_gridlib_asserts, hash-checked) and tests/test_grid_golden.py, so a
-regression in ANY stage (parse, projection, encode, join, ranking) breaks
-either this hash or that one.
+The Spark side reads tests/fixtures/pages2k.parquet and runs the live kernels
+end to end: regex geoparse, then the fused TM projection + Grid B encode,
+then the per-depth cover lookup (geo_cover_lookup, web_geo_lang_mix), the
+ring kNN (geo_knn_ring) or a per-L0 rollup (geo_pages_l0_histogram,
+geo_native_geocode).  The oracles take the projected points from
+tests/fixtures/pages2k_xy.parquet (per-url x, y frozen by
+tools/make_fixtures.py), or, for geo_native_geocode, from the (url, x, y)
+rows the Spark side materializes.  Everything after the projection is
+restated in SQL: the geoparse regex (the grammar web_geoparse uses), the
+point encode (sql_grid.cells_cte), the citycover.csv prefix cover
+(decoded in SQL, geo_cover_sql._sql_csv_decode), the lattice ring-1 kNN and
+the language ID.  The TM series is the one link the oracles take on trust; it
+is pinned by the reference's assert vectors (geo_gridlib_asserts,
+hash-checked) and tests/test_grid_golden.py.
 """
 
 from __future__ import annotations
@@ -27,52 +26,20 @@ from pyspark.sql import functions as F
 
 from ..functions import cells_sql, geo
 from ..functions import text as txf
-from ..grid import grids
 from ..operators.cover import cover_lookup_best
 from ..operators.knn import knn_ring
 from ..sources.reference_data import load_citycover
 from .geo_cover_sql import _sql_csv_decode
-from .sql_grid import l0_case, morton_ref
+from .sql_grid import cells_cte
 from .webtext_q import FIXTURE_PAGES
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 FIXTURE_XY = os.path.join(_REPO, "tests", "fixtures", "pages2k_xy.parquet")
-
-_X0 = grids.L0_ORIGIN_X
-_Y0 = grids.L0_ORIGIN_Y
-_SIDE = grids.L0_SIDE
-_L0_CASE = l0_case()
+_XY_SRC = f"SELECT url, x, y FROM read_parquet('{FIXTURE_XY}')"
 
 
 def _fixture(spark: SparkSession) -> DataFrame:
     return spark.read.parquet(FIXTURE_PAGES)
-
-
-def _sql_xy_cells(r: int, id_col: str = "url") -> str:
-    """CTE chain: the xy fixture -> depth-(4 + r) packed Grid B cell, the
-    straight SQL restatement of grids.grid_b_encode_xy."""
-    ny, nx = (r + 1) // 2, r // 2
-    return f"""
-xy AS (SELECT {id_col}, x, y FROM read_parquet('{FIXTURE_XY}')),
-fr AS (
-  SELECT {id_col}, x, y,
-         CAST(floor((x - {_X0!r}) / {_SIDE!r}) AS BIGINT) AS i,
-         CAST(floor((y - {_Y0!r}) / {_SIDE!r}) AS BIGINT) AS j,
-         (x - {_X0!r}) / {_SIDE!r} - floor((x - {_X0!r}) / {_SIDE!r}) AS u,
-         (y - {_Y0!r}) / {_SIDE!r} - floor((y - {_Y0!r}) / {_SIDE!r}) AS v
-  FROM xy),
-dg AS (
-  SELECT {id_col}, x, y, i, j, {_L0_CASE} AS digit,
-         CAST(floor(u * {1 << nx}) AS BIGINT) AS ix,
-         CAST(floor(v * {1 << ny}) AS BIGINT) AS iy
-  FROM fr),
-cells AS (
-  SELECT {id_col}, x, y, i, j, digit, ix, iy,
-         CASE WHEN digit >= 0
-              THEN ((digit * {1 << r} + {morton_ref(r)}) * 64 + {4 + r})
-              ELSE -1 END AS cell
-  FROM dg)
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -97,8 +64,8 @@ def g_pages_l0_histogram(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# The l0 digit needs no refinement bits: it is the L0 CASE on the lattice
-# (i, j), -1 off-grid — exactly what cell_l0_digit(encode(..)) reduces to.
+# The l0 digit needs no refinement bits: it is the fragment's digit at r = 0,
+# -1 off-grid — exactly what cell_l0_digit(encode(..)) reduces to.
 SQL_PAGES_L0 = f"""
 WITH parsed AS (
   SELECT url,
@@ -110,16 +77,11 @@ WITH parsed AS (
 ), pts AS (
   SELECT pp.url, xy.x, xy.y
   FROM pp JOIN read_parquet('{FIXTURE_XY}') xy USING (url)
-), lat AS (
-  SELECT url,
-         CAST(floor((x - {_X0!r}) / {_SIDE!r}) AS BIGINT) AS i,
-         CAST(floor((y - {_Y0!r}) / {_SIDE!r}) AS BIGINT) AS j
-  FROM pts
-)
-SELECT CAST(CASE WHEN {_L0_CASE} >= 0 THEN {_L0_CASE} ELSE -1 END AS BIGINT) AS l0,
+), {cells_cte("SELECT url, x, y FROM pts", 0, ['url'])}
+SELECT CAST(digit AS BIGINT) AS l0,
        CAST(count(*) AS BIGINT) AS n_pages,
        CAST(count(DISTINCT url) AS BIGINT) AS n_urls
-FROM lat GROUP BY 1
+FROM cells GROUP BY 1
 """
 
 
@@ -144,7 +106,7 @@ def g_cover_lookup(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_COVER_LOOKUP = f"""
-WITH {_sql_xy_cells(_CV_R)},
+WITH {cells_cte(_XY_SRC, _CV_R, ['url'])},
 {_sql_csv_decode("cover", "covbits")},
 pcell AS (
   SELECT DISTINCT url, cell >> 6 AS pbits FROM cells WHERE cell >= 0
@@ -201,7 +163,7 @@ def g_knn_ring(spark: SparkSession, sf: str) -> DataFrame:
 def _sql_knn_ring_pages() -> str:
     ny = nx = _KNN_R // 2
     return f"""
-WITH {_sql_xy_cells(_KNN_R)},
+WITH {cells_cte(_XY_SRC, _KNN_R, ['url'])},
 cc AS (
   SELECT url, x, y, j * {1 << ny} + iy AS gy, i * {1 << nx} + ix AS gx
   FROM cells WHERE cell >= 0),
@@ -261,7 +223,7 @@ def _sql_tok_ratio(lang: str) -> str:
 
 
 SQL_LANG_MIX = f"""
-WITH {_sql_xy_cells(_CV_R)},
+WITH {cells_cte(_XY_SRC, _CV_R, ['url'])},
 {_sql_csv_decode("cover", "covbits")},
 pgu AS (SELECT DISTINCT url, text FROM read_parquet('{FIXTURE_PAGES}')),
 lg AS (
@@ -317,8 +279,8 @@ def g_native_geocode(spark: SparkSession, sf: str) -> DataFrame:
 
     Oracle split (mat.py protocol): the transcendental part — the projected
     (url, x, y) — is materialized, and the oracle re-derives the ENTIRE
-    encode from those bytes through the SQL grid fragments (l0_case/
-    morton_ref — IEEE-exact ops only, so bit-identical by construction).
+    encode from those bytes through sql_grid.cells_cte (IEEE-exact ops
+    only, so bit-identical by construction).
     The projection itself is reference-verified (gridLib golden vectors)."""
     from .mat import materialize
 
@@ -340,42 +302,13 @@ def g_native_geocode(spark: SparkSession, sf: str) -> DataFrame:
 def _sql_native_geocode() -> str:
     from .mat import mat_glob
 
-    r = _NG_RBITS
-    ny, nx = (r + 1) // 2, r // 2
+    xy = mat_glob("native_geocode_xy")
+    src = f"SELECT url, x, y FROM read_parquet('{xy}')"
     return f"""
-WITH xy AS (
-  -- bounds tested on DOUBLES before any cast, mirroring the inb guard of
-  -- grids.grid_b_encode_xy: an extreme-but-finite projected coordinate must
-  -- MISMATCH as an absent row (Spark yields -1), never crash the oracle's
-  -- BIGINT cast.  The guard tests the DERIVED (x-X0)/SIDE — the exact
-  -- expression the kernel's fi/fj check uses — so both engines share the
-  -- same IEEE rounding at the cell-matrix edge (raw-x bounds could round
-  -- across the boundary within ~1 ulp and admit a row on one side only)
-  SELECT url, x, y FROM read_parquet('{mat_glob("native_geocode_xy")}')
-  WHERE isfinite(x) AND isfinite(y)
-    AND (x - {_X0!r}) / {_SIDE!r} >= 0.0
-    AND (x - {_X0!r}) / {_SIDE!r} < 4.0
-    AND (y - {_Y0!r}) / {_SIDE!r} >= 0.0
-    AND (y - {_Y0!r}) / {_SIDE!r} < 5.0
-), fr AS (
-  SELECT url,
-         CAST(floor((x - {_X0!r}) / {_SIDE!r}) AS BIGINT) AS i,
-         CAST(floor((y - {_Y0!r}) / {_SIDE!r}) AS BIGINT) AS j,
-         (x - {_X0!r}) / {_SIDE!r} - floor((x - {_X0!r}) / {_SIDE!r}) AS u,
-         (y - {_Y0!r}) / {_SIDE!r} - floor((y - {_Y0!r}) / {_SIDE!r}) AS v
-  FROM xy),
-dg AS (
-  SELECT url, {_L0_CASE} AS digit,
-         least(CAST(floor(u * {1 << nx}) AS BIGINT), {(1 << nx) - 1}) AS ix,
-         least(CAST(floor(v * {1 << ny}) AS BIGINT), {(1 << ny) - 1}) AS iy
-  FROM fr),
-cells AS (
-  SELECT url, digit,
-         (digit * {1 << r} + {morton_ref(r)}) * 64 + {4 + r} AS cell
-  FROM dg WHERE digit >= 0)
+WITH {cells_cte(src, _NG_RBITS, ['url'])}
 SELECT digit AS l0, CAST(count(*) AS BIGINT) AS n_pages,
        min(cell) AS min_cell, max(cell) AS max_cell
-FROM cells GROUP BY digit ORDER BY l0
+FROM cells WHERE cell >= 0 GROUP BY digit ORDER BY l0
 """
 
 

@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .geospatial import _XENG, _YENG
+
 _NS = 150      # segments per family
 _BOX = 2048    # base-point box
 _CS = 256      # tile size
@@ -225,8 +227,7 @@ def g_closest_pair(spark: SparkSession, sf: str) -> DataFrame:
 SQL_CLOSEST_PAIR = f"""
 WITH pts AS (
   SELECT DISTINCT
-         CAST(3678500.0 + ((event_id * 2654435761) % 2097152) AS BIGINT) AS x,
-         CAST(970000.0 + ((event_id * 40503) % 2621440) AS BIGINT) AS y
+         CAST({_XENG} AS BIGINT) AS x, CAST({_YENG} AS BIGINT) AS y
   FROM events WHERE event_id < {_CP_CAP}
 ), pr AS (
   -- the foil: true all-pairs min, no grid anywhere

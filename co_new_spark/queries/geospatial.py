@@ -25,10 +25,12 @@ from ..grid import grids
 from ..grid.cells import cell_b_from_xy
 from ..operators import tiles
 from ..sources.tables import load
+from .sql_grid import cells_cte
 
 # deterministic planar points from events (exact in float64 on both engines)
 _XENG = "3678500.0 + ((event_id * 2654435761) % 2097152)"
 _YENG = "970000.0 + ((event_id * 40503) % 2621440)"
+_EVENT_XY = f"SELECT event_id, {_XENG} AS x, {_YENG} AS y FROM events"
 
 
 def position_cols():
@@ -57,31 +59,10 @@ def g_cell_assign_parity(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-from .sql_grid import l0_case as _sql_l0_case  # noqa: E402
-from .sql_grid import morton_ref as _sql_morton_ref  # noqa: E402
-
-_L0_CASE = _sql_l0_case()
-
 SQL_CELL_ASSIGN = f"""
-WITH pts AS (
-  SELECT event_id, {_XENG} AS x, {_YENG} AS y FROM events
-), c AS (
-  SELECT event_id,
-         CAST(floor((x - 3678500.0) / 524288.0) AS BIGINT) AS i,
-         CAST(floor((y - 970000.0) / 524288.0) AS BIGINT) AS j,
-         (x - 3678500.0) / 524288.0 - floor((x - 3678500.0) / 524288.0) AS u,
-         (y - 970000.0) / 524288.0 - floor((y - 970000.0) / 524288.0) AS v
-  FROM pts
-), d AS (
-  SELECT event_id, {_L0_CASE} AS digit,
-         CAST(floor(u * 4) AS BIGINT) AS ix, CAST(floor(v * 4) AS BIGINT) AS iy
-  FROM c
-)
-SELECT CASE WHEN digit >= 0
-            THEN ((digit * 16 + (iy // 2) * 8 + (ix // 2) * 4 + (iy % 2) * 2 + (ix % 2)) * 64 + 8)
-            ELSE -1 END AS cell,
-       count(*) AS n, min(event_id) AS min_ev
-FROM d GROUP BY 1
+WITH {cells_cte(_EVENT_XY, 4, ['event_id'])}
+SELECT cell, count(*) AS n, min(event_id) AS min_ev
+FROM cells GROUP BY 1
 """
 
 _TILE_Z = 6
@@ -115,7 +96,7 @@ WITH pts AS (
   SELECT event_id, {_XENG} AS x, {_YENG} AS y FROM events
 ), t AS (
   SELECT event_id,
-         CAST(floor((x - 3678500.0) / {tiles.X_EXTENT / (1 << _TILE_Z)!r}) AS BIGINT) AS tx,
+         CAST(floor((x - {tiles.X0!r}) / {tiles.X_EXTENT / (1 << _TILE_Z)!r}) AS BIGINT) AS tx,
          CAST(floor(({tiles.Y0 + tiles.Y_EXTENT!r} - y) / {tiles.Y_EXTENT / (1 << _TILE_Z)!r}) AS BIGINT) AS ty
   FROM pts
 )
@@ -152,12 +133,6 @@ def g_cover_compact(spark: SparkSession, sf: str) -> DataFrame:
     return compact_cover(cells, min_depth=4)
 
 
-def _sql_morton_yx(iy: str, ix: str, nbits: int) -> str:
-    """y-first MSB Morton interleave of two nbits-wide SQL ints (thin wrapper
-    over the single-source sql_grid.morton_ref)."""
-    return _sql_morton_ref(2 * nbits, iy, ix)
-
-
 def _sql_merge_level(prev: str) -> str:
     """One simultaneous quad-merge pass over a distinct cell set."""
     return f"""
@@ -172,21 +147,8 @@ def _sql_merge_level(prev: str) -> str:
 
 
 SQL_COVER_COMPACT = f"""
-WITH pts AS (
-  SELECT event_id, {_XENG} AS x, {_YENG} AS y FROM events
-), c AS (
-  SELECT CAST(floor((x - 3678500.0) / 524288.0) AS BIGINT) AS i,
-         CAST(floor((y - 970000.0) / 524288.0) AS BIGINT) AS j,
-         (x - 3678500.0) / 524288.0 - floor((x - 3678500.0) / 524288.0) AS u,
-         (y - 970000.0) / 524288.0 - floor((y - 970000.0) / 524288.0) AS v
-  FROM pts
-), d AS (
-  SELECT {_L0_CASE} AS digit,
-         CAST(floor(u * 16) AS BIGINT) AS ix, CAST(floor(v * 16) AS BIGINT) AS iy
-  FROM c
-), l0 AS (
-  SELECT DISTINCT (digit * 256 + {_sql_morton_yx('iy', 'ix', 4)}) * 64 + 12 AS cell
-  FROM d WHERE digit >= 0
+WITH {cells_cte(_EVENT_XY, _COMPACT_RBITS)},
+l0 AS (SELECT DISTINCT cell FROM cells WHERE cell >= 0
 ), l1 AS ({_sql_merge_level('l0')}
 ), l2 AS ({_sql_merge_level('l1')}
 ), l3 AS ({_sql_merge_level('l2')}
@@ -220,29 +182,16 @@ def g_segment_cells(spark: SparkSession, sf: str) -> DataFrame:
 SQL_SEGMENT_CELLS = f"""
 WITH seg AS (
   SELECT event_id, {_XENG} AS x1, {_YENG} AS y1,
-         3678500.0 + ((event_id + 1) * 2654435761) % 2097152 AS x2,
-         970000.0 + ((event_id + 1) * 40503) % 2621440 AS y2
+         {grids.L0_ORIGIN_X!r} + ((event_id + 1) * 2654435761) % 2097152 AS x2,
+         {grids.L0_ORIGIN_Y!r} + ((event_id + 1) * 40503) % 2621440 AS y2
   FROM events WHERE event_id < {_TRACE_N_SEG}
 ), samp AS (
   SELECT event_id,
          x1 + (x2 - x1) * (CAST(t AS DOUBLE) / 64.0) AS x,
          y1 + (y2 - y1) * (CAST(t AS DOUBLE) / 64.0) AS y
   FROM seg, generate_series(0, 64) AS g(t)
-), c AS (
-  SELECT event_id,
-         CAST(floor((x - 3678500.0) / 524288.0) AS BIGINT) AS i,
-         CAST(floor((y - 970000.0) / 524288.0) AS BIGINT) AS j,
-         (x - 3678500.0) / 524288.0 - floor((x - 3678500.0) / 524288.0) AS u,
-         (y - 970000.0) / 524288.0 - floor((y - 970000.0) / 524288.0) AS v
-  FROM samp
-), d AS (
-  SELECT event_id, {_L0_CASE} AS digit,
-         CAST(floor(u * 16) AS BIGINT) AS ix, CAST(floor(v * 16) AS BIGINT) AS iy
-  FROM c
-)
-SELECT DISTINCT event_id,
-       (digit * 256 + {_sql_morton_yx('iy', 'ix', 4)}) * 64 + 12 AS cell
-FROM d WHERE digit >= 0
+), {cells_cte("SELECT event_id, x, y FROM samp", 8, ['event_id'])}
+SELECT DISTINCT event_id, cell FROM cells WHERE cell >= 0
 """
 
 
@@ -301,29 +250,12 @@ def g_bbox_query(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_BBOX_QUERY = f"""
-WITH pts AS (
-  SELECT event_id, {_XENG} AS x, {_YENG} AS y FROM events
-), c AS (
-  SELECT event_id, x, y,
-         CAST(floor((x - 3678500.0) / 524288.0) AS BIGINT) AS i,
-         CAST(floor((y - 970000.0) / 524288.0) AS BIGINT) AS j,
-         (x - 3678500.0) / 524288.0 - floor((x - 3678500.0) / 524288.0) AS u,
-         (y - 970000.0) / 524288.0 - floor((y - 970000.0) / 524288.0) AS v
-  FROM pts
-), cells AS (
-  SELECT event_id, x, y,
-         (({_L0_CASE} * 256
-           + {_sql_morton_yx('CAST(floor(v * 16) AS BIGINT)',
-                             'CAST(floor(u * 16) AS BIGINT)', 4)}) * 64 + 12)
-           AS cell,
-         {_L0_CASE} AS digit
-  FROM c
-)
+WITH {cells_cte(_EVENT_XY, 8, ['event_id'])}
 SELECT CAST(count(*) AS BIGINT) AS n_points, min(event_id) AS min_ev,
        max(event_id) AS max_ev,
        CAST(count(DISTINCT cell) AS BIGINT) AS n_cells
 FROM cells
-WHERE digit >= 0
+WHERE cell >= 0
   AND x >= {_BBOX[0]!r} AND x < {_BBOX[2]!r}
   AND y >= {_BBOX[1]!r} AND y < {_BBOX[3]!r}
 """
@@ -362,20 +294,10 @@ def g_pyramid_rollup(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_PYRAMID = f"""
-WITH pts AS (
-  SELECT {_XENG} AS x, {_YENG} AS y FROM events
-), c AS (
-  SELECT CAST(floor((x - 3678500.0) / 524288.0) AS BIGINT) AS i,
-         CAST(floor((y - 970000.0) / 524288.0) AS BIGINT) AS j,
-         (x - 3678500.0) / 524288.0 - floor((x - 3678500.0) / 524288.0) AS u,
-         (y - 970000.0) / 524288.0 - floor((y - 970000.0) / 524288.0) AS v
-  FROM pts
-), leaf AS (
-  SELECT (digit * 256 + m) * 64 + 12 AS cell, CAST(count(*) AS BIGINT) AS n
-  FROM (SELECT {_L0_CASE} AS digit,
-               {_sql_morton_yx('CAST(floor(v * 16) AS BIGINT)',
-                               'CAST(floor(u * 16) AS BIGINT)', 4)} AS m
-        FROM c) WHERE digit >= 0 GROUP BY 1
+WITH {cells_cte(_EVENT_XY, max(_PYRAMID_DEPTHS) - 4)},
+leaf AS (
+  SELECT cell, CAST(count(*) AS BIGINT) AS n
+  FROM cells WHERE cell >= 0 GROUP BY 1
 )
 SELECT CAST(depth AS INT) AS depth,
        ((cell // 64) >> (12 - depth)) * 64 + depth AS cell,
@@ -413,46 +335,18 @@ def g_region_centroid(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_REGION_CENTROID = f"""
-WITH pts AS (
-  SELECT {_XENG} AS x, {_YENG} AS y FROM events
-), c8 AS (
-  SELECT x, y,
-         CAST(floor((x - 3678500.0) / 524288.0) AS BIGINT) AS i,
-         CAST(floor((y - 970000.0) / 524288.0) AS BIGINT) AS j,
-         (x - 3678500.0) / 524288.0 - floor((x - 3678500.0) / 524288.0) AS u,
-         (y - 970000.0) / 524288.0 - floor((y - 970000.0) / 524288.0) AS v
-  FROM pts
-), enc AS (
-  SELECT x, y,
-         (({_L0_CASE} * 16
-           + {_sql_morton_yx('CAST(floor(v * 4) AS BIGINT)',
-                             'CAST(floor(u * 4) AS BIGINT)', 2)}) * 64 + 8) AS cell,
-         {_L0_CASE} AS digit
-  FROM c8
-), agg AS (
+WITH {cells_cte(_EVENT_XY, 4)},
+agg AS (
   SELECT cell, CAST(count(*) AS BIGINT) AS n,
          CAST(sum(CAST(x AS BIGINT)) AS BIGINT) AS sx,
          CAST(sum(CAST(y AS BIGINT)) AS BIGINT) AS sy
-  FROM enc WHERE digit >= 0 GROUP BY cell
+  FROM cells WHERE cell >= 0 GROUP BY cell
 ), ctr AS (
-  SELECT cell, n,
-         CAST(sx AS DOUBLE) / n AS cx, CAST(sy AS DOUBLE) / n AS cy
+  SELECT cell AS cell8, n, CAST(sx AS DOUBLE) / n AS x, CAST(sy AS DOUBLE) / n AS y
   FROM agg
-), snapc AS (
-  SELECT cell, n, cx, cy,
-         CAST(floor((cx - 3678500.0) / 524288.0) AS BIGINT) AS i,
-         CAST(floor((cy - 970000.0) / 524288.0) AS BIGINT) AS j,
-         (cx - 3678500.0) / 524288.0 - floor((cx - 3678500.0) / 524288.0) AS u,
-         (cy - 970000.0) / 524288.0 - floor((cy - 970000.0) / 524288.0) AS v
-  FROM ctr
-)
-SELECT cell, n, round(cx, 6) AS cx, round(cy, 6) AS cy,
-       CASE WHEN {_L0_CASE} >= 0
-            THEN (({_L0_CASE} * 256
-                  + {_sql_morton_yx('CAST(floor(v * 16) AS BIGINT)',
-                                    'CAST(floor(u * 16) AS BIGINT)', 4)}) * 64 + 12)
-            ELSE -1 END AS snap_cell
-FROM snapc
+), {cells_cte("SELECT cell8, n, x, y FROM ctr", 8, ['cell8', 'n'], name='snap')}
+SELECT cell8 AS cell, n, round(x, 6) AS cx, round(y, 6) AS cy, cell AS snap_cell
+FROM snap
 """
 
 
@@ -496,8 +390,8 @@ WITH pts AS (
   SELECT event_id, {_XENG} AS x, {_YENG} AS y FROM events
 ), seeds AS (
   SELECT s AS sid,
-         3678500.0 + ((s * 2654435761) % 2097152) AS sx,
-         970000.0 + ((s * 40503) % 2621440) AS sy
+         {grids.L0_ORIGIN_X!r} + ((s * 2654435761) % 2097152) AS sx,
+         {grids.L0_ORIGIN_Y!r} + ((s * 40503) % 2621440) AS sy
   FROM (SELECT unnest(range(0, {_VOR_NSEEDS})) AS s)
 ), scored AS (
   SELECT p.event_id, s.sid,

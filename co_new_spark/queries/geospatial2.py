@@ -31,8 +31,8 @@ from pyspark.sql import functions as F
 from ..functions import geo
 from ..grid import grids
 from ..operators.knn import ring_cells_d2_udf, ring_cells_udf
-from .geospatial import _XENG, _YENG, _event_points
-from .sql_grid import l0_case, morton_ref
+from .geospatial import _EVENT_XY, _XENG, _YENG, _event_points
+from .sql_grid import cells_cte, l0_case, morton_ref
 
 # ---------------------------------------------------------------------------
 # geo_distance_join — within-radius pairs via cell-bucket + ring-1 equi-join
@@ -72,17 +72,8 @@ def g_distance_join(spark: SparkSession, sf: str) -> DataFrame:
 _L0_CASE = l0_case()
 
 SQL_DISTANCE_JOIN = f"""
-WITH raw AS (
-  SELECT event_id, {_XENG} AS x, {_YENG} AS y FROM events
-  WHERE event_id < {_DJ_N}
-), v AS (
-  SELECT event_id, x, y,
-         CAST(floor((x - {grids.L0_ORIGIN_X!r}) / {grids.L0_SIDE!r}) AS BIGINT) AS i,
-         CAST(floor((y - {grids.L0_ORIGIN_Y!r}) / {grids.L0_SIDE!r}) AS BIGINT) AS j
-  FROM raw
-), pts AS (
-  SELECT event_id, x, y FROM v WHERE {_L0_CASE} >= 0
-)
+WITH {cells_cte(f"{_EVENT_XY} WHERE event_id < {_DJ_N}", 0, ['event_id'])},
+pts AS (SELECT event_id, x, y FROM cells WHERE digit >= 0)
 SELECT a.event_id AS id_a, b.event_id AS id_b,
        CAST((a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS BIGINT) AS dist2
 FROM pts a JOIN pts b ON a.event_id < b.event_id
@@ -113,33 +104,13 @@ def g_od_matrix(spark: SparkSession, sf: str) -> DataFrame:
                     F.countDistinct("user_id").alias("n_users")))
 
 
-_MORTON4 = morton_ref(_OD_RBITS, "iy", "ix")
-
 SQL_OD_MATRIX = f"""
-WITH raw AS (
-  SELECT event_id, user_id, ts, {_XENG} AS x, {_YENG} AS y FROM events
-), c AS (
-  SELECT event_id, user_id, ts,
-         CAST(floor((x - {grids.L0_ORIGIN_X!r}) / {grids.L0_SIDE!r}) AS BIGINT) AS i,
-         CAST(floor((y - {grids.L0_ORIGIN_Y!r}) / {grids.L0_SIDE!r}) AS BIGINT) AS j,
-         (x - {grids.L0_ORIGIN_X!r}) / {grids.L0_SIDE!r}
-           - floor((x - {grids.L0_ORIGIN_X!r}) / {grids.L0_SIDE!r}) AS u,
-         (y - {grids.L0_ORIGIN_Y!r}) / {grids.L0_SIDE!r}
-           - floor((y - {grids.L0_ORIGIN_Y!r}) / {grids.L0_SIDE!r}) AS v
-  FROM raw
-), d AS (
-  SELECT event_id, user_id, ts, {_L0_CASE} AS digit,
-         CAST(floor(u * {1 << (_OD_RBITS // 2)}) AS BIGINT) AS ix,
-         CAST(floor(v * {1 << (_OD_RBITS // 2)}) AS BIGINT) AS iy
-  FROM c
-), cells AS (
-  SELECT event_id, user_id, ts,
-         (digit * {1 << _OD_RBITS} + {_MORTON4}) * 64 + {4 + _OD_RBITS} AS cell
-  FROM d WHERE digit >= 0
-), seq AS (
+WITH {cells_cte(f"SELECT event_id, user_id, ts, {_XENG} AS x, {_YENG} AS y FROM events",
+                _OD_RBITS, ['event_id', 'user_id', 'ts'])},
+seq AS (
   SELECT user_id, cell,
          lag(cell) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-  FROM cells
+  FROM cells WHERE cell >= 0
 )
 SELECT prev AS from_cell, cell AS to_cell,
        CAST(count(*) AS BIGINT) AS n_trips,

@@ -120,8 +120,8 @@ WITH ev AS (
   FROM events WHERE user_id < 40
 )
 SELECT user_id, event_id, t,
-       count(*) OVER w AS n_1h,
-       sum(iv) OVER w AS iv_1h
+       CAST(count(*) OVER w AS BIGINT) AS n_1h,
+       CAST(sum(iv) OVER w AS BIGINT) AS iv_1h
 FROM ev
 WINDOW w AS (PARTITION BY user_id ORDER BY t
              RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)

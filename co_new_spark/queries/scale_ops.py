@@ -67,10 +67,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import geo
-from ..grid import grids
 from ..sources.tables import load
-from .geospatial import _XENG, _YENG, _event_points
-from .sql_grid import l0_case, morton_ref
+from .geospatial import _EVENT_XY, _XENG, _YENG, _event_points
+from .sql_grid import cells_cte, morton_ref
 
 # ---------------------------------------------------------------------------
 # train_heavy_ngrams — exact heavy-hitter word trigrams, two-pass MG scheme
@@ -420,7 +419,7 @@ def g_hilbert_ranges(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _sql_hilbert_ranges() -> str:
-    from .geo_algebra import _sql_cells_cte, hilbert_iter_sql
+    from .geo_algebra import hilbert_iter_sql
 
     nx = ny = _HR_R // 2
     bb0 = f"""bb0 AS (
@@ -435,7 +434,7 @@ def _sql_hilbert_ranges() -> str:
     ev_chain, ev_last = hilbert_iter_sql(_HR_ORDER, "ev0", "event_id",
                                          prefix="ev")
     return f"""
-WITH {_sql_cells_cte(_HR_R)},
+WITH {cells_cte(_EVENT_XY, _HR_R, ['event_id'])},
 {bb0},
 {bb_chain},
 {ev0},
@@ -492,38 +491,15 @@ def g_staypoints(spark: SparkSession, sf: str) -> DataFrame:
                        "dwell_us"))
 
 
-_SP_MORTON = morton_ref(_SP_RBITS, "iy", "ix")
-_SP_L0 = l0_case()
-
 SQL_STAYPOINTS = f"""
-WITH raw AS (
-  SELECT event_id, user_id, ts, {_XENG} AS x, {_YENG} AS y FROM events
-), c AS (
-  SELECT event_id, user_id, ts,
-         CAST(floor((x - {grids.L0_ORIGIN_X!r}) / {grids.L0_SIDE!r})
-              AS BIGINT) AS i,
-         CAST(floor((y - {grids.L0_ORIGIN_Y!r}) / {grids.L0_SIDE!r})
-              AS BIGINT) AS j,
-         (x - {grids.L0_ORIGIN_X!r}) / {grids.L0_SIDE!r}
-           - floor((x - {grids.L0_ORIGIN_X!r}) / {grids.L0_SIDE!r}) AS u,
-         (y - {grids.L0_ORIGIN_Y!r}) / {grids.L0_SIDE!r}
-           - floor((y - {grids.L0_ORIGIN_Y!r}) / {grids.L0_SIDE!r}) AS v
-  FROM raw
-), d AS (
-  SELECT event_id, user_id, ts, {_SP_L0} AS digit,
-         CAST(floor(u * {1 << (_SP_RBITS // 2)}) AS BIGINT) AS ix,
-         CAST(floor(v * {1 << (_SP_RBITS // 2)}) AS BIGINT) AS iy
-  FROM c
-), cells AS (
-  SELECT event_id, user_id, ts,
-         (digit * {1 << _SP_RBITS} + {_SP_MORTON}) * 64 + {4 + _SP_RBITS}
-           AS cell
-  FROM d WHERE digit >= 0
-), flagged AS (
+WITH {cells_cte(f"SELECT event_id, user_id, ts, {_XENG} AS x, {_YENG} AS y FROM events",
+                _SP_RBITS, ['event_id', 'user_id', 'ts'])},
+flagged AS (
   SELECT event_id, user_id, ts, cell,
          CASE WHEN lag(cell) OVER w IS NULL
                 OR lag(cell) OVER w <> cell THEN 1 ELSE 0 END AS new_ep
-  FROM cells WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+  FROM cells WHERE cell >= 0
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 ), runs AS (
   SELECT user_id, ts, cell,
          sum(new_ep) OVER (PARTITION BY user_id ORDER BY ts, event_id

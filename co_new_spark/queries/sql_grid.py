@@ -1,13 +1,18 @@
 """THE single source for grid-spec fragments used in DuckDB oracle SQL.
 
-Every oracle that restates the Grid B encode (L0 digit lookup + y-first MSB
-Morton refinement, /root/reference/conf.yaml:21-26, README.md:51) builds its
-SQL from these two generators — one textual implementation of the bit
-convention, mirroring the one numpy implementation (grid/morton.py) and the
-one Column implementation (functions/cells_sql.interleave_yx_cols).
+Every oracle that maps points to Grid B cells (L0 digit lookup + y-first MSB
+Morton refinement, the reference's conf.yaml:21-26 and README.md:51) does it
+through ``cells_cte``: the one SQL restatement of grids.grid_b_encode_xy,
+mirroring the one numpy encoder (grid/cells.cell_b_from_xy).  Its two parts,
+``l0_case`` and ``morton_ref``, are the one textual implementation of the bit
+convention, also used alone by oracles that walk cells on the lattice; the
+numpy twin is grid/morton.py and the Column twin
+functions/cells_sql.interleave_yx_cols.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from ..grid import grids
 
@@ -48,3 +53,46 @@ def morton_ref(r: int, iy: str = "iy", ix: str = "ix") -> str:
         else:
             terms.append(f"((({ix} >> {nx - 1 - t // 2}) & 1) << {r - 1 - t})")
     return "(" + " + ".join(terms) + ")"
+
+
+def cells_cte(src: str, r: int, carry: Sequence[str] = (),
+              name: str = "cells") -> str:
+    """CTE ``name`` encoding each (x, y) row of the SELECT ``src`` to its
+    depth-(4 + r) packed Grid B cell — grids.grid_b_encode_xy as SQL.
+
+    Output columns: ``carry``, x, y, the L0 lattice (i, j), digit, the
+    refinement lattice (ix, iy) and cell.  Every source row is kept: where
+    the kernel gives -1 (uncovered ji cell, outside the 4x5 matrix,
+    non-finite input) digit and cell are -1, and i, j, ix, iy are NULL for
+    rows outside the matrix.  The matrix bounds are tested on the DOUBLE
+    (x - X0) / SIDE that the kernel's fi/fj check uses, before any BIGINT
+    cast: an extreme or NaN coordinate yields -1, never a cast error, and
+    both engines round identically at the matrix edge.  Inside the matrix
+    fi - i is exact and below 1, so ix < 2^(r//2) and iy < 2^((r+1)//2)
+    hold without the kernel's clip.
+    """
+    ny, nx = (r + 1) // 2, r // 2
+    keep = "".join(f"{c}, " for c in carry)
+    x0, y0, side = grids.L0_ORIGIN_X, grids.L0_ORIGIN_Y, grids.L0_SIDE
+    return f"""
+{name} AS (
+  SELECT {keep}x, y, i, j, digit, ix, iy,
+         CASE WHEN digit >= 0
+              THEN (digit * {1 << r} + {morton_ref(r)}) * 64 + {4 + r}
+              ELSE -1 END AS cell
+  FROM (
+    SELECT {keep}x, y, i, j, {l0_case()} AS digit,
+           CAST(floor((fi - i) * {1 << nx}) AS BIGINT) AS ix,
+           CAST(floor((fj - j) * {1 << ny}) AS BIGINT) AS iy
+    FROM (
+      SELECT {keep}x, y, fi, fj,
+             CASE WHEN ok THEN CAST(floor(fi) AS BIGINT) END AS i,
+             CASE WHEN ok THEN CAST(floor(fj) AS BIGINT) END AS j
+      FROM (
+        SELECT {keep}x, y, fi, fj,
+               isfinite(fi) AND isfinite(fj)
+               AND fi >= 0.0 AND fi < {grids.L0_NI}.0
+               AND fj >= 0.0 AND fj < {grids.L0_NJ}.0 AS ok
+        FROM (SELECT {keep}x, y, (x - {x0!r}) / {side!r} AS fi,
+                     (y - {y0!r}) / {side!r} AS fj
+              FROM ({src}))))))"""

@@ -348,43 +348,21 @@ def s_geo_cell_counts(spark: SparkSession, sf: str) -> DataFrame:
     return out.select(F.col("win.start").alias("window_start"), "cell", "n")
 
 
-def _sql_cell_r4() -> str:
-    # single-source fragments: position hash from geospatial._XENG/_YENG,
-    # grid constants from grids, digit/morton from sql_grid
-    from ..grid import grids
+def _sql_geo_cell_counts() -> str:
     from .geospatial import _XENG, _YENG
-    from .sql_grid import l0_case, morton_ref
+    from .sql_grid import cells_cte
 
-    x0, s = grids.L0_ORIGIN_X, grids.L0_SIDE
-    y0 = grids.L0_ORIGIN_Y
+    src = f"SELECT ts, {_XENG} AS x, {_YENG} AS y FROM events"
     return f"""
-pts AS (
-  SELECT ts, {_XENG} AS x, {_YENG} AS y FROM events
-), c AS (
-  SELECT ts,
-         CAST(floor((x - {x0!r}) / {s!r}) AS BIGINT) AS i,
-         CAST(floor((y - {y0!r}) / {s!r}) AS BIGINT) AS j,
-         CAST(floor(((x - {x0!r}) / {s!r}
-                     - floor((x - {x0!r}) / {s!r})) * 4) AS BIGINT) AS ix,
-         CAST(floor(((y - {y0!r}) / {s!r}
-                     - floor((y - {y0!r}) / {s!r})) * 4) AS BIGINT) AS iy
-  FROM pts
-), cells AS (
-  SELECT ts, ({l0_case()} * 16 + {morton_ref(4)}) * 64 + 8 AS cell
-  FROM c WHERE {l0_case()} >= 0
-)"""
-
-
-SQL_GEO_CELL_COUNTS = f"""
-WITH {_sql_cell_r4()}
+WITH {cells_cte(src, 4, ['ts'])}
 SELECT date_trunc('hour', ts) AS window_start, cell, count(*) AS n
-FROM cells GROUP BY 1, 2
+FROM cells WHERE cell >= 0 GROUP BY 1, 2
 """
 
 
 QUERIES = {
     "stream_window_counts": (s_window_counts, SQL_WINDOW_COUNTS),
-    "stream_geo_cell_counts": (s_geo_cell_counts, SQL_GEO_CELL_COUNTS),
+    "stream_geo_cell_counts": (s_geo_cell_counts, _sql_geo_cell_counts()),
     "stream_stateful_counts": (s_stateful_counts, SQL_STATEFUL_COUNTS),
     "stream_session_windows": (s_session_windows, SQL_SESSION_WINDOWS),
     "stream_dedup_counts": (s_dedup_counts, SQL_DEDUP_COUNTS),

@@ -102,6 +102,22 @@ def test_range_frame_mirror_and_peer_semantics(spark):
     assert len(got) > 500
 
 
+def test_range_frame_oracle_types_match_spark_longs():
+    # Spark returns LongType for both window aggregates; DuckDB's sum over
+    # BIGINT is HUGEINT unless the oracle casts it back
+    import duckdb
+
+    from co_new_spark.queries.relational2 import SQL_RANGE_FRAME
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM "
+                f"read_parquet('{SF_DIR}/events.parquet')")
+    types = {r[0]: r[1] for r in
+             con.execute(f"DESCRIBE {SQL_RANGE_FRAME}").fetchall()}
+    assert types["n_1h"] == "BIGINT"
+    assert types["iv_1h"] == "BIGINT"
+
+
 def test_range_frame_includes_equal_time_peers(spark):
     # RANGE vs ROWS: peers at the SAME order value are all in each other's
     # frame, so both tied rows see n=2 — a ROWS frame would give 1 and 2

@@ -50,21 +50,50 @@ def test_cell_b_udf_and_native_algebra(spark):
 
 
 def test_xy_to_cell_b_matches_sql_every_depth(spark):
-    """The kernel's point-to-cell encode equals the SQL restatement of the
-    grid spec at even and odd refinement (11: n_first != n_second)."""
+    """The kernel's point-to-cell encode equals the oracles' SQL restatement
+    (sql_grid.cells_cte) at even and odd refinement (11: n_first !=
+    n_second), on the fixture points plus edge inputs: exactly on an L0 edge,
+    a ulp inside the far matrix edges, on the far edge, an uncovered ji
+    cell, and extreme or non-finite coordinates (-1, not a cast error)."""
     import duckdb
+    import pandas as pd
+    import pyarrow as pa
 
+    from co_new_spark.grid import grids
     from co_new_spark.queries import geo_pages
+    from co_new_spark.queries.sql_grid import cells_cte
 
-    xy = spark.read.parquet(geo_pages.FIXTURE_XY)
+    x0, y0, s = grids.L0_ORIGIN_X, grids.L0_ORIGIN_Y, grids.L0_SIDE
+    x_far, y_far = x0 + grids.L0_NI * s, y0 + grids.L0_NJ * s
+    edge = [
+        (x0 + 1 * s, y0 + 2 * s),                    # L0 corner of digit 6
+        (np.nextafter(x_far, 0.0), y0 + 0.5 * s),     # last x of digit a
+        (x0 + 0.5 * s, np.nextafter(y_far, 0.0)),     # last y of digit 0
+        (x_far, y0 + 0.5 * s),                        # on the far edge
+        (x0 + 0.5 * s, y0 + 0.5 * s),                 # uncovered ji (0, 0)
+        (1e300, y0 + 0.5 * s),
+        (x0 + 0.5 * s, -1e300),
+        (np.nan, y0 + 2.5 * s),
+        (x0 + 2.5 * s, np.inf),
+    ]
+    pdf = pd.concat([
+        pd.read_parquet(geo_pages.FIXTURE_XY, columns=["url", "x", "y"]),
+        pd.DataFrame([(f"edge{k}", x, y) for k, (x, y) in enumerate(edge)],
+                     columns=["url", "x", "y"])], ignore_index=True)
+    xy = spark.createDataFrame(pdf)
+    con = duckdb.connect()
+    # from numpy, not pandas: a pandas NaN would reach DuckDB as NULL
+    con.register("xy", pa.table({c: pa.array(pdf[c].to_numpy()) for c in pdf}))
     for r in (4, 8, 11, 26):
         got = {row.url: row.cell for row in xy.select(
             "url", geo.xy_to_cell_b(F.col("x"), F.col("y"), r).alias("cell"))
             .collect()}
-        exp = dict(duckdb.sql(f"WITH {geo_pages._sql_xy_cells(r)} "
-                              "SELECT url, cell FROM cells").fetchall())
+        exp = dict(con.sql(f"WITH {cells_cte('SELECT url, x, y FROM xy', r, ['url'])} "
+                           "SELECT url, cell FROM cells").fetchall())
         assert got == exp, r
         assert sum(c >= 0 for c in got.values()) > len(got) // 2, r
+        assert [got[f"edge{k}"] >= 0 for k in range(len(edge))] == \
+            [True, True, True] + [False] * 6, r
 
 
 def test_native_interval_matches_numpy(spark):

@@ -2,13 +2,16 @@
 
 Runs every queries() entry and, where oracle_sql() exists, compares against
 DuckDB on the same parquet: row count, column names, and an order-insensitive
-value comparison (sorted rows, stringified).  Usage:
+value comparison (sorted rows, stringified).  Each PASS line ends with
+``sha=``, the first 16 hex digits of the sha256 of that normalized row set, so
+two checkouts can be shown to return the same rows.  Usage:
 
     python tools/check_oracle.py [sf_dir] [name_filter ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import sys
 import time
 import traceback
@@ -39,6 +42,10 @@ def norm_cell(v):
 def rowset(cols, rows):
     idx = sorted(range(len(cols)), key=lambda i: cols[i])
     return sorted(tuple(norm_cell(r[i]) for i in idx) for r in rows)
+
+
+def rowset_sha(rs) -> str:
+    return hashlib.sha256(repr(rs).encode()).hexdigest()[:16]
 
 
 def main() -> int:
@@ -101,7 +108,7 @@ def main() -> int:
             print(f"FAIL {name}: value mismatch, e.g. {diff}")
             failed.append(name)
             continue
-        print(f"PASS {name}: {len(rows)} rows  [{dt:.1f}s]")
+        print(f"PASS {name}: {len(rows)} rows  [{dt:.1f}s]  sha={rowset_sha(b)}")
     print(f"\n{len(failed)} failures: {failed}" if failed else "\nALL PASS")
     return 1 if failed else 0
 
