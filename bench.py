@@ -8,7 +8,9 @@ Env:
 
 The flagship metric is pages geocoded + grid-joined per second (the
 BASELINE.json north rule); per-query seconds for the operator suite ride
-along in "queries".
+along in "queries".  The flagship, the scaling pair and any suite entry
+whose reference file under ``sources.reference_data.REF_DIR`` is missing
+are left out and listed under "skipped" as {name: missing path}.
 """
 
 from __future__ import annotations
@@ -130,12 +132,11 @@ def run() -> dict:
 
     from pyspark.sql import functions as F
 
-    from co_new_spark.functions import cells_sql, geo
-    from co_new_spark.operators.cover import cover_lookup_best
+    from co_new_spark.operators.cover import flagship
     from co_new_spark.plans.session import get_spark
     from co_new_spark.queries import REGISTRY
-
-    from co_new_spark.sources.reference_data import load_citycover
+    from co_new_spark.sources.pages import materialize_pages
+    from co_new_spark.sources.reference_data import REF_DIR, load_citycover
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -147,6 +148,19 @@ def run() -> dict:
     spark.sparkContext.setLogLevel("ERROR")
 
     timings: dict[str, float] = {}
+    skipped: dict[str, str] = {}
+
+    def or_skip(name: str, fn):
+        """fn(), or None with ``name`` listed under "skipped" when fn needs
+        a reference file that is missing; any other error propagates."""
+        try:
+            return fn()
+        except FileNotFoundError as e:
+            path = os.path.abspath(e.filename or "")
+            if not path.startswith(os.path.abspath(REF_DIR) + os.sep):
+                raise
+            skipped[name] = path
+            return None
 
     # --- flagship: pages geocoded + cover-joined per second -----------------
     # Input is the STORED pages table (materialized to parquet untimed — the
@@ -156,39 +170,37 @@ def run() -> dict:
     # Arrow crossing; the cover lookup is a second Arrow UDF (per-depth
     # searchsorted, no join, zero shuffle of the fact table); the only
     # shuffle is the final tiny per-municipality agg.
-    from co_new_spark.sources.pages import materialize_pages
+    cover = or_skip("flagship_geocode_cover_join", lambda: load_citycover(spark))
+    n_geocoded = pages_per_sec = None
+    if cover is not None:
+        pages_path = materialize_pages(spark, n_pages, partitions=cpus * 4)
+        # scan parallelism: the ~150 MB/1M-row table must split across all slots
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
+        spark.conf.set("spark.sql.files.openCostInBytes", "0")
 
-    cover = load_citycover(spark)
-    pages_path = materialize_pages(spark, n_pages, partitions=cpus * 4)
-    # scan parallelism: the ~150 MB/1M-row table must split across all slots
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
-    spark.conf.set("spark.sql.files.openCostInBytes", "0")
+        def geocoded_total():
+            per_label = flagship(spark.read.parquet(pages_path), cover) \
+                .groupBy("isolabel_ext").agg(F.count("*").alias("n"))
+            return per_label.agg(F.sum("n"))
 
-    def _flagship(src):
-        pts = src.select(
-            "url", geo.encode_b_cell_from_text(F.col("text"), 26).alias("cell")
-        ).filter(F.col("cell") >= 0)
-        hit = cover_lookup_best(pts, cover, keep=["url", "cell"], dedup=False)
-        return hit.groupBy("isolabel_ext").agg(F.count("*").alias("n"))
+        # steady-state warmup (untimed): execute the SAME plan shape once.
+        # First-job costs are per-PROCESS, not per-job — python-worker imports
+        # (numpy/pandas/pyarrow/co_new_spark in 32 forked workers), plan
+        # analysis, whole-stage codegen, Arrow init.  A 100 TB run amortizes
+        # these over hours; a 1M-row bench must not charge them to throughput.
+        # The timed run REBUILDS the DataFrame — re-collecting the same object
+        # would skip the heavy shuffle-map stage (shuffle files persist) and
+        # time only the reduce.
+        geocoded_total().collect()
 
-    # steady-state warmup (untimed): execute the SAME plan shape once.
-    # First-job costs are per-PROCESS, not per-job — python-worker imports
-    # (numpy/pandas/pyarrow/co_new_spark in 32 forked workers), plan
-    # analysis, whole-stage codegen, Arrow init.  A 100 TB run amortizes
-    # these over hours; a 1M-row bench must not charge them to throughput.
-    # The timed run REBUILDS the DataFrame — re-collecting the same object
-    # would skip the heavy shuffle-map stage (shuffle files persist) and
-    # time only the reduce.
-    _flagship(spark.read.parquet(pages_path)).agg(F.sum("n")).collect()
-
-    agg = _flagship(spark.read.parquet(pages_path))
-    t0 = time.time()
-    n_geocoded = agg.agg(F.sum("n")).collect()[0][0]
-    t_flag = time.time() - t0
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-    spark.conf.unset("spark.sql.files.openCostInBytes")
-    timings["flagship_geocode_cover_join"] = round(t_flag, 3)
-    pages_per_sec = n_pages / t_flag
+        agg = geocoded_total()
+        t0 = time.time()
+        n_geocoded = int(agg.collect()[0][0])
+        t_flag = time.time() - t0
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        spark.conf.unset("spark.sql.files.openCostInBytes")
+        timings["flagship_geocode_cover_join"] = round(t_flag, 3)
+        pages_per_sec = round(n_pages / t_flag, 1)
 
     # --- operator suite on the sf tables ------------------------------------
     # Per-entry timing is the BEST of BENCH_BEST_OF trials (default 2): the
@@ -227,7 +239,9 @@ def run() -> dict:
     for name in HEADLINE:
         if only and name not in only:
             continue
-        timings[name] = min(time_entry(name) for _ in range(max(1, best_of)))
+        t = or_skip(name, lambda: min(time_entry(name) for _ in range(max(1, best_of))))
+        if t is not None:
+            timings[name] = t
 
     # --- regression tracking vs the previous round (round-3 VERDICT ask #3):
     # diff against the newest BENCH_r*.json; any entry >1.5x slower gets ONE
@@ -254,35 +268,13 @@ def run() -> dict:
     priors = [p for p in bench_files if 0 <= _round_of(p) < cur_round]
     prior_files = sorted(priors or bench_files, key=_round_of)
 
-    def _prev_queries(path: str) -> dict[str, float]:
-        """Per-entry timings from a driver BENCH file.  The driver stores
-        only the LAST 2000 chars of bench output as "tail" and sets
-        "parsed" to null when that window clips the head of the JSON line
-        (it does from ~50 suite entries on) — so fall back to brace-parsing
-        the "queries" object straight out of the tail."""
-        with open(path) as f:
-            obj = json.load(f)
-        q = (obj.get("parsed") or {}).get("queries")
-        if q:
-            return q
-        tail = obj.get("tail", "")
-        at = tail.find('"queries": {')
-        if at < 0:
-            return {}
-        s, depth = tail[at + len('"queries": '):], 0
-        for i, ch in enumerate(s):
-            if ch == "{":
-                depth += 1
-            elif ch == "}":
-                depth -= 1
-                if depth == 0:
-                    return json.loads(s[: i + 1])
-        return {}
-
     prev_q: dict[str, float] = {}
     if prior_files:
+        # a BENCH_r*.json whose recorded output window clipped the JSON
+        # line has "parsed": null and gives no baseline
         try:
-            prev_q = _prev_queries(prior_files[-1])
+            with open(prior_files[-1]) as f:
+                prev_q = (json.load(f).get("parsed") or {}).get("queries") or {}
         except Exception as e:  # a malformed prior file must not kill the bench
             print(f"bench: could not parse {prior_files[-1]}: {e}", file=sys.stderr)
     for name, prev in prev_q.items():
@@ -307,12 +299,13 @@ def run() -> dict:
         "queries": timings,
         "sf": sf,
         "pages": n_pages,
-        "pages_geocoded_per_sec": round(pages_per_sec, 1),
-        "n_geocoded": int(n_geocoded),
+        "pages_geocoded_per_sec": pages_per_sec,
+        "n_geocoded": n_geocoded,
         "cpus": cpus,
         "best_of": best_of,
         "regressions": regressions,
         "prev_bench": os.path.basename(prior_files[-1]) if prior_files else None,
+        "skipped": skipped,
     }
 
     # --- two-cluster-size scaling rule (BASELINE.json): same job, fresh JVM
@@ -320,75 +313,69 @@ def run() -> dict:
     # BOTH runs under the host's real core budget (each Spark task thread
     # drives a Python UDF worker, so local[k] consumes ~2k cores; see
     # BENCH.md for the full 1..32 curve and the JVM-only calibration).
-    if os.environ.get("SPARK_GRAFT_SCALING", "1") != "0":
-        import subprocess
+    if os.environ.get("SPARK_GRAFT_SCALING", "1") == "0":
+        return out
+    if cover is None:
+        # the workers load the same cover
+        skipped["scaling"] = skipped["flagship_geocode_cover_join"]
+        return out
+    import subprocess
 
-        worker = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                              "tools", "scaling_worker.py")
-        scale_pages = int(os.environ.get("SCALING_PAGES", "4000000"))
-        trials = int(os.environ.get("SCALING_TRIALS", "3"))
-        # parent materializes the stored input ONCE; each fresh-JVM worker
-        # scans the same parquet (identical bytes at both parallelism levels)
-        scale_path = materialize_pages(spark, scale_pages, partitions=64)
-        env = {**os.environ, "SCALING_PARTS": "64",
-               "SCALING_PAGES_PARQUET": scale_path}
-        # PAIRED trials: each trial runs N then 4N back-to-back, and the
-        # efficiency is computed WITHIN the pair — host-capacity swings that
-        # slow both runs cancel in the ratio, unlike independent best-of-N
-        # per level (which understates efficiency whenever the 1-core run
-        # happens to land in a quiet minute).  Report the best paired trial.
-        def run_pairs(pair_env: dict) -> dict:
-            pairs: list[dict] = []
-            for _trial in range(trials):
-                got: dict[int, dict] = {}
-                for c in (1, 4):
-                    r = subprocess.run(
-                        [sys.executable, worker, str(c), str(scale_pages)],
-                        capture_output=True, text=True, env=pair_env)
-                    if r.returncode != 0 or not r.stdout.strip():
-                        print(f"scaling worker (cores={c}) failed rc={r.returncode}: "
-                              f"{r.stderr[-2000:]}", file=sys.stderr)
-                        continue
-                    got[c] = json.loads(r.stdout.strip().splitlines()[-1])
-                if 1 in got and 4 in got:
-                    pairs.append({
-                        "eff": got[4]["pages_per_sec"] / got[1]["pages_per_sec"] / 4.0,
-                        **{c: got[c] for c in (1, 4)},
-                    })
-            if not pairs:
-                raise RuntimeError("all scaling trial pairs failed; see worker stderr")
-            # Headline = the best PLAUSIBLE pair: eff > 1.0 is physically
-            # impossible for this job (superlinearity here only means host
-            # noise slowed that pair's 1-core run), so such pairs are
-            # excluded from the headline rather than clamped to 1.0.  If
-            # every pair is noise-crossed (>1.0) the headline is 1.0 and the
-            # raw per-trial list shows why.  Raw values always stay in
-            # efficiency_per_trial.
-            plausible = [p for p in pairs if p["eff"] <= 1.0]
-            best = (max(plausible, key=lambda p: p["eff"]) if plausible
-                    else min(pairs, key=lambda p: p["eff"]))
-            return {
-                "pages": scale_pages,
-                "n_cores": {"throughput": best[1]["pages_per_sec"],
-                            "wall_s": best[1]["wall_s"], "cores": 1},
-                "4n_cores": {"throughput": best[4]["pages_per_sec"],
-                             "wall_s": best[4]["wall_s"], "cores": 4},
-                "efficiency": round(min(best["eff"], 1.0), 3),
-                "efficiency_per_trial": [round(p["eff"], 3) for p in pairs],
-                "partition_skew": best[4]["partition_skew"],
-                "hot_municipality_share": best[4]["hot_share"],
-                "straggler_ratio": best[4].get("straggler_ratio"),
-            }
-
-        # pin the job explicitly: a stray SCALING_JOB in the caller's
-        # environment must not silently swap the north-rule flagship pair
-        out["scaling"] = run_pairs({**env, "SCALING_JOB": "flagship"})
-        # Optional second pair on a SHUFFLE-BOUND job (exact-dedup shape:
-        # the full fact table exchanges on its fingerprint) — the flagship's
-        # cover lookup shuffles nothing, so this evidences the exchange path
-        # separately.  Off by default to bound bench wall time.
-        if os.environ.get("SPARK_GRAFT_SCALING_SHUFFLE", "0") == "1":
-            out["scaling_shuffle"] = run_pairs({**env, "SCALING_JOB": "shuffle"})
+    worker = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                          "tools", "scaling_worker.py")
+    scale_pages = int(os.environ.get("SCALING_PAGES", "4000000"))
+    trials = int(os.environ.get("SCALING_TRIALS", "3"))
+    # parent materializes the stored input ONCE; each fresh-JVM worker
+    # scans the same parquet (identical bytes at both parallelism levels)
+    scale_path = materialize_pages(spark, scale_pages, partitions=64)
+    env = {**os.environ, "SCALING_PARTS": "64",
+           "SCALING_PAGES_PARQUET": scale_path}
+    # PAIRED trials: each trial runs N then 4N back-to-back, and the
+    # efficiency is computed WITHIN the pair — host-capacity swings that
+    # slow both runs cancel in the ratio, unlike independent best-of-N
+    # per level (which understates efficiency whenever the 1-core run
+    # happens to land in a quiet minute).  Report the best paired trial.
+    pairs: list[dict] = []
+    for _trial in range(trials):
+        got: dict[int, dict] = {}
+        for c in (1, 4):
+            r = subprocess.run(
+                [sys.executable, worker, str(c), str(scale_pages)],
+                capture_output=True, text=True, env=env)
+            if r.returncode != 0 or not r.stdout.strip():
+                print(f"scaling worker (cores={c}) failed rc={r.returncode}: "
+                      f"{r.stderr[-2000:]}", file=sys.stderr)
+                continue
+            got[c] = json.loads(r.stdout.strip().splitlines()[-1])
+        if 1 in got and 4 in got:
+            pairs.append({
+                "eff": got[4]["pages_per_sec"] / got[1]["pages_per_sec"] / 4.0,
+                **{c: got[c] for c in (1, 4)},
+            })
+    if not pairs:
+        raise RuntimeError("all scaling trial pairs failed; see worker stderr")
+    # Headline = the best PLAUSIBLE pair: eff > 1.0 is physically
+    # impossible for this job (superlinearity here only means host
+    # noise slowed that pair's 1-core run), so such pairs are
+    # excluded from the headline rather than clamped to 1.0.  If
+    # every pair is noise-crossed (>1.0) the headline is 1.0 and the
+    # raw per-trial list shows why.  Raw values always stay in
+    # efficiency_per_trial.
+    plausible = [p for p in pairs if p["eff"] <= 1.0]
+    best = (max(plausible, key=lambda p: p["eff"]) if plausible
+            else min(pairs, key=lambda p: p["eff"]))
+    out["scaling"] = {
+        "pages": scale_pages,
+        "n_cores": {"throughput": best[1]["pages_per_sec"],
+                    "wall_s": best[1]["wall_s"], "cores": 1},
+        "4n_cores": {"throughput": best[4]["pages_per_sec"],
+                     "wall_s": best[4]["wall_s"], "cores": 4},
+        "efficiency": round(min(best["eff"], 1.0), 3),
+        "efficiency_per_trial": [round(p["eff"], 3) for p in pairs],
+        "partition_skew": best[4]["partition_skew"],
+        "hot_municipality_share": best[4]["hot_share"],
+        "straggler_ratio": best[4].get("straggler_ratio"),
+    }
     return out
 
 

@@ -66,10 +66,6 @@ def cell_to_parent(cell: Column, parent_level: int) -> Column:
     return cells_sql.cell_ancestor_at(cell, 2 * parent_level)
 
 
-def cell_to_children(cell: Column) -> Column:
-    return cells_sql.cell_children(cell, 2)
-
-
 def grid_disk(cell: Column, level: int, ring: int = 1) -> Column:
     """h3.grid_disk equivalent: king-move neighbors + self at ``ring``.
 

@@ -140,12 +140,6 @@ def quality_score(text: Column) -> Column:
     return F.round((len_score * 0.4 + alpha_ratio * 0.4 + punct_ok * 0.2), 6)
 
 
-def doc_fingerprint(text: Column) -> Column:
-    """64-bit content fingerprint of normalized text (exact-dup key)."""
-    norm = F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
-    return F.xxhash64(norm)
-
-
 FP_MOD = 1_000_000_007
 FP_BASE = 131
 

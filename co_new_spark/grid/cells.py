@@ -171,22 +171,6 @@ def cell_b_center(cell) -> tuple[np.ndarray, np.ndarray]:
     return (x0 + x1) / 2.0, (y0 + y1) / 2.0
 
 
-def cell_b_polygon(cell) -> np.ndarray:
-    """Grid B cell -> closed ring array (n, 5, 2) of EPSG:9377 vertices."""
-    x0, y0, x1, y1 = cell_b_box(cell)
-    ring = np.stack(
-        [
-            np.stack([x0, y0], axis=-1),
-            np.stack([x1, y0], axis=-1),
-            np.stack([x1, y1], axis=-1),
-            np.stack([x0, y1], axis=-1),
-            np.stack([x0, y0], axis=-1),
-        ],
-        axis=-2,
-    )
-    return ring
-
-
 def area_m2(cell) -> np.ndarray:
     """Exact cell area in m^2 (dx*dy) — st_area for grid cells (SURVEY.md §2.A24)."""
     x0, y0, x1, y1 = cell_b_box(cell)

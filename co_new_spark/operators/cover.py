@@ -20,6 +20,9 @@ it; ancestor equality per depth is exactly the prefix join at any depth.
 Border cells legitimately appear in several municipalities' covers.
 ``cover_lookup_best`` picks the deterministic min(isolabel_ext) (exact
 disambiguation = PIP refinement, A20); ``cover_join_candidates`` keeps them all.
+
+``flagship`` is the one definition of the north-star pipeline built on it:
+stored pages -> fused geocode -> ``cover_lookup_best`` -> matched page rows.
 """
 
 from __future__ import annotations
@@ -30,8 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ..functions import cells_sql
-from ..functions.geo import single_eval
+from ..functions import cells_sql, geo
 from ..grid import cells
 
 _BEST = StructType([StructField("isolabel_ext", StringType()),
@@ -107,7 +109,7 @@ def _cover_kernel(cover: DataFrame, deepest: bool):
         def kernel(c: pd.Series) -> pd.Series:
             return pd.Series(labels[lookup(c.to_numpy(dtype=np.int64, na_value=-1))[0]])
 
-    return single_eval(kernel)
+    return geo.single_eval(kernel)
 
 
 def cover_best_with_cell(points: DataFrame, cover: DataFrame,
@@ -151,3 +153,20 @@ def cover_lookup_best(points: DataFrame, cover: DataFrame,
     if dedup:
         return out.groupBy(*keep).agg(F.min("isolabel_ext").alias("isolabel_ext"))
     return out.select(*keep, "isolabel_ext")
+
+
+def flagship_cells(pages: DataFrame) -> DataFrame:
+    """The flagship's geocode half: pages (url, text) -> (url, cell).
+    Geoparse, projection and Grid B encode at refinement 26 run fused in one
+    Arrow crossing; pages without a cell on the grid are dropped."""
+    return (pages.select("url", geo.encode_b_cell_from_text(F.col("text"), 26).alias("cell"))
+            .filter(F.col("cell") >= 0))
+
+
+def flagship(pages: DataFrame, cover: DataFrame) -> DataFrame:
+    """The north-star pipeline: pages -> (url, cell, isolabel_ext), one row
+    per page whose cell some ``cover`` cell contains (min isolabel on border
+    cells).  ``flagship_cells`` then the shuffle-free cover kernel: two Arrow
+    crossings, no join and no exchange, so each caller's aggregate on top is
+    the plan's only shuffle."""
+    return cover_lookup_best(flagship_cells(pages), cover, keep=["url", "cell"], dedup=False)

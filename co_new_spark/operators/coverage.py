@@ -1,4 +1,4 @@
-"""A19 coverage clip as a Spark operator: cell geometry ∩ broadcast polygon.
+"""A19 coverage clip as Arrow UDFs: cell geometry ∩ broadcast polygon.
 
 Reproduces the shape of the reference's grid256L0coverage.geojson product
 (each L0 cell clipped to the Colombia boundary) for arbitrary polygons and
@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
@@ -60,13 +59,3 @@ def clip_vertices_udf(ring: np.ndarray):
         return pd.Series(out, dtype="object")
 
     return clip_vertices
-
-
-def coverage_clip(cells_df: DataFrame, ring: np.ndarray,
-                  cell_col: str = "cell") -> DataFrame:
-    """cells (+ any cols) -> + clip_area (m²) of cell ∩ polygon; keeps only
-    overlapping cells.  The polygon is broadcast via closure; at scale,
-    candidate cells should be prefiltered by the polygon bbox (cheap prefix
-    algebra) before this Arrow crossing."""
-    out = cells_df.withColumn("clip_area", clip_area_udf(ring)(F.col(cell_col)))
-    return out.filter(F.col("clip_area") > 0)

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
@@ -83,8 +83,3 @@ def pip_filter(points: DataFrame, rings: list[np.ndarray],
         & (F.col(y_col) >= y0) & (F.col(y_col) <= y1)
     )
     return cand.filter(pip_udf(rings)(F.col(x_col), F.col(y_col)))
-
-
-def bbox_prefilter(x: Column, y: Column, rings: list[np.ndarray]) -> Column:
-    x0, y0, x1, y1 = rings_bbox(rings)
-    return (x >= x0) & (x <= x1) & (y >= y0) & (y <= y1)

@@ -14,4 +14,17 @@ def spark():
     yield s
 
 
+@pytest.fixture(scope="session")
+def standin_cover(spark):
+    """Small mixed-depth cover standing in for citycover.csv: the 16 L0
+    cells (depth 4), one of them under two labels, plus a nested depth-12
+    cell and an overlay row.  Every on-grid point is covered."""
+    l0 = [((k << 6) | 4, f"CO-{k:02d}") for k in range(16)]
+    rows = [(iso, "cover", c, 4) for c, iso in l0] + [
+        ("CO-00A", "cover", (0xC55 << 6) | 12, 12),
+        ("CO-XX", "cover", (12 << 6) | 4, 4),
+        ("CO-SEAT", "overlay", (13 << 6) | 4, 4)]
+    return spark.createDataFrame(rows, ["isolabel_ext", "kind", "cell", "depth"])
+
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

@@ -7,8 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from co_new_spark.functions import geo
-from co_new_spark.operators.cover import cover_lookup_best
+from co_new_spark.operators.cover import flagship, flagship_cells
 from co_new_spark.plans.audit import repeated_python_udfs
 from co_new_spark.sources.pages import pages
 
@@ -24,47 +23,30 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
-def _cover(spark):
-    """Small mixed-depth cover: the 16 L0 cells (depth 4), one of them under
-    two labels, plus a nested depth-12 cell and an overlay row."""
-    l0 = [((k << 6) | 4, f"CO-{k:02d}") for k in range(16)]
-    rows = [(iso, "cover", c, 4) for c, iso in l0] + [
-        ("CO-00A", "cover", (0xC55 << 6) | 12, 12),
-        ("CO-XX", "cover", (12 << 6) | 4, 4),
-        ("CO-SEAT", "overlay", (13 << 6) | 4, 4)]
-    return spark.createDataFrame(rows, ["isolabel_ext", "kind", "cell", "depth"])
+def _lookup(spark, standin_cover):
+    """geocode -> filter -> cover lookup: the flagship's matched page rows."""
+    return flagship(pages(spark, 1000), standin_cover)
 
 
-def _geocoded(spark):
-    """Flagship geocode: pages -> fused geocode UDF -> filter on the cell."""
-    return pages(spark, 1000).select(
-        "url", geo.encode_b_cell_from_text(F.col("text"), 26).alias("cell")) \
-        .filter(F.col("cell") >= 0)
+def _per_label(spark, standin_cover):
+    """The flagship with its per-label count on top."""
+    return _lookup(spark, standin_cover).groupBy("isolabel_ext").agg(F.count("*").alias("n"))
 
 
-def _lookup(spark):
-    return cover_lookup_best(_geocoded(spark), _cover(spark), keep=["url", "cell"], dedup=False)
-
-
-def _flagship(spark):
-    """geocode -> filter -> cover lookup -> filter -> per-label count."""
-    return _lookup(spark).groupBy("isolabel_ext").agg(F.count("*").alias("n"))
-
-
-def test_cover_lookup_is_join_free(spark):
+def test_cover_lookup_is_join_free(spark, standin_cover):
     """The cover lookup is one Arrow kernel: no join of any kind, no
     broadcast and no shuffle of the fact table."""
-    plan = _plan(_lookup(spark))
+    plan = _plan(_lookup(spark, standin_cover))
     for node in ("BroadcastHashJoin", "SortMergeJoin", "BroadcastNestedLoopJoin",
                  "BroadcastExchange", "Exchange hashpartitioning"):
         assert node not in plan, node
     assert plan.count("ArrowEvalPython") == 2
 
 
-def test_flagship_has_single_shuffle(spark):
+def test_flagship_has_single_shuffle(spark, standin_cover):
     """geocode -> filter -> lookup -> filter -> agg: exactly ONE exchange
     (the final agg), no join, and one Python crossing per UDF."""
-    plan = _plan(_flagship(spark))
+    plan = _plan(_per_label(spark, standin_cover))
     for node in ("BroadcastHashJoin", "SortMergeJoin", "BroadcastNestedLoopJoin"):
         assert node not in plan, node
     assert plan.count("Exchange hashpartitioning") == 1
@@ -72,9 +54,9 @@ def test_flagship_has_single_shuffle(spark):
     assert "partial_count" in plan or "partial" in plan  # map-side combine
 
 
-def test_flagship_evaluates_each_udf_once(spark):
+def test_flagship_evaluates_each_udf_once(spark, standin_cover):
     """The copied-UDF hazard gate on the flagship shape."""
-    assert repeated_python_udfs(_flagship(spark)) == []
+    assert repeated_python_udfs(_per_label(spark, standin_cover)) == []
 
 
 def test_parquet_filter_pushdown(spark):
@@ -128,7 +110,7 @@ def test_whole_stage_codegen_covers_generator(spark):
 def test_fused_udf_single_arrow_crossing(spark):
     """Flagship geocode: exactly one ArrowEvalPython node (one crossing),
     also when a filter on the cell could be pushed below the projection."""
-    assert _plan(_geocoded(spark)).count("ArrowEvalPython") == 1
+    assert _plan(flagship_cells(pages(spark, 1000))).count("ArrowEvalPython") == 1
 
 
 def test_sql_registered_geocode_single_arrow_crossing(spark):

@@ -205,14 +205,19 @@ def test_sql_pipeline_matches_dataframe_pipeline(spark):
     assert sum(r.n_pages for r in out) > 1500
 
 
-def test_flagship_deterministic_across_runs(spark):
-    """Run-twice determinism (SURVEY §5.2.6): identical results, identical
-    ordering-insensitive content, across different partitionings."""
-    from co_new_spark.queries.geo_pages import g_cover_lookup
+def test_flagship_deterministic_across_runs(spark, standin_cover):
+    """Run-twice determinism (SURVEY §5.2.6): the flagship's matched rows
+    are identical, ordering aside, across different partitionings of the
+    same pages; with every on-grid page covered, no page is lost either."""
+    from co_new_spark.operators.cover import flagship
 
-    a = sorted(map(tuple, g_cover_lookup(spark, "/root/testdata/sf0.001").collect()))
-    b = sorted(map(tuple, g_cover_lookup(spark, "/root/testdata/sf0.001").collect()))
+    a, b = (sorted(map(tuple, flagship(pages(spark, 2000, partitions=p),
+                                       standin_cover).collect()))
+            for p in (2, 7))
     assert a == b and len(a) > 0
+    on_grid = pages(spark, 2000).filter(
+        geo.encode_b_cell_from_text(F.col("text"), 26) >= 0).count()
+    assert len(a) == on_grid
 
 
 def test_parse_all_geo_uris_multi_hit(spark):

@@ -40,19 +40,15 @@ def main() -> None:
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    from co_new_spark.functions import cells_sql, geo
-    from co_new_spark.operators.cover import cover_lookup_best
+    from co_new_spark.functions import cells_sql
+    from co_new_spark.operators.cover import flagship
     from co_new_spark.plans import lineage
     from co_new_spark.sources.pages import pages
     from co_new_spark.sources.reference_data import load_citycover
 
     t0 = time.time()
     cover = load_citycover(spark)
-    pg = pages(spark, args.pages, partitions=args.partitions)
-    pts = pg.select(
-        "url", geo.encode_b_cell_from_text(F.col("text"), 26).alias("cell")
-    ).filter(F.col("cell") >= 0)
-    hit = cover_lookup_best(pts, cover, keep=["url", "cell"], dedup=False)
+    hit = flagship(pages(spark, args.pages, partitions=args.partitions), cover)
     agg = (hit.withColumn("l0", cells_sql.cell_l0_digit(F.col("cell")))
            .groupBy("l0", "isolabel_ext").agg(F.count("*").alias("n_pages")))
     res = lineage.resumable_write(agg, args.output, "l0")

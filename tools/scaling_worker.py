@@ -6,8 +6,8 @@ Prints ONE JSON line: {"cpus": N, "wall_s": .., "pages_per_sec": ..,
 "hot_share": top-municipality share of output rows}.
 
 Run in a FRESH process per parallelism level (the JVM master can't change
-in-process); the parent (bench.py / tools/scaling_bench.py) computes the
-two-cluster-size efficiency per the BASELINE.json north rule.
+in-process); the parent, bench.py, computes the two-cluster-size efficiency
+per the BASELINE.json north rule.
 """
 
 from __future__ import annotations
@@ -24,8 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main(cpus: int, n_pages: int) -> dict:
     from pyspark.sql import functions as F
 
-    from co_new_spark.functions import geo
-    from co_new_spark.operators.cover import cover_lookup_best
+    from co_new_spark.operators.cover import flagship
     from co_new_spark.plans.session import get_spark
 
     from co_new_spark.sources.reference_data import load_citycover
@@ -45,26 +44,8 @@ def main(cpus: int, n_pages: int) -> dict:
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
     spark.conf.set("spark.sql.files.openCostInBytes", "0")
 
-    def flagship(src):
-        pts = src.select(
-            "url", geo.encode_b_cell_from_text(F.col("text"), 26).alias("cell")
-        ).filter(F.col("cell") >= 0)
-        hit = cover_lookup_best(pts, cover, keep=["url", "cell"], dedup=False)
-        return hit.groupBy("isolabel_ext").agg(F.count("*").alias("n"))
-
-    def shuffle_job(src):
-        # SHUFFLE-BOUND scaling evidence (SCALING_JOB=shuffle): exact-dedup
-        # shape — fingerprint every page and shuffle the FULL fact table on
-        # the fingerprint (the flagship's cover lookup shuffles nothing, so
-        # it exercises the map path; this pair exercises the exchange path).
-        f = src.select(F.md5(F.col("text")).alias("fp"))
-        per = f.groupBy("fp").agg(F.count("*").alias("n"))
-        return per.groupBy("n").agg(F.count("*").alias("n_groups"))
-
-    job_name = os.environ.get("SCALING_JOB", "flagship")
-    if job_name not in ("flagship", "shuffle"):
-        raise ValueError(f"SCALING_JOB must be 'flagship' or 'shuffle', got {job_name!r}")
-    job = flagship if job_name == "flagship" else shuffle_job
+    def job(src):
+        return flagship(src, cover).groupBy("isolabel_ext").agg(F.count("*").alias("n"))
 
     # steady-state warmup (untimed): execute the SAME plan shape once —
     # plan analysis + whole-stage codegen + python-worker imports are
@@ -81,12 +62,8 @@ def main(cpus: int, n_pages: int) -> dict:
     t0_utc = time.gmtime(t0)
     rows = agg.collect()
     wall = time.time() - t0
-    if job is flagship:
-        n_geo = sum(r.n for r in rows)
-        hot_share = max(r.n for r in rows) / n_geo
-    else:
-        n_geo = sum(r.n_groups for r in rows)  # distinct fingerprints
-        hot_share = 0.0
+    n_geo = sum(r.n for r in rows)
+    hot_share = max(r.n for r in rows) / n_geo
 
     # input-partition balance of the scan feeding the Arrow-UDF stage
     pg = spark.read.parquet(src_path)
