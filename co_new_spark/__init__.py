@@ -11,4 +11,9 @@ Layout:
     streaming/  Structured Streaming pipelines (late-page ingestion)
 """
 
+from .plans import worker as _worker
+
 __version__ = "0.1.0"
+
+# In a Python worker task: stop per-task zip directory re-reads
+_worker.install_in_task()

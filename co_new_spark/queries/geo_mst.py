@@ -62,6 +62,8 @@ from .sql_grid import l0_case, morton_ref
 
 _MST_RBITS = 4      # 4x4 refinement below L0 -> 131,072 m cells
 _MST_MAXROUNDS = 12  # Boruvka needs <= ceil(log2 V); 2^12 cells >> lattice cap
+# Lattice cap: occupied cells at refinement _MST_RBITS (4x5 L0 blocks x 16)
+_MST_MAX_CELLS = grids.L0_NI * grids.L0_NJ * (1 << _MST_RBITS)
 
 # Correctness-path cap, same convention as geo_cell_pagerank: the oracle
 # proves the algorithm at any size; bench raises it via env.
@@ -75,6 +77,12 @@ def _uf_contract(pdf):
     single group is a constant-size task, not a scalability concession."""
     import pandas as pd
 
+    # one chosen pair per component, so the lattice cap bounds the group
+    if len(pdf) > _MST_MAX_CELLS:
+        raise ValueError(
+            f"_uf_contract got {len(pdf)} component pairs in its single "
+            f"group; the r={_MST_RBITS} lattice cap allows at most "
+            f"{_MST_MAX_CELLS} (_MST_MAX_CELLS)")
     parent: dict = {}
 
     def find(x):

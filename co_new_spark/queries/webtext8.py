@@ -164,8 +164,8 @@ QUERIES = {
 # --------------------------------------------------------------------------
 # web_kmv_vocab — the OTHER cardinality sketch: K-minimum-values / bottom-k
 # (Bar-Yossef et al. 2002; Beyer et al. 2007 unbiased estimator).  Distinct
-# tradeoff vs HLL: exact counts below K, mergeable by keeping the k
-# smallest of a union, and the state is K hashes instead of registers.
+# tradeoff vs HLL: exact distinct-hash count below K, mergeable by keeping
+# the k smallest of a union, and the state is K hashes instead of registers.
 # --------------------------------------------------------------------------
 #
 # Shape: distinct (source, h) first (map-side combined), then the bottom-K
@@ -173,8 +173,10 @@ QUERIES = {
 # (bounded per key by the distinct count, never corpus-wide).  The
 # estimator is (K-1) * 2^60 / h_K with h_K the K-th smallest hash — an
 # exact int64 numerator over an exact int64 divisor, one IEEE division.
-# When a source has fewer than K distinct items the sketch IS the exact
-# set (n_seen < K -> exact), pytest-exercised via the merge-law test.
+# When a source has fewer than K distinct hashes the sketch IS the whole
+# hash set, so n_seen < K is the exact distinct-HASH count — equal to the
+# distinct-shingle count unless two shingles collide in 60 bits
+# (probability ~ n^2/2^61), pytest-exercised via the merge-law test.
 
 _KMV_K = 32
 _KMV_RANGE = 1 << 60   # md5_h60 is uniform on [0, 2^60)
@@ -196,6 +198,7 @@ def g_kmv_vocab(spark: SparkSession, sf: str) -> DataFrame:
                 F.max("h").alias("hk"),
                 F.sum("h").alias("hsum")))
     exact = sh.groupBy("source").agg(F.countDistinct("s").alias("exact_d"))
+    # below K: exact distinct-hash count (collision probability ~ n^2/2^61)
     est = F.when(F.col("n_seen") < _KMV_K,
                  F.col("n_seen").cast("double")) \
            .otherwise(F.lit(float(_KMV_K - 1) * _KMV_RANGE)

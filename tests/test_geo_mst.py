@@ -2,11 +2,19 @@
 
 import random
 
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR
 
-from co_new_spark.queries.geo_mst import _density_graph, boruvka_msf, g_mst
+from co_new_spark.queries.geo_mst import (
+    _MST_MAX_CELLS,
+    _density_graph,
+    _uf_contract,
+    boruvka_msf,
+    g_mst,
+)
 
 
 def _kruskal(nodes, edges):
@@ -33,6 +41,16 @@ def _spark_msf(spark, nodes, edges):
     ndf = spark.createDataFrame([(n,) for n in nodes], "cell long")
     edf = spark.createDataFrame(edges, "u long, v long, w long")
     return sorted((r.u, r.v, r.w) for r in boruvka_msf(ndf, edf).collect())
+
+
+def test_uf_contract_rejects_a_group_over_the_lattice_cap():
+    n = _MST_MAX_CELLS
+    chain = pd.DataFrame({"cu": range(1, n + 1), "cv": range(n)})
+    got = _uf_contract(chain)                    # at the cap: one component
+    assert set(got["c_new"]) == {0} and len(got) == n + 1
+    with pytest.raises(ValueError, match=str(_MST_MAX_CELLS)):
+        _uf_contract(pd.DataFrame({"cu": range(1, n + 2),
+                                   "cv": range(n + 1)}))
 
 
 def test_boruvka_handmade_forest(spark):

@@ -70,6 +70,11 @@ def _py_pipeline(ints):
 
 
 def test_int_protocol_nonnegative():
+    """The PQ entry's precondition on this corpus: min(floor(v*1024)+1024)
+    >= 0, i.e. every embedding value >= -1.  The Lloyd mean uses Spark's
+    truncating ``div``, which equals DuckDB's flooring ``//`` only on
+    non-negative sums; a corpus with values below -1 would make the engines
+    drift apart instead of failing."""
     ints = _load_ints()
     assert min(min(v) for v in ints.values()) >= 0   # trunc == floor holds
     assert max(max(v) for v in ints.values()) < 2048
