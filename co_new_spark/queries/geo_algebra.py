@@ -21,7 +21,7 @@ from ..grid import grids
 from ..operators import pip
 from ..operators.knn import ring_cells_udf
 from .geospatial import _EVENT_XY, _XENG, _YENG, _event_points
-from .sql_grid import cells_cte
+from .sql_grid import KING, cells_cte, lattice_cell
 
 X0 = grids.L0_ORIGIN_X
 Y0 = grids.L0_ORIGIN_Y
@@ -31,9 +31,6 @@ SIDE = grids.L0_SIDE
 def _d(v: float) -> str:
     """Float literal as DOUBLE (DuckDB parses bare decimals as DECIMAL)."""
     return f"CAST({v!r} AS DOUBLE)"
-
-
-from .sql_grid import l0_case as _l0_case  # single-source grid-spec SQL
 
 
 def _digit_to_j_case(d: str = "digit") -> str:
@@ -48,9 +45,6 @@ def _digit_to_i_case(d: str = "digit") -> str:
         f"WHEN {d} = {dd} THEN {ii}"
         for (jj, ii), dd in sorted(grids._L0_JI_TO_DIGIT.items())  # noqa: SLF001
     ) + " ELSE -1 END"
-
-
-from .sql_grid import morton_ref as _sql_ref  # single-source Morton SQL
 
 
 # ---------------------------------------------------------------------------
@@ -120,22 +114,13 @@ def g_neighbors(spark: SparkSession, sf: str) -> DataFrame:
 
 SQL_NEIGHBORS = f"""
 WITH {cells_cte(_EVENT_XY, 4, ['event_id'])},
-cc AS (SELECT DISTINCT cell, j * 4 + iy AS gy, i * 4 + ix AS gx
-       FROM cells WHERE cell >= 0),
-cand AS (
-  SELECT cell, gy + dy AS gy, gx + dx AS gx
-  FROM cc CROSS JOIN (SELECT unnest([-1, 0, 1]) AS dy)
-          CROSS JOIN (SELECT unnest([-1, 0, 1]) AS dx)
-  WHERE NOT (dy = 0 AND dx = 0)
-), nb AS (
-  SELECT cell, gy // 4 AS j, gx // 4 AS i, gy % 4 AS iy, gx % 4 AS ix
-  FROM cand WHERE gx BETWEEN 0 AND {grids.L0_NI * 4 - 1}
-              AND gy BETWEEN 0 AND {grids.L0_NJ * 4 - 1}
-), dig AS (
-  SELECT cell, {_l0_case()} AS digit, iy, ix FROM nb
+cc AS (SELECT DISTINCT cell, gi, gj FROM cells WHERE cell >= 0),
+nb AS (
+  SELECT cell, {lattice_cell("cc.gi + d.di", "cc.gj + d.dj", 4)} AS neighbor
+  FROM cc CROSS JOIN {KING} d
+  WHERE NOT (d.di = 0 AND d.dj = 0)
 )
-SELECT cell, ((digit * 16 + {_sql_ref(4)}) * 64 + 8) AS neighbor
-FROM dig WHERE digit >= 0
+SELECT cell, neighbor FROM nb WHERE neighbor >= 0
 """
 
 
@@ -164,13 +149,12 @@ def g_cell_box(spark: SparkSession, sf: str) -> DataFrame:
 
 SQL_CELL_BOX = f"""
 WITH {cells_cte(_EVENT_XY, 4, ['event_id'])},
-cc AS (SELECT DISTINCT cell, i * 4 + ix AS gx, j * 4 + iy AS gy
-       FROM cells WHERE cell >= 0),
+cc AS (SELECT DISTINCT cell, gi, gj FROM cells WHERE cell >= 0),
 b AS (
   SELECT cell,
-         {_d(X0)} + gx * {_d(_DX8)} AS xmin, {_d(Y0)} + gy * {_d(_DX8)} AS ymin,
-         {_d(X0)} + gx * {_d(_DX8)} + {_d(_DX8)} AS xmax,
-         {_d(Y0)} + gy * {_d(_DX8)} + {_d(_DX8)} AS ymax
+         {_d(X0)} + gi * {_d(_DX8)} AS xmin, {_d(Y0)} + gj * {_d(_DX8)} AS ymin,
+         {_d(X0)} + gi * {_d(_DX8)} + {_d(_DX8)} AS xmax,
+         {_d(Y0)} + gj * {_d(_DX8)} + {_d(_DX8)} AS ymax
   FROM cc)
 SELECT cell, xmin, ymin, xmax, ymax,
        (xmin + xmax) / 2 AS cx, (ymin + ymax) / 2 AS cy,
@@ -678,10 +662,8 @@ def hilbert_iter_sql(order: int, src: str, carry: str,
 
 
 def _sql_hilbert() -> str:
-    ny = nx = _HILBERT_R // 2
-    it0 = f"""it0 AS (
-  SELECT event_id, cell, i * {1 << nx} + ix AS hx, j * {1 << ny} + iy AS hy,
-         CAST(0 AS BIGINT) AS hd
+    it0 = """it0 AS (
+  SELECT event_id, cell, gi AS hx, gj AS hy, CAST(0 AS BIGINT) AS hd
   FROM cells WHERE cell >= 0)"""
     chain, last = hilbert_iter_sql(_HILBERT_ORDER, "it0", "event_id, cell")
     return (f"WITH {cells_cte(_EVENT_XY, _HILBERT_R, ['event_id'])},\n{it0},\n{chain}"
@@ -690,8 +672,8 @@ def _sql_hilbert() -> str:
 
 # ---------------------------------------------------------------------------
 # geo_knn_ring_events — B11 with a full SQL oracle: the ring-1 candidate set
-# equals the 3x3 lattice neighborhood, which SQL restates as |dgy|<=1 AND
-# |dgx|<=1 (ring cells with invalid L0 digits hold no candidates, so the
+# equals the 3x3 lattice neighborhood, which SQL restates as |dgi|<=1 AND
+# |dgj|<=1 (ring cells with invalid L0 digits hold no candidates, so the
 # enumerated-ring and lattice-box formulations join identical pairs).
 # ---------------------------------------------------------------------------
 
@@ -712,24 +694,25 @@ def g_knn_ring_events(spark: SparkSession, sf: str) -> DataFrame:
     return knn_ring(q, c, k=_KNN_K, ring=1, exclude_self=True)
 
 
-def _sql_knn_ring() -> str:
-    ny = nx = _KNN_R // 2
+def sql_knn_ring(src: str, pid: str, pick: str, r: int, k: int) -> str:
+    """The ring-1 kNN oracle over the points of the SELECT ``src`` (columns
+    ``pid``, x, y): encode at refinement ``r``, take the query rows by the
+    clause ``pick`` over the grid-valid points, join each to the candidates
+    of its 3x3 lattice block and keep the ``k`` nearest (ties by id)."""
     return f"""
-WITH {cells_cte(_EVENT_XY, _KNN_R, ['event_id'])},
-cc AS (
-  SELECT event_id, x, y, j * {1 << ny} + iy AS gy, i * {1 << nx} + ix AS gx
-  FROM cells WHERE cell >= 0),
-q AS (SELECT * FROM cc WHERE event_id < {_KNN_NQ}),
+WITH {cells_cte(src, r, [pid])},
+cc AS (SELECT {pid}, x, y, gi, gj FROM cells WHERE cell >= 0),
+q AS (SELECT * FROM cc {pick}),
 pairs AS (
-  SELECT q.event_id AS qid, c.event_id AS cid,
+  SELECT q.{pid} AS qid, c.{pid} AS cid,
          sqrt((q.x - c.x) * (q.x - c.x) + (q.y - c.y) * (q.y - c.y)) AS dist
   FROM q JOIN cc c
-    ON abs(q.gy - c.gy) <= 1 AND abs(q.gx - c.gx) <= 1
-   AND q.event_id <> c.event_id)
+    ON abs(q.gi - c.gi) <= 1 AND abs(q.gj - c.gj) <= 1
+   AND q.{pid} <> c.{pid})
 SELECT qid, cid, round(dist, 3) AS dist, rn FROM (
   SELECT qid, cid, dist,
          row_number() OVER (PARTITION BY qid ORDER BY dist, cid) AS rn
-  FROM pairs) WHERE rn <= {_KNN_K}
+  FROM pairs) WHERE rn <= {k}
 """
 
 
@@ -754,19 +737,11 @@ def g_cover_dilate(spark: SparkSession, sf: str) -> DataFrame:
 
 SQL_COVER_DILATE = f"""
 WITH {cells_cte(_EVENT_XY, 4, ['event_id'])},
-cc AS (SELECT DISTINCT cell, j * 4 + iy AS gy, i * 4 + ix AS gx
-       FROM cells WHERE cell >= 0),
-cand AS (
-  SELECT gy + dy AS gy, gx + dx AS gx
-  FROM cc CROSS JOIN (SELECT unnest([-1, 0, 1]) AS dy)
-          CROSS JOIN (SELECT unnest([-1, 0, 1]) AS dx)
-), nb AS (
-  SELECT DISTINCT gy // 4 AS j, gx // 4 AS i, gy % 4 AS iy, gx % 4 AS ix
-  FROM cand WHERE gx BETWEEN 0 AND {grids.L0_NI * 4 - 1}
-              AND gy BETWEEN 0 AND {grids.L0_NJ * 4 - 1}
-), dil AS (
-  SELECT DISTINCT ((digit * 16 + ref) * 64 + 8) AS cell FROM (
-    SELECT {_l0_case()} AS digit, {_sql_ref(4)} AS ref FROM nb) WHERE digit >= 0
+cc AS (SELECT DISTINCT cell, gi, gj FROM cells WHERE cell >= 0),
+dil AS (
+  SELECT DISTINCT cell FROM (
+    SELECT {lattice_cell("cc.gi + d.di", "cc.gj + d.dj", 4)} AS cell
+    FROM cc CROSS JOIN {KING} d) WHERE cell >= 0
 )
 SELECT d.cell, (o.cell IS NOT NULL) AS is_core
 FROM dil d LEFT JOIN (SELECT DISTINCT cell FROM cc) o ON d.cell = o.cell
@@ -785,7 +760,7 @@ FROM dil d LEFT JOIN (SELECT DISTINCT cell FROM cc) o ON d.cell = o.cell
 # slots are never members, so votes(c) == count of members in c's block —
 # one map-side-combined count keyed by cell plus one cell-keyed join back.
 # No all-pairs, no window.  The oracle restates it as the abs<=1 self-join
-# over the global (gy, gx) lattice coordinates.
+# over the global (gi, gj) lattice coordinates.
 # ---------------------------------------------------------------------------
 
 
@@ -803,12 +778,11 @@ def g_cover_erode(spark: SparkSession, sf: str) -> DataFrame:
 
 SQL_COVER_ERODE = f"""
 WITH {cells_cte(_EVENT_XY, 4, ['event_id'])},
-cc AS (SELECT DISTINCT cell, j * 4 + iy AS gy, i * 4 + ix AS gx
-       FROM cells WHERE cell >= 0),
+cc AS (SELECT DISTINCT cell, gi, gj FROM cells WHERE cell >= 0),
 er AS (
   SELECT a.cell, count(*) AS n
   FROM cc a JOIN cc b
-    ON abs(a.gy - b.gy) <= 1 AND abs(a.gx - b.gx) <= 1
+    ON abs(a.gi - b.gi) <= 1 AND abs(a.gj - b.gj) <= 1
   GROUP BY 1
 )
 SELECT cell, (n = 9) AS is_interior FROM er ORDER BY cell
@@ -842,8 +816,6 @@ def g_gridlib_asserts(spark: SparkSession, sf: str) -> DataFrame:
         (F.col("code") == F.col("expected")).alias("match"),
         (F.col("recode") == F.col("code")).alias("roundtrip"),
     ).orderBy("uri")
-
-
 
 
 SQL_GRIDLIB_ASSERTS = """
@@ -935,7 +907,8 @@ QUERIES = {
     "geo_polygon_cover": (g_polygon_cover, _sql_polygon_cover()),
     "geo_coverage_clip": (g_coverage_clip, _sql_coverage_clip()),
     "geo_shortcode": (g_shortcode, _sql_shortcode()),
-    "geo_knn_ring_events": (g_knn_ring_events, _sql_knn_ring()),
+    "geo_knn_ring_events": (g_knn_ring_events, sql_knn_ring(
+        _EVENT_XY, "event_id", f"WHERE event_id < {_KNN_NQ}", _KNN_R, _KNN_K)),
     "geo_hilbert_index": (g_hilbert_index, _sql_hilbert()),
     "geo_cell_codec_b32": (g_cell_codec_b32, _sql_codec_b32()),
     "geo_parent_rollup": (g_parent_rollup, SQL_PARENT_ROLLUP),

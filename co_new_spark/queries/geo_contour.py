@@ -42,7 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..grid import grids
-from .geospatial import _XENG, _YENG, _event_points
+from .geospatial import _EVENT_XY, _event_points
+from .sql_grid import cells_cte
 
 _CT_RBITS = 6     # 8x8 refinement below L0 -> 65,536 m cells
 _CT_T = 2         # density threshold: inside = count >= T
@@ -121,15 +122,9 @@ _SQL_CASES = ", ".join(f"({c}, {a}, {b}, {x}, {y})"
                        for c, a, b, x, y in _CASE_ROWS)
 
 SQL_CONTOUR = f"""
-WITH raw AS (
-  SELECT {_XENG} AS x, {_YENG} AS y FROM events WHERE event_id < {_CT_EVENTS}
-), g AS (
-  SELECT CAST(floor((x - {grids.L0_ORIGIN_X!r}) / {_CT_S!r}) AS BIGINT) AS gi,
-         CAST(floor((y - {grids.L0_ORIGIN_Y!r}) / {_CT_S!r}) AS BIGINT) AS gj
-  FROM raw
-), inside AS (
-  SELECT gi, gj FROM g
-  WHERE gi >= 0 AND gi < {4 * _CT_NSIDE} AND gj >= 0 AND gj < {5 * _CT_NSIDE}
+WITH {cells_cte(f"{_EVENT_XY} WHERE event_id < {_CT_EVENTS}", _CT_RBITS)},
+inside AS (  -- in-bounds lattice slots, covered or not
+  SELECT gi, gj FROM cells WHERE gi IS NOT NULL
   GROUP BY gi, gj HAVING count(*) >= {_CT_T}
 ), corner AS (SELECT * FROM (VALUES (0,0,1), (1,0,2), (0,1,4), (1,1,8))
               AS t(dx, dy, bit)),

@@ -37,11 +37,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import geo
-from ..grid import grids
 from ..operators.knn import ring_cells_udf
-from .geospatial import _XENG, _YENG, _event_points
-from .sql_grid import l0_case, morton_ref
+from .geospatial import _EVENT_XY, event_cell_counts
+from .sql_grid import cells_cte
 
 _PR_RBITS = 8          # 16x16 refinement below L0 -> 32,768 m cells
 _PR_ITERS = 3          # fixed rounds: keeps the oracle an unrolled CTE chain
@@ -93,12 +91,7 @@ def _cell_graph(spark: SparkSession, sf: str):
     (``nodes``, cached — it feeds the edge join, the algorithm, and the
     final rollup) and king-move adjacency (``edges``, A17 ring-1, cross-L0
     handled through the global (i, j) frame)."""
-    pts = (_event_points(spark, sf)
-           .filter(F.col("event_id") < _PR_EVENTS)
-           .withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"),
-                                                _PR_RBITS))
-           .filter(F.col("cell") >= 0))
-    nodes = pts.groupBy("cell").agg(F.count("*").alias("n")).cache()
+    nodes = event_cell_counts(spark, sf, _PR_RBITS, _PR_EVENTS).cache()
     nb = (nodes.select(F.col("cell").alias("u"),
                        F.explode(ring_cells_udf(1)(F.col("cell"))).alias("v"))
                .filter(F.col("u") != F.col("v")))
@@ -122,30 +115,14 @@ def g_cell_pagerank(spark: SparkSession, sf: str) -> DataFrame:
 # dependency-free).  `//` == `div` for the non-negative operands here.
 # --------------------------------------------------------------------------
 
-_PR_NSIDE = 1 << (_PR_RBITS // 2)
-_PR_S = grids.L0_SIDE / _PR_NSIDE
-_PR_L0 = l0_case()
-_PR_MORTON = morton_ref(_PR_RBITS, "iy", "ix")
-
-# THE one SQL restatement of _cell_graph: raw coords -> lattice -> occupied
-# cells (nodes) -> king adjacency (ed).  Both entry oracles splice this in.
-_GRAPH_CTES = f"""raw AS (
-  SELECT {_XENG} AS x, {_YENG} AS y FROM events WHERE event_id < {_PR_EVENTS}
-), g AS (
-  SELECT CAST(floor((x - {grids.L0_ORIGIN_X!r}) / {_PR_S!r}) AS BIGINT) AS gi,
-         CAST(floor((y - {grids.L0_ORIGIN_Y!r}) / {_PR_S!r}) AS BIGINT) AS gj
-  FROM raw
-), lat AS (
-  SELECT gi, gj, gi // {_PR_NSIDE} AS i, gj // {_PR_NSIDE} AS j,
-         gi % {_PR_NSIDE} AS ix, gj % {_PR_NSIDE} AS iy
-  FROM g
-), nodes AS (
-  SELECT gi, gj,
-         ((min({_PR_L0}) * {1 << _PR_RBITS} + min({_PR_MORTON})) * 64
-          + {4 + _PR_RBITS}) AS cell,
-         CAST(count(*) AS BIGINT) AS n
-  FROM lat WHERE {_PR_L0} >= 0
-  GROUP BY gi, gj
+# THE one SQL restatement of _cell_graph: occupied cells (nodes) with
+# their global lattice slot -> king adjacency (ed).  Both entry oracles
+# splice this in.
+_GRAPH_CTES = f"""{cells_cte(f"{_EVENT_XY} WHERE event_id < {_PR_EVENTS}", _PR_RBITS)},
+nodes AS (
+  SELECT gi, gj, cell, CAST(count(*) AS BIGINT) AS n
+  FROM cells WHERE cell >= 0
+  GROUP BY gi, gj, cell
 ), ed AS (
   SELECT a.cell AS u, b.cell AS v
   FROM nodes a JOIN nodes b

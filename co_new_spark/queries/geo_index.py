@@ -24,9 +24,10 @@ from ..grid import grids
 from ..operators import tiles
 from ..sources.reference_data import REF_DIR
 from ..sources.tables import load
-from .geo_algebra import _d, _l0_case, _sql_ref
+from .geo_algebra import _d
 from .geospatial import _EVENT_XY
-from .sql_grid import cells_cte
+from .sql_grid import cells_cte, lattice_cell
+from .sql_grid import morton_ref as _sql_ref
 
 # deterministic global lat/lon per event (exact in float64 on both engines)
 _LAT = "(-90.0 + ((event_id * 40503) % 180000) / 1000.0)"
@@ -103,11 +104,10 @@ def _sql_cell_to_tile() -> str:
     side = grids.L0_SIDE / 4.0
     return f"""
 WITH {cells_cte(_EVENT_XY, 4, ['event_id'])},
-cc AS (SELECT DISTINCT cell, j * 4 + iy AS gy, i * 4 + ix AS gx
-       FROM cells WHERE cell >= 0),
+cc AS (SELECT DISTINCT cell, gi, gj FROM cells WHERE cell >= 0),
 ctr AS (
-  SELECT cell, {_d(tiles.X0)} + (gx + 0.5) * {_d(side)} AS cx,
-               {_d(tiles.Y0)} + (gy + 0.5) * {_d(side)} AS cy
+  SELECT cell, {_d(tiles.X0)} + (gi + 0.5) * {_d(side)} AS cx,
+               {_d(tiles.Y0)} + (gj + 0.5) * {_d(side)} AS cy
   FROM cc)
 SELECT cell,
        CAST(floor(({_d(tiles.Y0 + tiles.Y_EXTENT)} - cy) / {_d(dy)}) AS BIGINT) * {n}
@@ -149,16 +149,11 @@ ext AS (
          least(CAST(floor(y1 / {_d(side)} - 0.5) AS BIGINT), {grids.L0_NJ * 4 - 1}) AS gy1
   FROM box
 ), latt AS (
-  SELECT tile, gy.g AS gy, gx.g AS gx
+  SELECT tile, {lattice_cell("gx.g", "gy.g", 4)} AS cell
   FROM rng, LATERAL (SELECT unnest(range(gy0, gy1 + 1)) AS g) gy,
             LATERAL (SELECT unnest(range(gx0, gx1 + 1)) AS g) gx
-), ji AS (
-  SELECT tile, gy // 4 AS j, gx // 4 AS i, gy % 4 AS iy, gx % 4 AS ix FROM latt
-), dig AS (
-  SELECT tile, {_l0_case()} AS digit, iy, ix FROM ji
 )
-SELECT tile, ((digit * 16 + {_sql_ref(4)}) * 64 + 8) AS cell
-FROM dig WHERE digit >= 0
+SELECT tile, cell FROM latt WHERE cell >= 0
 """
 
 

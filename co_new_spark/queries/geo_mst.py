@@ -53,12 +53,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import geo
 from ..grid import grids
 from ..operators.components import connected_components
 from ..operators.knn import ring_cells_udf
-from .geospatial import _XENG, _YENG, _event_points
-from .sql_grid import l0_case, morton_ref
+from .geospatial import _EVENT_XY, event_cell_counts
+from .sql_grid import cells_cte
 
 _MST_RBITS = 4      # 4x4 refinement below L0 -> 131,072 m cells
 _MST_MAXROUNDS = 12  # Boruvka needs <= ceil(log2 V); 2^12 cells >> lattice cap
@@ -167,12 +166,7 @@ def boruvka_msf(nodes: DataFrame, edges: DataFrame,
 def _density_graph(spark: SparkSession, sf: str):
     """Occupied-cell nodes (cell, gi-free) + canonical undirected edges with
     the density-gradient weight w = |n_u - n_v|."""
-    pts = (_event_points(spark, sf)
-           .filter(F.col("event_id") < _MST_EVENTS)
-           .withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"),
-                                                _MST_RBITS))
-           .filter(F.col("cell") >= 0))
-    nodes = pts.groupBy("cell").agg(F.count("*").alias("n")).cache()
+    nodes = event_cell_counts(spark, sf, _MST_RBITS, _MST_EVENTS).cache()
     nb = (nodes.select(F.col("cell").alias("u"), F.col("n").alias("nu"),
                        F.explode(ring_cells_udf(1)(F.col("cell"))).alias("v"))
                .filter(F.col("u") < F.col("v")))
@@ -202,30 +196,13 @@ def g_mst(spark: SparkSession, sf: str) -> DataFrame:
 # its far endpoint is never reached.  Nothing about Boruvka appears here.
 # --------------------------------------------------------------------------
 
-_MST_NSIDE = 1 << (_MST_RBITS // 2)
-_MST_S = grids.L0_SIDE / _MST_NSIDE
-_MST_L0 = l0_case()
-_MST_MORTON = morton_ref(_MST_RBITS, "iy", "ix")
-
 # THE one SQL derivation of the density graph + cycle-property reach
 # closure, shared by both entry oracles (single-sourcing rule)
-_SQL_GRAPH_CTES = f"""raw AS (
-  SELECT {_XENG} AS x, {_YENG} AS y FROM events WHERE event_id < {_MST_EVENTS}
-), g AS (
-  SELECT CAST(floor((x - {grids.L0_ORIGIN_X!r}) / {_MST_S!r}) AS BIGINT) AS gi,
-         CAST(floor((y - {grids.L0_ORIGIN_Y!r}) / {_MST_S!r}) AS BIGINT) AS gj
-  FROM raw
-), lat AS (
-  SELECT gi, gj, gi // {_MST_NSIDE} AS i, gj // {_MST_NSIDE} AS j,
-         gi % {_MST_NSIDE} AS ix, gj % {_MST_NSIDE} AS iy
-  FROM g
-), nodes AS (
-  SELECT gi, gj,
-         ((min({_MST_L0}) * {1 << _MST_RBITS} + min({_MST_MORTON})) * 64
-          + {4 + _MST_RBITS}) AS cell,
-         CAST(count(*) AS BIGINT) AS n
-  FROM lat WHERE {_MST_L0} >= 0
-  GROUP BY gi, gj
+_SQL_GRAPH_CTES = f"""{cells_cte(f"{_EVENT_XY} WHERE event_id < {_MST_EVENTS}", _MST_RBITS)},
+nodes AS (
+  SELECT gi, gj, cell, CAST(count(*) AS BIGINT) AS n
+  FROM cells WHERE cell >= 0
+  GROUP BY gi, gj, cell
 ), ew AS (
   SELECT a.cell AS u, b.cell AS v, CAST(abs(a.n - b.n) AS BIGINT) AS w
   FROM nodes a JOIN nodes b

@@ -29,6 +29,7 @@ from ..functions import text as txf
 from ..operators.cover import cover_lookup_best
 from ..operators.knn import knn_ring
 from ..sources.reference_data import load_citycover
+from .geo_algebra import sql_knn_ring
 from .geo_cover_sql import _sql_csv_decode
 from .sql_grid import cells_cte
 from .webtext_q import FIXTURE_PAGES
@@ -158,27 +159,6 @@ def g_knn_ring(spark: SparkSession, sf: str) -> DataFrame:
         F.col("url").alias("qid"), "x", "y", "cell")
     c = pts.select(F.col("url").alias("cid"), "x", "y", "cell")
     return knn_ring(q, c, k=_KNN_K, ring=1, exclude_self=True)
-
-
-def _sql_knn_ring_pages() -> str:
-    ny = nx = _KNN_R // 2
-    return f"""
-WITH {cells_cte(_XY_SRC, _KNN_R, ['url'])},
-cc AS (
-  SELECT url, x, y, j * {1 << ny} + iy AS gy, i * {1 << nx} + ix AS gx
-  FROM cells WHERE cell >= 0),
-q AS (SELECT * FROM cc ORDER BY url LIMIT {_KNN_NQ}),
-pairs AS (
-  SELECT q.url AS qid, c.url AS cid,
-         sqrt((q.x - c.x) * (q.x - c.x) + (q.y - c.y) * (q.y - c.y)) AS dist
-  FROM q JOIN cc c
-    ON abs(q.gy - c.gy) <= 1 AND abs(q.gx - c.gx) <= 1
-   AND q.url <> c.url)
-SELECT qid, cid, round(dist, 3) AS dist, rn FROM (
-  SELECT qid, cid, dist,
-         row_number() OVER (PARTITION BY qid ORDER BY dist, cid) AS rn
-  FROM pairs) WHERE rn <= {_KNN_K}
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -316,6 +296,7 @@ QUERIES = {
     "geo_pages_l0_histogram": (g_pages_l0_histogram, SQL_PAGES_L0),
     "geo_native_geocode": (g_native_geocode, _sql_native_geocode()),
     "geo_cover_lookup": (g_cover_lookup, SQL_COVER_LOOKUP),
-    "geo_knn_ring": (g_knn_ring, _sql_knn_ring_pages()),
+    "geo_knn_ring": (g_knn_ring, sql_knn_ring(
+        _XY_SRC, "url", f"ORDER BY url LIMIT {_KNN_NQ}", _KNN_R, _KNN_K)),
     "web_geo_lang_mix": (g_lang_mix, SQL_LANG_MIX),
 }

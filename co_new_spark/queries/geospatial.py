@@ -49,6 +49,20 @@ def _event_points(spark: SparkSession, sf: str, extra: tuple = ()) -> DataFrame:
     return ev.select("event_id", *extra, x, y)
 
 
+def event_cell_counts(spark: SparkSession, sf: str, r: int,
+                      max_event_id: int | None = None) -> DataFrame:
+    """(cell, n): events per occupied depth-(4 + r) Grid B cell, the raster
+    that density, graph and hot-spot entries start from (its SQL twin is
+    ``cells_cte -> cell >= 0 -> count per cell``).  ``max_event_id`` keeps
+    only event_id < it, filtered below the encode UDF."""
+    pts = _event_points(spark, sf)
+    if max_event_id is not None:
+        pts = pts.filter(F.col("event_id") < max_event_id)
+    return (pts.withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), r))
+               .filter(F.col("cell") >= 0)
+               .groupBy("cell").agg(F.count("*").alias("n")))
+
+
 def g_cell_assign_parity(spark: SparkSession, sf: str) -> DataFrame:
     """Engine cell encode (pandas-UDF kernel) vs SQL spec re-statement."""
     pts = _event_points(spark, sf)

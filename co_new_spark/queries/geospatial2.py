@@ -31,8 +31,8 @@ from pyspark.sql import functions as F
 from ..functions import geo
 from ..grid import grids
 from ..operators.knn import ring_cells_d2_udf, ring_cells_udf
-from .geospatial import _EVENT_XY, _XENG, _YENG, _event_points
-from .sql_grid import cells_cte, l0_case, morton_ref
+from .geospatial import _EVENT_XY, _XENG, _YENG, _event_points, event_cell_counts
+from .sql_grid import KING, cells_cte, lattice_cell
 
 # ---------------------------------------------------------------------------
 # geo_distance_join — within-radius pairs via cell-bucket + ring-1 equi-join
@@ -68,8 +68,6 @@ def g_distance_join(spark: SparkSession, sf: str) -> DataFrame:
              .filter((F.col("id_a") < F.col("id_b")) & (d2 <= F.lit(r2)))
              .select("id_a", "id_b", d2.cast("long").alias("dist2")))
 
-
-_L0_CASE = l0_case()
 
 SQL_DISTANCE_JOIN = f"""
 WITH {cells_cte(f"{_EVENT_XY} WHERE event_id < {_DJ_N}", 0, ['event_id'])},
@@ -139,10 +137,7 @@ def g_focal_sum(spark: SparkSession, sf: str) -> DataFrame:
     <=9 valid targets (adjacency is symmetric, so pushing counts TO ring
     targets equals pulling FROM ring sources) and re-aggregates — a second
     shuffle over the raster, never over the raw points."""
-    counts = (_event_points(spark, sf)
-              .withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), _FOCAL_RBITS))
-              .filter(F.col("cell") >= 0)
-              .groupBy("cell").agg(F.count("*").alias("n")))
+    counts = event_cell_counts(spark, sf, _FOCAL_RBITS)
     spread = counts.select(
         F.col("n"),
         F.explode(ring_cells_udf(1)(F.col("cell"))).alias("target"))
@@ -151,40 +146,23 @@ def g_focal_sum(spark: SparkSession, sf: str) -> DataFrame:
                        F.count("*").alias("n_contrib")))
 
 
-_FS_NSIDE = 1 << (_FOCAL_RBITS // 2)      # per-axis cells below one L0
-_FS_S = grids.L0_SIDE / _FS_NSIDE          # raster cell side (m)
-_MORTON6 = morton_ref(_FOCAL_RBITS, "iy", "ix")
-_L0T_CASE = l0_case("tj", "ti")
+# The occupied-cell raster every r=6 oracle below starts from: the SQL twin
+# of event_cell_counts, keyed by its global lattice slot (gi, gj) too.
+_RASTER = f"""{cells_cte(_EVENT_XY, _FOCAL_RBITS)},
+occ AS MATERIALIZED (
+  SELECT gi, gj, cell, count(*) AS n FROM cells WHERE cell >= 0
+  GROUP BY gi, gj, cell
+)"""
 
 SQL_FOCAL_SUM = f"""
-WITH raw AS (
-  SELECT event_id, {_XENG} AS x, {_YENG} AS y FROM events
-), g AS (
-  SELECT CAST(floor((x - {grids.L0_ORIGIN_X!r}) / {_FS_S!r}) AS BIGINT) AS gi,
-         CAST(floor((y - {grids.L0_ORIGIN_Y!r}) / {_FS_S!r}) AS BIGINT) AS gj
-  FROM raw
-), occ AS (  -- per-cell raster, grid-valid lattice cells only
-  SELECT gi, gj, count(*) AS n
-  FROM (SELECT gi, gj, gi // {_FS_NSIDE} AS i, gj // {_FS_NSIDE} AS j FROM g)
-  WHERE {_L0_CASE} >= 0
-  GROUP BY gi, gj
-), spread AS (
-  SELECT occ.gi + d.di AS tgi, occ.gj + d.dj AS tgj, occ.n
-  FROM occ
-  CROSS JOIN (SELECT a.di, b.dj
-              FROM (SELECT unnest(range(-1, 2)) AS di) a,
-                   (SELECT unnest(range(-1, 2)) AS dj) b) d
-), valid AS (
-  SELECT tgi, tgj, n,
-         tgi // {_FS_NSIDE} AS ti, tgj // {_FS_NSIDE} AS tj,
-         tgi % {_FS_NSIDE} AS ix, tgj % {_FS_NSIDE} AS iy
-  FROM spread WHERE tgi >= 0 AND tgj >= 0
+WITH {_RASTER}, spread AS (
+  SELECT {lattice_cell("occ.gi + d.di", "occ.gj + d.dj", _FOCAL_RBITS)} AS cell,
+         occ.n
+  FROM occ CROSS JOIN {KING} d
 )
-SELECT (({_L0T_CASE}) * {1 << _FOCAL_RBITS} + {_MORTON6}) * 64
-         + {4 + _FOCAL_RBITS} AS cell,
-       CAST(sum(n) AS BIGINT) AS focal_sum,
+SELECT cell, CAST(sum(n) AS BIGINT) AS focal_sum,
        CAST(count(*) AS BIGINT) AS n_contrib
-FROM valid WHERE {_L0T_CASE} >= 0
+FROM spread WHERE cell >= 0
 GROUP BY 1
 """
 
@@ -289,29 +267,12 @@ def g_grid_cluster(spark: SparkSession, sf: str) -> DataFrame:
                     F.sum("n").alias("n_points")))
 
 
-_CL_NSIDE = 1 << (_CL_RBITS // 2)
-_CL_S = grids.L0_SIDE / _CL_NSIDE
-_MORTON8 = morton_ref(_CL_RBITS, "iy", "ix")
-
 SQL_GRID_CLUSTER = f"""
-WITH RECURSIVE raw AS (
-  SELECT {_XENG} AS x, {_YENG} AS y FROM events
-  WHERE event_id < {_CL_EVENTS}
-), g AS (
-  SELECT CAST(floor((x - {grids.L0_ORIGIN_X!r}) / {_CL_S!r}) AS BIGINT) AS gi,
-         CAST(floor((y - {grids.L0_ORIGIN_Y!r}) / {_CL_S!r}) AS BIGINT) AS gj
-  FROM raw
-), lat AS (
-  SELECT gi, gj, gi // {_CL_NSIDE} AS i, gj // {_CL_NSIDE} AS j,
-         gi % {_CL_NSIDE} AS ix, gj % {_CL_NSIDE} AS iy
-  FROM g
-), dense AS (
-  SELECT gi, gj,
-         ((min({_L0_CASE}) * {1 << _CL_RBITS} + min({_MORTON8})) * 64
-          + {4 + _CL_RBITS}) AS cell,
-         count(*) AS n
-  FROM lat WHERE {_L0_CASE} >= 0
-  GROUP BY gi, gj HAVING count(*) >= {_CL_MIN_PTS}
+WITH RECURSIVE {cells_cte(f"{_EVENT_XY} WHERE event_id < {_CL_EVENTS}", _CL_RBITS)},
+dense AS (
+  SELECT gi, gj, cell, count(*) AS n
+  FROM cells WHERE cell >= 0
+  GROUP BY gi, gj, cell HAVING count(*) >= {_CL_MIN_PTS}
 ), ed AS (
   SELECT a.cell AS u, b.cell AS v
   FROM dense a JOIN dense b
@@ -353,10 +314,7 @@ def g_hotspot_gi(spark: SparkSession, sf: str) -> DataFrame:
     shuffle (same as geo_focal_sum); the spread re-agg and the
     occupied-target join shuffle the raster (cells << points); the global
     (n, Σx, Σx²) scalars are ONE tiny agg broadcast back."""
-    counts = (_event_points(spark, sf)
-              .withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), _FOCAL_RBITS))
-              .filter(F.col("cell") >= 0)
-              .groupBy("cell").agg(F.count("*").alias("n")))
+    counts = event_cell_counts(spark, sf, _FOCAL_RBITS)
     tot = counts.agg(F.count("*").alias("nc"),
                      F.sum("n").alias("sx"),
                      F.sum(F.col("n") * F.col("n")).alias("sxx"))
@@ -382,50 +340,29 @@ def g_hotspot_gi(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_HOTSPOT_GI = f"""
-WITH raw AS (
-  SELECT event_id, {_XENG} AS x, {_YENG} AS y FROM events
-), g AS (
-  SELECT CAST(floor((x - {grids.L0_ORIGIN_X!r}) / {_FS_S!r}) AS BIGINT) AS gi,
-         CAST(floor((y - {grids.L0_ORIGIN_Y!r}) / {_FS_S!r}) AS BIGINT) AS gj
-  FROM raw
-), occ AS MATERIALIZED (
-  SELECT gi, gj, count(*) AS n
-  FROM (SELECT gi, gj, gi // {_FS_NSIDE} AS i, gj // {_FS_NSIDE} AS j FROM g)
-  WHERE {_L0_CASE} >= 0
-  GROUP BY gi, gj
-), tot AS (
+WITH {_RASTER}, tot AS (
   SELECT count(*) AS nc, CAST(sum(n) AS BIGINT) AS sx,
          CAST(sum(n * n) AS BIGINT) AS sxx
   FROM occ
 ), spread AS (
   SELECT occ.gi + d.di AS tgi, occ.gj + d.dj AS tgj, occ.n AS sn
-  FROM occ
-  CROSS JOIN (SELECT a.di, b.dj
-              FROM (SELECT unnest(range(-1, 2)) AS di) a,
-                   (SELECT unnest(range(-1, 2)) AS dj) b) d
+  FROM occ CROSS JOIN {KING} d
 ), foc AS (
-  SELECT o.gi, o.gj, o.n, CAST(sum(s.sn) AS BIGINT) AS focal_sum,
+  SELECT o.cell, o.n, CAST(sum(s.sn) AS BIGINT) AS focal_sum,
          CAST(count(*) AS BIGINT) AS w_i
   FROM occ o JOIN spread s ON s.tgi = o.gi AND s.tgj = o.gj
-  GROUP BY 1, 2, 3
-), z AS (
-  SELECT gi, gj, n, focal_sum, w_i,
-         CAST(round(1000000.0
-              * (focal_sum - (CAST(sx AS DOUBLE) / nc) * w_i)
-              / nullif((sqrt(CAST(sxx AS DOUBLE) / nc
-                             - (CAST(sx AS DOUBLE) / nc)
-                               * (CAST(sx AS DOUBLE) / nc))
-                        * sqrt((CAST(nc AS DOUBLE) * w_i
-                                - CAST(w_i AS DOUBLE) * w_i)
-                               / (nc - 1))), 0)) AS BIGINT) AS gi_micro,
-         gi % {_FS_NSIDE} AS ix, gj % {_FS_NSIDE} AS iy,
-         gi // {_FS_NSIDE} AS ti, gj // {_FS_NSIDE} AS tj
-  FROM foc, tot
+  GROUP BY 1, 2
 )
-SELECT (({_L0T_CASE}) * {1 << _FOCAL_RBITS} + {_MORTON6}) * 64
-         + {4 + _FOCAL_RBITS} AS cell,
-       n, focal_sum, w_i, gi_micro
-FROM z
+SELECT cell, n, focal_sum, w_i,
+       CAST(round(1000000.0
+            * (focal_sum - (CAST(sx AS DOUBLE) / nc) * w_i)
+            / nullif((sqrt(CAST(sxx AS DOUBLE) / nc
+                           - (CAST(sx AS DOUBLE) / nc)
+                             * (CAST(sx AS DOUBLE) / nc))
+                      * sqrt((CAST(nc AS DOUBLE) * w_i
+                              - CAST(w_i AS DOUBLE) * w_i)
+                             / (nc - 1))), 0)) AS BIGINT) AS gi_micro
+FROM foc, tot
 ORDER BY cell
 """
 
@@ -451,10 +388,7 @@ def g_morans_i(spark: SparkSession, sf: str) -> DataFrame:
     Plan shape: identical to geo_hotspot_gi (raster-only shuffles after
     the one point-sized agg); the self-pair is excluded by a target !=
     source filter on the ring spread."""
-    counts = (_event_points(spark, sf)
-              .withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), _FOCAL_RBITS))
-              .filter(F.col("cell") >= 0)
-              .groupBy("cell").agg(F.count("*").alias("n")))
+    counts = event_cell_counts(spark, sf, _FOCAL_RBITS)
     tot = counts.agg(F.count("*").alias("nc"), F.sum("n").alias("sx"))
     zc = (counts.crossJoin(F.broadcast(tot))
                 .select("cell", "nc",
@@ -479,27 +413,13 @@ def g_morans_i(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_MORANS_I = f"""
-WITH raw AS (
-  SELECT event_id, {_XENG} AS x, {_YENG} AS y FROM events
-), g AS (
-  SELECT CAST(floor((x - {grids.L0_ORIGIN_X!r}) / {_FS_S!r}) AS BIGINT) AS gi,
-         CAST(floor((y - {grids.L0_ORIGIN_Y!r}) / {_FS_S!r}) AS BIGINT) AS gj
-  FROM raw
-), occ AS MATERIALIZED (
-  SELECT gi, gj, count(*) AS n
-  FROM (SELECT gi, gj, gi // {_FS_NSIDE} AS i, gj // {_FS_NSIDE} AS j FROM g)
-  WHERE {_L0_CASE} >= 0
-  GROUP BY gi, gj
-), tot AS (
+WITH {_RASTER}, tot AS (
   SELECT count(*) AS nc, CAST(sum(n) AS BIGINT) AS sx FROM occ
 ), zc AS MATERIALIZED (
   SELECT gi, gj, CAST(nc * n - sx AS BIGINT) AS z FROM occ, tot
 ), spread AS (
   SELECT zc.gi + d.di AS tgi, zc.gj + d.dj AS tgj, zc.z AS zj
-  FROM zc
-  CROSS JOIN (SELECT a.di, b.dj
-              FROM (SELECT unnest(range(-1, 2)) AS di) a,
-                   (SELECT unnest(range(-1, 2)) AS dj) b) d
+  FROM zc CROSS JOIN {KING} d
   WHERE NOT (d.di = 0 AND d.dj = 0)
 ), pair AS (
   SELECT CAST(sum(zc.z * s.zj) AS BIGINT) AS num,
@@ -538,10 +458,7 @@ def g_idw_fill(spark: SparkSession, sf: str) -> DataFrame:
     off-grid neighbors were never emitted by the ring kernel, so the
     result is exactly the grid-valid empty fringe.  Raster-sized shuffles
     only."""
-    counts = (_event_points(spark, sf)
-              .withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), _FOCAL_RBITS))
-              .filter(F.col("cell") >= 0)
-              .groupBy("cell").agg(F.count("*").alias("n")))
+    counts = event_cell_counts(spark, sf, _FOCAL_RBITS)
     spread = (counts.select(
                   "n", F.explode(ring_cells_d2_udf(1)(F.col("cell")))
                         .alias("nb"))
@@ -565,44 +482,25 @@ def g_idw_fill(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_IDW_FILL = f"""
-WITH raw AS (
-  SELECT event_id, {_XENG} AS x, {_YENG} AS y FROM events
-), g AS (
-  SELECT CAST(floor((x - {grids.L0_ORIGIN_X!r}) / {_FS_S!r}) AS BIGINT) AS gi,
-         CAST(floor((y - {grids.L0_ORIGIN_Y!r}) / {_FS_S!r}) AS BIGINT) AS gj
-  FROM raw
-), occ AS MATERIALIZED (
-  SELECT gi, gj, count(*) AS n
-  FROM (SELECT gi, gj, gi // {_FS_NSIDE} AS i, gj // {_FS_NSIDE} AS j FROM g)
-  WHERE {_L0_CASE} >= 0
-  GROUP BY gi, gj
-), spread AS (
+WITH {_RASTER}, spread AS (
   SELECT occ.gi + d.di AS tgi, occ.gj + d.dj AS tgj, occ.n,
          d.di * d.di + d.dj * d.dj AS d2
-  FROM occ
-  CROSS JOIN (SELECT a.di, b.dj
-              FROM (SELECT unnest(range(-1, 2)) AS di) a,
-                   (SELECT unnest(range(-1, 2)) AS dj) b) d
+  FROM occ CROSS JOIN {KING} d
   WHERE NOT (d.di = 0 AND d.dj = 0)
-), fringe AS (  -- grid-valid empty neighbors only
-  SELECT s.tgi AS gi, s.tgj AS gj, s.n, s.d2,
-         s.tgi % {_FS_NSIDE} AS ix, s.tgj % {_FS_NSIDE} AS iy,
-         s.tgi // {_FS_NSIDE} AS ti, s.tgj // {_FS_NSIDE} AS tj
+), fringe AS (  -- empty neighbors; grid-valid ones are those with cell >= 0
+  SELECT {lattice_cell("s.tgi", "s.tgj", _FOCAL_RBITS)} AS cell, s.n, s.d2
   FROM spread s ANTI JOIN occ o ON o.gi = s.tgi AND o.gj = s.tgj
-  WHERE s.tgi >= 0 AND s.tgj >= 0
 ), agg AS (
-  SELECT gi, gj, min(ix) AS ix, min(iy) AS iy, min(ti) AS ti, min(tj) AS tj,
+  SELECT cell,
          CAST(count(*) AS BIGINT) AS n_src,
          CAST(sum(2 * n // d2) AS BIGINT) AS num2,
          CAST(sum(2 // d2) AS BIGINT) AS den2
-  FROM fringe
-  GROUP BY gi, gj
+  FROM fringe WHERE cell >= 0
+  GROUP BY cell
 )
-SELECT (({_L0T_CASE}) * {1 << _FOCAL_RBITS} + {_MORTON6}) * 64
-         + {4 + _FOCAL_RBITS} AS cell,
-       n_src, num2, den2,
+SELECT cell, n_src, num2, den2,
        CAST(round(1000.0 * num2 / den2) AS BIGINT) AS idw_milli
-FROM agg WHERE {_L0T_CASE} >= 0
+FROM agg
 ORDER BY cell
 """
 
@@ -625,10 +523,7 @@ def g_semivariogram(spark: SparkSession, sf: str) -> DataFrame:
     Plan shape: raster-only — the ring-2 spread (24× per occupied cell) +
     one equi-join on cell + ONE map-side-combined groupBy(d2); never
     point-sized after the first agg."""
-    counts = (_event_points(spark, sf)
-              .withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), _FOCAL_RBITS))
-              .filter(F.col("cell") >= 0)
-              .groupBy("cell").agg(F.count("*").alias("n")))
+    counts = event_cell_counts(spark, sf, _FOCAL_RBITS)
     spread = (counts.select(
                   F.col("n").alias("ni"),
                   F.explode(ring_cells_d2_udf(2)(F.col("cell"))).alias("nb"))
@@ -649,18 +544,7 @@ def g_semivariogram(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_SEMIVARIOGRAM = f"""
-WITH raw AS (
-  SELECT event_id, {_XENG} AS x, {_YENG} AS y FROM events
-), g AS (
-  SELECT CAST(floor((x - {grids.L0_ORIGIN_X!r}) / {_FS_S!r}) AS BIGINT) AS gi,
-         CAST(floor((y - {grids.L0_ORIGIN_Y!r}) / {_FS_S!r}) AS BIGINT) AS gj
-  FROM raw
-), occ AS MATERIALIZED (
-  SELECT gi, gj, count(*) AS n
-  FROM (SELECT gi, gj, gi // {_FS_NSIDE} AS i, gj // {_FS_NSIDE} AS j FROM g)
-  WHERE {_L0_CASE} >= 0
-  GROUP BY gi, gj
-), pr AS (
+WITH {_RASTER}, pr AS (
   SELECT (a.gi - b.gi) * (a.gi - b.gi)
          + (a.gj - b.gj) * (a.gj - b.gj) AS d2,
          (a.n - b.n) * (a.n - b.n) AS sq

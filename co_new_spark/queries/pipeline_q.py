@@ -23,7 +23,7 @@ from ..plans import lineage
 from ..sources.pages import stored_pages
 from ..sources.reference_data import load_citycover
 
-_PAGES_N = int(os.environ.get("CO_Q_PAGES", "4000"))
+_PAGES_N = 4000
 
 
 def geocoded_pages(spark: SparkSession, n: int, rbits: int = 26) -> DataFrame:

@@ -421,15 +421,13 @@ def g_hilbert_ranges(spark: SparkSession, sf: str) -> DataFrame:
 def _sql_hilbert_ranges() -> str:
     from .geo_algebra import hilbert_iter_sql
 
-    nx = ny = _HR_R // 2
     bb0 = f"""bb0 AS (
   SELECT hx, hy, CAST(0 AS BIGINT) AS hd
   FROM (SELECT unnest(generate_series({_HR_GX[0]}, {_HR_GX[1]})) AS hx),
        (SELECT unnest(generate_series({_HR_GY[0]}, {_HR_GY[1]})) AS hy))"""
     bb_chain, bb_last = hilbert_iter_sql(_HR_ORDER, "bb0", "", prefix="bb")
-    ev0 = f"""ev0 AS (
-  SELECT event_id, i * {1 << nx} + ix AS hx, j * {1 << ny} + iy AS hy,
-         CAST(0 AS BIGINT) AS hd
+    ev0 = """ev0 AS (
+  SELECT event_id, gi AS hx, gj AS hy, CAST(0 AS BIGINT) AS hd
   FROM cells WHERE cell >= 0)"""
     ev_chain, ev_last = hilbert_iter_sql(_HR_ORDER, "ev0", "event_id",
                                          prefix="ev")

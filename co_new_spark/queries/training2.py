@@ -10,8 +10,6 @@ downstream from the same bytes.  Only the mm_* media stubs stay rows-only
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -146,7 +144,7 @@ WHERE a.vec_id < {NEARDUP_CAP} AND b.vec_id < {NEARDUP_CAP}
 # Multimodal plumbing over the pages binary payloads (rows-only)
 # ---------------------------------------------------------------------------
 
-_PAGES_N = int(os.environ.get("CO_Q_PAGES_MM", "2500"))
+_PAGES_N = 2500
 
 
 def t_media_meta(spark: SparkSession, sf: str) -> DataFrame:

@@ -54,14 +54,17 @@ def test_xy_to_cell_b_matches_sql_every_depth(spark):
     (sql_grid.cells_cte) at even and odd refinement (11: n_first !=
     n_second), on the fixture points plus edge inputs: exactly on an L0 edge,
     a ulp inside the far matrix edges, on the far edge, an uncovered ji
-    cell, and extreme or non-finite coordinates (-1, not a cast error)."""
+    cell, and extreme or non-finite coordinates (-1, not a cast error).
+    The global lattice (gi, gj) round-trips through lattice_cell on every
+    in-matrix row, also when passed as a compound expression, and is NULL
+    off the matrix."""
     import duckdb
     import pandas as pd
     import pyarrow as pa
 
     from co_new_spark.grid import grids
     from co_new_spark.queries import geo_pages
-    from co_new_spark.queries.sql_grid import cells_cte
+    from co_new_spark.queries.sql_grid import cells_cte, lattice_cell
 
     x0, y0, s = grids.L0_ORIGIN_X, grids.L0_ORIGIN_Y, grids.L0_SIDE
     x_far, y_far = x0 + grids.L0_NI * s, y0 + grids.L0_NJ * s
@@ -88,12 +91,24 @@ def test_xy_to_cell_b_matches_sql_every_depth(spark):
         got = {row.url: row.cell for row in xy.select(
             "url", geo.xy_to_cell_b(F.col("x"), F.col("y"), r).alias("cell"))
             .collect()}
-        exp = dict(con.sql(f"WITH {cells_cte('SELECT url, x, y FROM xy', r, ['url'])} "
-                           "SELECT url, cell FROM cells").fetchall())
+        rows = con.sql(
+            f"WITH {cells_cte('SELECT url, x, y FROM xy', r, ['url'])} "
+            f"SELECT url, cell, gi, gj, {lattice_cell('gi', 'gj', r)}, "
+            f"{lattice_cell('gi - 1 + 1', 'gj', r)}, "
+            f"{lattice_cell('-1 - gi', 'gj', r)} FROM cells").fetchall()
+        exp = {u: c for u, c, *_ in rows}
         assert got == exp, r
         assert sum(c >= 0 for c in got.values()) > len(got) // 2, r
         assert [got[f"edge{k}"] >= 0 for k in range(len(edge))] == \
             [True, True, True] + [False] * 6, r
+        lat = {u: rest for u, *rest in rows}
+        assert [lat[f"edge{k}"][1] is None for k in range(len(edge))] == \
+            [False] * 3 + [True, False] + [True] * 4, r  # 3, 5-8 off the matrix
+        for u, (c, gi, gj, back, back2, neg) in lat.items():
+            assert (gi is None) == (gj is None), (r, u)
+            if gi is not None:
+                assert back == back2 == c and neg == -1, (r, u)
+        assert lat["edge4"][0] == lat["edge4"][3] == -1, r  # uncovered ji
 
 
 def test_native_interval_matches_numpy(spark):
