@@ -37,6 +37,10 @@ def register_views(spark: SparkSession) -> None:
 
 
 def sql_session(spark: SparkSession) -> SparkSession:
+    """Kernels + dims: the SQL functions above plus the ``citycover`` and
+    ``synonym`` temp views, loaded from ``citycover.csv`` and ``synonym.csv``
+    under ``CO_REFERENCE_DIR`` (``sources.reference_data.REF_DIR``), so this
+    entry needs those files."""
     register_functions(spark)
     register_views(spark)
     return spark
@@ -56,11 +60,14 @@ def example_sql_pipeline(spark: SparkSession, n_pages: int = 5_000):
     protocol) so a DuckDB oracle can re-derive the L0 rollup — including the
     hierarchy bit-math and the one-digit base16h code — from the same bytes;
     the UDF hash family itself stays gated by the bit-exact codec pytests.
+
+    Registers the kernel UDFs only (``register_functions``) and reads no
+    dimension fixture: both statements read ``pages`` and ``valid_pts``.
     """
     from ..queries.mat import materialize
     from ..sources.pages import stored_pages
 
-    sql_session(spark)
+    register_functions(spark)
     stored_pages(spark, n_pages).createOrReplaceTempView("pages")
     valid = spark.sql("""
         SELECT url, cell FROM (

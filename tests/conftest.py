@@ -27,4 +27,16 @@ def standin_cover(spark):
     return spark.createDataFrame(rows, ["isolabel_ext", "kind", "cell", "depth"])
 
 
+def needs_reference(*names):
+    """Skip unless every named CO_new data file exists under
+    ``sources.reference_data.REF_DIR``/data (``CO_REFERENCE_DIR``); the
+    reason names each missing path."""
+    from co_new_spark.sources.reference_data import REF_DIR
+
+    missing = [p for p in (os.path.join(REF_DIR, "data", n) for n in names)
+               if not os.path.exists(p)]
+    return pytest.mark.skipif(
+        bool(missing), reason="missing reference file(s): " + ", ".join(missing))
+
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

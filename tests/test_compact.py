@@ -3,7 +3,7 @@ leaf-count preservation."""
 
 from pyspark.sql import functions as F
 
-from conftest import SF_DIR
+from conftest import SF_DIR, needs_reference
 
 
 def _pack(bits, nbits):
@@ -105,6 +105,7 @@ def test_dissolve_groups_independent(spark):
         [("A", kids[0]), ("A", kids[1]), ("B", kids[2]), ("B", kids[3])])
 
 
+@needs_reference("citycover.csv")
 def test_dissolve_output_is_antichain_on_citycover(spark):
     """geo_dissolve over the real dim: no output cell may contain another
     of the same department (the union is a partition, not a multi-cover)."""

@@ -6,16 +6,21 @@ and the montañitas real-fixture ring (/root/reference/data/montañitas.geojson
 from __future__ import annotations
 
 import json
+import os
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+
+from co_new_spark.sources import reference_data
+from conftest import needs_reference
 
 SF = "/root/testdata/sf0.01"
 # small scale for collect()-heavy set-comparison tests
 SF_SMALL = "/root/testdata/sf0.001"
 
 
+@needs_reference("synonym.csv", "synonym_ref.csv")
 def test_synonym_ref_parse(spark):
     from co_new_spark.sources.reference_data import load_synonym, load_synonym_ref
 
@@ -32,6 +37,7 @@ def test_synonym_ref_parse(spark):
     assert joined.filter(F.col("name").isNotNull()).count() == n_syn
 
 
+@needs_reference("citycover.csv", "synonym.csv", "synonym_ref.csv")
 def test_shortcode_log_roundtrip(spark):
     """Every logistic code decodes back to exactly its aligned cell, O(1).
 
@@ -75,6 +81,7 @@ def test_shortcode_log_roundtrip(spark):
         assert decoded_cell == r.cell_aligned, (r, decoded_cell)
 
 
+@needs_reference("citycover.csv", "synonym.csv", "synonym_ref.csv")
 def test_shortcode_log_provenance(spark):
     from co_new_spark.queries.geo_cover_sql import g_shortcode_log
 
@@ -90,7 +97,8 @@ def test_shortcode_log_provenance(spark):
 def montanitas_ring():
     from co_new_spark.grid import proj
 
-    with open("/root/reference/data/montañitas.geojson", encoding="utf-8") as f:
+    with open(os.path.join(reference_data.REF_DIR, "data", "montañitas.geojson"),
+              encoding="utf-8") as f:
         gj = json.load(f)
     coords = np.asarray(gj["features"][0]["geometry"]["coordinates"], dtype=np.float64)
     assert np.allclose(coords[0], coords[-1])  # already closed
@@ -98,6 +106,7 @@ def montanitas_ring():
     return np.stack([x, y], axis=1)
 
 
+@needs_reference("montañitas.geojson")
 def test_montanitas_cover_and_pip(spark, montanitas_ring):
     """The reference's montañitas ring as a real fixture: polygon_cover area
     partition holds, interior points PIP-match, and each inset corner point's
@@ -163,6 +172,7 @@ def test_hilbert_properties_and_column_parity(spark):
         assert lut[(int(a), int(b))] == int(w)
 
 
+@needs_reference("citycover.csv")
 def test_sabaneta_2bit_cover_end_to_end(spark):
     """The 2-bit suffix family (H/M/R/V, depth 22) exercised through the real
     cover path: CO-ANT-Sabaneta's cover (citycover.csv:99) is ENTIRELY
@@ -247,6 +257,7 @@ def test_cover_anti_partitions_points(spark):
     assert hit and miss  # the cover leaves genuinely uncovered territory
 
 
+@needs_reference("citycover.csv")
 def test_areal_interp_conserves_mass_and_orders_by_area(spark):
     """Properties the value-hash oracle can't see: (a) per-municipality
     allocated mass equals n_points*1e6 minus only the integer-division

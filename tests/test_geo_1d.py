@@ -1,7 +1,7 @@
 """geo_1d entries: cover run-length compression + classic Geohash parity
 against an INDEPENDENT bisection-style reference encoder."""
 
-from conftest import SF_DIR
+from conftest import SF_DIR, needs_reference
 
 from pyspark.sql import functions as F
 
@@ -64,6 +64,7 @@ def test_geohash_fixture_parity_vs_bisection(spark):
         assert _geohash_ref(lat, lon) == r.geohash, (r.url, r.ix, r.iy)
 
 
+@needs_reference("citycover.csv")
 def test_cover_rle_compresses_and_preserves_measure(spark):
     from co_new_spark.queries.geo_1d import t_cover_rle
     from co_new_spark.sources.reference_data import load_citycover

@@ -1,11 +1,15 @@
 """Tests: global quadtree (A25), tile<->cell algebra (A26), GeoJSON scan (B3)."""
 
+import os
+
 import numpy as np
 from pyspark.sql import functions as F
 
 from co_new_spark.functions import global_grid
 from co_new_spark.grid import grids
 from co_new_spark.operators import tiles
+from co_new_spark.sources import reference_data
+from conftest import needs_reference
 
 LEVEL = 5
 
@@ -82,6 +86,7 @@ def test_tile_to_cells_partitions_lattice(spark):
     assert ex.count() == 256  # all 16 digits x 16 refinements covered once
 
 
+@needs_reference("grid256.geojson")
 def test_geojson_scan_matches_conf(spark):
     from co_new_spark.queries.geo_index import g_geojson_scan
 
@@ -95,6 +100,7 @@ def test_geojson_scan_matches_conf(spark):
     assert dig <= codes
 
 
+@needs_reference("grid256L0.geojson")
 def test_decode_geojson_matches_reference_grid(spark):
     """Generated L0 GeoJSON features reproduce grid256L0.geojson corners."""
     import json as _json
@@ -104,7 +110,7 @@ def test_decode_geojson_matches_reference_grid(spark):
     out = {r.cell: r.feature for r in
            g_cell_geojson(spark, "/root/testdata/sf0.001").collect()}
     feats = {}
-    with open("/root/reference/data/grid256L0.geojson") as f:
+    with open(os.path.join(reference_data.REF_DIR, "data", "grid256L0.geojson")) as f:
         gj = _json.load(f)
     for ft in gj["features"]:
         feats[str(ft["properties"]["code"]).lower()] = ft["geometry"]["coordinates"][0]

@@ -4,6 +4,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from co_new_spark.grid.geometry import clip_area_to_rects, clip_to_rect, shoelace_area
+from conftest import needs_reference
 
 SQUARE = np.array([[0.0, 0.0], [4.0, 0.0], [4.0, 4.0], [0.0, 4.0], [0.0, 0.0]])
 
@@ -98,6 +99,7 @@ def test_polygon_cover_generation(spark):
     cov.unpersist()
 
 
+@needs_reference("grid256L0coverage.geojson")
 def test_clip_preserves_reference_coverage_polygons():
     """S–H clip on the REAL 40k-vertex coverage clips: clipping each L0
     coverage feature to its own cell box is the identity (area-preserving);
@@ -134,6 +136,7 @@ def test_clip_preserves_reference_coverage_polygons():
     assert checked == 16
 
 
+@needs_reference("grid256L0coverage.geojson")
 def test_pip_against_reference_coverage(spark):
     """Pages points PIP-joined against the real Colombia land+sea coverage:
     on-grid geocoded points overwhelmingly fall inside; Iberia points never."""

@@ -19,8 +19,10 @@ import numpy as np
 import pytest
 
 from co_new_spark.grid import cells, codec, grids, proj
+from co_new_spark.sources import reference_data
+from conftest import needs_reference
 
-REF = "/root/reference"
+REF = reference_data.REF_DIR
 
 # gridLib.sql:6-11 — the five golden encode vectors (Grid A, 9-digit base32nvu)
 ASSERT_VECTORS = [
@@ -80,6 +82,7 @@ def test_seat_covers_grid_b():
         assert got == code, f"{(lat, lon, rbits)}: {got!r} != {code!r}"
 
 
+@needs_reference("grid256.geojson")
 def test_l0_digit_map_matches_conf():
     # conf.yaml:24-26 lookup, already embedded; cross-check vs grid256.geojson
     with open(os.path.join(REF, "data", "grid256.geojson")) as f:
@@ -113,6 +116,7 @@ def test_l0_digit_map_matches_conf():
         assert abs(max(la) - max(lats)) < 1e-4
 
 
+@needs_reference("grid256.geojson")
 def test_grid256_corner_reproduction():
     """Every vertex of grid256.geojson reprojects to <= ~1 m of our lattice."""
     with open(os.path.join(REF, "data", "grid256.geojson")) as f:

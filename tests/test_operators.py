@@ -8,6 +8,7 @@ from co_new_spark.functions import geo
 from co_new_spark.operators.cover import cover_join_candidates, cover_lookup_best
 from co_new_spark.operators.knn import knn_ring
 from co_new_spark.sources.reference_data import _cover_pdf, load_citycover, load_synonym
+from conftest import needs_reference
 
 SF = "/root/testdata/sf0.001"
 
@@ -21,6 +22,7 @@ SEATS = [
 ]
 
 
+@needs_reference("citycover.csv")
 def test_pyds_partition_invariance(spark):
     """The custom Python data source must yield the SAME rows at any split
     count — the byte-range convention (skip the partial record at start,
@@ -40,6 +42,7 @@ def test_pyds_partition_invariance(spark):
     assert rows(64) == one  # more ranges than bytes-per-line headroom
 
 
+@needs_reference("citycover.csv")
 def test_citycover_parse():
     pdf = _cover_pdf()
     assert pdf["isolabel_ext"].nunique() == 1116
@@ -52,6 +55,7 @@ def test_citycover_parse():
     assert set(pdf["depth"].unique()) == {7, 12, 17, 22}
 
 
+@needs_reference("citycover.csv")
 def test_cover_lookup_seats(spark):
     cover = load_citycover(spark)
     df = spark.createDataFrame(
@@ -65,6 +69,7 @@ def test_cover_lookup_seats(spark):
         assert iso in got[iso], (iso, got[iso])
 
 
+@needs_reference("synonym.csv")
 def test_synonym_dim(spark):
     syn = load_synonym(spark)
     assert syn.count() == 7660

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 from co_new_spark.functions import cells_sql, geo, text as tx
 from co_new_spark.grid import cells as ncells
 from co_new_spark.sources.pages import pages
+from conftest import needs_reference
 
 ASSERTS = [
     ("geo:3.46103000261,-76.57770034945", "GF1ZDW6NY"),
@@ -249,6 +250,7 @@ def test_parse_all_geo_uris_multi_hit(spark):
     assert got[1].hits == []
 
 
+@needs_reference("citycover.csv")
 def test_seat_cells_match_known_seats(spark):
     """A22: decoded overlay centers land near the real municipality seats."""
     from co_new_spark.queries.geo_algebra import g_seat_cells

@@ -6,6 +6,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from conftest import needs_reference
+
 
 def test_fixture_exists_and_matches_generator_shape():
     from co_new_spark.queries.webtext_q import FIXTURE_PAGES
@@ -154,6 +156,7 @@ def test_boilerplate_partitions_templates_and_masks_digits(spark):
         assert r["chars_kept"] >= 0
 
 
+@needs_reference("citycover.csv")
 def test_geo_lang_mix_shares_and_plan(spark):
     """Per-municipality language shares sum to 1 (exactly at rounding
     tolerance), langs stay in the closed {es,en,pt,und} set, and the cover
