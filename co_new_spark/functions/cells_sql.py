@@ -36,6 +36,12 @@ def cell_bits(cell: Column) -> Column:
     return _shiftright(cell, 6)
 
 
+def cell_low_bits(cell: Column, n) -> Column:
+    """The last ``n`` path bits of a cell: the suffix a short code encodes
+    below its cover prefix."""
+    return cell_bits(cell).bitwiseAND(_shiftleft(F.lit(1).cast("long"), n) - 1)
+
+
 def cell_pack(bits: Column, nbits: Column) -> Column:
     return _shiftleft(bits, 6).bitwiseOR(nbits)
 

@@ -19,7 +19,7 @@ it; ancestor equality per depth is exactly the prefix join at any depth.
 
 Border cells legitimately appear in several municipalities' covers.
 ``cover_lookup_best`` picks the deterministic min(isolabel_ext) (exact
-disambiguation = PIP refinement, A20); ``cover_join_candidates`` keeps them all.
+disambiguation = PIP refinement, A20).
 
 ``flagship`` is the one definition of the north-star pipeline built on it:
 stored pages -> fused geocode -> ``cover_lookup_best`` -> matched page rows.
@@ -33,33 +33,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ..functions import cells_sql, geo
+from ..functions import geo
 from ..grid import cells
 
 _BEST = StructType([StructField("isolabel_ext", StringType()),
                     StructField("cover_cell", LongType())])
-
-
-def cover_depths(cover: DataFrame) -> list[int]:
-    return sorted(r.depth for r in cover.select("depth").distinct().collect())
-
-
-def cover_join_candidates(points: DataFrame, cover: DataFrame,
-                          cell_col: str = "cell") -> DataFrame:
-    """points (any cols + cell_col) x cover -> + (isolabel_ext, cover_cell).
-
-    One broadcast hash equi-join on exploded per-depth ancestors.  Overlay
-    (seat) rows are excluded automatically when the dim carries ``kind``.
-    """
-    if "kind" in cover.columns:
-        cover = cover.filter(F.col("kind") == "cover")
-    depths = cover_depths(cover)
-    anc = F.array(*[cells_sql.cell_ancestor_at(F.col(cell_col), d) for d in depths])
-    exploded = points.withColumn("__anc", F.explode(anc)).filter(F.col("__anc") >= 0)
-    dim = cover.select(F.col("cell").alias("__anc"),
-                       F.col("isolabel_ext"),
-                       F.col("cell").alias("cover_cell"))
-    return exploded.join(F.broadcast(dim), "__anc").drop("__anc")
 
 
 def _cover_kernel(cover: DataFrame, deepest: bool):

@@ -14,7 +14,6 @@ the one groupBy, no driver involvement.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def pack_greedy(df: DataFrame, group_col: str, order_col: str, tok_col: str,

@@ -32,7 +32,7 @@ Cross-engine exactness, same recipe as operators/kmeans.py:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 1_000_000

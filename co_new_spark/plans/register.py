@@ -11,7 +11,6 @@ kernels and identical performance.
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from ..functions import geo
 

@@ -344,8 +344,7 @@ def g_shortcode(spark: SparkSession, sf: str) -> DataFrame:
     best = cover_best_with_cell(pts.select("url", "cell"), load_citycover(spark))
     d = F.col("cover_cell").bitwiseAND(F.lit(63))
     nsfx = (F.col("cell").bitwiseAND(F.lit(63)) - d).cast("int")
-    sfx_bits = cells_sql.cell_bits(F.col("cell")).bitwiseAND(
-        cells_sql._shiftleft(F.lit(1).cast("long"), nsfx) - 1)  # noqa: SLF001
+    sfx_bits = cells_sql.cell_low_bits(F.col("cell"), nsfx)
     best = best.withColumn("suffix", geo.b16h_string(sfx_bits, nsfx))
     syn = load_synonym(spark).filter(F.col("default_abbrev")) \
         .groupBy("isolabel_ext").agg(F.min("abbrev").alias("abbrev"))
@@ -361,21 +360,14 @@ def g_shortcode(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _sql_shortcode() -> str:
-    from .geo_cover_sql import _REF_DATA, _SQL_B16H, _sql_csv_decode
+    from .geo_cover_sql import _REF_DATA, _SQL_B16H, _sql_csv_decode, cover_hits_cte
     from .mat import mat_glob
 
     return f"""
 WITH cells AS (SELECT rid, cell FROM read_parquet('{mat_glob("shortcode_pts")}')),
 {_sql_csv_decode("cover", "covbits")},
-cov AS (SELECT isolabel_ext, cbits, cdepth FROM covbits),
 pcell AS (SELECT rid, cell >> 6 AS pbits, CAST(cell & 63 AS INT) AS pd FROM cells),
-deps AS (SELECT DISTINCT cdepth FROM cov),
-panc AS (
-  SELECT rid, pbits, pd, cdepth, pbits >> (pd - cdepth) AS anc
-  FROM pcell CROSS JOIN deps WHERE cdepth <= pd),
-hits AS (
-  SELECT p.rid, p.pbits, p.pd, c.isolabel_ext, c.cdepth
-  FROM panc p JOIN cov c ON p.cdepth = c.cdepth AND p.anc = c.cbits),
+{cover_hits_cte("pcell", ["rid", "pd"], "covbits", "pd")},
 best AS (
   SELECT rid, pbits, pd, isolabel_ext, cdepth FROM (
     SELECT *, row_number() OVER (PARTITION BY rid

@@ -84,6 +84,27 @@ def _sql_csv_decode(col: str, alias: str) -> str:
 )"""
 
 
+def cover_hits_cte(points: str, keys: list[str], cover: str, pdepth) -> str:
+    """CTE chain ``deps -> panc -> hits``: the prefix cover join, the SQL
+    restatement of operators.cover's per-depth lookup.  ``points`` names a
+    CTE with the columns ``keys`` and ``pbits`` (the point cell's bits at
+    depth ``pdepth``, a literal or one of ``keys``); ``cover`` names a CTE
+    with ``cbits`` and ``cdepth``.  ``hits`` holds ``keys``, ``pbits`` and
+    every ``cover`` column, one row per cover cell that is a prefix of the
+    point; each caller reduces it to its own ``best``."""
+    cols = ", ".join(f"p.{k}" for k in keys)
+    return f"""
+deps AS (SELECT DISTINCT cdepth FROM {cover}),
+panc AS (
+  SELECT {cols}, p.pbits, d.cdepth, p.pbits >> ({pdepth} - d.cdepth) AS anc
+  FROM {points} p CROSS JOIN deps d WHERE d.cdepth <= {pdepth}
+),
+hits AS (
+  SELECT {cols}, p.pbits, c.*
+  FROM panc p JOIN {cover} c ON p.cdepth = c.cdepth AND p.anc = c.cbits
+)"""
+
+
 _SQL_COV = f"""
 {_sql_csv_decode("cover", "covbits")},
 cov AS (
@@ -95,16 +116,7 @@ cov AS (
   FROM covbits
 ),
 pcell AS (SELECT event_id, cell >> 6 AS pbits FROM cells WHERE cell >= 0),
-deps AS (SELECT DISTINCT cdepth FROM cov),
-panc AS (
-  SELECT event_id, pbits, cdepth,
-         pbits >> ({_PT_DEPTH} - cdepth) AS anc
-  FROM pcell CROSS JOIN deps
-),
-hits AS (
-  SELECT p.event_id, p.pbits, c.isolabel_ext, c.cdepth, c.cidx
-  FROM panc p JOIN cov c ON p.cdepth = c.cdepth AND p.anc = c.cbits
-)
+{cover_hits_cte("pcell", ["event_id"], "cov", _PT_DEPTH)}
 """
 
 # default abbreviation dim: exactly one default row per isolabel (verified:
@@ -182,8 +194,7 @@ def g_shortcode_sci(spark: SparkSession, sf: str) -> DataFrame:
     best = _best_cover(_points_cells(spark, sf), spark)
     cdepth = F.col("cover_cell").bitwiseAND(F.lit(63))
     nsfx = (F.lit(_PT_DEPTH) - cdepth).cast("int")
-    sfx_bits = cells_sql.cell_bits(F.col("cell")).bitwiseAND(
-        cells_sql._shiftleft(F.lit(1).cast("long"), nsfx) - 1)  # noqa: SLF001
+    sfx_bits = cells_sql.cell_low_bits(F.col("cell"), nsfx)
     code = F.concat(F.coalesce(F.col("abbrev"), F.col("isolabel_ext")),
                     F.lit("+"), geo.b16h_string(sfx_bits, nsfx))
     return best.select("event_id", "isolabel_ext", code.alias("shortcode"))
@@ -271,8 +282,7 @@ def g_shortcode_log(spark: SparkSession, sf: str) -> DataFrame:
                                                   F.lit(5))).cast("int")
     dpa = (cdepth + nsfx5).cast("int")
     cell_a = cells_sql.cell_ancestor_at(F.col("cell"), dpa)
-    sfx_bits = cells_sql.cell_bits(cell_a).bitwiseAND(
-        cells_sql._shiftleft(F.lit(1).cast("long"), nsfx5) - 1)  # noqa: SLF001
+    sfx_bits = cells_sql.cell_low_bits(cell_a, nsfx5)
     idx_char = F.substring(F.lit(B32NVU), F.col("cover_idx").cast("int") + 1, 1)
     code = F.concat(F.coalesce(F.col("abbrev"), F.col("isolabel_ext")),
                     F.lit("-"), idx_char, geo.b32nvu_string(sfx_bits, nsfx5))
@@ -489,24 +499,18 @@ sel AS (
   FROM covbits),
 probe AS (
   SELECT code, src_iso, cdepth AS src_depth, cbits AS src_bits,
-         (cbits << (30 - cdepth))
-           | (CAST(3 AS BIGINT) << (28 - cdepth)) AS pbits
+         (cbits << ({_PT_DEPTH} - cdepth))
+           | (CAST(3 AS BIGINT) << ({_PT_DEPTH - 2} - cdepth)) AS pbits
   FROM sel WHERE cdepth IN (7, 22) OR rn <= {_PROBE_CAP}),
-deps AS (SELECT DISTINCT cdepth FROM dim),
-panc AS (
-  SELECT p.*, d.cdepth AS mdepth, p.pbits >> (30 - d.cdepth) AS anc
-  FROM probe p CROSS JOIN deps d),
-hits AS (
-  SELECT p.code, p.src_iso, p.src_depth, p.src_bits, p.mdepth, m.iso, m.cbits
-  FROM panc p JOIN dim m ON p.mdepth = m.cdepth AND p.anc = m.cbits),
+{cover_hits_cte("probe", ["code", "src_iso", "src_depth", "src_bits"], "dim", _PT_DEPTH)},
 best AS (
   SELECT * FROM (
     SELECT *, row_number() OVER (PARTITION BY code, src_iso
-                                 ORDER BY mdepth DESC) AS rn2
+                                 ORDER BY cdepth DESC) AS rn2
     FROM hits) WHERE rn2 = 1)
 SELECT code, src_iso, CAST(src_depth AS INT) AS src_depth,
-       iso AS isolabel_ext, CAST(mdepth AS INT) AS match_depth,
-       (mdepth = src_depth AND cbits = src_bits) AS exact_cell
+       iso AS isolabel_ext, CAST(cdepth AS INT) AS match_depth,
+       (cdepth = src_depth AND cbits = src_bits) AS exact_cell
 FROM best
 """
 

@@ -13,7 +13,6 @@ oracle re-runs the even-odd ray cast as a range join.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F

@@ -11,10 +11,11 @@ tools/make_fixtures.py), or, for geo_native_geocode, from the (url, x, y)
 rows the Spark side materializes.  Everything after the projection is
 restated in SQL: the geoparse regex (the grammar web_geoparse uses), the
 point encode (sql_grid.cells_cte), the citycover.csv prefix cover
-(decoded in SQL, geo_cover_sql._sql_csv_decode), the lattice ring-1 kNN and
-the language ID.  The TM series is the one link the oracles take on trust; it
-is pinned by the reference's assert vectors (geo_gridlib_asserts,
-hash-checked) and tests/test_grid_golden.py.
+(decoded by geo_cover_sql._sql_csv_decode, joined by
+geo_cover_sql.cover_hits_cte), the lattice ring-1 kNN and the language ID.
+The TM series is the one link the oracles take on trust; it is pinned by the
+reference's assert vectors (geo_gridlib_asserts, hash-checked) and
+tests/test_grid_golden.py.
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ from ..operators.cover import cover_lookup_best
 from ..operators.knn import knn_ring
 from ..sources.reference_data import load_citycover
 from .geo_algebra import sql_knn_ring
-from .geo_cover_sql import _sql_csv_decode
+from .geo_cover_sql import _sql_csv_decode, cover_hits_cte
 from .sql_grid import cells_cte
 from .webtext_q import FIXTURE_PAGES
 
@@ -112,15 +113,7 @@ WITH {cells_cte(_XY_SRC, _CV_R, ['url'])},
 pcell AS (
   SELECT DISTINCT url, cell >> 6 AS pbits FROM cells WHERE cell >= 0
 ),
-deps AS (SELECT DISTINCT cdepth FROM covbits),
-panc AS (
-  SELECT url, cdepth, pbits >> ({4 + _CV_R} - cdepth) AS anc
-  FROM pcell CROSS JOIN deps
-),
-hits AS (
-  SELECT p.url, c.isolabel_ext
-  FROM panc p JOIN covbits c ON p.cdepth = c.cdepth AND p.anc = c.cbits
-),
+{cover_hits_cte("pcell", ["url"], "covbits", 4 + _CV_R)},
 best AS (
   SELECT url, min(isolabel_ext) AS isolabel_ext FROM hits GROUP BY url
 )
@@ -224,15 +217,7 @@ lg AS (
 pcell AS (
   SELECT DISTINCT url, cell >> 6 AS pbits FROM cells WHERE cell >= 0
 ),
-deps AS (SELECT DISTINCT cdepth FROM covbits),
-panc AS (
-  SELECT url, cdepth, pbits >> ({4 + _CV_R} - cdepth) AS anc
-  FROM pcell CROSS JOIN deps
-),
-hits AS (
-  SELECT p.url, c.isolabel_ext
-  FROM panc p JOIN covbits c ON p.cdepth = c.cdepth AND p.anc = c.cbits
-),
+{cover_hits_cte("pcell", ["url"], "covbits", 4 + _CV_R)},
 best AS (
   SELECT url, min(isolabel_ext) AS isolabel_ext FROM hits GROUP BY url
 ),

@@ -15,8 +15,6 @@ bit-exactness is gated by tests/test_grid_golden.py instead.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

@@ -10,7 +10,6 @@ dedup == first-row-per-key.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F

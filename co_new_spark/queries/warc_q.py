@@ -30,8 +30,6 @@ is bounded by file size, not corpus size).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession

@@ -5,9 +5,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from co_new_spark.functions import geo
-from co_new_spark.operators.cover import cover_join_candidates, cover_lookup_best
+from co_new_spark.grid import cells as C
 from co_new_spark.operators.knn import knn_ring
-from co_new_spark.sources.reference_data import _cover_pdf, load_citycover, load_synonym
+from co_new_spark.sources.reference_data import _cover_pdf, load_synonym
 from conftest import needs_reference
 
 SF = "/root/testdata/sf0.001"
@@ -57,14 +57,16 @@ def test_citycover_parse():
 
 @needs_reference("citycover.csv")
 def test_cover_lookup_seats(spark):
-    cover = load_citycover(spark)
+    """Each seat's municipality is among the labels of the cover cells that
+    are a prefix of the seat's cell (brute-force scan on cells.contains)."""
     df = spark.createDataFrame(
         [(lat, lon, iso) for lat, lon, iso in SEATS], ["lat", "lon", "expected"]
     ).withColumn("cell", geo.encode_b_cell(F.col("lat"), F.col("lon"), 26))
-    cand = cover_join_candidates(df.select("expected", "cell"), cover.filter(F.col("kind") == "cover"))
-    got = {r.expected: set() for r in df.collect()}
-    for r in cand.collect():
-        got[r.expected].add(r.isolabel_ext)
+    pdf = _cover_pdf()
+    cov = pdf[pdf.kind == "cover"]
+    cover_cells = cov["cell"].to_numpy(np.int64)
+    got = {r.expected: set(cov["isolabel_ext"][C.contains(cover_cells, np.int64(r.cell))])
+           for r in df.collect()}
     for _, _, iso in SEATS:
         assert iso in got[iso], (iso, got[iso])
 
@@ -246,14 +248,3 @@ def test_cover_lookup_empty_dim_returns_empty(spark):
     out = cover_lookup_best(pts, empty, keep=["url", "cell"])
     assert out.count() == 0
     assert set(out.columns) == {"url", "cell", "isolabel_ext"}
-
-
-def test_cover_candidates_excludes_overlay(spark):
-    from co_new_spark.operators.cover import cover_join_candidates
-
-    cover = spark.createDataFrame(
-        [("A", "cover", (3 << 6) | 2, 2), ("B", "overlay", (3 << 6) | 2, 2)],
-        ["isolabel_ext", "kind", "cell", "depth"])
-    pts = spark.createDataFrame([(((3 << 4) << 6) | 6,)], ["cell"])  # descendant of 3@2
-    got = cover_join_candidates(pts, cover).select("isolabel_ext").collect()
-    assert {r.isolabel_ext for r in got} == {"A"}  # overlay row never matches

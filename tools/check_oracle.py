@@ -7,6 +7,9 @@ value comparison (sorted rows, stringified).  Each PASS line ends with
 two checkouts can be shown to return the same rows.  Usage:
 
     python tools/check_oracle.py [sf_dir] [name_filter ...]
+
+A filter equal to an entry name runs that entry only; any other filter runs
+every entry whose name contains it.
 """
 
 from __future__ import annotations
@@ -48,6 +51,18 @@ def rowset_sha(rs) -> str:
     return hashlib.sha256(repr(rs).encode()).hexdigest()[:16]
 
 
+def select(names, filters) -> list[str]:
+    """The entries to run, sorted.  A filter equal to a registry name selects
+    exactly that entry; any other filter selects every name containing it
+    (``geo`` selects the family); no filter selects every entry."""
+    names = sorted(names)
+    if not filters:
+        return names
+    exact = set(filters) & set(names)
+    partial = [f for f in filters if f not in exact]
+    return [n for n in names if n in exact or any(f in n for f in partial)]
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     filters = sys.argv[2:]
@@ -66,9 +81,7 @@ def main() -> int:
     qs = entrymod.queries()
     osql = entrymod.oracle_sql()
     failed = []
-    for name in sorted(qs):
-        if filters and not any(f in name for f in filters):
-            continue
+    for name in select(qs, filters):
         t0 = time.time()
         try:
             df = qs[name](spark, sf_dir)
