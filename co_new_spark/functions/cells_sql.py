@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..grid.codec import B32NVU_ALPHABET
+
 MAXB = 57
 
 
@@ -165,3 +167,9 @@ def cell_l0_digit(cell: Column) -> Column:
     return F.when(
         (cell >= 0) & (nb >= 4), _shiftright(cell_bits(cell), nb - F.lit(4))
     ).otherwise(F.lit(-1))
+
+
+def b32_digit(v: Column, alphabet: str = B32NVU_ALPHABET) -> Column:
+    """The ``alphabet`` character (base32nvu by default) of the 5-bit value
+    ``v``: one native substring lookup, no UDF."""
+    return F.substring(F.lit(alphabet), v.cast("int") + 1, 1)

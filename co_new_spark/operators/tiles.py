@@ -37,7 +37,7 @@ def tile_id(x: Column, y: Column, z: int) -> Column:
     return F.when(ok, ty * (1 << z) + tx)
 
 
-def _grid_b_global_ji(cell: Column, depth: int) -> tuple[Column, Column]:
+def grid_b_global_ji(cell: Column, depth: int) -> tuple[Column, Column]:
     """Grid B cell (depth = 4+r, even r) -> (gy, gx) global lattice coords,
     entirely native: digit -> (j, i) via literal arrays, refinement bits
     de-interleaved with shifts (y-first Morton, MSB first).
@@ -64,7 +64,7 @@ def cell_to_tile(cell: Column, depth: int, z: int) -> Column:
     """A26: Grid B cell -> containing XYZ tile id at zoom z (via cell center,
     all codegen arithmetic — no UDF).  NULL for invalid cells."""
     side = grids.L0_SIDE / (1 << (depth - 4) // 2)
-    gy, gx = _grid_b_global_ji(cell, depth)
+    gy, gx = grid_b_global_ji(cell, depth)
     cx = F.lit(X0) + (gx.cast("double") + 0.5) * F.lit(side)
     cy = F.lit(Y0) + (gy.cast("double") + 0.5) * F.lit(side)
     return F.when(cell >= 0, tile_id(cx, cy, z))

@@ -1,7 +1,7 @@
 """SQL surface registration — the reference's entry point is SQL
 (``SELECT libgrid_co.osmcode_encode('geo:…')``, /root/reference/src/assert/
 gridLib.sql:6-11); this module exposes the engine kernels under the same
-names for ``spark.sql`` users, plus the dimension fixtures as temp views.
+names for ``spark.sql`` users.
 
 UDF registrations wrap the SAME Arrow-batched pandas UDFs as the Column API
 (no separate row-at-a-time path), so SQL and DataFrame queries hit identical
@@ -25,24 +25,6 @@ def register_functions(spark: SparkSession) -> None:
     spark.udf.register("co_cell_box", geo.cell_b_box)
     spark.udf.register("co_cell_center", geo.cell_b_center)
     spark.udf.register("b16h_string", geo.b16h_string)
-
-
-def register_views(spark: SparkSession) -> None:
-    """Dimension fixtures as temp views: citycover, synonym."""
-    from ..sources.reference_data import load_citycover, load_synonym
-
-    load_citycover(spark).createOrReplaceTempView("citycover")
-    load_synonym(spark).createOrReplaceTempView("synonym")
-
-
-def sql_session(spark: SparkSession) -> SparkSession:
-    """Kernels + dims: the SQL functions above plus the ``citycover`` and
-    ``synonym`` temp views, loaded from ``citycover.csv`` and ``synonym.csv``
-    under ``CO_REFERENCE_DIR`` (``sources.reference_data.REF_DIR``), so this
-    entry needs those files."""
-    register_functions(spark)
-    register_views(spark)
-    return spark
 
 
 # Native (non-UDF) hierarchy algebra is already SQL-reachable through the

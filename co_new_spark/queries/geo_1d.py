@@ -34,10 +34,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import cells_sql
 from ..functions import text as tx
 from ..grid.cells import MAXB
+from ..grid.codec import GEOHASH_ALPHABET
 from ..sources.reference_data import load_citycover
 from .geo_cover_sql import _sql_csv_decode
+from .sql_grid import b32_code
 from .webtext_q import FIXTURE_PAGES, _fixture
 
 # ---------------------------------------------------------------------------
@@ -128,7 +131,6 @@ FROM per_run GROUP BY isolabel_ext ORDER BY isolabel_ext
 # ---------------------------------------------------------------------------
 
 _GH_BITS = 20                 # bits per axis (8 chars * 5 bits / 2)
-_GH_ALPHABET = "0123456789bcdefghjkmnpqrstuvwxyz"
 
 
 def _gh_spark(lat, lon):
@@ -142,26 +144,20 @@ def _gh_spark(lat, lon):
                 + F.shiftleft(F.shiftright(iy, _GH_BITS - 1 - j)
                               .bitwiseAND(F.lit(1)), 2 * _GH_BITS - 2 - 2 * j))
     gh = F.concat(*[
-        F.lit(_GH_ALPHABET).substr(
-            F.shiftright(code, 2 * _GH_BITS - 5 * (i + 1))
-            .bitwiseAND(F.lit(31)) + F.lit(1), F.lit(1))
+        cells_sql.b32_digit(F.shiftright(code, 2 * _GH_BITS - 5 * (i + 1))
+                            .bitwiseAND(F.lit(31)), GEOHASH_ALPHABET)
         for i in range(2 * _GH_BITS // 5)])
     return ix.cast("long").alias("ix"), iy.cast("long").alias("iy"), gh
 
 
-def _gh_sql_expr() -> tuple[str, str, str, str]:
+def _gh_sql_expr() -> tuple[str, str, str]:
     ix = f"CAST(floor((lon + 180.0) / 360.0 * {float(1 << _GH_BITS)!r}) AS BIGINT)"
     iy = f"CAST(floor((lat + 90.0) / 180.0 * {float(1 << _GH_BITS)!r}) AS BIGINT)"
     terms = []
     for j in range(_GH_BITS):
         terms.append(f"(((ix >> {_GH_BITS - 1 - j}) & 1) << {2 * _GH_BITS - 1 - 2 * j})")
         terms.append(f"(((iy >> {_GH_BITS - 1 - j}) & 1) << {2 * _GH_BITS - 2 - 2 * j})")
-    code = " + ".join(terms)
-    chars = " || ".join(
-        f"substring('{_GH_ALPHABET}', "
-        f"CAST(((code >> {2 * _GH_BITS - 5 * (i + 1)}) & 31) + 1 AS INT), 1)"
-        for i in range(2 * _GH_BITS // 5))
-    return ix, iy, chars, code
+    return ix, iy, " + ".join(terms)
 
 
 def t_geohash_classic(spark: SparkSession, sf: str) -> DataFrame:
@@ -184,7 +180,7 @@ def t_geohash_classic(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _sql_geohash() -> str:
-    ix, iy, chars, code = _gh_sql_expr()
+    ix, iy, code = _gh_sql_expr()
     return f"""
 WITH pts AS (
   SELECT url,
@@ -203,7 +199,7 @@ q AS (
     AND lat >= -90.0 AND lat < 90.0 AND lon >= -180.0 AND lon < 180.0
 ),
 c AS (SELECT url, ix, iy, {code} AS code FROM q)
-SELECT url, ix, iy, {chars} AS geohash
+SELECT url, ix, iy, {b32_code('code', 2 * _GH_BITS, GEOHASH_ALPHABET)} AS geohash
 FROM c ORDER BY url
 """
 

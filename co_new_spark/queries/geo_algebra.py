@@ -18,33 +18,27 @@ from pyspark.sql import functions as F
 
 from ..functions import cells_sql, geo
 from ..grid import grids
+from ..grid.codec import GEOHASH_ALPHABET
 from ..operators import pip
 from ..operators.knn import ring_cells_udf
+from ..operators.tiles import grid_b_global_ji
 from .geospatial import _EVENT_XY, _XENG, _YENG, _event_points
-from .sql_grid import KING, cells_cte, lattice_cell
+from .sql_grid import (
+    KING,
+    b16h_code,
+    b32_code,
+    cells_cte,
+    dbl,
+    l0_i_case,
+    l0_j_case,
+    lattice_cell,
+    morton_deref_x,
+    morton_deref_y,
+)
 
 X0 = grids.L0_ORIGIN_X
 Y0 = grids.L0_ORIGIN_Y
 SIDE = grids.L0_SIDE
-
-
-def _d(v: float) -> str:
-    """Float literal as DOUBLE (DuckDB parses bare decimals as DECIMAL)."""
-    return f"CAST({v!r} AS DOUBLE)"
-
-
-def _digit_to_j_case(d: str = "digit") -> str:
-    return "CASE " + " ".join(
-        f"WHEN {d} = {dd} THEN {jj}"
-        for (jj, ii), dd in sorted(grids._L0_JI_TO_DIGIT.items())  # noqa: SLF001
-    ) + " ELSE -1 END"
-
-
-def _digit_to_i_case(d: str = "digit") -> str:
-    return "CASE " + " ".join(
-        f"WHEN {d} = {dd} THEN {ii}"
-        for (jj, ii), dd in sorted(grids._L0_JI_TO_DIGIT.items())  # noqa: SLF001
-    ) + " ELSE -1 END"
 
 
 # ---------------------------------------------------------------------------
@@ -152,9 +146,9 @@ WITH {cells_cte(_EVENT_XY, 4, ['event_id'])},
 cc AS (SELECT DISTINCT cell, gi, gj FROM cells WHERE cell >= 0),
 b AS (
   SELECT cell,
-         {_d(X0)} + gi * {_d(_DX8)} AS xmin, {_d(Y0)} + gj * {_d(_DX8)} AS ymin,
-         {_d(X0)} + gi * {_d(_DX8)} + {_d(_DX8)} AS xmax,
-         {_d(Y0)} + gj * {_d(_DX8)} + {_d(_DX8)} AS ymax
+         {dbl(X0)} + gi * {dbl(_DX8)} AS xmin, {dbl(Y0)} + gj * {dbl(_DX8)} AS ymin,
+         {dbl(X0)} + gi * {dbl(_DX8)} + {dbl(_DX8)} AS xmax,
+         {dbl(Y0)} + gj * {dbl(_DX8)} + {dbl(_DX8)} AS ymax
   FROM cc)
 SELECT cell, xmin, ymin, xmax, ymax,
        (xmin + xmax) / 2 AS cx, (ymin + ymax) / 2 AS cy,
@@ -167,23 +161,6 @@ FROM b
 # geo_cell_codec — base16h strings incl. ALL THREE suffix-letter families
 # (grammar per /root/reference/conf.yaml:29 + citycover.csv; SURVEY.md §1.5)
 # ---------------------------------------------------------------------------
-
-_SFX_SQL = {
-    1: "CASE b & 1 WHEN 0 THEN 'G' ELSE 'Q' END",
-    2: "CASE b & 3 WHEN 0 THEN 'H' WHEN 1 THEN 'M' WHEN 2 THEN 'R' ELSE 'V' END",
-    3: ("CASE b & 7 WHEN 0 THEN 'J' WHEN 1 THEN 'K' WHEN 2 THEN 'N' WHEN 3 THEN 'P'"
-        " WHEN 4 THEN 'S' WHEN 5 THEN 'T' WHEN 6 THEN 'Y' ELSE 'Z' END"),
-}
-
-
-def _sql_code(r: int) -> str:
-    """SQL base16h string of a depth-(4+r) cell whose bits are column ``b``."""
-    nbits = 4 + r
-    q, extra = divmod(nbits, 4)
-    hx = f"lower(lpad(to_hex(b >> {extra}), {q}, '0'))" if extra else \
-         f"lower(lpad(to_hex(b), {q}, '0'))"
-    return f"{hx} || {_SFX_SQL[extra]}" if extra else hx
-
 
 def g_cell_codec(spark: SparkSession, sf: str) -> DataFrame:
     # depths 13/14/15 -> leftover bits 1/2/3, so code_g/code_h/code_j cover
@@ -203,7 +180,7 @@ def g_cell_codec(spark: SparkSession, sf: str) -> DataFrame:
 
 def _sql_codec_one(r: int, alias: str) -> str:
     return f"""
-(SELECT event_id, {_sql_code(r)} AS {alias}
+(SELECT event_id, {b16h_code('b', 4 + r)} AS {alias}
  FROM (SELECT event_id, (cell >> 6) AS b FROM ({_only_cells_subq(r)}) WHERE cell >= 0))
 """
 
@@ -224,25 +201,12 @@ JOIN {_sql_codec_one(11, 'code_j')} j ON g.event_id = j.event_id
 # geo_grid_generate — materialize a full grid level + geometry (A18)
 # ---------------------------------------------------------------------------
 
-_J_ARR = [int(v) for v in grids.L0_J_BY_DIGIT]
-_I_ARR = [int(v) for v in grids.L0_I_BY_DIGIT]
-
-
 def g_grid_generate(spark: SparkSession, sf: str) -> DataFrame:
     """All 256 depth-8 cells with native (codegen) box decode — no UDF at all."""
-    df = spark.range(256)
-    digit = F.shiftright(F.col("id"), 4)
-    ref = F.col("id").bitwiseAND(F.lit(15))
-    iy = F.shiftright(ref, 3).bitwiseAND(F.lit(1)) * 2 + F.shiftright(ref, 1).bitwiseAND(F.lit(1))
-    ix = F.shiftright(ref, 2).bitwiseAND(F.lit(1)) * 2 + ref.bitwiseAND(F.lit(1))
-    jarr = F.array(*[F.lit(v) for v in _J_ARR])
-    iarr = F.array(*[F.lit(v) for v in _I_ARR])
-    j = F.element_at(jarr, (digit + 1).cast("int"))
-    i = F.element_at(iarr, (digit + 1).cast("int"))
-    gx = i * 4 + ix
-    gy = j * 4 + iy
+    df = spark.range(256).withColumn("cell", F.col("id") * 64 + 8)
+    gy, gx = grid_b_global_ji(F.col("cell"), 8)
     return df.select(
-        (F.col("id") * 64 + 8).alias("cell"),
+        "cell",
         (F.lit(X0) + gx * F.lit(_DX8)).alias("xmin"),
         (F.lit(Y0) + gy * F.lit(_DX8)).alias("ymin"),
         (F.lit(X0) + gx * F.lit(_DX8) + F.lit(_DX8)).alias("xmax"),
@@ -253,19 +217,17 @@ def g_grid_generate(spark: SparkSession, sf: str) -> DataFrame:
 SQL_GRID_GENERATE = f"""
 WITH r AS (SELECT unnest(range(256)) AS id),
 d AS (
-  SELECT id, id // 16 AS digit,
-         ((id >> 3) & 1) * 2 + ((id >> 1) & 1) AS iy,
-         ((id >> 2) & 1) * 2 + (id & 1) AS ix
+  SELECT id, id // 16 AS digit, {morton_deref_y(4, "id")} AS iy,
+         {morton_deref_x(4, "id")} AS ix
   FROM r),
 ji AS (
-  SELECT id, {_digit_to_j_case()} * 4 + iy AS gy,
-             {_digit_to_i_case()} * 4 + ix AS gx
+  SELECT id, {l0_j_case()} * 4 + iy AS gy, {l0_i_case()} * 4 + ix AS gx
   FROM d)
 SELECT id * 64 + 8 AS cell,
-       {_d(X0)} + gx * {_d(_DX8)} AS xmin,
-       {_d(Y0)} + gy * {_d(_DX8)} AS ymin,
-       {_d(X0)} + gx * {_d(_DX8)} + {_d(_DX8)} AS xmax,
-       {_d(Y0)} + gy * {_d(_DX8)} + {_d(_DX8)} AS ymax
+       {dbl(X0)} + gx * {dbl(_DX8)} AS xmin,
+       {dbl(Y0)} + gy * {dbl(_DX8)} AS ymin,
+       {dbl(X0)} + gx * {dbl(_DX8)} + {dbl(_DX8)} AS xmax,
+       {dbl(Y0)} + gy * {dbl(_DX8)} + {dbl(_DX8)} AS ymax
 FROM ji
 """
 
@@ -360,7 +322,7 @@ def g_shortcode(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _sql_shortcode() -> str:
-    from .geo_cover_sql import _REF_DATA, _SQL_B16H, _sql_csv_decode, cover_hits_cte
+    from .geo_cover_sql import _REF_DATA, _sql_csv_decode, cover_hits_cte
     from .mat import mat_glob
 
     return f"""
@@ -384,7 +346,7 @@ sfxd AS (
   FROM best b LEFT JOIN syn2 s USING (isolabel_ext)),
 codes AS (
   SELECT rid, isolabel_ext, abbrev,
-         coalesce(abbrev, isolabel_ext) || '+' || ({_SQL_B16H}) AS shortcode
+         coalesce(abbrev, isolabel_ext) || '+' || {b16h_code('sfx', 'nsfx')} AS shortcode
   FROM sfxd)
 SELECT isolabel_ext, abbrev, CAST(count(*) AS BIGINT) AS n_pages,
        min(shortcode) AS example
@@ -476,55 +438,6 @@ def _sql_polygon_cover(base_depth: int = 8, max_depth: int = 12) -> str:
     """
 
 
-def g_cover_set_ops(spark: SparkSession, sf: str) -> DataFrame:
-    """B18 over the reference dims: per-municipality cover/overlay set
-    algebra (sizes, intersections) — array_intersect on collected cell sets.
-    Oracle-checked via geo_cover_sql.SQL_COVER_SET_OPS (which re-decodes the
-    raw CSV in SQL); parser counts additionally pytest-gated in
-    test_operators.test_citycover_parse."""
-    from ..sources.reference_data import load_citycover
-
-    cov = load_citycover(spark)
-    per = cov.groupBy("isolabel_ext").pivot("kind", ["cover", "overlay"]) \
-             .agg(F.collect_set("cell"))
-    return per.select(
-        "isolabel_ext",
-        F.size(F.coalesce(F.col("cover"), F.array())).alias("n_cover"),
-        F.size(F.coalesce(F.col("overlay"), F.array())).alias("n_overlay"),
-        F.size(F.array_intersect(
-            F.coalesce(F.col("cover"), F.array()),
-            F.coalesce(F.col("overlay"), F.array()))).alias("n_shared"),
-    ).orderBy(F.col("n_cover").desc(), "isolabel_ext").limit(100)
-
-
-def g_seat_cells(spark: SparkSession, sf: str) -> DataFrame:
-    """A22: per-municipality seat overlay cells decoded to EPSG:9377 centers.
-
-    Every non-empty ``overlay`` in citycover.csv is the municipality seat's
-    half-cell, uniformly depth 17 = 4 hex chars + one 1-bit suffix letter
-    (verified over the whole CSV — SURVEY §2.A22).  Emits the planar lattice
-    center (pure de-interleave math, SQL-expressible) so the oracle
-    (geo_cover_sql.SQL_SEAT_CELLS) can re-decode the CSV grammar AND the
-    y-first Morton bits in DuckDB; the WGS84 center itself is not
-    SQL-expressible (inverse TM), so it is pinned by ``roundtrip_ok``:
-    inverse->forward TM must return to the planar center within 1e-6 m
-    (plus the bit-exact pytest on the inverse kernel).
-    """
-    from ..sources.reference_data import load_citycover
-
-    ov = load_citycover(spark).filter(F.col("kind") == "overlay")
-    ctr = ov.withColumn("c", geo.cell_b_center(F.col("cell")))
-    ll = ctr.withColumn("ll", geo.xy_to_latlon(F.col("c.x"), F.col("c.y")))
-    rt = ll.withColumn("xy2", geo.latlon_to_xy(F.col("ll.lat"), F.col("ll.lon")))
-    return rt.select(
-        "isolabel_ext", F.col("code").alias("seat_code"),
-        F.col("c.x").alias("cx"), F.col("c.y").alias("cy"),
-        (F.col("cell").bitwiseAND(F.lit(63))).alias("depth"),
-        ((F.abs(F.col("xy2.x") - F.col("c.x")) < 1e-6)
-         & (F.abs(F.col("xy2.y") - F.col("c.y")) < 1e-6)).alias("roundtrip_ok"),
-    ).orderBy("isolabel_ext", "seat_code")
-
-
 # donut: outer pentagon (reused) + square hole around its centroid
 _HOLE = np.array([
     [4_800_000.0, 1_950_000.0],
@@ -561,13 +474,7 @@ WHERE (({_sql_crossings(_POLY)}) + ({_sql_crossings(_HOLE)})) % 2 = 1
 # ---------------------------------------------------------------------------
 
 
-def _b32_digit(alphabet: str, v):
-    return F.substring(F.lit(alphabet), v.cast("int") + 1, 1)
-
-
 def g_cell_codec_b32(spark: SparkSession, sf: str) -> DataFrame:
-    from ..grid.codec import B32NVU_ALPHABET, GEOHASH_ALPHABET
-
     pts = _event_points(spark, sf)
     out = pts.withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), 6)) \
              .filter(F.col("cell") >= 0)
@@ -576,23 +483,16 @@ def g_cell_codec_b32(spark: SparkSession, sf: str) -> DataFrame:
     lo = bits.bitwiseAND(F.lit(31))
     return out.select(
         "event_id", "cell",
-        F.concat(_b32_digit(B32NVU_ALPHABET, hi),
-                 _b32_digit(B32NVU_ALPHABET, lo)).alias("code_nvu"),
-        F.concat(_b32_digit(GEOHASH_ALPHABET, hi),
-                 _b32_digit(GEOHASH_ALPHABET, lo)).alias("code_ghl"),
+        F.concat(cells_sql.b32_digit(hi), cells_sql.b32_digit(lo)).alias("code_nvu"),
+        F.concat(cells_sql.b32_digit(hi, GEOHASH_ALPHABET),
+                 cells_sql.b32_digit(lo, GEOHASH_ALPHABET)).alias("code_ghl"),
     )
 
 
-def _sql_codec_b32() -> str:
-    from ..grid.codec import B32NVU_ALPHABET, GEOHASH_ALPHABET
-
-    return f"""
+SQL_CELL_CODEC_B32 = f"""
 WITH {cells_cte(_EVENT_XY, 6, ['event_id'])}
-SELECT event_id, cell,
-       substring('{B32NVU_ALPHABET}', CAST(((cell >> 6) >> 5) & 31 AS INT) + 1, 1)
-       || substring('{B32NVU_ALPHABET}', CAST((cell >> 6) & 31 AS INT) + 1, 1) AS code_nvu,
-       substring('{GEOHASH_ALPHABET}', CAST(((cell >> 6) >> 5) & 31 AS INT) + 1, 1)
-       || substring('{GEOHASH_ALPHABET}', CAST((cell >> 6) & 31 AS INT) + 1, 1) AS code_ghl
+SELECT event_id, cell, {b32_code('cell >> 6', 10)} AS code_nvu,
+       {b32_code('cell >> 6', 10, GEOHASH_ALPHABET)} AS code_ghl
 FROM cells WHERE cell >= 0
 """
 
@@ -608,13 +508,11 @@ _HILBERT_ORDER = 7
 
 
 def g_hilbert_index(spark: SparkSession, sf: str) -> DataFrame:
-    from ..operators.tiles import _grid_b_global_ji
-
     pts = _event_points(spark, sf)
     cells = pts.withColumn(
         "cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), _HILBERT_R)
     ).filter(F.col("cell") >= 0)
-    gy, gx = _grid_b_global_ji(F.col("cell"), 4 + _HILBERT_R)
+    gy, gx = grid_b_global_ji(F.col("cell"), 4 + _HILBERT_R)
     out = cells_sql.with_hilbert_index(cells, gy, gx, _HILBERT_ORDER)
     return out.select("event_id", "cell", "hd")
 
@@ -894,15 +792,13 @@ QUERIES = {
     "geo_gridlib_asserts": (g_gridlib_asserts, SQL_GRIDLIB_ASSERTS),
     "geo_montanitas_ring": (g_montanitas_ring, SQL_MONTANITAS_RING),
     "geo_pip_holes": (g_pip_holes, SQL_PIP_HOLES),
-    # geo_seat_cells + geo_cover_set_ops register in geo_cover_sql (with
-    # their CSV-decoding SQL oracles)
     "geo_polygon_cover": (g_polygon_cover, _sql_polygon_cover()),
     "geo_coverage_clip": (g_coverage_clip, _sql_coverage_clip()),
     "geo_shortcode": (g_shortcode, _sql_shortcode()),
     "geo_knn_ring_events": (g_knn_ring_events, sql_knn_ring(
         _EVENT_XY, "event_id", f"WHERE event_id < {_KNN_NQ}", _KNN_R, _KNN_K)),
     "geo_hilbert_index": (g_hilbert_index, _sql_hilbert()),
-    "geo_cell_codec_b32": (g_cell_codec_b32, _sql_codec_b32()),
+    "geo_cell_codec_b32": (g_cell_codec_b32, SQL_CELL_CODEC_B32),
     "geo_parent_rollup": (g_parent_rollup, SQL_PARENT_ROLLUP),
     "geo_children": (g_children, SQL_CHILDREN),
     "geo_neighbors": (g_neighbors, SQL_NEIGHBORS),

@@ -29,14 +29,26 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import cells_sql, geo
+from ..grid import grids
 from ..operators.cover import cover_anti, cover_best_with_cell, cover_lookup_best
 from ..sources.reference_data import load_citycover, load_synonym, load_synonym_ref
-from .geo_algebra import SIDE, X0, Y0, _d, _digit_to_i_case, _digit_to_j_case
 from .geospatial import _EVENT_XY, _XENG, _YENG
-from .sql_grid import cells_cte, morton_deref_x, morton_deref_y
+from .sql_grid import (
+    b16h_code,
+    b16h_suffix,
+    b32_code,
+    cells_cte,
+    dbl,
+    hex_digit,
+    l0_i_case,
+    l0_j_case,
+    morton_deref_x,
+    morton_deref_y,
+)
 
 _PT_R = 26            # refinement bits -> point depth 30 (> max cover depth 22)
 _PT_DEPTH = 4 + _PT_R
+X0, Y0, SIDE = grids.L0_ORIGIN_X, grids.L0_ORIGIN_Y, grids.L0_SIDE
 
 # single-sourced with the Spark-side loaders (sources/reference_data.REF_DIR),
 # so an env override moves BOTH sides of every cover oracle pair together
@@ -52,6 +64,7 @@ def _sql_csv_decode(col: str, alias: str) -> str:
     into ``alias``(isolabel_ext, cbits, cdepth) — the full base16h grammar
     incl. all three suffix-letter families and the literal NULL token of
     citycover.csv:325."""
+    snb, sval = b16h_suffix("right(code, 1)")
     return f"""
 {alias}raw AS (
   SELECT isolabel_ext, unnest(string_split({col}, ' ')) AS code
@@ -61,14 +74,7 @@ def _sql_csv_decode(col: str, alias: str) -> str:
              WHERE code <> '' AND code <> 'NULL'),
 {alias}dec AS (
   SELECT isolabel_ext, code,
-    CASE WHEN contains('GQ', right(code, 1)) THEN 1
-         WHEN contains('HMRV', right(code, 1)) THEN 2
-         WHEN contains('JKNPSTYZ', right(code, 1)) THEN 3 ELSE 0 END AS snb,
-    CASE right(code, 1) WHEN 'G' THEN 0 WHEN 'Q' THEN 1
-         WHEN 'H' THEN 0 WHEN 'M' THEN 1 WHEN 'R' THEN 2 WHEN 'V' THEN 3
-         WHEN 'J' THEN 0 WHEN 'K' THEN 1 WHEN 'N' THEN 2 WHEN 'P' THEN 3
-         WHEN 'S' THEN 4 WHEN 'T' THEN 5 WHEN 'Y' THEN 6 WHEN 'Z' THEN 7
-         ELSE 0 END AS sval
+    {snb} AS snb, {sval} AS sval
   FROM {alias}c
 ),
 {alias} AS (
@@ -77,7 +83,7 @@ def _sql_csv_decode(col: str, alias: str) -> str:
        list_transform(
          string_split(substring(code, 1, length(code)
                                 - CASE WHEN snb > 0 THEN 1 ELSE 0 END), ''),
-         ch -> CAST(strpos('0123456789abcdef', ch) - 1 AS BIGINT))),
+         ch -> {hex_digit("ch")})),
        (a, b) -> a * 16 + b) << snb) | sval AS cbits,
     (length(code) - CASE WHEN snb > 0 THEN 1 ELSE 0 END) * 4 + snb AS cdepth
   FROM {alias}dec
@@ -200,19 +206,6 @@ def g_shortcode_sci(spark: SparkSession, sf: str) -> DataFrame:
     return best.select("event_id", "isolabel_ext", code.alias("shortcode"))
 
 
-# DuckDB base16h encode of `sfx` over `nsfx` bits (variable per row):
-# hex digits for the top 4-bit groups, suffix letter for the 1-3 leftovers
-_SQL_B16H = """
-array_to_string(list_transform(range(nsfx // 4),
-    i -> substring('0123456789abcdef',
-                   CAST(((sfx >> ((nsfx % 4) + 4 * (nsfx // 4 - 1 - i))) & 15)
-                        AS INT) + 1, 1)), '')
-|| CASE nsfx % 4 WHEN 0 THEN ''
-     WHEN 1 THEN substring('GQ', CAST((sfx & 1) AS INT) + 1, 1)
-     WHEN 2 THEN substring('HMRV', CAST((sfx & 3) AS INT) + 1, 1)
-     ELSE substring('JKNPSTYZ', CAST((sfx & 7) AS INT) + 1, 1) END
-"""
-
 _SQL_BEST_COVER = f"""
 best AS (
   SELECT event_id, pbits, isolabel_ext, cdepth, cidx FROM (
@@ -237,7 +230,7 @@ sfxd AS (
          {_PT_DEPTH} - cdepth AS nsfx,
          pbits & ((CAST(1 AS BIGINT) << ({_PT_DEPTH} - cdepth)) - 1) AS sfx
   FROM withsyn)
-SELECT event_id, isolabel_ext, ab || '+' || ({_SQL_B16H}) AS shortcode
+SELECT event_id, isolabel_ext, ab || '+' || {b16h_code('sfx', 'nsfx')} AS shortcode
 FROM sfxd
 """
 
@@ -245,9 +238,6 @@ FROM sfxd
 # ---------------------------------------------------------------------------
 # geo_shortcode_log — A23 logistic form ('-', base32nvu), SQL-oracle-checked
 # ---------------------------------------------------------------------------
-
-
-B32NVU = "0123456789BCDFGHJKLMNPQRSTUVWXYZ"
 
 
 def _cover_index_dim(spark: SparkSession) -> DataFrame:
@@ -283,7 +273,7 @@ def g_shortcode_log(spark: SparkSession, sf: str) -> DataFrame:
     dpa = (cdepth + nsfx5).cast("int")
     cell_a = cells_sql.cell_ancestor_at(F.col("cell"), dpa)
     sfx_bits = cells_sql.cell_low_bits(cell_a, nsfx5)
-    idx_char = F.substring(F.lit(B32NVU), F.col("cover_idx").cast("int") + 1, 1)
+    idx_char = cells_sql.b32_digit(F.col("cover_idx"))
     code = F.concat(F.coalesce(F.col("abbrev"), F.col("isolabel_ext")),
                     F.lit("-"), idx_char, geo.b32nvu_string(sfx_bits, nsfx5))
     return best.select(
@@ -291,13 +281,6 @@ def g_shortcode_log(spark: SparkSession, sf: str) -> DataFrame:
         cell_a.alias("cell_aligned"),
         F.coalesce(F.col("ref_name"), F.lit("")).alias("abbrev_source"))
 
-
-_SQL_B32 = """
-array_to_string(list_transform(range(nsfx // 5),
-    i -> substring('0123456789BCDFGHJKLMNPQRSTUVWXYZ',
-                   CAST(((sfx >> (5 * (nsfx // 5 - 1 - i))) & 31) AS INT) + 1,
-                   1)), '')
-"""
 
 SQL_SHORTCODE_LOG = f"""
 WITH {cells_cte(_EVENT_XY, _PT_R, ['event_id'])},
@@ -317,10 +300,7 @@ sfxd AS (
            & ((CAST(1 AS BIGINT) << nsfx) - 1) AS sfx
   FROM aligned)
 SELECT event_id, isolabel_ext,
-       ab || '-'
-          || substring('0123456789BCDFGHJKLMNPQRSTUVWXYZ',
-                       CAST(cidx AS INT) + 1, 1)
-          || ({_SQL_B32}) AS shortcode,
+       ab || '-' || {b32_code('cidx', 5)} || {b32_code('sfx', 'nsfx')} AS shortcode,
        abits * 64 + dpa AS cell_aligned, abbrev_source
 FROM sfxd
 """
@@ -329,8 +309,7 @@ FROM sfxd
 # ---------------------------------------------------------------------------
 # geo_cover_set_ops — B18 over the reference dims, now SQL-oracle-checked:
 # the oracle re-derives both cell sets from the raw CSV and restates the
-# per-municipality counts + intersection (the Spark fn lives in geo_algebra;
-# registering it HERE upgrades its driver check from rows-only to hash).
+# per-municipality counts + intersection.
 # ---------------------------------------------------------------------------
 
 SQL_COVER_SET_OPS = f"""
@@ -362,10 +341,23 @@ ORDER BY n_cover DESC, i.isolabel_ext LIMIT 100
 """
 
 
-def _g_cover_set_ops(spark: SparkSession, sf: str) -> DataFrame:
-    from .geo_algebra import g_cover_set_ops
-
-    return g_cover_set_ops(spark, sf)
+def g_cover_set_ops(spark: SparkSession, sf: str) -> DataFrame:
+    """B18 over the reference dims: per-municipality cover/overlay set
+    algebra (sizes, intersections) — array_intersect on collected cell sets.
+    Oracle-checked via SQL_COVER_SET_OPS (which re-decodes the raw CSV in
+    SQL); parser counts additionally pytest-gated in
+    test_operators.test_citycover_parse."""
+    cov = load_citycover(spark)
+    per = cov.groupBy("isolabel_ext").pivot("kind", ["cover", "overlay"]) \
+             .agg(F.collect_set("cell"))
+    return per.select(
+        "isolabel_ext",
+        F.size(F.coalesce(F.col("cover"), F.array())).alias("n_cover"),
+        F.size(F.coalesce(F.col("overlay"), F.array())).alias("n_overlay"),
+        F.size(F.array_intersect(
+            F.coalesce(F.col("cover"), F.array()),
+            F.coalesce(F.col("overlay"), F.array()))).alias("n_shared"),
+    ).orderBy(F.col("n_cover").desc(), "isolabel_ext").limit(100)
 
 
 # ---------------------------------------------------------------------------
@@ -392,25 +384,45 @@ g AS (
 ),
 ji AS (
   SELECT isolabel_ext, seat_code, depth,
-         {_digit_to_j_case()} AS j, {_digit_to_i_case()} AS i,
+         {l0_j_case()} AS j, {l0_i_case()} AS i,
          {morton_deref_y(_SEAT_R)} AS iy, {morton_deref_x(_SEAT_R)} AS ix
   FROM g
 )
 SELECT isolabel_ext, seat_code,
-       {_d(X0)} + (i * {1 << _SEAT_NX} + ix) * {_d(_SEAT_DX)}
-                + {_d(_SEAT_DX / 2)} AS cx,
-       {_d(Y0)} + (j * {1 << _SEAT_NY} + iy) * {_d(_SEAT_DY)}
-                + {_d(_SEAT_DY / 2)} AS cy,
+       {dbl(X0)} + (i * {1 << _SEAT_NX} + ix) * {dbl(_SEAT_DX)}
+                + {dbl(_SEAT_DX / 2)} AS cx,
+       {dbl(Y0)} + (j * {1 << _SEAT_NY} + iy) * {dbl(_SEAT_DY)}
+                + {dbl(_SEAT_DY / 2)} AS cy,
        depth, TRUE AS roundtrip_ok
 FROM ji
 ORDER BY isolabel_ext, seat_code
 """
 
 
-def _g_seat_cells(spark: SparkSession, sf: str) -> DataFrame:
-    from .geo_algebra import g_seat_cells
+def g_seat_cells(spark: SparkSession, sf: str) -> DataFrame:
+    """A22: per-municipality seat overlay cells decoded to EPSG:9377 centers.
 
-    return g_seat_cells(spark, sf)
+    Every non-empty ``overlay`` in citycover.csv is the municipality seat's
+    half-cell, uniformly depth 17 = 4 hex chars + one 1-bit suffix letter
+    (verified over the whole CSV — SURVEY §2.A22).  Emits the planar lattice
+    center (pure de-interleave math, SQL-expressible) so the oracle
+    (SQL_SEAT_CELLS) can re-decode the CSV grammar AND the y-first Morton
+    bits in DuckDB; the WGS84 center itself is not
+    SQL-expressible (inverse TM), so it is pinned by ``roundtrip_ok``:
+    inverse->forward TM must return to the planar center within 1e-6 m
+    (plus the bit-exact pytest on the inverse kernel).
+    """
+    ov = load_citycover(spark).filter(F.col("kind") == "overlay")
+    ctr = ov.withColumn("c", geo.cell_b_center(F.col("cell")))
+    ll = ctr.withColumn("ll", geo.xy_to_latlon(F.col("c.x"), F.col("c.y")))
+    rt = ll.withColumn("xy2", geo.latlon_to_xy(F.col("ll.lat"), F.col("ll.lon")))
+    return rt.select(
+        "isolabel_ext", F.col("code").alias("seat_code"),
+        F.col("c.x").alias("cx"), F.col("c.y").alias("cy"),
+        (F.col("cell").bitwiseAND(F.lit(63))).alias("depth"),
+        ((F.abs(F.col("xy2.x") - F.col("c.x")) < 1e-6)
+         & (F.abs(F.col("xy2.y") - F.col("c.y")) < 1e-6)).alias("roundtrip_ok"),
+    ).orderBy("isolabel_ext", "seat_code")
 
 
 def g_cover_anti(spark: SparkSession, sf: str) -> DataFrame:
@@ -794,6 +806,6 @@ QUERIES = {
     "geo_cover_anti": (g_cover_anti, SQL_COVER_ANTI),
     "geo_shortcode_sci": (g_shortcode_sci, SQL_SHORTCODE_SCI),
     "geo_shortcode_log": (g_shortcode_log, SQL_SHORTCODE_LOG),
-    "geo_cover_set_ops": (_g_cover_set_ops, SQL_COVER_SET_OPS),
-    "geo_seat_cells": (_g_seat_cells, SQL_SEAT_CELLS),
+    "geo_cover_set_ops": (g_cover_set_ops, SQL_COVER_SET_OPS),
+    "geo_seat_cells": (g_seat_cells, SQL_SEAT_CELLS),
 }

@@ -23,9 +23,8 @@ from ..grid import grids
 from ..operators import tiles
 from ..sources.reference_data import REF_DIR
 from ..sources.tables import load
-from .geo_algebra import _d
-from .geospatial import _EVENT_XY
-from .sql_grid import cells_cte, lattice_cell
+from .geospatial import _EVENT_XY, _event_points
+from .sql_grid import b16h_code, cells_cte, dbl, lattice_cell
 from .sql_grid import morton_ref as _sql_ref
 
 # deterministic global lat/lon per event (exact in float64 on both engines)
@@ -86,7 +85,6 @@ _TILE_DEPTH = 8
 
 def g_cell_to_tile(spark: SparkSession, sf: str) -> DataFrame:
     """A26: Grid B cell -> containing raster tile, native prefix/arith only."""
-    from .geo_algebra import _event_points
     from ..functions import geo
 
     pts = _event_points(spark, sf)
@@ -105,12 +103,12 @@ def _sql_cell_to_tile() -> str:
 WITH {cells_cte(_EVENT_XY, 4, ['event_id'])},
 cc AS (SELECT DISTINCT cell, gi, gj FROM cells WHERE cell >= 0),
 ctr AS (
-  SELECT cell, {_d(tiles.X0)} + (gi + 0.5) * {_d(side)} AS cx,
-               {_d(tiles.Y0)} + (gj + 0.5) * {_d(side)} AS cy
+  SELECT cell, {dbl(tiles.X0)} + (gi + 0.5) * {dbl(side)} AS cx,
+               {dbl(tiles.Y0)} + (gj + 0.5) * {dbl(side)} AS cy
   FROM cc)
 SELECT cell,
-       CAST(floor(({_d(tiles.Y0 + tiles.Y_EXTENT)} - cy) / {_d(dy)}) AS BIGINT) * {n}
-       + CAST(floor((cx - {_d(tiles.X0)}) / {_d(dx)}) AS BIGINT) AS tile
+       CAST(floor(({dbl(tiles.Y0 + tiles.Y_EXTENT)} - cy) / {dbl(dy)}) AS BIGINT) * {n}
+       + CAST(floor((cx - {dbl(tiles.X0)}) / {dbl(dx)}) AS BIGINT) AS tile
 FROM ctr
 """
 
@@ -136,16 +134,16 @@ ext AS (
   SELECT tile, (tile % {n}) AS tx, (tile // {n}) AS ty FROM t
 ), box AS (
   SELECT tile,
-         tx * {_d(dx)} AS x0, tx * {_d(dx)} + {_d(dx)} AS x1,
-         {_d(tiles.Y_EXTENT)} - ty * {_d(dy)} - {_d(dy)} AS y0,
-         {_d(tiles.Y_EXTENT)} - ty * {_d(dy)} AS y1
+         tx * {dbl(dx)} AS x0, tx * {dbl(dx)} + {dbl(dx)} AS x1,
+         {dbl(tiles.Y_EXTENT)} - ty * {dbl(dy)} - {dbl(dy)} AS y0,
+         {dbl(tiles.Y_EXTENT)} - ty * {dbl(dy)} AS y1
   FROM ext
 ), rng AS (
   SELECT tile,
-         greatest(CAST(ceil(x0 / {_d(side)} - 0.5) AS BIGINT), 0) AS gx0,
-         least(CAST(ceil(x1 / {_d(side)} - 0.5) AS BIGINT) - 1, {grids.L0_NI * 4 - 1}) AS gx1,
-         greatest(CAST(floor(y0 / {_d(side)} - 0.5) AS BIGINT) + 1, 0) AS gy0,
-         least(CAST(floor(y1 / {_d(side)} - 0.5) AS BIGINT), {grids.L0_NJ * 4 - 1}) AS gy1
+         greatest(CAST(ceil(x0 / {dbl(side)} - 0.5) AS BIGINT), 0) AS gx0,
+         least(CAST(ceil(x1 / {dbl(side)} - 0.5) AS BIGINT) - 1, {grids.L0_NI * 4 - 1}) AS gx1,
+         greatest(CAST(floor(y0 / {dbl(side)} - 0.5) AS BIGINT) + 1, 0) AS gy0,
+         least(CAST(floor(y1 / {dbl(side)} - 0.5) AS BIGINT), {grids.L0_NJ * 4 - 1}) AS gy1
   FROM box
 ), latt AS (
   SELECT tile, {lattice_cell("gx.g", "gy.g", 4)} AS cell
@@ -167,7 +165,6 @@ def g_partitioned_scan(spark: SparkSession, sf: str) -> DataFrame:
     return the filtered contents.  The oracle recomputes from events
     directly, so the round-trip (write -> prune -> read) is value-checked.
     """
-    from .geo_algebra import _event_points
     from ..functions import cells_sql, geo
 
     pts = _event_points(spark, sf)
@@ -315,8 +312,7 @@ def _sql_cell_geojson() -> str:
 
     return f"""
 SELECT cell,
-       lower(lpad(to_hex(cell >> 6),
-                  CAST((cell & 63) // 4 AS INTEGER), '0')) AS code,
+       {b16h_code('cell >> 6', 'cell & 63')} AS code,
        json_extract_string(feature, '$.geometry.type') AS geom_type,
        CAST(json_array_length(feature, '{_GJ_RING}') AS INTEGER) AS n_vertices,
        json_extract(feature, '{_GJ_RING}[0]')

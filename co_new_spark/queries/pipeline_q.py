@@ -21,6 +21,7 @@ from ..operators.cover import cover_lookup_best
 from ..plans import lineage
 from ..sources.pages import stored_pages
 from ..sources.reference_data import load_citycover
+from .sql_grid import b16h_code
 
 _PAGES_N = 4000
 
@@ -110,8 +111,7 @@ def _sql_sql_surface() -> str:
           SELECT url, ((cell >> 6) >> ((cell & 63) - 4)) AS l0
           FROM read_parquet('{mat_glob("sql_surface_pts")}')
         )
-        SELECT l0, substr('0123456789abcdef', CAST(l0 AS INTEGER) + 1, 1)
-                 AS l0_code,
+        SELECT l0, {b16h_code('l0', 4)} AS l0_code,
                CAST(count(*) AS BIGINT) AS n_pages,
                CAST(count(DISTINCT url) AS BIGINT) AS n_urls
         FROM v GROUP BY l0 ORDER BY l0

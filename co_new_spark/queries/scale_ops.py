@@ -396,7 +396,7 @@ def g_hilbert_ranges(spark: SparkSession, sf: str) -> DataFrame:
     single-sourced unrolled curve + gaps-and-islands), so the numpy
     planner and the SQL spec cross-check each other."""
     from ..functions import cells_sql
-    from ..operators.tiles import _grid_b_global_ji
+    from ..operators.tiles import grid_b_global_ji
 
     ranges = spark.createDataFrame(
         _hilbert_bbox_ranges(), "range_lo long, range_hi long, n_cells long")
@@ -405,7 +405,7 @@ def g_hilbert_ranges(spark: SparkSession, sf: str) -> DataFrame:
     cells = (pts.withColumn(
                  "cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), _HR_R))
                 .filter(F.col("cell") >= 0))
-    gy, gx = _grid_b_global_ji(F.col("cell"), 4 + _HR_R)
+    gy, gx = grid_b_global_ji(F.col("cell"), 4 + _HR_R)
     ev = (cells_sql.with_hilbert_index(cells, gy, gx, _HR_ORDER)
           .select("hd"))
     hits = (ev.join(F.broadcast(ranges),

@@ -14,13 +14,33 @@ maps a lattice slot back to its cell: together they are the one SQL
 restatement of that lattice, read by every oracle that builds rasters, king
 neighbourhoods or density graphs; ``KING`` is the 3x3 offset table those
 oracles cross join to step on it.
+
+The cell codes and the L0 digit inverse are restated here too, each table
+built from the spec constants of grid/codec.py and grid/grids.py:
+``b16h_code`` is the base16h encode (codec.b16h_encode), ``b16h_suffix``
+and ``hex_digit`` its decode, ``b32_code`` the base32 encode in either
+alphabet (codec.b32nvu_encode), and ``l0_j_case`` / ``l0_i_case`` map an L0
+digit back to its (j, i), the inverse of ``l0_case``.  ``dbl`` writes a
+DOUBLE literal.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from ..grid import grids
+from ..grid import codec, grids
+
+_HEX = "".join(codec.HEX_CHARS)
+# base16h suffix letters by leftover-bit count, in value order
+_B16H_LETTERS = {
+    n: "".join(sorted((c for c, (k, _) in codec.B16H_SUFFIX.items() if k == n),
+                      key=lambda c: codec.B16H_SUFFIX[c][1]))
+    for n in (1, 2, 3)}
+
+
+def dbl(v: float) -> str:
+    """Float literal as DOUBLE (DuckDB parses bare decimals as DECIMAL)."""
+    return f"CAST({v!r} AS DOUBLE)"
 
 
 def l0_case(j: str = "j", i: str = "i") -> str:
@@ -29,6 +49,62 @@ def l0_case(j: str = "j", i: str = "i") -> str:
         f"WHEN {j} = {jj} AND {i} = {ii} THEN {d}"
         for (jj, ii), d in sorted(grids._L0_JI_TO_DIGIT.items())  # noqa: SLF001
     ) + " ELSE -1 END"
+
+
+def _l0_axis_case(d: str, axis: int) -> str:
+    return "CASE " + " ".join(
+        f"WHEN {d} = {dd} THEN {ji[axis]}"
+        for ji, dd in sorted(grids._L0_JI_TO_DIGIT.items())  # noqa: SLF001
+    ) + " ELSE -1 END"
+
+
+def l0_j_case(d: str = "digit") -> str:
+    """SQL CASE for L0 digit -> row j, the inverse of l0_case (-1 if unused)."""
+    return _l0_axis_case(d, 0)
+
+
+def l0_i_case(d: str = "digit") -> str:
+    """SQL CASE for L0 digit -> column i, the inverse of l0_case (-1 if unused)."""
+    return _l0_axis_case(d, 1)
+
+
+def b16h_code(bits: str, nbits) -> str:
+    """SQL base16h code of the low ``nbits`` bits of ``bits``, as
+    codec.b16h_encode: lowercase hex for each whole 4-bit group, then the
+    suffix letter (G/Q, H/M/R/V, J..Z) of the 1-3 leftover bits.  ``nbits``
+    is an int or a SQL expression."""
+    b, n = f"({bits})", f"({nbits})"
+    sfx = " ".join(
+        f"WHEN {k} THEN substring('{s}', CAST(({b} & {len(s) - 1}) AS INT) + 1, 1)"
+        for k, s in _B16H_LETTERS.items())
+    return (f"(lower(lpad(to_hex({b} >> ({n} % 4)), CAST({n} // 4 AS INTEGER), '0'))"
+            f" || CASE {n} % 4 WHEN 0 THEN '' {sfx} END)")
+
+
+def b16h_suffix(ch: str) -> tuple[str, str]:
+    """SQL CASEs reading the last character ``ch`` of a base16h code: the
+    leftover-bit count its suffix letter carries and their value, both 0
+    for a hex digit."""
+    nbits, value = (f"CASE {ch} " + " ".join(
+        f"WHEN '{c}' THEN {nv[k]}" for c, nv in codec.B16H_SUFFIX.items()
+    ) + " ELSE 0 END" for k in (0, 1))
+    return nbits, value
+
+
+def hex_digit(ch: str) -> str:
+    """SQL BIGINT value of the base16h hex digit ``ch``."""
+    return f"CAST(strpos('{_HEX}', {ch}) - 1 AS BIGINT)"
+
+
+def b32_code(bits: str, nbits, alphabet: str = codec.B32NVU_ALPHABET) -> str:
+    """SQL base32 code of the low ``nbits`` bits of ``bits`` (a multiple of
+    5), as codec.b32nvu_encode: one ``alphabet`` character per 5 bits, MSB
+    first.  ``nbits`` is an int or a SQL expression; ``alphabet`` is
+    base32nvu or codec.GEOHASH_ALPHABET."""
+    b, n = f"({bits})", f"({nbits})"
+    return (f"coalesce(array_to_string(list_transform(range({n} // 5), i -> substring("
+            f"'{alphabet}', CAST((({b} >> (5 * ({n} // 5 - 1 - i))) & 31) AS INT)"
+            f" + 1, 1)), ''), '')")
 
 
 def morton_deref_y(r: int, bits: str = "rb") -> str:

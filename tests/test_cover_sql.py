@@ -46,8 +46,8 @@ def test_shortcode_log_roundtrip(spark):
     (deterministically ordered) cover list; the remaining digits are the
     bits below that prefix.  No search, no ambiguity.
     """
-    from co_new_spark.grid.codec import b32nvu_decode
-    from co_new_spark.queries.geo_cover_sql import B32NVU, _PT_DEPTH, g_shortcode_log
+    from co_new_spark.grid.codec import B32NVU_ALPHABET, b32nvu_decode
+    from co_new_spark.queries.geo_cover_sql import _PT_DEPTH, g_shortcode_log
     from co_new_spark.sources.reference_data import _cover_pdf, load_synonym
 
     rows = g_shortcode_log(spark, SF).collect()
@@ -71,7 +71,7 @@ def test_shortcode_log_roundtrip(spark):
         ab, sfx_code = r.shortcode.rsplit("-", 1)
         iso = abbrev_to_iso.get(ab, ab)
         assert iso == r.isolabel_ext, r
-        idx = B32NVU.index(sfx_code[0])
+        idx = B32NVU_ALPHABET.index(sfx_code[0])
         cb, cd = covers[iso][idx]
         sbits, snb = b32nvu_decode(np.array([sfx_code[1:]], dtype=object))
         sbits, snb = int(sbits[0]), int(snb[0])

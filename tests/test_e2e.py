@@ -1,7 +1,5 @@
 """End-to-end curation pipeline (queries/e2e_q.py) invariants."""
 
-from pyspark.sql import functions as F
-
 
 def test_e2e_pipeline_invariants(spark):
     from co_new_spark.queries.e2e_q import PACK_CAP, e2e_training_pipeline

@@ -6,8 +6,6 @@ from conftest import SF_DIR
 
 from co_new_spark.queries.geo_contour import (
     _CASE_ROWS,
-    _CT_NSIDE,
-    _CT_T,
     _inside_cells,
     g_contour,
 )

@@ -2,7 +2,6 @@
 
 import pytest
 
-from co_new_spark.queries.geo_dtw import _T
 from tests.test_geo_match import _corpus
 
 

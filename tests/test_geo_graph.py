@@ -1,7 +1,5 @@
 """Integer-exact PageRank over cell adjacency (queries/geo_graph.py)."""
 
-from pyspark.sql import functions as F
-
 from conftest import SF_DIR
 
 from co_new_spark.queries.geo_graph import (

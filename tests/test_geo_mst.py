@@ -4,7 +4,6 @@ import random
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from conftest import SF_DIR
 

@@ -63,7 +63,7 @@ def test_leaves_are_balanced_and_tile_within_slices(pts):
 
 def test_rtree_probe_matches_full_scan_and_prunes(spark):
     from co_new_spark.queries.geo_pack import (
-        _RTP_NQ, _RTP_SHIFT, _leaf_points, _query_boxes, g_rtree_probe)
+        _RTP_NQ, _leaf_points, _query_boxes, g_rtree_probe)
     from conftest import SF_DIR
     import pyspark.sql.functions as F
 

@@ -115,7 +115,6 @@ def test_clip_preserves_reference_coverage_polygons():
     n_vertices = sum(len(r) for f in feats for r in f["rings"])
     assert n_vertices > 39_000
 
-    from co_new_spark.grid import grids
     checked = 0
     for f in feats:
         code = str(f["properties"].get("code", "")).lower()

@@ -4,7 +4,6 @@ empty-cluster carry path."""
 import hashlib
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from conftest import SF_DIR
 

@@ -1,6 +1,8 @@
-"""Pins of the DuckDB oracles that walk the global cell lattice (sql_grid's
-(gi, gj), lattice_cell and KING): row count, column types and rowset sha at
-sf0.001 and sf0.01, so a change to the one lattice restatement shows here
+"""Pins of the lattice and codec oracles: the DuckDB oracles that walk the
+global cell lattice (sql_grid's (gi, gj), lattice_cell and KING) or spell a
+cell code or the L0 digit inverse (b16h_code, b32_code, l0_j_case /
+l0_i_case).  Each pin is the row count, column types and rowset sha at
+sf0.001 and sf0.01, so a change to one of those restatements shows here
 without the Spark sweep of tools/check_oracle.py.  The sha is that tool's
 ``sha=`` (rowset_sha of rowset).  sf0.01 is what tells geo_cell_hops from
 geo_cost_surface: both return the same rows at sf0.001."""
@@ -59,6 +61,14 @@ PINS = {
                                  "sf0.01": (256, "7b6ce68c40a07da6")}),
     "geo_knn_ring": ("VVDB", {"sf0.001": (115, "e39e1633ac3806c3"),
                               "sf0.01": (115, "e39e1633ac3806c3")}),
+    "geo_cell_codec": ("BVVV", {"sf0.001": (790, "7137dc17b1bc8715"),
+                                "sf0.01": (7969, "cf09b24ff3f3eeb5")}),
+    "geo_cell_codec_b32": ("BBVV", {"sf0.001": (790, "db89290cc992a0b1"),
+                                    "sf0.01": (7969, "b022cb548b1bf88b")}),
+    "geo_grid_generate": ("BDDDD", {"sf0.001": (256, "434ae4a1f0d13b32"),
+                                    "sf0.01": (256, "434ae4a1f0d13b32")}),
+    "geo_geohash_classic": ("VBBV", {"sf0.001": (1808, "d1f9adf6d6827d1e"),
+                                     "sf0.01": (1808, "d1f9adf6d6827d1e")}),
 }
 
 

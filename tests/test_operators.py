@@ -1,7 +1,6 @@
 """Operator-level tests: cover join, kNN ring, MinHash recall, reference dims."""
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from co_new_spark.functions import geo

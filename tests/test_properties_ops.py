@@ -8,8 +8,6 @@ Spark action — the property coverage of hypothesis at the cost of one job.
 
 import numpy as np
 
-from pyspark.sql import functions as F
-
 
 def _union_find(n_nodes, edges):
     p = {x: x for x in n_nodes}

@@ -253,7 +253,7 @@ def test_parse_all_geo_uris_multi_hit(spark):
 @needs_reference("citycover.csv")
 def test_seat_cells_match_known_seats(spark):
     """A22: decoded overlay centers land near the real municipality seats."""
-    from co_new_spark.queries.geo_algebra import g_seat_cells
+    from co_new_spark.queries.geo_cover_sql import g_seat_cells
 
     from co_new_spark.grid import proj
 

@@ -60,7 +60,6 @@ def test_bbox_prefilter_is_lossless(spark):
 
 
 def test_bbox_cover_cells_bound_and_valid(spark):
-    from co_new_spark.functions import cells_sql
     from co_new_spark.queries.geospatial import _BBOX, _bbox_cover_cells
 
     cells = _bbox_cover_cells(*_BBOX)

@@ -1,7 +1,5 @@
 """Connected components, greedy packing, TF-IDF top-k (queries/training3.py)."""
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR

@@ -3,7 +3,6 @@
 
 import hashlib
 
-from pyspark.sql import functions as F
 
 from conftest import SF_DIR
 

@@ -16,7 +16,7 @@ from conftest import SF_DIR
 from co_new_spark.queries.training8 import (_SS_QUOTA, t_inverted_postings,
                                             t_stratified_sample)
 from co_new_spark.queries.webgraph import (_LP_HUBS, _LP_LINKS, _LP_N,
-                                           _link_pages, _links,
+                                           _links,
                                            w_fuzzy_url_pairs,
                                            w_link_pagerank)
 

@@ -10,8 +10,6 @@ min-tie-break rounds, and partitioning-invariance of both (the
 determinism the min-struct argmax is supposed to buy).
 """
 
-from itertools import combinations
-
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR

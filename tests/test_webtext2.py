@@ -14,8 +14,6 @@ import collections
 import datetime
 import re
 
-from pyspark.sql import functions as F
-
 from conftest import SF_DIR
 
 from co_new_spark.queries.training8 import _PMI_MINC, _PMI_TOPK, t_pmi_pairs

@@ -2,9 +2,7 @@
 CPython bytes.decode acceptance as the external spec anchor, and named
 defect-class vectors (Kuhn stress-test categories)."""
 
-from pyspark.sql import functions as F
-
-from co_new_spark.queries.webtext6 import (_N_ASCII, _PARITY_EXTRA, _TAILS,
+from co_new_spark.queries.webtext6 import (_N_ASCII, _TAILS,
                                            _VALID_SPAN, _built, validate_utf8)
 
 

@@ -77,7 +77,7 @@ def test_merge_law():
 
 
 def test_kmv_mirror_merge_and_accuracy(spark):
-    from co_new_spark.queries.webtext8 import _KMV_K, _KMV_RANGE, g_kmv_vocab
+    from co_new_spark.queries.webtext8 import _KMV_K, g_kmv_vocab
 
     sets = _shingle_sets()
 
