@@ -165,11 +165,12 @@ def run() -> dict:
     # --- flagship: pages geocoded + cover-joined per second -----------------
     # Input is the STORED pages table (materialized to parquet untimed — the
     # north-rule input is an Iceberg table of pages, so the timed section is
-    # scan -> fused geocode UDF -> cover lookup kernel -> tiny agg, not the
-    # synthetic fixture's generation).  geoparse+project+encode fused in ONE
-    # Arrow crossing; the cover lookup is a second Arrow UDF (per-depth
-    # searchsorted, no join, zero shuffle of the fact table); the only
-    # shuffle is the final tiny per-municipality agg.
+    # scan -> fused geocode + cover lookup UDF -> tiny agg, not the synthetic
+    # fixture's generation).  geoparse+project+encode and the cover lookup
+    # (per-depth searchsorted, no join, zero shuffle of the fact table) run
+    # in ONE Arrow crossing; the cover is a local DataFrame, so its index is
+    # built once, not per query; the only shuffle is the final tiny
+    # per-municipality agg.
     cover = or_skip("flagship_geocode_cover_join", lambda: load_citycover(spark))
     n_geocoded = pages_per_sec = None
     if cover is not None:

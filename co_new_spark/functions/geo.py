@@ -1,9 +1,10 @@
-"""Geospatial Spark surface: Arrow-batched pandas UDFs + native Column helpers.
+"""Geospatial Spark surface: Arrow-batched UDFs + native Column helpers.
 
 Design rule (SURVEY.md §3.1): projection + morton + codec run inside a
-*single* pandas UDF per direction so each row crosses the Arrow boundary
-once.  Everything that can stay JVM-side (geo-URI parsing, hierarchy algebra,
-tile math) is a native Column expression, not a UDF.
+*single* UDF per direction so each row crosses the Arrow boundary once; the
+text geocode kernels are Arrow UDFs (``pa.Array`` in and out, no pandas).
+Everything that can stay JVM-side (geo-URI parsing, hierarchy algebra, tile
+math) is a native Column expression, not a UDF.
 
 Reference parity anchors:
 * encode semantics — /root/reference/src/assert/gridLib.sql:6-11
@@ -16,6 +17,8 @@ from functools import lru_cache
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -189,20 +192,17 @@ def cell_b_center(cell: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"x": cx, "y": cy})
 
 
-def _parse_latlon(text: pd.Series, *patterns: str):
-    """Text -> (lat, lon) float64 arrays, NaN where no pattern matches.
+def _parse_latlon(text: pa.Array, *patterns: str):
+    """Text -> (lat, lon) float64 arrays, NaN where no pattern matches or
+    the text is null.
 
     ``patterns`` are functions.text's named-group grammars (single source;
     RE2-safe constructs, so Java/RE2/Python engines agree — see text.py
     note), tried in order; a later one runs only when some rows missed.
     RE2 via pyarrow.compute (~4x pandas str.extract)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    arr = pa.Array.from_pandas(text.fillna("").astype(str), type=pa.string())
     lat = lon = None
     for pat in patterns:
-        g = pc.extract_regex(arr, pat)
+        g = pc.extract_regex(text, pat)
         if lat is None:
             lat, lon = pc.struct_field(g, "lat"), pc.struct_field(g, "lon")
         else:
@@ -214,17 +214,23 @@ def _parse_latlon(text: pd.Series, *patterns: str):
             pc.cast(lon, pa.float64()).to_numpy(zero_copy_only=False))
 
 
+def cells_from_text(text: pa.Array, rbits: int) -> np.ndarray:
+    """Geoparse (geo: URI first, then a plain decimal pair) + project +
+    Grid B encode: text -> cell longs at ``rbits``; -1 where no coordinates
+    or off-grid.  The numpy body of every fused text geocode kernel."""
+    lat, lon = _parse_latlon(text, tx.GEO_URI_RE_NAMED, tx.PLAIN_PAIR_RE_NAMED)
+    # rows without coordinates project as (0, 0) and are masked after:
+    # NaN inputs take a slow path through the TM transcendentals
+    ok = np.isfinite(lat) & np.isfinite(lon)
+    x, y = proj.forward(np.where(ok, lat, 0.0), np.where(ok, lon, 0.0))
+    return np.where(ok, cells.cell_b_from_xy(x, y, rbits), -1)
+
+
 @lru_cache(maxsize=None)
 def _encode_b_cell_from_text_udf(rbits: int):
-    @F.pandas_udf(LongType())
-    def enc(text: pd.Series) -> pd.Series:
-        lat, lon = _parse_latlon(text, tx.GEO_URI_RE_NAMED,
-                                 tx.PLAIN_PAIR_RE_NAMED)
-        # rows without coordinates project as (0, 0) and are masked after:
-        # NaN inputs take a slow path through the TM transcendentals
-        ok = np.isfinite(lat) & np.isfinite(lon)
-        x, y = proj.forward(np.where(ok, lat, 0.0), np.where(ok, lon, 0.0))
-        return pd.Series(np.where(ok, cells.cell_b_from_xy(x, y, rbits), -1))
+    @F.arrow_udf(LongType())
+    def enc(text: pa.Array) -> pa.Array:
+        return pa.array(cells_from_text(text, rbits))
 
     return single_eval(enc)
 
@@ -234,7 +240,8 @@ def encode_b_cell_from_text(text: Column, rbits: int) -> Column:
     fallback — same precedence as functions.text.parse_lat) + project +
     encode to a Grid B cell in ONE Arrow crossing; -1 where no coordinates
     or off-grid.  This is the flagship hot path: regex runs vectorized in
-    pyarrow's RE2 instead of four interpreted JVM regexp_extracts per row.
+    pyarrow's RE2 instead of four interpreted JVM regexp_extracts per row,
+    on the Arrow batch as it arrives (Arrow in and out, no pandas).
     """
     return _encode_b_cell_from_text_udf(rbits)(text)
 
@@ -304,8 +311,8 @@ def b32nvu_string(bits: pd.Series, nbits: pd.Series) -> pd.Series:
     return out
 
 
-@F.pandas_udf(StringType())
-def encode_a_from_uri(uri: pd.Series) -> pd.Series:
+@F.arrow_udf(StringType())
+def encode_a_from_uri(uri: pa.Array) -> pa.Array:
     """'geo:LAT,LON' -> 9-digit Grid A code in ONE Arrow crossing (A8 fused).
 
     The fully-fused fast path for the flagship pipeline: regex parse is also
@@ -314,6 +321,4 @@ def encode_a_from_uri(uri: pd.Series) -> pd.Series:
     """
     lat, lon = _parse_latlon(uri, tx.GEO_URI_RE_NAMED)
     codes = grids.osmcode_encode_a(lat, lon, 9)
-    out = pd.Series(codes, dtype="object")
-    out[(out == "") | ~np.isfinite(lat)] = None
-    return out
+    return pa.array(codes, pa.string(), mask=(codes == "") | ~np.isfinite(lat))

@@ -45,14 +45,13 @@ B16H_SUFFIX = {
     "J": (3, 0), "K": (3, 1), "N": (3, 2), "P": (3, 3),
     "S": (3, 4), "T": (3, 5), "Y": (3, 6), "Z": (3, 7),
 }
-_B16H_SUFFIX_CHARS = {
-    1: np.array(list("GQ"), dtype="<U1"),
-    2: np.array(list("HMRV"), dtype="<U1"),
-    3: np.array(list("JKNPSTYZ"), dtype="<U1"),
-}
+# the encode's view (extra_bits -> letter per value) and the decode's
+# (letter -> extra_bits, value), both read off B16H_SUFFIX
+_B16H_SUFFIX_CHARS = {nb: np.empty(1 << nb, dtype="<U1") for nb in (1, 2, 3)}
 _SFX_NBITS = np.zeros(256, dtype=np.int64)
 _SFX_VALUE = np.full(256, -1, dtype=np.int64)
 for _c, (_nb, _v) in B16H_SUFFIX.items():
+    _B16H_SUFFIX_CHARS[_nb][_v] = _c
     _SFX_NBITS[ord(_c)] = _nb
     _SFX_VALUE[ord(_c)] = _v
 

@@ -1,11 +1,15 @@
 """The cover-lookup kernel (operators.cover) against a brute-force prefix scan
 built on grid.cells.contains: random mixed-depth covers with border cells
-under two labels, overlay rows and empty covers; points shallower and deeper
-than the cover cells, plus the invalid cell -1."""
+under two labels, overlay rows and empty covers, each built from a list and
+from pandas (a local cover, whose index is kept); points shallower and
+deeper than the cover cells, plus the invalid cell -1.  Also: the index is
+built once per local cover and on every call otherwise, and the fused
+flagship kernel returns the rows of geocode then lookup."""
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -15,7 +19,10 @@ from co_new_spark.operators.cover import (
     cover_anti,
     cover_best_with_cell,
     cover_lookup_best,
+    flagship,
+    flagship_cells,
 )
+from co_new_spark.sources.pages import pages
 
 ROOT = 0xC        # every generated cell lies under this L0 cell
 PATH_BITS = 24    # cells at depths 4..28 are prefixes of 24-bit paths
@@ -54,18 +61,26 @@ def _brute(cover, p):
     return min(iso for iso, _ in hits), min((iso, c) for iso, c in hits if C.depth(c) == deepest)
 
 
-def _frames(spark, cover, points):
-    cov = spark.createDataFrame([(iso, kind, c, c & 63) for iso, kind, c in cover], COVER_SCHEMA)
+def _cover(spark, rows, build):
+    """The cover DataFrame built from a list or from pandas; a non-empty
+    pandas-built one is local."""
+    if build == "pandas":
+        rows = pd.DataFrame(rows, columns=["isolabel_ext", "kind", "cell", "depth"])
+    return spark.createDataFrame(rows, COVER_SCHEMA)
+
+
+def _frames(spark, cover, points, build="list"):
+    cov = _cover(spark, [(iso, kind, c, c & 63) for iso, kind, c in cover], build)
     pts = spark.createDataFrame(list(enumerate(points)), "pid long, cell long")
     return cov, pts
 
 
 @settings(max_examples=12, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(case=_case())
-def test_kernel_matches_brute_force(spark, case):
+@given(case=_case(), build=st.sampled_from(["list", "pandas"]))
+def test_kernel_matches_brute_force(spark, case, build):
     cover, points = case
-    cov, pts = _frames(spark, cover, points)
+    cov, pts = _frames(spark, cover, points, build)
     want = {pid: _brute(cover, p) for pid, p in enumerate(points)}
 
     got = {r.pid: r.isolabel_ext for r in
@@ -99,7 +114,48 @@ def test_kernel_empty_cover(spark):
     ((None, "cover", (ROOT << 6) | 4, 4), "isolabel_ext"),
 ])
 def test_kernel_rejects_invalid_cover(spark, row, column):
-    cov = spark.createDataFrame([row], COVER_SCHEMA)
+    """On every call, local (pandas-built) cover or not: a failed index
+    build is never kept."""
     pts = spark.createDataFrame([(0, _cell(5, 20))], "pid long, cell long")
-    with pytest.raises(ValueError, match=f"'{column}'"):
-        cover_lookup_best(pts, cov)
+    for build in ("list", "pandas"):
+        cov = _cover(spark, [row], build)
+        for _ in range(2):
+            with pytest.raises(ValueError, match=f"'{column}'"):
+                cover_lookup_best(pts, cov)
+
+
+def _job_ids(spark, group, fn):
+    """(fn(), the ids of the Spark jobs it started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("build", ["list", "pandas"])
+def test_cover_index_built_once_per_local_cover(spark, build):
+    """A pandas-built cover is local: its second lookup starts no Spark job
+    (no cover collect) and returns the same rows.  A list-built one is not,
+    and is collected on every call."""
+    cov, pts = _frames(spark, [("CO-A", "cover", _cell(5, 8)), ("CO-B", "cover", _cell(5, 12)),
+                               ("CO-C", "overlay", _cell(1 << 23, 6))],
+                        [_cell(5, 20), _cell(1 << 23, 20), -1], build)
+    assert cov.isLocal() == (build == "pandas")
+    calls = [_job_ids(spark, f"cover-index-{build}-{k}",
+                      lambda: cover_lookup_best(pts, cov, keep=["pid"], dedup=False))
+             for k in range(2)]
+    assert calls[0][1] and bool(calls[1][1]) == (build == "list")
+    assert calls[0][0].collect() == calls[1][0].collect() == [(0, "CO-A")]
+
+
+def test_flagship_is_geocode_then_lookup(spark, standin_cover):
+    """The one-crossing flagship kernel returns, row for row, what the
+    geocode UDF followed by the cover lookup UDF returns."""
+    pg = pages(spark, 1000)
+    two = cover_lookup_best(flagship_cells(pg), standin_cover, keep=["url", "cell"], dedup=False)
+    got = flagship(pg, standin_cover)
+    assert got.columns == two.columns
+    assert sorted(got.collect()) == sorted(two.collect()) != []

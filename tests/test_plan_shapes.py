@@ -24,7 +24,7 @@ def _optimized(df) -> str:
 
 
 def _lookup(spark, standin_cover):
-    """geocode -> filter -> cover lookup: the flagship's matched page rows."""
+    """geocode + cover lookup -> filter: the flagship's matched page rows."""
     return flagship(pages(spark, 1000), standin_cover)
 
 
@@ -34,23 +34,23 @@ def _per_label(spark, standin_cover):
 
 
 def test_cover_lookup_is_join_free(spark, standin_cover):
-    """The cover lookup is one Arrow kernel: no join of any kind, no
-    broadcast and no shuffle of the fact table."""
+    """Geocode and cover lookup are one Arrow kernel: no join of any kind,
+    no broadcast and no shuffle of the fact table."""
     plan = _plan(_lookup(spark, standin_cover))
     for node in ("BroadcastHashJoin", "SortMergeJoin", "BroadcastNestedLoopJoin",
                  "BroadcastExchange", "Exchange hashpartitioning"):
         assert node not in plan, node
-    assert plan.count("ArrowEvalPython") == 2
+    assert plan.count("ArrowEvalPython") == 1
 
 
 def test_flagship_has_single_shuffle(spark, standin_cover):
-    """geocode -> filter -> lookup -> filter -> agg: exactly ONE exchange
-    (the final agg), no join, and one Python crossing per UDF."""
+    """geocode + lookup -> filter -> agg: exactly ONE exchange (the final
+    agg), no join, and one Python crossing."""
     plan = _plan(_per_label(spark, standin_cover))
     for node in ("BroadcastHashJoin", "SortMergeJoin", "BroadcastNestedLoopJoin"):
         assert node not in plan, node
     assert plan.count("Exchange hashpartitioning") == 1
-    assert plan.count("ArrowEvalPython") == 2
+    assert plan.count("ArrowEvalPython") == 1
     assert "partial_count" in plan or "partial" in plan  # map-side combine
 
 

@@ -271,8 +271,9 @@ def test_seat_cells_match_known_seats(spark):
 
 def test_geoparse_grammar_parity_native_vs_fused(spark):
     """The native (Java regex) and fused (RE2) geoparse paths must agree,
-    including on the pinned [ \\t] pair separator — \\s engines disagree on
-    vertical tab / NBSP, so those must parse in NEITHER path."""
+    including on null text and on the pinned [ \\t] pair separator — \\s
+    engines disagree on vertical tab / NBSP, so those must parse in NEITHER
+    path."""
     from co_new_spark.functions import geo
     from co_new_spark.functions import text as txf
 
@@ -283,8 +284,9 @@ def test_geoparse_grammar_parity_native_vs_fused(spark):
         ("las 4.711111,\x0b-74.072222 no",),  # vertical tab: must NOT parse
         ("las 4.711111, -74.072222 no",),  # NBSP: must NOT parse
         ("sin coordenadas",),
+        (None,),                              # null text: no cell in either path
     ]
-    df = spark.createDataFrame(rows, ["text"])
+    df = spark.createDataFrame(rows, "text string")
     native = df.select(
         geo.encode_b_cell(txf.parse_lat(F.col("text")),
                           txf.parse_lon(F.col("text")), 12).alias("cell")).collect()
@@ -294,7 +296,7 @@ def test_geoparse_grammar_parity_native_vs_fused(spark):
     f = [r.cell for r in fused]
     assert n == f, (n, f)
     assert n[0] >= 0 and n[1] >= 0 and n[2] >= 0
-    assert n[3] == -1 and n[4] == -1 and n[5] == -1
+    assert n[3] == -1 and n[4] == -1 and n[5] == -1 and n[6] == -1
 
 
 def test_materialize_pages_roundtrip(spark, tmp_path):
