@@ -20,25 +20,10 @@ def entry(spark: SparkSession) -> DataFrame:
     co_new_spark.sources.pages) per FIXTURES.md §1; grid semantics per
     /root/reference/conf.yaml:21-26.
     """
-    from pyspark.sql import functions as F
-
-    from co_new_spark.functions import cells_sql, geo
-    from co_new_spark.functions import text as txf
+    from co_new_spark.queries.geo_pages import pages_l0_histogram
     from co_new_spark.sources.pages import stored_pages
 
-    pg = stored_pages(spark, 5_000)
-    parsed = pg.select(
-        "url", "lang",
-        txf.parse_lat(F.col("text")).alias("lat"),
-        txf.parse_lon(F.col("text")).alias("lon"),
-    ).filter(F.col("lat").isNotNull())
-    cells = parsed.withColumn("cell", geo.encode_b_cell(F.col("lat"), F.col("lon"), 12))
-    return (
-        cells.withColumn("l0", cells_sql.cell_l0_digit(F.col("cell")))
-        .groupBy("l0")
-        .agg(F.count("*").alias("n_pages"), F.countDistinct("url").alias("n_urls"))
-        .orderBy("l0")
-    )
+    return pages_l0_histogram(stored_pages(spark, 5_000)).orderBy("l0")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -22,7 +22,8 @@ from ..grid.codec import GEOHASH_ALPHABET
 from ..operators import pip
 from ..operators.knn import ring_cells_udf
 from ..operators.tiles import grid_b_global_ji
-from .geospatial import _EVENT_XY, _XENG, _YENG, _event_points
+from .geospatial import (
+    _EVENT_XY, _XENG, _YENG, _event_points, event_cell_counts, event_cells)
 from .sql_grid import (
     KING,
     b16h_code,
@@ -47,12 +48,8 @@ SIDE = grids.L0_SIDE
 # ---------------------------------------------------------------------------
 
 def g_parent_rollup(spark: SparkSession, sf: str) -> DataFrame:
-    pts = _event_points(spark, sf)
-    leaf = pts.withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), 8)) \
-              .filter(F.col("cell") >= 0)
-    leaf_agg = leaf.groupBy("cell").agg(F.count("*").alias("n"))
     return (
-        leaf_agg
+        event_cell_counts(spark, sf, 8)
         .withColumn("cell_l1", cells_sql.cell_ancestor_at(F.col("cell"), 8))
         .withColumn("cell_l0", cells_sql.cell_ancestor_at(F.col("cell"), 4))
         .groupBy("cell_l0", "cell_l1")
@@ -75,9 +72,7 @@ FROM leaf GROUP BY 1, 2
 # ---------------------------------------------------------------------------
 
 def g_children(spark: SparkSession, sf: str) -> DataFrame:
-    pts = _event_points(spark, sf)
-    par = pts.withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), 2)) \
-             .filter(F.col("cell") >= 0).select("cell").distinct()
+    par = event_cells(spark, sf, 2).select("cell").distinct()
     return par.select(
         F.col("cell").alias("parent"),
         F.explode(cells_sql.cell_children(F.col("cell"), 2)).alias("child"),
@@ -98,9 +93,7 @@ FROM par CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS o)
 # ---------------------------------------------------------------------------
 
 def g_neighbors(spark: SparkSession, sf: str) -> DataFrame:
-    pts = _event_points(spark, sf)
-    cells = pts.withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), 4)) \
-               .filter(F.col("cell") >= 0).select("cell").distinct()
+    cells = event_cells(spark, sf, 4).select("cell").distinct()
     return cells.select(
         "cell", F.explode(ring_cells_udf(1)(F.col("cell"))).alias("neighbor")
     ).filter(F.col("neighbor") != F.col("cell"))
@@ -126,9 +119,7 @@ _DX8 = SIDE / 4.0  # depth-8 cell side: 131072 m exactly (2^17)
 
 
 def g_cell_box(spark: SparkSession, sf: str) -> DataFrame:
-    pts = _event_points(spark, sf)
-    cells = pts.withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), 4)) \
-               .filter(F.col("cell") >= 0).select("cell").distinct()
+    cells = event_cells(spark, sf, 4).select("cell").distinct()
     boxed = cells.withColumn("box", geo.cell_b_box(F.col("cell")))
     return boxed.select(
         "cell",
@@ -475,9 +466,7 @@ WHERE (({_sql_crossings(_POLY)}) + ({_sql_crossings(_HOLE)})) % 2 = 1
 
 
 def g_cell_codec_b32(spark: SparkSession, sf: str) -> DataFrame:
-    pts = _event_points(spark, sf)
-    out = pts.withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), 6)) \
-             .filter(F.col("cell") >= 0)
+    out = event_cells(spark, sf, 6)
     bits = cells_sql.cell_bits(F.col("cell"))
     hi = F.shiftright(bits, 5).bitwiseAND(F.lit(31))
     lo = bits.bitwiseAND(F.lit(31))
@@ -508,10 +497,7 @@ _HILBERT_ORDER = 7
 
 
 def g_hilbert_index(spark: SparkSession, sf: str) -> DataFrame:
-    pts = _event_points(spark, sf)
-    cells = pts.withColumn(
-        "cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), _HILBERT_R)
-    ).filter(F.col("cell") >= 0)
+    cells = event_cells(spark, sf, _HILBERT_R)
     gy, gx = grid_b_global_ji(F.col("cell"), 4 + _HILBERT_R)
     out = cells_sql.with_hilbert_index(cells, gy, gx, _HILBERT_ORDER)
     return out.select("event_id", "cell", "hd")
@@ -575,9 +561,7 @@ _KNN_K = 5
 def g_knn_ring_events(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.knn import knn_ring
 
-    pts = _event_points(spark, sf)
-    cells = pts.withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), _KNN_R)) \
-               .filter(F.col("cell") >= 0)
+    cells = event_cells(spark, sf, _KNN_R)
     q = cells.filter(F.col("event_id") < _KNN_NQ).select(
         F.col("event_id").alias("qid"), "x", "y", "cell")
     c = cells.select(F.col("event_id").alias("cid"), "x", "y", "cell")
@@ -616,9 +600,7 @@ def g_cover_dilate(spark: SparkSession, sf: str) -> DataFrame:
     search-region expansion that pairs with operators.compact (erosion-side).
     Output rows carry ``is_core`` so the added shell is visible; the grid
     edge is honest (off-grid lattice slots are NOT emitted)."""
-    pts = _event_points(spark, sf)
-    core = pts.withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), 4)) \
-              .filter(F.col("cell") >= 0).select("cell").distinct()
+    core = event_cells(spark, sf, 4).select("cell").distinct()
     dil = core.select(
         F.explode(ring_cells_udf(1)(F.col("cell"))).alias("cell")).distinct()
     return (dil.join(core.withColumn("is_core", F.lit(True)), "cell", "left")
@@ -655,9 +637,7 @@ FROM dil d LEFT JOIN (SELECT DISTINCT cell FROM cc) o ON d.cell = o.cell
 
 
 def g_cover_erode(spark: SparkSession, sf: str) -> DataFrame:
-    pts = _event_points(spark, sf)
-    core = (pts.withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), 4))
-               .filter(F.col("cell") >= 0).select("cell").distinct()
+    core = (event_cells(spark, sf, 4).select("cell").distinct()
                .localCheckpoint(eager=True))  # two consumers: votes + join back
     votes = (core.select(F.explode(ring_cells_udf(1)(F.col("cell"))).alias("nb"))
                  .groupBy("nb").agg(F.count("*").alias("n")))

@@ -32,7 +32,7 @@ from ..functions import cells_sql, geo
 from ..grid import grids
 from ..operators.cover import cover_anti, cover_best_with_cell, cover_lookup_best
 from ..sources.reference_data import load_citycover, load_synonym, load_synonym_ref
-from .geospatial import _EVENT_XY, _XENG, _YENG
+from .geospatial import _EVENT_XY, _XENG, _YENG, _event_points, event_cells
 from .sql_grid import (
     b16h_code,
     b16h_suffix,
@@ -140,15 +140,6 @@ synref AS (
 """
 
 
-def _points_cells(spark: SparkSession, sf: str) -> DataFrame:
-    from .geospatial import _event_points
-
-    pts = _event_points(spark, sf)
-    return pts.withColumn(
-        "cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), _PT_R)
-    ).filter(F.col("cell") >= 0)
-
-
 def _default_syn(spark: SparkSession) -> DataFrame:
     syn = load_synonym(spark).filter(F.col("default_abbrev"))
     ref = load_synonym_ref(spark).select("abbrevref_id",
@@ -165,7 +156,7 @@ def _default_syn(spark: SparkSession) -> DataFrame:
 def g_cover_lookup_events(spark: SparkSession, sf: str) -> DataFrame:
     """Per-municipality point counts via the per-depth cover lookup kernel,
     value-checked against the SQL restatement of the same prefix algebra."""
-    cells = _points_cells(spark, sf)
+    cells = event_cells(spark, sf, _PT_R)
     hit = cover_lookup_best(cells, load_citycover(spark), keep=["event_id"],
                             dedup=False)
     return hit.groupBy("isolabel_ext").agg(
@@ -197,7 +188,7 @@ def _best_cover(cells: DataFrame, spark: SparkSession,
 
 
 def g_shortcode_sci(spark: SparkSession, sf: str) -> DataFrame:
-    best = _best_cover(_points_cells(spark, sf), spark)
+    best = _best_cover(event_cells(spark, sf, _PT_R), spark)
     cdepth = F.col("cover_cell").bitwiseAND(F.lit(63))
     nsfx = (F.lit(_PT_DEPTH) - cdepth).cast("int")
     sfx_bits = cells_sql.cell_low_bits(F.col("cell"), nsfx)
@@ -264,7 +255,7 @@ def g_shortcode_log(spark: SparkSession, sf: str) -> DataFrame:
     Emits the aligned cell so the oracle (and the round-trip pytest) pin the
     exact cell the code decodes back to, plus the abbreviation provenance
     (synonym_ref.csv) the scientific form doesn't exercise."""
-    best = _best_cover(_points_cells(spark, sf), spark)
+    best = _best_cover(event_cells(spark, sf, _PT_R), spark)
     best = best.join(F.broadcast(_cover_index_dim(spark)),
                      ["isolabel_ext", "cover_cell"])
     cdepth = F.col("cover_cell").bitwiseAND(F.lit(63))
@@ -430,7 +421,7 @@ def g_cover_anti(spark: SparkSession, sf: str) -> DataFrame:
     per L0 — uncovered-territory detection.  Zero fact-table shuffle
     (operators.cover.cover_anti keeps the unmatched rows of the same
     per-depth lookup kernel)."""
-    cells = _points_cells(spark, sf)
+    cells = event_cells(spark, sf, _PT_R)
     un = cover_anti(cells, load_citycover(spark), keep=["event_id", "cell"])
     return un.groupBy(cells_sql.cell_l0_digit(F.col("cell")).alias("l0")).agg(
         F.count("*").alias("n_uncovered"), F.min("event_id").alias("min_ev"))
@@ -589,8 +580,6 @@ _Z_S = SIDE / _Z_NS           # 16384.0 m — exact power of two
 
 def g_zonal_stats(spark: SparkSession, sf: str) -> DataFrame:
     """Zonal statistics of the event-value raster per jurisdiction."""
-    from .geospatial import _event_points
-
     pts = _event_points(spark, sf, extra=("value",))
     g = pts.select(
         F.floor((F.col("x") - X0) / _Z_S).cast("long").alias("gi"),
@@ -750,7 +739,7 @@ def g_areal_interp(spark: SparkSession, sf: str) -> DataFrame:
     """Per-cover-cell allocated point mass: (isolabel_ext, cell, depth, w,
     n_points, alloc_micro) for every cover cell of every municipality that
     received >= 1 point; alloc_micro = (n_points * w * 1e6) div W."""
-    cells = _points_cells(spark, sf)
+    cells = event_cells(spark, sf, _PT_R)
     hit = cover_lookup_best(cells, load_citycover(spark), keep=["event_id"],
                             dedup=False)
     totals = hit.groupBy("isolabel_ext").agg(F.count("*").alias("n_points"))

@@ -23,8 +23,8 @@ from ..grid import grids
 from ..operators import tiles
 from ..sources.reference_data import REF_DIR
 from ..sources.tables import load
-from .geospatial import _EVENT_XY, _event_points
-from .sql_grid import b16h_code, cells_cte, dbl, lattice_cell
+from .geospatial import _EVENT_XY, event_cells
+from .sql_grid import _HEX, b16h_code, cells_cte, dbl, lattice_cell
 from .sql_grid import morton_ref as _sql_ref
 
 # deterministic global lat/lon per event (exact in float64 on both engines)
@@ -85,11 +85,7 @@ _TILE_DEPTH = 8
 
 def g_cell_to_tile(spark: SparkSession, sf: str) -> DataFrame:
     """A26: Grid B cell -> containing raster tile, native prefix/arith only."""
-    from ..functions import geo
-
-    pts = _event_points(spark, sf)
-    cells = pts.withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), 4)) \
-               .filter(F.col("cell") >= 0).select("cell").distinct()
+    cells = event_cells(spark, sf, 4).select("cell").distinct()
     return cells.select(
         "cell", tiles.cell_to_tile(F.col("cell"), _TILE_DEPTH, _TILE_Z).alias("tile"))
 
@@ -165,11 +161,9 @@ def g_partitioned_scan(spark: SparkSession, sf: str) -> DataFrame:
     return the filtered contents.  The oracle recomputes from events
     directly, so the round-trip (write -> prune -> read) is value-checked.
     """
-    from ..functions import cells_sql, geo
+    from ..functions import cells_sql
 
-    pts = _event_points(spark, sf)
-    agg = (pts.withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), 4))
-           .filter(F.col("cell") >= 0)
+    agg = (event_cells(spark, sf, 4)
            .groupBy("cell").agg(F.count("*").alias("n"),
                                 F.min("event_id").alias("min_ev"))
            .withColumn("l0", cells_sql.cell_l0_digit(F.col("cell"))))
@@ -234,7 +228,7 @@ def g_decode_geojson(spark: SparkSession, sf: str) -> DataFrame:
     feats = raw.select(F.explode("features").alias("f"))
     rows = feats.select(
         F.col("f.properties.code").alias("code"),
-        (F.expr("instr('0123456789abcdef', f.properties.code) - 1")
+        (F.expr(f"instr('{_HEX}', f.properties.code) - 1")
          .cast("long") * 64 + 4).alias("cell"),
         F.explode(F.slice(F.col("f.geometry.coordinates")[0], 1, 4))
          .alias("coord"),

@@ -49,11 +49,11 @@ def _fixture(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def g_pages_l0_histogram(spark: SparkSession, sf: str) -> DataFrame:
-    """Fixture pages -> live geoparse -> live geocode (depth-16 cell) ->
-    per-L0 page/url counts; off-grid geocodes land in the l0 = -1 bucket."""
-    pg = _fixture(spark)
-    parsed = pg.select(
+def pages_l0_histogram(pages: DataFrame) -> DataFrame:
+    """(l0, n_pages, n_urls): ``pages`` (url, text) -> live geoparse -> live
+    geocode (depth-16 cell) -> per-L0 page/url counts; off-grid geocodes
+    land in the l0 = -1 bucket."""
+    parsed = pages.select(
         "url",
         txf.parse_lat(F.col("text")).alias("lat"),
         txf.parse_lon(F.col("text")).alias("lon"),
@@ -64,6 +64,11 @@ def g_pages_l0_histogram(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("l0")
         .agg(F.count("*").alias("n_pages"), F.countDistinct("url").alias("n_urls"))
     )
+
+
+def g_pages_l0_histogram(spark: SparkSession, sf: str) -> DataFrame:
+    """The L0 histogram of the fixture pages."""
+    return pages_l0_histogram(_fixture(spark))
 
 
 # The l0 digit needs no refinement bits: it is the fragment's digit at r = 0,

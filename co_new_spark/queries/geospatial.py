@@ -47,18 +47,28 @@ def _event_points(spark: SparkSession, sf: str, extra: tuple = ()) -> DataFrame:
     return ev.select("event_id", *extra, x, y)
 
 
+def event_cells(spark: SparkSession, sf: str, r: int, extra: tuple = (),
+                max_event_id: int | None = None) -> DataFrame:
+    """(event_id, *extra, x, y, cell): the event points that lie on the grid,
+    each with its depth-(4 + r) Grid B cell — THE Spark twin of
+    ``cells_cte(_EVENT_XY, r) ... WHERE cell >= 0``.  The encode is the
+    single-eval pandas UDF (one ArrowEvalPython, below its ``cell >= 0``
+    filter); ``max_event_id`` keeps only event_id < it, filtered below the
+    encode."""
+    pts = _event_points(spark, sf, extra)
+    if max_event_id is not None:
+        pts = pts.filter(F.col("event_id") < max_event_id)
+    return (pts.withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), r))
+               .filter(F.col("cell") >= 0))
+
+
 def event_cell_counts(spark: SparkSession, sf: str, r: int,
                       max_event_id: int | None = None) -> DataFrame:
     """(cell, n): events per occupied depth-(4 + r) Grid B cell, the raster
     that density, graph and hot-spot entries start from (its SQL twin is
-    ``cells_cte -> cell >= 0 -> count per cell``).  ``max_event_id`` keeps
-    only event_id < it, filtered below the encode UDF."""
-    pts = _event_points(spark, sf)
-    if max_event_id is not None:
-        pts = pts.filter(F.col("event_id") < max_event_id)
-    return (pts.withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), r))
-               .filter(F.col("cell") >= 0)
-               .groupBy("cell").agg(F.count("*").alias("n")))
+    ``cells_cte -> cell >= 0 -> count per cell``)."""
+    return (event_cells(spark, sf, r, max_event_id=max_event_id)
+            .groupBy("cell").agg(F.count("*").alias("n")))
 
 
 def g_cell_assign_parity(spark: SparkSession, sf: str) -> DataFrame:
@@ -285,12 +295,8 @@ def g_pyramid_rollup(spark: SparkSession, sf: str) -> DataFrame:
     depth-12 leaves once, then each coarser level re-aggregates the previous
     level with a 2-bit shift — never re-scanning the points (design rule #5;
     the map-tile pyramid build).  Output (depth, cell, n)."""
-    pts = _event_points(spark, sf)
     leaf_d = max(_PYRAMID_DEPTHS)
-    leaf = (pts.withColumn("cell",
-                           geo.xy_to_cell_b(F.col("x"), F.col("y"), leaf_d - 4))
-               .filter(F.col("cell") >= 0)
-               .groupBy("cell").agg(F.count("*").alias("n")))
+    leaf = event_cell_counts(spark, sf, leaf_d - 4)
     levels = [leaf.select(F.lit(leaf_d).alias("depth"), "cell",
                           F.col("n").cast("long").alias("n"))]
     cur = leaf
@@ -331,10 +337,7 @@ def g_region_centroid(spark: SparkSession, sf: str) -> DataFrame:
     snapped to its depth-12 cell via the engine encode kernel — the
     'aggregate geometry then re-index' shape of POI conflation / label
     placement."""
-    pts = _event_points(spark, sf)
-    enc = pts.withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), 4)) \
-             .filter(F.col("cell") >= 0)
-    agg = enc.groupBy("cell").agg(
+    agg = event_cells(spark, sf, 4).groupBy("cell").agg(
         F.count("*").alias("n"),
         F.sum(F.col("x").cast("long")).alias("sx"),
         F.sum(F.col("y").cast("long")).alias("sy"))

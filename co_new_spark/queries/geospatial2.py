@@ -31,7 +31,8 @@ from pyspark.sql import functions as F
 from ..functions import geo
 from ..grid import grids
 from ..operators.knn import ring_cells_d2_udf, ring_cells_udf
-from .geospatial import _EVENT_XY, _XENG, _YENG, _event_points, event_cell_counts
+from .geospatial import (
+    _EVENT_XY, _XENG, _YENG, _event_points, event_cell_counts, event_cells)
 from .sql_grid import KING, cells_cte, lattice_cell
 
 # ---------------------------------------------------------------------------
@@ -52,10 +53,7 @@ def g_distance_join(spark: SparkSession, sf: str) -> DataFrame:
     dist2 is exact: coordinates are integer-valued doubles < 2^22, so the
     squared distance is an integer < 2^53 — bit-identical on both engines.
     """
-    pts = (_event_points(spark, sf)
-           .filter(F.col("event_id") < _DJ_N)
-           .withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), _DJ_RBITS))
-           .filter(F.col("cell") >= 0))
+    pts = event_cells(spark, sf, _DJ_RBITS, max_event_id=_DJ_N)
     a = pts.select(F.col("event_id").alias("id_a"), F.col("x").alias("xa"),
                    F.col("y").alias("ya"), "cell")
     b = (pts.select(F.col("event_id").alias("id_b"), F.col("x").alias("xb"),
@@ -90,11 +88,9 @@ def g_od_matrix(spark: SparkSession, sf: str) -> DataFrame:
     (previous cell -> current cell) transition, count trips + distinct users
     per directed cell pair.  Grid-invalid points are dropped BEFORE
     sequencing (both engines agree on the resulting per-user order)."""
-    ev = _event_points(spark, sf, extra=("user_id", "ts"))
-    seq = (ev.withColumn("cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), _OD_RBITS))
-             .filter(F.col("cell") >= 0)
-             .withColumn("prev", F.lag("cell").over(
-                 Window.partitionBy("user_id").orderBy("ts", "event_id")))
+    ev = event_cells(spark, sf, _OD_RBITS, extra=("user_id", "ts"))
+    seq = (ev.withColumn("prev", F.lag("cell").over(
+               Window.partitionBy("user_id").orderBy("ts", "event_id")))
              .filter(F.col("prev").isNotNull()))
     return (seq.groupBy(F.col("prev").alias("from_cell"),
                         F.col("cell").alias("to_cell"))

@@ -21,7 +21,7 @@ synthesize step stands in for reading a binary column off the fact table.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -35,42 +35,53 @@ from ..sources.tables import load
 _WAV_MOD = 2001
 
 
+def _per_doc(spark: SparkSession, sf: str,
+             features: Callable[[int], tuple], schema: str) -> DataFrame:
+    """(doc_id, *features(doc_id)) per document, ordered by doc_id.
+    ``schema`` is the DDL of the feature columns.  Per-doc codec work is the
+    dominant cost and embarrassingly parallel, so the compact id rows are
+    spread across slots before the one mapInPandas."""
+    from .training import _spread
+
+    schema = f"doc_id long, {schema}"
+    columns = [c.split()[0] for c in schema.split(",")]
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = [(did, *features(did)) for did in map(int, pdf["doc_id"])]
+            yield pd.DataFrame(rows, columns=columns)
+
+    docs = _spread(load(spark, sf, "documents").select("doc_id"))
+    return docs.mapInPandas(batches, schema).orderBy("doc_id")
+
+
 def _wav_params(doc_id: int) -> tuple[int, int, int]:
     return (1 + doc_id % 2,            # n_channels
             8000 + 1000 * (doc_id % 3),  # sample_rate
             64 + doc_id % 64)          # n_frames
 
 
+def _wav(did: int) -> dict:
+    """The doc's synthesized PCM through a REAL WAV encode -> decode; every
+    feature is computed from the DECODED bytes."""
+    nch, rate, nf = _wav_params(did)
+    i = np.arange(nch * nf, dtype=np.int64)
+    flat = ((did * 31 + i * 7) % _WAV_MOD - 1000).astype(np.int16)
+    return media.decode_wav(media.encode_wav(flat, rate, nch))
+
+
+def _wav_features(did: int) -> tuple:
+    m = _wav(did)
+    s = m["samples"].astype(np.int64)
+    return (m["n_channels"], m["sample_rate"], m["n_frames"],
+            m["n_frames"] * 1_000_000 // m["sample_rate"], int((s * s).sum()))
+
+
 def t_wav_decode(spark: SparkSession, sf: str) -> DataFrame:
     """Per-doc audio features from a REAL WAV decode of synthesized PCM."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                nch, rate, nf = _wav_params(did)
-                i = np.arange(nch * nf, dtype=np.int64)
-                flat = ((did * 31 + i * 7) % _WAV_MOD - 1000).astype(np.int16)
-                payload = media.encode_wav(flat, rate, nch)
-                m = media.decode_wav(payload)  # features from DECODED bytes
-                s = m["samples"].astype(np.int64)
-                rows.append((did, m["n_channels"], m["sample_rate"],
-                             m["n_frames"],
-                             m["n_frames"] * 1_000_000 // m["sample_rate"],
-                             int((s * s).sum())))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "n_channels", "sample_rate", "n_frames",
-                "duration_us", "sumsq"])
-
-    from .training import _spread
-
-    # per-doc codec work is the dominant cost and embarrassingly
-    # parallel: spread the compact id rows across slots first
-    docs = _spread(load(spark, sf, "documents").select("doc_id"))
-    schema = ("doc_id long, n_channels long, sample_rate long, "
-              "n_frames long, duration_us long, sumsq long")
-    return docs.mapInPandas(batches, schema).orderBy("doc_id")
+    return _per_doc(spark, sf, _wav_features,
+                    "n_channels long, sample_rate long, n_frames long, "
+                    "duration_us long, sumsq long")
 
 
 SQL_WAV_DECODE = f"""
@@ -95,38 +106,24 @@ FROM x GROUP BY doc_id, nch, rate, n_frames ORDER BY doc_id
 """
 
 
+def _bmp_features(did: int) -> tuple:
+    w, h = 4 + did % 5, 3 + did % 4
+    ys, xs = np.mgrid[0:h, 0:w]
+    r = (did * 7 + ys * 13 + xs * 3) % 256
+    px = np.stack([r, (r + 11) % 256, (r + 5) % 256], axis=-1).astype(np.uint8)
+    dec = media.decode_bmp(media.encode_bmp(px))
+    return (dec.shape[1], dec.shape[0], dec.shape[2],
+            int(dec.astype(np.int64).sum()), int(dec[0, 0, 0]))
+
+
 def t_bmp_decode(spark: SparkSession, sf: str) -> DataFrame:
     """Per-doc image features from a REAL BMP decode of synthesized pixels.
 
     corner_red = decoded[0, 0, red]: catches BGR<->RGB channel mixups AND
     bottom-up/top-down row-flip bugs (the pixel value depends on y)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 4 + did % 5, 3 + did % 4
-                ys, xs = np.mgrid[0:h, 0:w]
-                r = (did * 7 + ys * 13 + xs * 3) % 256
-                px = np.stack([r, (r + 11) % 256, (r + 5) % 256],
-                              axis=-1).astype(np.uint8)
-                dec = media.decode_bmp(media.encode_bmp(px))
-                rows.append((did, dec.shape[1], dec.shape[0], dec.shape[2],
-                             int(dec.astype(np.int64).sum()),
-                             int(dec[0, 0, 0])))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "n_channels", "pix_sum",
-                "corner_red"])
-
-    from .training import _spread
-
-    # per-doc codec work is the dominant cost and embarrassingly
-    # parallel: spread the compact id rows across slots first
-    docs = _spread(load(spark, sf, "documents").select("doc_id"))
-    schema = ("doc_id long, width long, height long, n_channels long, "
-              "pix_sum long, corner_red long")
-    return docs.mapInPandas(batches, schema).orderBy("doc_id")
+    return _per_doc(spark, sf, _bmp_features,
+                    "width long, height long, n_channels long, "
+                    "pix_sum long, corner_red long")
 
 
 SQL_BMP_DECODE = """
@@ -163,37 +160,22 @@ FROM px GROUP BY doc_id, w, h ORDER BY doc_id
 _WIN_F = 32  # frames per analysis window
 
 
+def _energy_features(did: int) -> tuple:
+    m = _wav(did)
+    s = m["samples"].astype(np.int64)
+    nw = m["n_frames"] // _WIN_F
+    w = s[: nw * _WIN_F * m["n_channels"]].reshape(nw, -1)
+    en = (w * w).sum(axis=1)
+    k = int(en.argmax())  # numpy argmax: first max — ties->first
+    return nw, int(en.sum()), int(en[k]), k
+
+
 def t_audio_energy(spark: SparkSession, sf: str) -> DataFrame:
     """Per-doc windowed energy from a REAL WAV decode: (doc_id, n_windows,
     total_sq, max_win_sq, argmax_win)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                nch, rate, nf = _wav_params(did)
-                i = np.arange(nch * nf, dtype=np.int64)
-                flat = ((did * 31 + i * 7) % _WAV_MOD - 1000).astype(np.int16)
-                m = media.decode_wav(media.encode_wav(flat, rate, nch))
-                s = m["samples"].astype(np.int64)
-                nw = m["n_frames"] // _WIN_F
-                w = s[: nw * _WIN_F * m["n_channels"]].reshape(nw, -1)
-                en = (w * w).sum(axis=1)
-                k = int(en.argmax())  # numpy argmax: first max — ties->first
-                rows.append((did, nw, int(en.sum()), int(en[k]), k))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "n_windows", "total_sq", "max_win_sq",
-                "argmax_win"])
-
-    from .training import _spread
-
-    # per-doc codec work is the dominant cost and embarrassingly
-    # parallel: spread the compact id rows across slots first
-    docs = _spread(load(spark, sf, "documents").select("doc_id"))
-    schema = ("doc_id long, n_windows long, total_sq long, "
-              "max_win_sq long, argmax_win long")
-    return docs.mapInPandas(batches, schema).orderBy("doc_id")
+    return _per_doc(spark, sf, _energy_features,
+                    "n_windows long, total_sq long, max_win_sq long, "
+                    "argmax_win long")
 
 
 SQL_AUDIO_ENERGY = f"""
@@ -246,35 +228,29 @@ def _png_params(did: int) -> tuple[int, int, int, int]:
             did % 5)                       # scanline filter type
 
 
+def _png(did: int) -> np.ndarray:
+    """The doc's synthesized pixels through a REAL PNG encode -> decode
+    (2-D when the layout is gray)."""
+    w, h, ch, ft = _png_params(did)
+    ys, xs, cs = np.mgrid[0:h, 0:w, 0:ch]
+    px = ((did * 11 + ys * 17 + xs * 5 + cs * 29) % 256).astype(np.uint8)
+    if ch == 1:
+        px = px[:, :, 0]
+    return media.decode_png(media.encode_png(px, filter_type=ft))
+
+
+def _png_features(did: int) -> tuple:
+    dec = _png(did)
+    nch = 1 if dec.ndim == 2 else dec.shape[2]
+    corner = dec[0, 0] if dec.ndim == 2 else dec[0, 0, 0]
+    return (dec.shape[1], dec.shape[0], nch, _png_params(did)[3],
+            int(dec.astype(np.int64).sum()), int(corner))
+
+
 def t_png_decode(spark: SparkSession, sf: str) -> DataFrame:
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h, ch, ft = _png_params(did)
-                ys, xs, cs = np.mgrid[0:h, 0:w, 0:ch]
-                px = ((did * 11 + ys * 17 + xs * 5 + cs * 29) % 256
-                      ).astype(np.uint8)
-                if ch == 1:
-                    px = px[:, :, 0]
-                dec = media.decode_png(media.encode_png(px, filter_type=ft))
-                nch = 1 if dec.ndim == 2 else dec.shape[2]
-                corner = dec[0, 0] if dec.ndim == 2 else dec[0, 0, 0]
-                rows.append((did, dec.shape[1], dec.shape[0], nch, ft,
-                             int(dec.astype(np.int64).sum()), int(corner)))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "n_channels", "filter_type",
-                "pix_sum", "corner"])
-
-    from .training import _spread
-
-    # per-doc codec work is the dominant cost and embarrassingly
-    # parallel: spread the compact id rows across slots first
-    docs = _spread(load(spark, sf, "documents").select("doc_id"))
-    schema = ("doc_id long, width long, height long, n_channels long, "
-              "filter_type long, pix_sum long, corner long")
-    return docs.mapInPandas(batches, schema).orderBy("doc_id")
+    return _per_doc(spark, sf, _png_features,
+                    "width long, height long, n_channels long, "
+                    "filter_type long, pix_sum long, corner long")
 
 
 SQL_PNG_DECODE = """
@@ -311,36 +287,19 @@ FROM x GROUP BY doc_id, w, h, ch, ft ORDER BY doc_id
 # ---------------------------------------------------------------------------
 
 
+def _thumbnail_features(did: int) -> tuple:
+    dec = _png(did)
+    if dec.ndim == 2:
+        dec = dec[:, :, None]
+    h2, w2 = dec.shape[0] // 2, dec.shape[1] // 2
+    crop = dec[: h2 * 2, : w2 * 2].astype(np.int64)
+    thumb = crop.reshape(h2, 2, w2, 2, -1).sum(axis=(1, 3)) // 4
+    return w2, h2, int(thumb.sum()), int(thumb[0, 0, 0])
+
+
 def t_thumbnail(spark: SparkSession, sf: str) -> DataFrame:
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h, ch, ft = _png_params(did)
-                ys, xs, cs = np.mgrid[0:h, 0:w, 0:ch]
-                px = ((did * 11 + ys * 17 + xs * 5 + cs * 29) % 256
-                      ).astype(np.uint8)
-                src = px[:, :, 0] if ch == 1 else px
-                dec = media.decode_png(media.encode_png(src, filter_type=ft))
-                if dec.ndim == 2:
-                    dec = dec[:, :, None]
-                h2, w2 = dec.shape[0] // 2, dec.shape[1] // 2
-                crop = dec[: h2 * 2, : w2 * 2].astype(np.int64)
-                thumb = crop.reshape(h2, 2, w2, 2, -1).sum(axis=(1, 3)) // 4
-                rows.append((did, w2, h2,
-                             int(thumb.sum()), int(thumb[0, 0, 0])))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "th_w", "th_h", "thumb_sum", "thumb_corner"])
-
-    from .training import _spread
-
-    # per-doc codec work is the dominant cost and embarrassingly
-    # parallel: spread the compact id rows across slots first
-    docs = _spread(load(spark, sf, "documents").select("doc_id"))
-    schema = ("doc_id long, th_w long, th_h long, thumb_sum long, "
-              "thumb_corner long")
-    return docs.mapInPandas(batches, schema).orderBy("doc_id")
+    return _per_doc(spark, sf, _thumbnail_features,
+                    "th_w long, th_h long, thumb_sum long, thumb_corner long")
 
 
 SQL_THUMBNAIL = """
@@ -393,34 +352,22 @@ def _gif_params(did: int) -> tuple[int, int, int]:
     return 4 + did % 5, 3 + did % 4, (4, 8, 16)[did % 3]  # w, h, ncolors
 
 
+def _gif_features(did: int) -> tuple:
+    w, h, ncol = _gif_params(did)
+    ys, xs = np.mgrid[0:h, 0:w]
+    idx = ((did * 7 + ys * 13 + xs * 3) % ncol).astype(np.uint8)
+    ci, cc = np.mgrid[0:ncol, 0:3]
+    pal = ((ci * 37 + cc * 11 + did) % 256).astype(np.uint8)
+    dec, dpal = media.decode_gif(media.encode_gif(idx, pal))
+    rgb = dpal[dec].astype(np.int64)
+    return (dec.shape[1], dec.shape[0], len(dpal),
+            int(dec.astype(np.int64).sum()), int(rgb.sum()), int(dec[0, 0]))
+
+
 def t_gif_decode(spark: SparkSession, sf: str) -> DataFrame:
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h, ncol = _gif_params(did)
-                ys, xs = np.mgrid[0:h, 0:w]
-                idx = ((did * 7 + ys * 13 + xs * 3) % ncol).astype(np.uint8)
-                ci, cc = np.mgrid[0:ncol, 0:3]
-                pal = ((ci * 37 + cc * 11 + did) % 256).astype(np.uint8)
-                dec, dpal = media.decode_gif(media.encode_gif(idx, pal))
-                rgb = dpal[dec].astype(np.int64)
-                rows.append((did, dec.shape[1], dec.shape[0], len(dpal),
-                             int(dec.astype(np.int64).sum()),
-                             int(rgb.sum()), int(dec[0, 0])))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "n_colors", "idx_sum",
-                "rgb_sum", "corner_idx"])
-
-    from .training import _spread
-
-    # per-doc codec work is the dominant cost and embarrassingly
-    # parallel: spread the compact id rows across slots first
-    docs = _spread(load(spark, sf, "documents").select("doc_id"))
-    schema = ("doc_id long, width long, height long, n_colors long, "
-              "idx_sum long, rgb_sum long, corner_idx long")
-    return docs.mapInPandas(batches, schema).orderBy("doc_id")
+    return _per_doc(spark, sf, _gif_features,
+                    "width long, height long, n_colors long, idx_sum long, "
+                    "rgb_sum long, corner_idx long")
 
 
 SQL_GIF_DECODE = """
@@ -465,33 +412,20 @@ def _jpeg_params(did: int) -> tuple[int, int, int]:
     return (8 * (1 + did % 4), 8 * (1 + did % 3), 1 + did % 31)  # w, h, q
 
 
+def _jpeg_features(did: int) -> tuple:
+    w, h, q = _jpeg_params(did)
+    bys, bxs = np.mgrid[0:h // 8, 0:w // 8]
+    vals = ((did * 31 + bxs * 7 + bys * 13) % 256)
+    img = np.kron(vals, np.ones((8, 8))).astype(np.uint8)
+    dec = media.decode_jpeg(media.encode_jpeg(img, q=q))
+    return (dec.shape[1], dec.shape[0], q, (h // 8) * (w // 8),
+            int(dec.astype(np.int64).sum()), int(dec[0, 0]))
+
+
 def t_jpeg_decode(spark: SparkSession, sf: str) -> DataFrame:
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h, q = _jpeg_params(did)
-                bys, bxs = np.mgrid[0:h // 8, 0:w // 8]
-                vals = ((did * 31 + bxs * 7 + bys * 13) % 256)
-                img = np.kron(vals, np.ones((8, 8))).astype(np.uint8)
-                dec = media.decode_jpeg(media.encode_jpeg(img, q=q))
-                rows.append((did, dec.shape[1], dec.shape[0], q,
-                             (h // 8) * (w // 8),
-                             int(dec.astype(np.int64).sum()),
-                             int(dec[0, 0])))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "q", "n_blocks", "pix_sum",
-                "corner"])
-
-    from .training import _spread
-
-    # per-doc codec work is the dominant cost and embarrassingly
-    # parallel: spread the compact id rows across slots first
-    docs = _spread(load(spark, sf, "documents").select("doc_id"))
-    schema = ("doc_id long, width long, height long, q long, "
-              "n_blocks long, pix_sum long, corner long")
-    return docs.mapInPandas(batches, schema).orderBy("doc_id")
+    return _per_doc(spark, sf, _jpeg_features,
+                    "width long, height long, q long, n_blocks long, "
+                    "pix_sum long, corner long")
 
 
 SQL_JPEG_DECODE = """

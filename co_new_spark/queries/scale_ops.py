@@ -66,9 +66,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions import geo
 from ..sources.tables import load
-from .geospatial import _EVENT_XY, _XENG, _YENG, _event_points
+from .geospatial import _EVENT_XY, _XENG, _YENG, event_cells
 from .sql_grid import cells_cte, morton_ref
 
 # ---------------------------------------------------------------------------
@@ -401,10 +400,7 @@ def g_hilbert_ranges(spark: SparkSession, sf: str) -> DataFrame:
     ranges = spark.createDataFrame(
         _hilbert_bbox_ranges(), "range_lo long, range_hi long, n_cells long")
 
-    pts = _event_points(spark, sf)
-    cells = (pts.withColumn(
-                 "cell", geo.xy_to_cell_b(F.col("x"), F.col("y"), _HR_R))
-                .filter(F.col("cell") >= 0))
+    cells = event_cells(spark, sf, _HR_R)
     gy, gx = grid_b_global_ji(F.col("cell"), 4 + _HR_R)
     ev = (cells_sql.with_hilbert_index(cells, gy, gx, _HR_ORDER)
           .select("hd"))
@@ -464,10 +460,7 @@ _SP_RBITS = 2   # refinement below L0 (cell side = L0_SIDE / 2)
 
 
 def g_staypoints(spark: SparkSession, sf: str) -> DataFrame:
-    ev = _event_points(spark, sf, extra=("user_id", "ts"))
-    seq = (ev.withColumn("cell",
-                         geo.xy_to_cell_b(F.col("x"), F.col("y"), _SP_RBITS))
-             .filter(F.col("cell") >= 0))
+    seq = event_cells(spark, sf, _SP_RBITS, extra=("user_id", "ts"))
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("cell").over(w)
     flagged = seq.withColumn(

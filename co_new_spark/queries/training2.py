@@ -18,6 +18,7 @@ from ..functions import text as tx
 from ..operators import media
 from ..sources.pages import stored_pages as pages
 from ..sources.tables import load
+from .training import _cosine
 
 # ---------------------------------------------------------------------------
 # train_quality_score — heuristic doc quality (length/punct/alpha), oracle'd
@@ -91,18 +92,6 @@ NEARDUP_SIM = 0.35
 # correctness run stays O(NEARDUP_CAP^2) regardless of sf (LSH/IVF are the
 # scale paths — see t_knn_lsh / t_knn_ivf).
 NEARDUP_CAP = 300
-
-
-def _cosine(a, b):
-    ad = F.transform(a, lambda x: x.cast("double"))
-    bd = F.transform(b, lambda x: x.cast("double"))
-    dot = F.aggregate(F.zip_with(ad, bd, lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(F.transform(ad, lambda x: x * x),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    nb = F.sqrt(F.aggregate(F.transform(bd, lambda x: x * x),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    return dot / (na * nb)
 
 
 def t_embed_neardup(spark: SparkSession, sf: str) -> DataFrame:
@@ -427,7 +416,6 @@ def _mm_knn(emb: DataFrame) -> DataFrame:
 
     from ..operators.ann import deterministic_centroids, ivf_assign_udf
     from .mat import materialize
-    from .training import _cosine
 
     cents = deterministic_centroids(emb, 8)
     c = materialize(

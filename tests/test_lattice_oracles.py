@@ -15,7 +15,7 @@ import pytest
 from conftest import SF_DIR
 
 from co_new_spark.queries import oracle_sqls
-from tools.check_oracle import TABLES, rowset, rowset_sha
+from tools.check_oracle import connect, rowset, rowset_sha
 
 _T = {"B": "BIGINT", "D": "DOUBLE", "L": "BOOLEAN", "V": "VARCHAR"}
 
@@ -74,14 +74,10 @@ PINS = {
 
 @functools.lru_cache(maxsize=None)
 def _con(scale: str) -> duckdb.DuckDBPyConnection:
-    sf_dir = os.path.join(os.path.dirname(SF_DIR), scale)
-    con = duckdb.connect()
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        if not os.path.exists(path):
-            pytest.skip(f"missing {path}")
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
-    return con
+    try:
+        return connect(os.path.join(os.path.dirname(SF_DIR), scale))
+    except FileNotFoundError as e:
+        pytest.skip(str(e))
 
 
 @pytest.mark.parametrize("scale", ["sf0.001", "sf0.01"])

@@ -51,6 +51,18 @@ def rowset_sha(rs) -> str:
     return hashlib.sha256(repr(rs).encode()).hexdigest()[:16]
 
 
+def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per ``TABLES`` parquet of
+    ``sf_dir``.  A missing parquet raises FileNotFoundError naming it."""
+    con = duckdb.connect()
+    for t in TABLES:
+        path = f"{sf_dir}/{t}.parquet"
+        if not os.path.exists(path):
+            raise FileNotFoundError(f"missing {path}")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con
+
+
 def select(names, filters) -> list[str]:
     """The entries to run, sorted.  A filter equal to a registry name selects
     exactly that entry; any other filter selects every name containing it
@@ -74,9 +86,7 @@ def main() -> int:
     # when the sweep is piped to a file — keep the log line-clean
     os.environ.setdefault("SPARK_GRAFT_NO_PROGRESS", "1")
     spark = get_spark(app="oracle-check", master="local[8]", shuffle_partitions=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    con = connect(sf_dir)
 
     qs = entrymod.queries()
     osql = entrymod.oracle_sql()
