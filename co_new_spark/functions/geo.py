@@ -1,10 +1,11 @@
 """Geospatial Spark surface: Arrow-batched UDFs + native Column helpers.
 
 Design rule (SURVEY.md §3.1): projection + morton + codec run inside a
-*single* UDF per direction so each row crosses the Arrow boundary once; the
-text geocode kernels are Arrow UDFs (``pa.Array`` in and out, no pandas).
-Everything that can stay JVM-side (geo-URI parsing, hierarchy algebra, tile
-math) is a native Column expression, not a UDF.
+*single* UDF per direction so each row crosses the Arrow boundary once, with
+no pandas: a numpy kernel crosses through ``kernel_udf`` (the one null
+contract), the text geocode kernels are Arrow UDFs over RE2.  Everything
+that can stay JVM-side (geo-URI parsing, hierarchy algebra, tile math) is a
+native Column expression, not a UDF.
 
 Reference parity anchors:
 * encode semantics — /root/reference/src/assert/gridLib.sql:6-11
@@ -13,23 +14,19 @@ Reference parity anchors:
 
 from __future__ import annotations
 
+import json
 from functools import lru_cache
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
 from ..grid import cells, grids, proj
+from ..grid.codec import b16h_encode, b32nvu_encode
 from . import text as tx
 
 # ---------------------------------------------------------------------------
@@ -50,11 +47,42 @@ def geo_uri_lon(uri: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# A2/A4/A6 composed: encode UDF factories (one Arrow crossing per direction)
+# A2/A4/A6 composed: one Arrow crossing per direction, one null contract
 # ---------------------------------------------------------------------------
 
-def _to_np(s: pd.Series) -> np.ndarray:
-    return s.to_numpy(dtype=np.float64, na_value=np.nan)
+def _np(a: pa.Array) -> np.ndarray:
+    """An Arrow argument as the numpy array its kernel reads: integers as
+    int64 with -1 for null, floats as float64 with NaN for null, strings as
+    an object array with '' for null."""
+    if pa.types.is_integer(a.type):
+        return pc.fill_null(a, -1).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+    if pa.types.is_floating(a.type):
+        return pc.cast(a, pa.float64()).to_numpy(zero_copy_only=False)  # null -> NaN
+    return pc.fill_null(a, "").to_numpy(zero_copy_only=False)
+
+
+def _arrow(v, t: pa.DataType) -> pa.Array:
+    """A kernel result as an Arrow array of type ``t``: a tuple fills the
+    fields of a struct in order.  NaN and None become null, as in a pandas
+    UDF (an invalid box must sum as missing, not as NaN)."""
+    if isinstance(v, tuple):
+        return pa.StructArray.from_arrays(
+            [_arrow(f, t.field(i).type) for i, f in enumerate(v)], fields=list(t))
+    return pa.array(v, t, from_pandas=True)
+
+
+def kernel_udf(kernel, out_type):
+    """``kernel`` (numpy arrays in; an array, a list of rows, or a tuple of
+    those for a struct out) as a scalar Arrow UDF returning ``out_type``.
+    Arguments cross by ``_np`` and the result by ``_arrow``.  The UDF keeps
+    the kernel's name, which plans show, and its docstring."""
+    t = to_arrow_type(out_type)
+
+    def udf(*cols: pa.Array) -> pa.Array:
+        return _arrow(kernel(*map(_np, cols)), t)
+
+    udf.__name__, udf.__doc__ = kernel.__name__, kernel.__doc__
+    return F.arrow_udf(udf, out_type)
 
 
 def single_eval(udf):
@@ -71,14 +99,11 @@ def single_eval(udf):
 
 @lru_cache(maxsize=None)
 def _encode_a_udf(ndigits: int):
-    @F.pandas_udf(StringType())
-    def enc(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        codes = grids.osmcode_encode_a(_to_np(lat), _to_np(lon), ndigits)
-        out = pd.Series(codes, dtype="object")
-        out[out == ""] = None
-        return out
+    def enc(lat, lon):
+        codes = grids.osmcode_encode_a(lat, lon, ndigits)
+        return np.where(codes == "", None, codes)
 
-    return enc
+    return kernel_udf(enc, StringType())
 
 
 def encode_a(lat: Column, lon: Column, ndigits: int = 9) -> Column:
@@ -88,12 +113,10 @@ def encode_a(lat: Column, lon: Column, ndigits: int = 9) -> Column:
 
 @lru_cache(maxsize=None)
 def _encode_b_cell_udf(rbits: int):
-    @F.pandas_udf(LongType())
-    def enc(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        x, y = proj.forward(_to_np(lat), _to_np(lon))
-        return pd.Series(cells.cell_b_from_xy(x, y, rbits))
+    def enc(lat, lon):
+        return cells.cell_b_from_xy(*proj.forward(lat, lon), rbits)
 
-    return single_eval(enc)
+    return single_eval(kernel_udf(enc, LongType()))
 
 
 def encode_b_cell(lat: Column, lon: Column, rbits: int) -> Column:
@@ -103,11 +126,10 @@ def encode_b_cell(lat: Column, lon: Column, rbits: int) -> Column:
 
 @lru_cache(maxsize=None)
 def _xy_cell_udf(rbits: int):
-    @F.pandas_udf(LongType())
-    def enc(x: pd.Series, y: pd.Series) -> pd.Series:
-        return pd.Series(cells.cell_b_from_xy(_to_np(x), _to_np(y), rbits))
+    def enc(x, y):
+        return cells.cell_b_from_xy(x, y, rbits)
 
-    return single_eval(enc)
+    return single_eval(kernel_udf(enc, LongType()))
 
 
 def xy_to_cell_b(x: Column, y: Column, rbits: int) -> Column:
@@ -117,79 +139,61 @@ def xy_to_cell_b(x: Column, y: Column, rbits: int) -> Column:
 
 _LATLON = StructType([StructField("lat", DoubleType()), StructField("lon", DoubleType())])
 _XY = StructType([StructField("x", DoubleType()), StructField("y", DoubleType())])
-_XYC = StructType([StructField("x", DoubleType()), StructField("y", DoubleType()),
-                   StructField("cell", LongType())])
+_XYC = StructType([*_XY.fields, StructField("cell", LongType())])
 _BOX = StructType([StructField(n, DoubleType()) for n in ("xmin", "ymin", "xmax", "ymax")])
 
 
 @lru_cache(maxsize=None)
 def _latlon_to_xy_cell_udf(rbits: int):
-    @F.pandas_udf(_XYC)
-    def enc(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
-        x, y = proj.forward(_to_np(lat), _to_np(lon))
-        return pd.DataFrame({"x": x, "y": y,
-                             "cell": cells.cell_b_from_xy(x, y, rbits)})
+    def enc(lat, lon):
+        x, y = proj.forward(lat, lon)
+        return x, y, cells.cell_b_from_xy(x, y, rbits)
 
-    return single_eval(enc)
+    return single_eval(kernel_udf(enc, _XYC))
 
 
 def latlon_to_xy_cell(lat: Column, lon: Column, rbits: int) -> Column:
     """(lat, lon) -> struct(x, y, cell): projection + encode in ONE crossing.
 
     Use this instead of chaining latlon_to_xy |> xy_to_cell_b — each chained
-    pandas UDF in a stage holds its own Python worker per task, and a filter
+    Arrow UDF in a stage holds its own Python worker per task, and a filter
     on the chain's output re-evaluates the whole chain.
     """
     return _latlon_to_xy_cell_udf(rbits)(lat, lon)
 
 
-@F.pandas_udf(_XY)
-def latlon_to_xy(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
+def latlon_to_xy(lat, lon):
     """Forward EPSG:9377 projection (A2)."""
-    x, y = proj.forward(_to_np(lat), _to_np(lon))
-    return pd.DataFrame({"x": x, "y": y})
+    return proj.forward(lat, lon)
 
 
-@F.pandas_udf(_LATLON)
-def xy_to_latlon(x: pd.Series, y: pd.Series) -> pd.DataFrame:
+def xy_to_latlon(x, y):
     """Inverse EPSG:9377 projection (A3)."""
-    la, lo = proj.inverse(_to_np(x), _to_np(y))
-    return pd.DataFrame({"lat": la, "lon": lo})
+    return proj.inverse(x, y)
 
 
-@F.pandas_udf(_LATLON)
-def decode_a_center(code: pd.Series) -> pd.DataFrame:
+def decode_a_center(code):
     """Grid A base32nvu code -> cell-center (lat, lon) (osmcode_decode, A10)."""
-    la, lo = grids.osmcode_decode_a(code.fillna("").to_numpy(dtype=object))
-    return pd.DataFrame({"lat": la, "lon": lo})
+    return grids.osmcode_decode_a(code)
 
 
-@F.pandas_udf(StringType())
-def cell_b_code(cell: pd.Series) -> pd.Series:
+def cell_b_code(cell):
     """Canonical Grid B cell long -> base16h string; NULL for -1."""
-    c = cell.to_numpy(dtype=np.int64, na_value=-1)
-    out = pd.Series(cells.cell_b_to_code(c), dtype="object")
-    out[c < 0] = None
-    return out
+    return np.where(cell < 0, None, cells.cell_b_to_code(cell))
 
 
-@F.pandas_udf(LongType())
-def cell_b_from_code(code: pd.Series) -> pd.Series:
+def cell_b_from_code(code):
     """base16h string -> canonical Grid B cell long; -1 invalid."""
-    return pd.Series(cells.cell_b_from_code(code.fillna("").to_numpy(dtype=object)))
+    return cells.cell_b_from_code(code)
 
 
-@F.pandas_udf(_BOX)
-def cell_b_box(cell: pd.Series) -> pd.DataFrame:
-    """Grid B cell long -> EPSG:9377 bounding box (A5/A16)."""
-    x0, y0, x1, y1 = cells.cell_b_box(cell.to_numpy(dtype=np.int64, na_value=-1))
-    return pd.DataFrame({"xmin": x0, "ymin": y0, "xmax": x1, "ymax": y1})
+def cell_b_box(cell):
+    """Grid B cell long -> EPSG:9377 bounding box (A5/A16); NULL for -1."""
+    return cells.cell_b_box(cell)
 
 
-@F.pandas_udf(_XY)
-def cell_b_center(cell: pd.Series) -> pd.DataFrame:
-    cx, cy = cells.cell_b_center(cell.to_numpy(dtype=np.int64, na_value=-1))
-    return pd.DataFrame({"x": cx, "y": cy})
+def cell_b_center(cell):
+    return cells.cell_b_center(cell)
 
 
 def _parse_latlon(text: pa.Array, *patterns: str):
@@ -198,16 +202,18 @@ def _parse_latlon(text: pa.Array, *patterns: str):
 
     ``patterns`` are functions.text's named-group grammars (single source;
     RE2-safe constructs, so Java/RE2/Python engines agree — see text.py
-    note), tried in order; a later one runs only when some rows missed.
-    RE2 via pyarrow.compute (~4x pandas str.extract)."""
+    note), tried in order; a later one runs only over the rows every
+    earlier one missed.  RE2 via pyarrow.compute (~4x pandas str.extract)."""
     lat = lon = None
     for pat in patterns:
-        g = pc.extract_regex(text, pat)
         if lat is None:
+            g = pc.extract_regex(text, pat)
             lat, lon = pc.struct_field(g, "lat"), pc.struct_field(g, "lon")
         else:
-            lat = pc.coalesce(lat, pc.struct_field(g, "lat"))
-            lon = pc.coalesce(lon, pc.struct_field(g, "lon"))
+            miss = pc.is_null(lat)
+            g = pc.extract_regex(pc.filter(text, miss), pat)
+            lat = pc.replace_with_mask(lat, miss, pc.struct_field(g, "lat"))
+            lon = pc.replace_with_mask(lon, miss, pc.struct_field(g, "lon"))
         if not lat.null_count:
             break
     return (pc.cast(lat, pa.float64()).to_numpy(zero_copy_only=False),
@@ -246,8 +252,7 @@ def encode_b_cell_from_text(text: Column, rbits: int) -> Column:
     return _encode_b_cell_from_text_udf(rbits)(text)
 
 
-@F.pandas_udf(StringType())
-def cell_b_geojson(cell: pd.Series) -> pd.Series:
+def cell_b_geojson(cell):
     """Grid B cell -> GeoJSON Feature string (WGS84 ring + base16h code).
 
     The visualization sink of the reference's decode path
@@ -255,60 +260,54 @@ def cell_b_geojson(cell: pd.Series) -> pd.Series:
     gridLib.sql:15-16 + README.md:109-114; the grid256*.geojson files are
     exactly such products).  Deterministic 7-decimal formatting.
     """
-    import json as _json
+    x0, y0, x1, y1 = cells.cell_b_box(cell)
+    codes = cells.cell_b_to_code(cell)
 
-    c = cell.to_numpy(dtype=np.int64, na_value=-1)
-    x0, y0, x1, y1 = cells.cell_b_box(c)
-    codes = cells.cell_b_to_code(c)
-    out = []
-    for k in range(len(c)):
-        if c[k] < 0 or not np.isfinite(x0[k]):
-            out.append(None)
-            continue
-        xs = np.array([x0[k], x1[k], x1[k], x0[k], x0[k]])
-        ys = np.array([y0[k], y0[k], y1[k], y1[k], y0[k]])
-        la, lo = proj.inverse(xs, ys)
+    def feature(k):
+        la, lo = proj.inverse(np.array([x0[k], x1[k], x1[k], x0[k], x0[k]]),
+                              np.array([y0[k], y0[k], y1[k], y1[k], y0[k]]))
         ring = [[round(float(o), 7), round(float(a), 7)] for o, a in zip(lo, la)]
-        out.append(_json.dumps({
+        return json.dumps({
             "type": "Feature",
             "properties": {"code": str(codes[k])},
             "geometry": {"type": "Polygon", "coordinates": [ring]},
-        }, separators=(",", ":")))
-    return pd.Series(out, dtype="object")
+        }, separators=(",", ":"))
+
+    return [feature(k) if np.isfinite(x0[k]) else None for k in range(len(cell))]
 
 
-@F.pandas_udf(StringType())
-def b16h_string(bits: pd.Series, nbits: pd.Series) -> pd.Series:
+def b16h_string(bits, nbits):
     """Generic (bits, nbits) -> base16h string (suffix-letter grammar §1.5).
 
     Used for shortcode suffixes (A23): the trailing bits below a jurisdiction's
-    cover-cell prefix re-encoded standalone.  NULL where nbits < 0.
+    cover-cell prefix re-encoded standalone.  NULL where bits or nbits < 0.
     """
-    from ..grid.codec import b16h_encode
-
-    b = bits.to_numpy(dtype=np.uint64, na_value=0)
-    nb = nbits.to_numpy(dtype=np.int64, na_value=-1)
-    out = pd.Series(b16h_encode(b, np.maximum(nb, 0)), dtype="object")
-    out[nb < 0] = None
-    return out
+    bad = (bits < 0) | (nbits < 0)
+    return np.where(bad, None, b16h_encode(np.where(bad, 0, bits), np.where(bad, 0, nbits)))
 
 
-@F.pandas_udf(StringType())
-def b32nvu_string(bits: pd.Series, nbits: pd.Series) -> pd.Series:
+def b32nvu_string(bits, nbits):
     """Generic (bits, nbits) -> base32nvu string (logistic codes, A23).
 
     Grammar per /root/reference/conf.yaml:33 (``log_base: 32nvu``): 5 bits
     per character, MSB first — so ``nbits`` must be a multiple of 5; NULL
-    where it is not (or negative), never a silently truncated code.
+    where it is not (or where bits or nbits is negative), never a silently
+    truncated code.
     """
-    from ..grid.codec import b32nvu_encode
+    bad = (bits < 0) | (nbits < 0) | (nbits % 5 != 0)
+    return np.where(bad, None, b32nvu_encode(np.where(bad, 0, bits), np.where(bad, 0, nbits)))
 
-    b = bits.to_numpy(dtype=np.uint64, na_value=0)
-    nb = nbits.to_numpy(dtype=np.int64, na_value=-1)
-    bad = (nb < 0) | (nb % 5 != 0)
-    out = pd.Series(b32nvu_encode(b, np.where(bad, 0, nb)), dtype="object")
-    out[bad] = None
-    return out
+
+latlon_to_xy = kernel_udf(latlon_to_xy, _XY)
+xy_to_latlon = kernel_udf(xy_to_latlon, _LATLON)
+decode_a_center = kernel_udf(decode_a_center, _LATLON)
+cell_b_code = kernel_udf(cell_b_code, StringType())
+cell_b_from_code = kernel_udf(cell_b_from_code, LongType())
+cell_b_box = kernel_udf(cell_b_box, _BOX)
+cell_b_center = kernel_udf(cell_b_center, _XY)
+cell_b_geojson = kernel_udf(cell_b_geojson, StringType())
+b16h_string = kernel_udf(b16h_string, StringType())
+b32nvu_string = kernel_udf(b32nvu_string, StringType())
 
 
 @F.arrow_udf(StringType())

@@ -161,9 +161,11 @@ def neighbors_b(cell, ring: int = 1) -> np.ndarray:
 
 
 def cell_b_box(cell) -> tuple[np.ndarray, ...]:
-    """Grid B cell -> EPSG:9377 (xmin, ymin, xmax, ymax)."""
+    """Grid B cell -> EPSG:9377 (xmin, ymin, xmax, ymax); NaN for an invalid
+    (negative) cell."""
+    cell = np.asarray(cell, dtype=np.int64)
     bits, nb = unpack(cell)
-    return grids.grid_b_decode_box(bits, nb)
+    return grids.grid_b_decode_box(bits, np.where(cell < 0, -1, nb))
 
 
 def cell_b_center(cell) -> tuple[np.ndarray, np.ndarray]:

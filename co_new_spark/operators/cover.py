@@ -53,10 +53,6 @@ _HIT = StructType([StructField("cell", LongType()),
                    StructField("isolabel_ext", StringType())])
 
 
-def _cells(c: pa.Array) -> np.ndarray:
-    return pc.fill_null(c, -1).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-
-
 class CoverIndex:
     """``cover`` (overlay rows dropped) prepared for lookups: ``labels``, the
     distinct isolabels plus a trailing null for "no cover cell contains the
@@ -71,14 +67,13 @@ class CoverIndex:
     def __init__(self, cover: DataFrame):
         if "kind" in cover.columns:
             cover = cover.filter(F.col("kind") == "cover")
-        pdf = cover.select("cell", "isolabel_ext").toPandas()
-        cell = pdf["cell"].to_numpy(dtype=np.int64, na_value=-1)
+        tbl = cover.select("cell", "isolabel_ext").toArrow()
+        cell = geo._np(tbl.column("cell"))
         if ((cell < 0) | (cells.depth(cell) > cells.MAXB)).any():
             raise ValueError(f"cover column 'cell' must hold cells >= 0 of depth <= {cells.MAXB}")
-        if pdf["isolabel_ext"].isna().any():
+        if tbl.column("isolabel_ext").null_count:
             raise ValueError("cover column 'isolabel_ext' must be non-null")
-        names, rank = np.unique(pdf["isolabel_ext"].to_numpy(dtype=object),
-                                return_inverse=True)
+        names, rank = np.unique(geo._np(tbl.column("isolabel_ext")), return_inverse=True)
         order = np.lexsort((rank, cell))          # min rank first within a cell
         cell, first = np.unique(cell[order], return_index=True)
         rank = rank[order][first]
@@ -102,10 +97,10 @@ class CoverIndex:
             return best, hit_cell
 
         def min_label(c: pa.Array) -> pa.Array:
-            return pc.take(labels, lookup(_cells(c))[0])
+            return pc.take(labels, lookup(geo._np(c))[0])
 
         def deepest_hit(c: pa.Array) -> pa.Array:
-            best, hit_cell = lookup(_cells(c), deepest=True)
+            best, hit_cell = lookup(geo._np(c), deepest=True)
             return pa.StructArray.from_arrays([pc.take(labels, best), pa.array(hit_cell)],
                                               names=_BEST.names)
 

@@ -9,10 +9,9 @@ shoelace area per cell (numpy, polygon captured in the UDF closure).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
+from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
+from ..functions import geo
 from ..grid import cells as ncells
 from ..grid import geometry
 
@@ -20,42 +19,30 @@ from ..grid import geometry
 def clip_area_udf(ring: np.ndarray):
     frozen = np.asarray(ring, dtype=np.float64).copy()
 
-    @F.pandas_udf(DoubleType())
-    def clip_area(cell: pd.Series) -> pd.Series:
-        c = cell.to_numpy(dtype=np.int64, na_value=-1)
-        x0, y0, x1, y1 = ncells.cell_b_box(c)
-        boxes = np.stack([x0, y0, x1, y1], axis=1)
-        areas = np.full(len(c), np.nan)
-        ok = c >= 0
+    def clip_area(cell):
+        boxes = np.stack(ncells.cell_b_box(cell), axis=1)
+        areas = np.full(len(cell), np.nan)
+        ok = cell >= 0
         areas[ok] = geometry.clip_area_to_rects(frozen, boxes[ok])
-        return pd.Series(areas)
+        return areas
 
-    return clip_area
+    return geo.kernel_udf(clip_area, DoubleType())
 
 
 def clip_vertices_udf(ring: np.ndarray):
-    """pandas UDF: cell -> the clipped OPEN ring as array<struct<vx, vy>>
+    """Arrow UDF: cell -> the clipped OPEN ring as array<struct<vx, vy>>
     (empty array = no overlap).  The oracle-split companion of
     clip_area_udf: the S–H kernel's raw float64 vertices get materialized,
     and BOTH engines re-derive the shoelace area from those bytes in the
     same left-fold op order (queries/geo_algebra.g_coverage_clip)."""
-    from pyspark.sql.types import ArrayType, StructField, StructType
-
     frozen = np.asarray(ring, dtype=np.float64).copy()
     schema = ArrayType(StructType([StructField("vx", DoubleType()),
                                    StructField("vy", DoubleType())]))
 
-    @F.pandas_udf(schema)
-    def clip_vertices(cell: pd.Series) -> pd.Series:
-        c = cell.to_numpy(dtype=np.int64, na_value=-1)
-        x0, y0, x1, y1 = ncells.cell_b_box(c)
-        out = []
-        for k in range(len(c)):
-            if c[k] < 0 or not np.isfinite(x0[k]):
-                out.append([])
-                continue
-            poly = geometry.clip_to_rect(frozen, x0[k], y0[k], x1[k], y1[k])
-            out.append([(float(vx), float(vy)) for vx, vy in poly])
-        return pd.Series(out, dtype="object")
+    def clip_vertices(cell):
+        x0, y0, x1, y1 = ncells.cell_b_box(cell)
+        return [[(float(vx), float(vy))
+                 for vx, vy in geometry.clip_to_rect(frozen, x0[k], y0[k], x1[k], y1[k])]
+                if np.isfinite(x0[k]) else [] for k in range(len(cell))]
 
-    return clip_vertices
+    return geo.kernel_udf(clip_vertices, schema)

@@ -15,34 +15,23 @@ matches fall back to a wider ring (second pass over only those queries).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import ArrayType, IntegerType, LongType, StructField, StructType
 
+from ..functions import geo
 from ..grid import cells as ncells
 
 
-def _ring_udf(ring: int):
-    @F.pandas_udf(ArrayType(LongType()))
-    def ring_cells(cell: pd.Series) -> pd.Series:
-        c = cell.to_numpy(dtype=np.int64, na_value=-1)
-        nb = ncells.neighbors_b(c, ring=ring)
-        out = []
-        for me, row in zip(c, nb):
-            cs = [int(v) for v in row if v >= 0]
-            if me >= 0:
-                cs.append(int(me))
-            out.append(cs)
-        return pd.Series(out)
-
-    return ring_cells
-
-
 def ring_cells_udf(ring: int):
-    """Public surface for the ring-expansion UDF (cell -> array<cell> incl. self)."""
-    return _ring_udf(ring)
+    """The ring-expansion UDF: cell -> array<cell> of its grid-valid ring
+    neighbors, then itself."""
+    def ring_cells(cell):
+        rows = np.concatenate([ncells.neighbors_b(cell, ring=ring), cell[:, None]], axis=1)
+        return [row[row >= 0] for row in rows]
+
+    return geo.kernel_udf(ring_cells, ArrayType(LongType()))
 
 
 def ring_cells_d2_udf(ring: int):
@@ -51,25 +40,16 @@ def ring_cells_d2_udf(ring: int):
     d2 = dy² + dx² in lattice units — derived from neighbors_b's fixed
     (dy, dx) column order, so it stays correct at grid borders where
     off-grid columns are dropped."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    offs = [(dy, dx) for dy in range(-ring, ring + 1)
-            for dx in range(-ring, ring + 1) if not (dy == 0 and dx == 0)]
-    d2s = [dy * dy + dx * dx for dy, dx in offs]
+    d2s = [dy * dy + dx * dx for dy in range(-ring, ring + 1)
+           for dx in range(-ring, ring + 1) if dy or dx]
     out_t = ArrayType(StructType([StructField("cell", LongType()),
                                   StructField("d2", IntegerType())]))
 
-    @F.pandas_udf(out_t)
-    def ring_cells_d2(cell: pd.Series) -> pd.Series:
-        c = cell.to_numpy(dtype=np.int64, na_value=-1)
-        nb = ncells.neighbors_b(c, ring=ring)
-        out = []
-        for row in nb:
-            out.append([{"cell": int(v), "d2": d2s[k]}
-                        for k, v in enumerate(row) if v >= 0])
-        return pd.Series(out)
+    def ring_cells_d2(cell):
+        return [[(int(v), d2s[k]) for k, v in enumerate(row) if v >= 0]
+                for row in ncells.neighbors_b(cell, ring=ring)]
 
-    return ring_cells_d2
+    return geo.kernel_udf(ring_cells_d2, out_t)
 
 
 def knn_ring(queries: DataFrame, candidates: DataFrame, k: int = 5,
@@ -99,7 +79,7 @@ def knn_ring(queries: DataFrame, candidates: DataFrame, k: int = 5,
 
 def _knn_pass(queries: DataFrame, candidates: DataFrame, k: int,
               ring: int, exclude_self: bool) -> DataFrame:
-    q = queries.withColumn("__ring", F.explode(_ring_udf(ring)(F.col("cell")))) \
+    q = queries.withColumn("__ring", F.explode(ring_cells_udf(ring)(F.col("cell")))) \
                .select(F.col("qid"), F.col("x").alias("qx"), F.col("y").alias("qy"),
                        F.col("__ring").alias("cell"))
     c = candidates.select("cid", F.col("x").alias("cx"), F.col("y").alias("cy"), "cell")

@@ -19,10 +19,11 @@ arithmetic shape `x < (xj-xi)*(y-yi)/(yj-yi) + xi` so a SQL restatement
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
+
+from ..functions import geo
 
 
 def point_in_rings(x: np.ndarray, y: np.ndarray, rings: list[np.ndarray]) -> np.ndarray:
@@ -55,18 +56,13 @@ def rings_bbox(rings: list[np.ndarray]) -> tuple[float, float, float, float]:
 
 
 def pip_udf(rings: list[np.ndarray]):
-    """pandas UDF (x, y) -> bool for a fixed broadcast polygon."""
+    """Arrow UDF (x, y) -> bool for a fixed broadcast polygon."""
     frozen = [np.asarray(r, dtype=np.float64).copy() for r in rings]
 
-    @F.pandas_udf(BooleanType())
-    def inside(x: pd.Series, y: pd.Series) -> pd.Series:
-        return pd.Series(point_in_rings(
-            x.to_numpy(dtype=np.float64, na_value=np.nan),
-            y.to_numpy(dtype=np.float64, na_value=np.nan),
-            frozen,
-        ))
+    def inside(x, y):
+        return point_in_rings(x, y, frozen)
 
-    return inside
+    return geo.kernel_udf(inside, BooleanType())
 
 
 def pip_filter(points: DataFrame, rings: list[np.ndarray],

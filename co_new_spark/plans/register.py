@@ -3,9 +3,8 @@
 gridLib.sql:6-11); this module exposes the engine kernels under the same
 names for ``spark.sql`` users.
 
-UDF registrations wrap the SAME Arrow-batched pandas UDFs as the Column API
-(no separate row-at-a-time path), so SQL and DataFrame queries hit identical
-kernels and identical performance.
+UDF registrations wrap the SAME Arrow UDFs as the Column API (no separate
+row-at-a-time path), so SQL and DataFrame queries hit identical kernels.
 """
 
 from __future__ import annotations

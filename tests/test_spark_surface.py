@@ -273,20 +273,24 @@ def test_geoparse_grammar_parity_native_vs_fused(spark):
     """The native (Java regex) and fused (RE2) geoparse paths must agree,
     including on null text and on the pinned [ \\t] pair separator — \\s
     engines disagree on vertical tab / NBSP, so those must parse in NEITHER
-    path."""
+    path.  Every parsed row has its own coordinates and plain-pair rows sit
+    between geo: rows, so the fused path's fallback (run only over the rows
+    the geo: pattern missed) must put each parse back in its own row."""
     from co_new_spark.functions import geo
     from co_new_spark.functions import text as txf
 
     rows = [
         ("geo:4.711111,-74.072222 x",),       # geo URI
-        ("las 4.711111, -74.072222 aqui",),   # space separator
-        ("las 4.711111,\t-74.072222 aqui",),  # tab separator
+        ("las 6.251840, -75.563591 aqui",),   # space separator
+        ("geo:3.451647,-76.532050",),         # geo URI between plain pairs
+        ("las 10.391049,\t-75.479426 aqui",),  # tab separator
         ("las 4.711111,\x0b-74.072222 no",),  # vertical tab: must NOT parse
-        ("las 4.711111, -74.072222 no",),  # NBSP: must NOT parse
+        ("las 4.711111,\u00a0-74.072222 no",),  # NBSP: must NOT parse
         ("sin coordenadas",),
         (None,),                              # null text: no cell in either path
+        ("las 7.119349, -73.122742 y geo:5.068890,-75.517380",),  # both: geo: wins
     ]
-    df = spark.createDataFrame(rows, "text string")
+    df = spark.createDataFrame(rows, "text string").coalesce(1)   # one Arrow batch
     native = df.select(
         geo.encode_b_cell(txf.parse_lat(F.col("text")),
                           txf.parse_lon(F.col("text")), 12).alias("cell")).collect()
@@ -295,8 +299,14 @@ def test_geoparse_grammar_parity_native_vs_fused(spark):
     n = [r.cell for r in native]
     f = [r.cell for r in fused]
     assert n == f, (n, f)
-    assert n[0] >= 0 and n[1] >= 0 and n[2] >= 0
-    assert n[3] == -1 and n[4] == -1 and n[5] == -1 and n[6] == -1
+    want = spark.createDataFrame(
+        [(4.711111, -74.072222), (6.251840, -75.563591), (3.451647, -76.532050),
+         (10.391049, -75.479426), (5.068890, -75.517380)], "lat double, lon double")
+    want = [r.cell for r in want.select(geo.encode_b_cell(F.col("lat"), F.col("lon"), 12)
+                                        .alias("cell")).collect()]
+    assert len(set(want)) == 5 and min(want) >= 0
+    assert [n[k] for k in (0, 1, 2, 3, 8)] == want
+    assert n[4] == -1 and n[5] == -1 and n[6] == -1 and n[7] == -1
 
 
 def test_materialize_pages_roundtrip(spark, tmp_path):

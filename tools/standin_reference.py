@@ -85,8 +85,8 @@ def build(sf_dirs: list[str]):
 
     # one cover cell at each of depths 5-7, the rest at depths 8-22
     shallow = ancestor(rng.choice(pts, 3, replace=False), np.array([5, 6, 7]))
-    deep = np.unique(ancestor(rng.choice(pts, 4 * N_COVER, replace=False),
-                              rng.integers(8, 23, 4 * N_COVER)))
+    n = min(4 * N_COVER, len(pts))    # one small scale has fewer points
+    deep = np.unique(ancestor(rng.choice(pts, n, replace=False), rng.integers(8, 23, n)))
     deep = rng.permutation(np.setdiff1d(deep, shallow))[:N_COVER - 3]
     cover = np.concatenate([shallow, deep])
     owner = np.arange(len(cover)) % N_LABELS
