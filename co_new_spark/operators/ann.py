@@ -21,7 +21,39 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType
 
-from ..queries.training import _cosine
+
+def _cosine(a, b):
+    """Cosine similarity of two array<float> columns, computed in float64
+    (DuckDB twin: ``queries.training.sql_cosine``)."""
+    ad = F.transform(a, lambda x: x.cast("double"))
+    bd = F.transform(b, lambda x: x.cast("double"))
+    dot = F.aggregate(F.zip_with(ad, bd, lambda x, y: x * y),
+                      F.lit(0.0), lambda acc, v: acc + v)
+    na = F.sqrt(F.aggregate(F.transform(ad, lambda x: x * x),
+                            F.lit(0.0), lambda acc, v: acc + v))
+    nb = F.sqrt(F.aggregate(F.transform(bd, lambda x: x * x),
+                            F.lit(0.0), lambda acc, v: acc + v))
+    return dot / (na * nb)
+
+
+def cosine_topk(pairs: DataFrame, k: int, cid: str = "cid",
+                rank: str = "rn") -> DataFrame:
+    """THE cosine top-k: (qid, ``cid``, qv, cv) pairs -> (qid, ``cid``,
+    sim, ``rank``) for the ``k`` best candidates per qid, sim = the cosine
+    rounded to 6 places, ties broken by ``cid`` (DuckDB twin:
+    ``queries.training.sql_cosine_topk``)."""
+    scored = pairs.select(
+        "qid", cid, F.round(_cosine(F.col("qv"), F.col("cv")), 6).alias("sim"))
+    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col(cid))
+    return (scored.withColumn(rank, F.row_number().over(w))
+            .filter(F.col(rank) <= k).select("qid", cid, "sim", rank))
+
+
+def bucket_topk(c: DataFrame, q: DataFrame, k: int) -> DataFrame:
+    """Bucketed ANN re-rank: candidates (cid, cv, bucket) meet the
+    broadcast queries (qid, qv, bucket) on the bucket, then ``cosine_topk``."""
+    pairs = c.join(F.broadcast(q), "bucket").filter(F.col("qid") != F.col("cid"))
+    return cosine_topk(pairs, k)
 
 
 def _norm_rows(m: np.ndarray) -> np.ndarray:
@@ -93,9 +125,4 @@ def ivf_knn(emb: DataFrame, k: int = 5, n_query: int = 20,
         from ..queries.mat import materialize
         c = materialize(c, f"{mat_prefix}_c")
         q = materialize(q, f"{mat_prefix}_q")
-    pairs = c.join(F.broadcast(q), "bucket").filter(F.col("qid") != F.col("cid"))
-    scored = pairs.select(
-        "qid", "cid", F.round(_cosine(F.col("qv"), F.col("cv")), 6).alias("sim"))
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid"))
-    return (scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k).select("qid", "cid", "sim", "rn"))
+    return bucket_topk(c, q, k)

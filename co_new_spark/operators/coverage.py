@@ -22,7 +22,7 @@ def clip_area_udf(ring: np.ndarray):
     def clip_area(cell):
         boxes = np.stack(ncells.cell_b_box(cell), axis=1)
         areas = np.full(len(cell), np.nan)
-        ok = cell >= 0
+        ok = np.isfinite(boxes).all(axis=1)
         areas[ok] = geometry.clip_area_to_rects(frozen, boxes[ok])
         return areas
 

@@ -89,18 +89,6 @@ def _records(spark: SparkSession) -> DataFrame:
     return base.select("shard", "r", F.concat(rec, F.lit("\n")).alias("rec"))
 
 
-def _chunks(spark: SparkSession) -> DataFrame:
-    """(shard, cid, chunk) — per-shard blob split into _CH-byte chunks."""
-    def chunker(pdf: pd.DataFrame) -> pd.DataFrame:
-        blob = "".join(pdf.sort_values("r")["rec"])
-        rows = [(int(pdf["shard"].iloc[0]), i // _CH, blob[i:i + _CH])
-                for i in range(0, len(blob), _CH)]
-        return pd.DataFrame(rows, columns=["shard", "cid", "chunk"])
-
-    return (_records(spark).groupBy("shard")
-            .applyInPandas(chunker, "shard long, cid long, chunk string"))
-
-
 def _scan(pdf_iter):
     """Phase B: per-chunk RFC 4180 scan seeded with the boundary state."""
     for pdf in pdf_iter:
@@ -135,6 +123,22 @@ def _scan(pdf_iter):
                           "commas", "qcommas", "qnewlines", "quotes"])
 
 
+def chunk_blob(records: DataFrame, text: str, size: int, opening: str = "",
+               sep: str = "", closing: str = "") -> DataFrame:
+    """Shared splittable-parse chunker (csv_q, json_q and grep_q):
+    (shard, r, ``text``) records -> (shard, cid, chunk), each shard's blob
+    ``opening + sep.join(text in r order) + closing`` split into
+    ``size``-character chunks."""
+    def chunker(pdf: pd.DataFrame) -> pd.DataFrame:
+        blob = opening + sep.join(pdf.sort_values("r")[text]) + closing
+        rows = [(int(pdf["shard"].iloc[0]), i // size, blob[i:i + size])
+                for i in range(0, len(blob), size)]
+        return pd.DataFrame(rows, columns=["shard", "cid", "chunk"])
+
+    return (records.groupBy("shard")
+            .applyInPandas(chunker, "shard long, cid long, chunk string"))
+
+
 def assemble_records(spans: DataFrame, counters: list[str],
                      rid_shift: int = 0) -> DataFrame:
     """Shared splittable-parse record assembly (csv_q + json_q twins):
@@ -162,7 +166,7 @@ def assemble_records(spans: DataFrame, counters: list[str],
 
 
 def g_csv_split(spark: SparkSession, sf: str) -> DataFrame:
-    ch = _chunks(spark).localCheckpoint(eager=True)
+    ch = chunk_blob(_records(spark), "rec", _CH).localCheckpoint(eager=True)
 
     # phase A — pure Catalyst: quote parity + base offsets per chunk
     wc = (Window.partitionBy("shard").orderBy("cid")

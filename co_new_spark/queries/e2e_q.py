@@ -23,7 +23,7 @@ from ..operators.components import connected_components
 from ..operators.packing import pack_greedy
 from .training import JACCARD_MAX_DF, jaccard_pairs
 from .training2 import sql_quality_expr as _q_expr
-from .webtext_q import FIXTURE_PAGES, _fixture
+from .webtext_q import _fixture, latest_per_url, sql_latest_per_url
 
 QUALITY_MIN = 0.3
 E2E_JACCARD = 0.25
@@ -32,10 +32,7 @@ PACK_CAP = 256
 
 def e2e_training_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     # 1. url-dedup: latest crawl per url
-    pg = _fixture(spark)
-    w = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
-    docs = (pg.withColumn("__rn", F.row_number().over(w))
-              .filter(F.col("__rn") == 1).select("url", "text", "lang"))
+    docs = latest_per_url(_fixture(spark)).select("url", "text", "lang")
     # 2. quality score + floor
     docs = docs.withColumn("quality", tx.quality_score(F.col("text"))) \
                .filter(F.col("quality") >= QUALITY_MIN)
@@ -72,13 +69,9 @@ def e2e_training_pipeline(spark: SparkSession, sf: str) -> DataFrame:
 
 SQL_E2E = f"""
 WITH RECURSIVE
-p0 AS (
-  SELECT url, text, lang,
-         row_number() OVER (PARTITION BY url ORDER BY warc_ts DESC) AS rn
-  FROM read_parquet('{FIXTURE_PAGES}')
-), d1 AS (
+d1 AS (
   SELECT url, text, lang, {_q_expr('text')} AS quality
-  FROM p0 WHERE rn = 1
+  FROM {sql_latest_per_url()}
 ), d2 AS (
   SELECT * FROM d1 WHERE quality >= {QUALITY_MIN} AND lang IN ('es', 'en')
 ), docs AS (

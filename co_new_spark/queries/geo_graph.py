@@ -86,17 +86,35 @@ def pagerank_int(nodes: DataFrame, edges: DataFrame,
     return _finish(ranks, [ed])
 
 
-def _cell_graph(spark: SparkSession, sf: str):
-    """THE occupied-cell graph both entries run on: per-cell event counts
-    (``nodes``, cached — it feeds the edge join, the algorithm, and the
-    final rollup) and king-move adjacency (``edges``, A17 ring-1, cross-L0
-    handled through the global (i, j) frame)."""
-    nodes = event_cell_counts(spark, sf, _PR_RBITS, _PR_EVENTS).cache()
-    nb = (nodes.select(F.col("cell").alias("u"),
+def king_graph(spark: SparkSession, sf: str, rbits: int, n_events: int,
+               pair, weight=None):
+    """THE occupied-cell graph: per-cell event counts of the first
+    ``n_events`` events at ``rbits`` (``nodes`` (cell, n), cached — it feeds
+    the edge join, the algorithm, and the final rollup) and the king-move
+    adjacency (``edges`` (u, v), A17 ring-1, cross-L0 handled through the
+    global (i, j) frame) kept where ``pair(u, v)`` holds; given
+    ``weight(n_u, n_v)``, the edges are (u, v, w).  The SQL twin is
+    ``sql_king_graph``."""
+    nodes = event_cell_counts(spark, sf, rbits, n_events).cache()
+
+    # the endpoint counts ride along only for a weight: a projection of
+    # both cached columns is planned as a scan of the renamed cache
+    def counts(side):
+        return [F.col("n").alias("n" + side)] if weight else []
+
+    nb = (nodes.select(F.col("cell").alias("u"), *counts("u"),
                        F.explode(ring_cells_udf(1)(F.col("cell"))).alias("v"))
-               .filter(F.col("u") != F.col("v")))
-    edges = nb.join(nodes.select(F.col("cell").alias("v")), "v").select("u", "v")
-    return nodes, edges
+               .filter(pair(F.col("u"), F.col("v"))))
+    edges = nb.join(nodes.select(F.col("cell").alias("v"), *counts("v")), "v")
+    if weight is None:
+        return nodes, edges.select("u", "v")
+    return nodes, edges.select(
+        "u", "v", weight(F.col("nu"), F.col("nv")).alias("w"))
+
+
+def _cell_graph(spark: SparkSession, sf: str):
+    """The directed occupied-cell graph the four entries below run on."""
+    return king_graph(spark, sf, _PR_RBITS, _PR_EVENTS, lambda u, v: u != v)
 
 
 def g_cell_pagerank(spark: SparkSession, sf: str) -> DataFrame:
@@ -115,19 +133,25 @@ def g_cell_pagerank(spark: SparkSession, sf: str) -> DataFrame:
 # dependency-free).  `//` == `div` for the non-negative operands here.
 # --------------------------------------------------------------------------
 
-# THE one SQL restatement of _cell_graph: occupied cells (nodes) with
-# their global lattice slot -> king adjacency (ed).  Both entry oracles
-# splice this in.
-_GRAPH_CTES = f"""{cells_cte(f"{_EVENT_XY} WHERE event_id < {_PR_EVENTS}", _PR_RBITS)},
+def sql_king_graph(rbits: int, n_events: int, edges: str, pair: str,
+                   extra: str = "") -> str:
+    """THE SQL restatement of ``king_graph``: occupied cells (nodes) with
+    their global lattice slot -> the king adjacency CTE ``edges`` (u, v
+    ``extra``) kept where ``a.cell {pair} b.cell``."""
+    return f"""{cells_cte(f"{_EVENT_XY} WHERE event_id < {n_events}", rbits)},
 nodes AS (
   SELECT gi, gj, cell, CAST(count(*) AS BIGINT) AS n
   FROM cells WHERE cell >= 0
   GROUP BY gi, gj, cell
-), ed AS (
-  SELECT a.cell AS u, b.cell AS v
+), {edges} AS (
+  SELECT a.cell AS u, b.cell AS v{extra}
   FROM nodes a JOIN nodes b
-    ON abs(a.gi - b.gi) <= 1 AND abs(a.gj - b.gj) <= 1 AND a.cell <> b.cell
+    ON abs(a.gi - b.gi) <= 1 AND abs(a.gj - b.gj) <= 1 AND a.cell {pair} b.cell
 )"""
+
+
+# The oracles of the four entries below splice this in.
+_GRAPH_CTES = sql_king_graph(_PR_RBITS, _PR_EVENTS, "ed", "<>")
 
 
 def _iter_cte(k: int) -> str:

@@ -55,9 +55,7 @@ from pyspark.sql import functions as F
 
 from ..grid import grids
 from ..operators.components import connected_components
-from ..operators.knn import ring_cells_udf
-from .geospatial import _EVENT_XY, event_cell_counts
-from .sql_grid import cells_cte
+from .geo_graph import king_graph, sql_king_graph
 
 _MST_RBITS = 4      # 4x4 refinement below L0 -> 131,072 m cells
 _MST_MAXROUNDS = 12  # Boruvka needs <= ceil(log2 V); 2^12 cells >> lattice cap
@@ -166,16 +164,8 @@ def boruvka_msf(nodes: DataFrame, edges: DataFrame,
 def _density_graph(spark: SparkSession, sf: str):
     """Occupied-cell nodes (cell, gi-free) + canonical undirected edges with
     the density-gradient weight w = |n_u - n_v|."""
-    nodes = event_cell_counts(spark, sf, _MST_RBITS, _MST_EVENTS).cache()
-    nb = (nodes.select(F.col("cell").alias("u"), F.col("n").alias("nu"),
-                       F.explode(ring_cells_udf(1)(F.col("cell"))).alias("v"))
-               .filter(F.col("u") < F.col("v")))
-    edges = (nb.join(nodes.select(F.col("cell").alias("v"),
-                                  F.col("n").alias("nv")), "v")
-               .select("u", "v",
-                       F.abs(F.col("nu") - F.col("nv")).cast("long")
-                        .alias("w")))
-    return nodes, edges
+    return king_graph(spark, sf, _MST_RBITS, _MST_EVENTS, lambda u, v: u < v,
+                      lambda nu, nv: F.abs(nu - nv).cast("long"))
 
 
 def g_mst(spark: SparkSession, sf: str) -> DataFrame:
@@ -198,16 +188,9 @@ def g_mst(spark: SparkSession, sf: str) -> DataFrame:
 
 # THE one SQL derivation of the density graph + cycle-property reach
 # closure, shared by both entry oracles (single-sourcing rule)
-_SQL_GRAPH_CTES = f"""{cells_cte(f"{_EVENT_XY} WHERE event_id < {_MST_EVENTS}", _MST_RBITS)},
-nodes AS (
-  SELECT gi, gj, cell, CAST(count(*) AS BIGINT) AS n
-  FROM cells WHERE cell >= 0
-  GROUP BY gi, gj, cell
-), ew AS (
-  SELECT a.cell AS u, b.cell AS v, CAST(abs(a.n - b.n) AS BIGINT) AS w
-  FROM nodes a JOIN nodes b
-    ON abs(a.gi - b.gi) <= 1 AND abs(a.gj - b.gj) <= 1 AND a.cell < b.cell
-), reach AS (
+_SQL_GRAPH_CTES = f"""{sql_king_graph(
+    _MST_RBITS, _MST_EVENTS, "ew", "<", ", CAST(abs(a.n - b.n) AS BIGINT) AS w")},
+reach AS (
   SELECT u AS pu, v AS pv, w AS pw, u AS r FROM ew
   UNION
   SELECT t.pu, t.pv, t.pw,

@@ -33,15 +33,11 @@ from ..sources.reference_data import load_citycover
 from .geo_algebra import sql_knn_ring
 from .geo_cover_sql import _sql_csv_decode, cover_hits_cte
 from .sql_grid import cells_cte
-from .webtext_q import FIXTURE_PAGES
+from .webtext_q import FIXTURE_PAGES, _fixture
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 FIXTURE_XY = os.path.join(_REPO, "tests", "fixtures", "pages2k_xy.parquet")
 _XY_SRC = f"SELECT url, x, y FROM read_parquet('{FIXTURE_XY}')"
-
-
-def _fixture(spark: SparkSession) -> DataFrame:
-    return spark.read.parquet(FIXTURE_PAGES)
 
 
 # ---------------------------------------------------------------------------

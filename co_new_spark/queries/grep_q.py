@@ -35,12 +35,10 @@ degrades to parity/composition only when lookback is unbounded.
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .csv_q import _h
+from .csv_q import _h, chunk_blob
 
 _NSH = 4
 _NT = 200    # 16-char tokens per shard
@@ -63,19 +61,8 @@ def _tokens(spark: SparkSession) -> DataFrame:
     return base.select("shard", "r", tok.alias("tok"))
 
 
-def _chunks(spark: SparkSession) -> DataFrame:
-    def chunker(pdf: pd.DataFrame) -> pd.DataFrame:
-        blob = "".join(pdf.sort_values("r")["tok"])
-        rows = [(int(pdf["shard"].iloc[0]), i // _CH, blob[i:i + _CH])
-                for i in range(0, len(blob), _CH)]
-        return pd.DataFrame(rows, columns=["shard", "cid", "chunk"])
-
-    return (_tokens(spark).groupBy("shard")
-            .applyInPandas(chunker, "shard long, cid long, chunk string"))
-
-
 def g_grep_split(spark: SparkSession, sf: str) -> DataFrame:
-    ch = _chunks(spark)
+    ch = chunk_blob(_tokens(spark), "tok", _CH)
     w = Window.partitionBy("shard").orderBy("cid")
     wc = w.rowsBetween(Window.unboundedPreceding, -1)
     ext = ch.select(

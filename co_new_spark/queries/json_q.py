@@ -64,7 +64,7 @@ _CH = 133  # chosen so planted escape PAIRS straddle chunk edges (4 do) —
 _NSTATES = 3
 
 
-from .csv_q import _h, assemble_records  # shared splittable-parse helpers
+from .csv_q import _h, assemble_records, chunk_blob  # shared splittable-parse helpers
 
 
 def _objects(spark: SparkSession) -> DataFrame:
@@ -85,17 +85,6 @@ def _objects(spark: SparkSession) -> DataFrame:
                    F.lit('","a":"'), A, F.lit('","b":'),
                    num.cast("string"), F.lit("}"))
     return base.select("shard", "r", obj.alias("obj"))
-
-
-def _chunks(spark: SparkSession) -> DataFrame:
-    def chunker(pdf: pd.DataFrame) -> pd.DataFrame:
-        blob = "[" + ",".join(pdf.sort_values("r")["obj"]) + "]"
-        rows = [(int(pdf["shard"].iloc[0]), i // _CH, blob[i:i + _CH])
-                for i in range(0, len(blob), _CH)]
-        return pd.DataFrame(rows, columns=["shard", "cid", "chunk"])
-
-    return (_objects(spark).groupBy("shard")
-            .applyInPandas(chunker, "shard long, cid long, chunk string"))
 
 
 def _step(st: int, depth: int, ch: str):
@@ -169,7 +158,8 @@ def _scan(pdf_iter):
 
 
 def g_json_split(spark: SparkSession, sf: str) -> DataFrame:
-    ch = _chunks(spark).localCheckpoint(eager=True)
+    ch = (chunk_blob(_objects(spark), "obj", _CH, "[", ",", "]")
+          .localCheckpoint(eager=True))
     tabs = ch.mapInPandas(
         _tables, "shard long, cid long, exits array<int>, deltas array<int>")
 

@@ -374,10 +374,15 @@ def q_jsonl_scan(spark: SparkSession, sf: str) -> DataFrame:
     from .mat import materialize_json
 
     ev = load(spark, sf, "events").select("event_id", "event_type", "value")
-    j = materialize_json(
+    return _event_type_stats(materialize_json(
         ev, "events_jsonl",
-        "event_id BIGINT, event_type STRING, value DOUBLE")
-    return (j.groupBy("event_type").agg(
+        "event_id BIGINT, event_type STRING, value DOUBLE"))
+
+
+def _event_type_stats(ev: DataFrame) -> DataFrame:
+    """The per-event-type aggregate the two format round trips check:
+    (event_type, n_events, min_id, sum_cents), integer-exact."""
+    return (ev.groupBy("event_type").agg(
                 F.count("*").alias("n_events"),
                 F.min("event_id").alias("min_id"),
                 F.sum(F.round(F.col("value") * 100).cast("long"))
@@ -385,21 +390,25 @@ def q_jsonl_scan(spark: SparkSession, sf: str) -> DataFrame:
              .orderBy("event_type"))
 
 
+def _sql_event_type_stats(src: str) -> str:
+    """The DuckDB twin of ``_event_type_stats`` over the table ``src``."""
+    return f"""
+SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
+       min(event_id) AS min_id,
+       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_cents
+FROM {src}
+GROUP BY event_type ORDER BY event_type
+"""
+
+
 def _sql_jsonl_scan() -> str:
     from .mat import mat_json_glob
 
-    return f"""
-        SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-               min(event_id) AS min_id,
-               CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-                 AS sum_cents
-        FROM read_json('{mat_json_glob("events_jsonl")}',
-                       format = 'newline_delimited',
-                       columns = {{event_id: 'BIGINT',
-                                   event_type: 'VARCHAR',
-                                   value: 'DOUBLE'}})
-        GROUP BY event_type ORDER BY event_type
-    """
+    return _sql_event_type_stats(f"""read_json('{mat_json_glob("events_jsonl")}',
+               format = 'newline_delimited',
+               columns = {{event_id: 'BIGINT',
+                           event_type: 'VARCHAR',
+                           value: 'DOUBLE'}})""")
 
 
 def q_orc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
@@ -415,22 +424,10 @@ def q_orc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     ev = load(spark, sf, "events").select("event_id", "event_type", "value")
     path = mat_path("events_orc")
     ev.write.mode("overwrite").orc(path)
-    back = spark.read.orc(path)
-    return (back.groupBy("event_type").agg(
-                F.count("*").alias("n_events"),
-                F.min("event_id").alias("min_id"),
-                F.sum(F.round(F.col("value") * 100).cast("long"))
-                 .alias("sum_cents"))
-             .orderBy("event_type"))
+    return _event_type_stats(spark.read.orc(path))
 
 
-SQL_ORC_ROUNDTRIP = """
-SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-       min(event_id) AS min_id,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_cents
-FROM events
-GROUP BY event_type ORDER BY event_type
-"""
+SQL_ORC_ROUNDTRIP = _sql_event_type_stats("events")
 
 
 def q_salted_topk(spark: SparkSession, sf: str) -> DataFrame:

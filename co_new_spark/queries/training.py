@@ -23,6 +23,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions import text as tx
+from ..operators.ann import bucket_topk, cosine_topk
 from ..sources.tables import load
 
 # ---------------------------------------------------------------------------
@@ -232,6 +233,14 @@ WHERE round(CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common), 6)
 
 SQL_JACCARD = sql_jaccard("documents")
 
+
+def sql_cosine(a: str, b: str) -> str:
+    """The DuckDB twin of ``operators.ann._cosine`` over two list columns."""
+    def dot(x, y):
+        return f"list_dot_product(CAST({x} AS DOUBLE[]), CAST({y} AS DOUBLE[]))"
+
+    return f"{dot(a, b)} / (sqrt({dot(a, a)}) * sqrt({dot(b, b)}))"
+
 # ---------------------------------------------------------------------------
 # MinHash + LSH banding (near-dup candidates at scale) — no SQL oracle
 # ---------------------------------------------------------------------------
@@ -434,47 +443,35 @@ KNN_K = 5
 KNN_NQUERY = 20
 
 
-def _cosine(a, b):
-    """Cosine similarity of two array<float> columns, computed in float64."""
-    ad = F.transform(a, lambda x: x.cast("double"))
-    bd = F.transform(b, lambda x: x.cast("double"))
-    dot = F.aggregate(F.zip_with(ad, bd, lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(F.transform(ad, lambda x: x * x),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    nb = F.sqrt(F.aggregate(F.transform(bd, lambda x: x * x),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    return dot / (na * nb)
-
-
 def t_knn_cosine_brute(spark: SparkSession, sf: str) -> DataFrame:
     """Brute-force cosine top-k: broadcast query set x full candidate scan."""
     emb = _spread(load(spark, sf, "embeddings"), "vec_id")
     q = emb.filter(F.col("vec_id") < KNN_NQUERY).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
     c = emb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"))
-    pairs = c.join(F.broadcast(q), F.col("qid") != F.col("cid"))
-    scored = pairs.select("qid", "cid",
-                          F.round(_cosine(F.col("qv"), F.col("cv")), 6).alias("sim"))
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid"))
-    return scored.withColumn("rn", F.row_number().over(w)) \
-                 .filter(F.col("rn") <= KNN_K).select("qid", "cid", "sim", "rn")
+    return cosine_topk(c.join(F.broadcast(q), F.col("qid") != F.col("cid")),
+                       KNN_K)
+
+
+def sql_cosine_topk(scored: str, k: int, cid: str = "cid",
+                    rank: str = "rn") -> str:
+    """The DuckDB twin of ``operators.ann.cosine_topk``'s ranking over the
+    relation ``scored`` (qid, ``cid``, sim)."""
+    return f"""SELECT qid, {cid}, sim, {rank} FROM (
+  SELECT qid, {cid}, sim,
+         row_number() OVER (PARTITION BY qid ORDER BY sim DESC, {cid})
+           AS {rank}
+  FROM {scored}
+) WHERE {rank} <= {k}"""
 
 
 SQL_KNN = f"""
 WITH scored AS (
   SELECT q.vec_id AS qid, c.vec_id AS cid,
-         round(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))
-               / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))
-                  * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))),
-               6) AS sim
+         round({sql_cosine("q.embedding", "c.embedding")}, 6) AS sim
   FROM embeddings q JOIN embeddings c ON q.vec_id < {KNN_NQUERY} AND q.vec_id <> c.vec_id
 )
-SELECT qid, cid, sim, rn FROM (
-  SELECT qid, cid, sim,
-         row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rn
-  FROM scored
-) WHERE rn <= {KNN_K}
+{sql_cosine_topk("scored", KNN_K)}
 """
 
 LSH_PLANES = 12
@@ -508,7 +505,7 @@ def t_knn_lsh(spark: SparkSession, sf: str) -> DataFrame:
     Oracle split: the hyperplane bucket assignment (xxhash64-signed planes)
     is materialized as (vec_id, bucket); the oracle joins those buckets back
     to the embeddings view and re-derives the in-bucket pairing, exact
-    cosine (list_dot_product — bit-stable, proven by train_knn_brute) and
+    cosine (sql_cosine — bit-stable, proven by train_knn_brute) and
     top-k ranking.  Bucket QUALITY (recall vs brute force) stays pytest-gated.
     """
     from .mat import materialize
@@ -521,12 +518,7 @@ def t_knn_lsh(spark: SparkSession, sf: str) -> DataFrame:
     q = embb.filter(F.col("vec_id") < KNN_NQUERY).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"), "bucket")
     c = embb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"), "bucket")
-    pairs = c.join(F.broadcast(q), on="bucket").filter(F.col("qid") != F.col("cid"))
-    scored = pairs.select("qid", "cid",
-                          F.round(_cosine(F.col("qv"), F.col("cv")), 6).alias("sim"))
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid"))
-    return scored.withColumn("rn", F.row_number().over(w)) \
-                 .filter(F.col("rn") <= KNN_K).select("qid", "cid", "sim", "rn")
+    return bucket_topk(c, q, KNN_K)
 
 
 def _sql_knn_lsh() -> str:
@@ -539,18 +531,11 @@ e AS (
   FROM embeddings emb JOIN bk USING (vec_id)
 ), scored AS (
   SELECT q.vec_id AS qid, c.vec_id AS cid,
-         round(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))
-               / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))
-                  * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))),
-               6) AS sim
+         round({sql_cosine("q.embedding", "c.embedding")}, 6) AS sim
   FROM e q JOIN e c
     ON q.bucket = c.bucket AND q.vec_id < {KNN_NQUERY} AND q.vec_id <> c.vec_id
 )
-SELECT qid, cid, sim, rn FROM (
-  SELECT qid, cid, sim,
-         row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rn
-  FROM scored
-) WHERE rn <= {KNN_K}
+{sql_cosine_topk("scored", KNN_K)}
 """
 
 

@@ -125,7 +125,8 @@ _SEM_K = 5    # semantic-leg candidates per probe
 
 
 def t_rrf_fusion(spark: SparkSession, sf: str) -> DataFrame:
-    from .training import _cosine, _spread
+    from ..operators.ann import cosine_topk
+    from .training import _spread
     from .training7 import t_bm25_topk
 
     lex = (t_bm25_topk(spark, sf)
@@ -136,14 +137,9 @@ def t_rrf_fusion(spark: SparkSession, sf: str) -> DataFrame:
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
     c = emb.select(F.col("vec_id").alias("doc_id"),
                    F.col("embedding").alias("cv"))
-    scored = (c.join(F.broadcast(q), F.col("qid") != F.col("doc_id"))
-               .select("qid", "doc_id",
-                       F.round(_cosine(F.col("qv"), F.col("cv")), 6)
-                        .alias("sim")))
-    ws = Window.partitionBy("qid").orderBy(F.col("sim").desc(), "doc_id")
-    sem = (scored.withColumn("srank", F.row_number().over(ws))
-                 .filter(F.col("srank") <= _SEM_K)
-                 .select("qid", "doc_id", "srank"))
+    sem = (cosine_topk(c.join(F.broadcast(q), F.col("qid") != F.col("doc_id")),
+                       _SEM_K, cid="doc_id", rank="srank")
+           .select("qid", "doc_id", "srank"))
 
     # integer RRF: per-list contribution rounds BEFORE the sum
     def contrib(rank):
@@ -167,6 +163,7 @@ def t_rrf_fusion(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _sql_rrf() -> str:
+    from .training import sql_cosine, sql_cosine_topk
     from .training7 import _sql_bm25
 
     return f"""
@@ -174,22 +171,11 @@ WITH lex AS MATERIALIZED (
   SELECT qid, doc_id, rank AS lrank FROM ({_sql_bm25()})),
 scored AS (
   SELECT q.vec_id AS qid, c.vec_id AS doc_id,
-         round(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                                CAST(c.embedding AS DOUBLE[]))
-               / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                                        CAST(q.embedding AS DOUBLE[])))
-                  * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]),
-                                          CAST(c.embedding AS DOUBLE[])))),
-               6) AS sim
+         round({sql_cosine("q.embedding", "c.embedding")}, 6) AS sim
   FROM embeddings q JOIN embeddings c
     ON q.vec_id % 100 = 0 AND q.vec_id <> c.vec_id),
 sem AS MATERIALIZED (
-  SELECT qid, doc_id, srank FROM (
-    SELECT qid, doc_id,
-           row_number() OVER (PARTITION BY qid
-                              ORDER BY sim DESC, doc_id) AS srank
-    FROM scored)
-  WHERE srank <= {_SEM_K}),
+  {sql_cosine_topk("scored", _SEM_K, cid="doc_id", rank="srank")}),
 fused AS (
   SELECT coalesce(l.qid, s.qid) AS qid,
          coalesce(l.doc_id, s.doc_id) AS doc_id,

@@ -78,37 +78,36 @@ def _cand(toks: DataFrame) -> DataFrame:
     return exact.orderBy(F.col("exact").desc(), "tok").limit(_K)
 
 
-def t_count_min(spark: SparkSession, sf: str) -> DataFrame:
+def _probe_sketch(spark: SparkSession, sf: str, depth: int, counter):
+    """The shared scaffold: a ``depth`` x _W sketch of the token stream
+    (cell (d, b) = ``counter`` over its (tok, s) rows, s the row's sign)
+    joined to the candidates' probes (tok, exact, d, b, s) -> grouped by
+    (tok, exact) for the caller's estimate."""
     toks = _toks(spark, sf)
-    d = F.explode(F.array(*[F.lit(i) for i in range(_D_CMS)])).alias("d")
+    d = F.explode(F.array(*[F.lit(i) for i in range(depth)])).alias("d")
     sketch = (toks.select(d, "tok")
-              .select("d", _bucket(F.col("d"), F.col("tok")).alias("b"))
-              .groupBy("d", "b").agg(F.count("*").alias("c")))
+              .select("d", _bucket(F.col("d"), F.col("tok")).alias("b"),
+                      _sign(F.col("d"), F.col("tok")).alias("s"))
+              .groupBy("d", "b").agg(counter.alias("c")))
     probes = (_cand(toks).select("tok", "exact", d)
-              .withColumn("b", _bucket(F.col("d"), F.col("tok"))))
-    est = (probes.join(F.broadcast(sketch), ["d", "b"])
-           .groupBy("tok", "exact").agg(F.min("c").alias("cms_est")))
+              .withColumn("b", _bucket(F.col("d"), F.col("tok")))
+              .withColumn("s", _sign(F.col("d"), F.col("tok"))))
+    return (probes.join(F.broadcast(sketch), ["d", "b"])
+            .groupBy("tok", "exact"))
+
+
+def t_count_min(spark: SparkSession, sf: str) -> DataFrame:
+    est = _probe_sketch(spark, sf, _D_CMS, F.count("*")).agg(
+        F.min("c").alias("cms_est"))
     return (est.select(F.col("tok").alias("token"), "exact", "cms_est",
                        (F.col("cms_est") - F.col("exact")).alias("overcount"))
             .orderBy(F.col("exact").desc(), "token"))
 
 
 def t_count_sketch(spark: SparkSession, sf: str) -> DataFrame:
-    toks = _toks(spark, sf)
-    d = F.explode(F.array(*[F.lit(i) for i in range(_D_CS)])).alias("d")
-    stream = toks.select(d, "tok")
-    sketch = (stream.select(
-                  "d", _bucket(F.col("d"), F.col("tok")).alias("b"),
-                  _sign(F.col("d"), F.col("tok")).alias("s"))
-              .groupBy("d", "b").agg(F.sum("s").alias("c")))
-    probes = (_cand(toks).select("tok", "exact", d)
-              .withColumn("b", _bucket(F.col("d"), F.col("tok")))
-              .withColumn("s", _sign(F.col("d"), F.col("tok"))))
-    est = (probes.join(F.broadcast(sketch), ["d", "b"])
-           .groupBy("tok", "exact")
-           .agg(F.element_at(
-               F.array_sort(F.collect_list(F.col("s") * F.col("c"))),
-               (_D_CS + 1) // 2).alias("cs_est")))
+    est = _probe_sketch(spark, sf, _D_CS, F.sum("s")).agg(F.element_at(
+        F.array_sort(F.collect_list(F.col("s") * F.col("c"))),
+        (_D_CS + 1) // 2).alias("cs_est"))
     return (est.select(F.col("tok").alias("token"), "exact", "cs_est")
             .orderBy(F.col("exact").desc(), "token"))
 
@@ -125,43 +124,39 @@ _B_SQL = ("CAST(concat('0x', substring(md5(concat(CAST({d} AS VARCHAR), "
 _S_SQL = ("CASE WHEN substring(md5(concat('s', CAST({d} AS VARCHAR), "
           "'#', {tok})), 1, 1) < '8' THEN 1 ELSE -1 END")
 
-SQL_COUNT_MIN = f"""
+
+def _sql_probe_sketch(depth: int, counter: str, estimate: str,
+                      out: str) -> str:
+    """The SQL twin of ``_probe_sketch``: sketch cell ``counter`` over
+    (d, tok), per-candidate ``estimate`` over (ds.d, cand.tok, sk.c), and
+    the ``out`` columns after (token, exact)."""
+    return f"""
 WITH {_TOKS_CTE}, ds AS (
-  SELECT range AS d FROM range({_D_CMS})
+  SELECT range AS d FROM range({depth})
 ), sk AS (
-  SELECT d, {_B_SQL.format(d='d', tok='tok')} AS b,
-         CAST(count(*) AS BIGINT) AS c
+  SELECT d, {_B_SQL.format(d='d', tok='tok')} AS b, {counter} AS c
   FROM toks, ds GROUP BY 1, 2
 ), est AS (
-  SELECT cand.tok, cand.exact, min(sk.c) AS cms_est
+  SELECT cand.tok, cand.exact, {estimate} AS est
   FROM cand, ds
   JOIN sk ON sk.d = ds.d
          AND sk.b = {_B_SQL.format(d='ds.d', tok='cand.tok')}
   GROUP BY cand.tok, cand.exact
 )
-SELECT tok AS token, exact, cms_est, cms_est - exact AS overcount
+SELECT tok AS token, exact, {out}
 FROM est ORDER BY exact DESC, token
 """
 
-SQL_COUNT_SKETCH = f"""
-WITH {_TOKS_CTE}, ds AS (
-  SELECT range AS d FROM range({_D_CS})
-), sk AS (
-  SELECT d, {_B_SQL.format(d='d', tok='tok')} AS b,
-         CAST(sum({_S_SQL.format(d='d', tok='tok')}) AS BIGINT) AS c
-  FROM toks, ds GROUP BY 1, 2
-), est AS (
-  SELECT cand.tok, cand.exact,
-         list_sort(list({_S_SQL.format(d='ds.d', tok='cand.tok')} * sk.c))
-           [{(_D_CS + 1) // 2}] AS cs_est
-  FROM cand, ds
-  JOIN sk ON sk.d = ds.d
-         AND sk.b = {_B_SQL.format(d='ds.d', tok='cand.tok')}
-  GROUP BY cand.tok, cand.exact
-)
-SELECT tok AS token, exact, CAST(cs_est AS BIGINT) AS cs_est
-FROM est ORDER BY exact DESC, token
-"""
+
+SQL_COUNT_MIN = _sql_probe_sketch(
+    _D_CMS, "CAST(count(*) AS BIGINT)", "min(sk.c)",
+    "est AS cms_est, est - exact AS overcount")
+
+SQL_COUNT_SKETCH = _sql_probe_sketch(
+    _D_CS, f"CAST(sum({_S_SQL.format(d='d', tok='tok')}) AS BIGINT)",
+    f"list_sort(list({_S_SQL.format(d='ds.d', tok='cand.tok')} * sk.c))"
+    f"[{(_D_CS + 1) // 2}]",
+    "CAST(est AS BIGINT) AS cs_est")
 
 
 QUERIES = {

@@ -18,7 +18,8 @@ from ..functions import text as tx
 from ..operators import media
 from ..sources.pages import stored_pages as pages
 from ..sources.tables import load
-from .training import _cosine
+from ..operators.ann import _cosine
+from .training import sql_cosine, sql_cosine_topk
 
 # ---------------------------------------------------------------------------
 # train_quality_score — heuristic doc quality (length/punct/alpha), oracle'd
@@ -115,17 +116,12 @@ def t_embed_neardup(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_EMBED_NEARDUP = f"""
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       round(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-             / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-                * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))),
-             6) AS sim
-FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE a.vec_id < {NEARDUP_CAP} AND b.vec_id < {NEARDUP_CAP}
-  AND round(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-            / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-               * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))),
-            6) >= {NEARDUP_SIM}
+SELECT * FROM (
+  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+         round({sql_cosine("a.embedding", "b.embedding")}, 6) AS sim
+  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+  WHERE a.vec_id < {NEARDUP_CAP} AND b.vec_id < {NEARDUP_CAP}
+) WHERE sim >= {NEARDUP_SIM}
 """
 
 
@@ -240,36 +236,19 @@ def t_extract_consistency(spark: SparkSession, sf: str) -> DataFrame:
     web_extract_parity does over the committed fixture.
     """
     from .mat import materialize
+    from .webtext_q import extraction_parity
 
-    pg = materialize(
+    return extraction_parity(materialize(
         pages(spark, _PAGES_N).select("url", "lang", "warc_ts", "html", "text")
         .coalesce(1),
-        "extract_pages")
-    w = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
-    latest = pg.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    ext = latest.withColumn("extracted", tx.extract_text(F.col("html")))
-    return ext.groupBy("lang").agg(
-        F.count("*").alias("n_urls"),
-        F.sum(F.when(F.col("extracted") == F.col("text"), 1).otherwise(0))
-        .alias("n_bytes_identical"),
-    )
+        "extract_pages"))
 
 
 def _sql_extract_consistency() -> str:
     from .mat import mat_glob
-    from .webtext_q import _sql_extract_expr
+    from .webtext_q import sql_extraction_parity
 
-    return f"""
-SELECT lang, CAST(count(*) AS BIGINT) AS n_urls,
-       CAST(sum(CASE WHEN extracted = text THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_bytes_identical
-FROM (
-  SELECT lang, text,
-         {_sql_extract_expr('decode(html)')} AS extracted,
-         row_number() OVER (PARTITION BY url ORDER BY warc_ts DESC) AS rn
-  FROM read_parquet('{mat_glob("extract_pages")}')
-) WHERE rn = 1 GROUP BY lang
-"""
+    return sql_extraction_parity(f"read_parquet('{mat_glob('extract_pages')}')")
 
 
 def t_knn_ivf(spark: SparkSession, sf: str) -> DataFrame:
@@ -412,9 +391,8 @@ def t_mm_embed_knn(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _mm_knn(emb: DataFrame) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..operators.ann import deterministic_centroids, ivf_assign_udf
+    from ..operators.ann import (bucket_topk, deterministic_centroids,
+                                 ivf_assign_udf)
     from .mat import materialize
 
     cents = deterministic_centroids(emb, 8)
@@ -430,12 +408,7 @@ def _mm_knn(emb: DataFrame) -> DataFrame:
             F.explode(ivf_assign_udf(cents, 2)(F.col("embedding")))
              .alias("bucket")),
         "mm_knn_q")
-    pairs = c.join(F.broadcast(q), "bucket").filter(F.col("qid") != F.col("cid"))
-    scored = pairs.select("qid", "cid",
-                          F.round(_cosine(F.col("qv"), F.col("cv")), 6).alias("sim"))
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid"))
-    return scored.withColumn("rn", F.row_number().over(w)) \
-                 .filter(F.col("rn") <= 3).select("qid", "cid", "sim", "rn")
+    return bucket_topk(c, q, 3)
 
 
 def _sql_bucket_knn(prefix: str, k: int) -> str:
@@ -444,21 +417,13 @@ def _sql_bucket_knn(prefix: str, k: int) -> str:
     from the same bytes the Spark query rebuilt its result from."""
     from .mat import mat_glob
 
-    dot = ("list_dot_product(CAST(q.qv AS DOUBLE[]), CAST(c.cv AS DOUBLE[]))"
-           " / (sqrt(list_dot_product(CAST(q.qv AS DOUBLE[]),"
-           " CAST(q.qv AS DOUBLE[])))"
-           " * sqrt(list_dot_product(CAST(c.cv AS DOUBLE[]),"
-           " CAST(c.cv AS DOUBLE[]))))")
     return f"""
 WITH c AS (SELECT * FROM read_parquet('{mat_glob(prefix + "_c")}')),
 q AS (SELECT * FROM read_parquet('{mat_glob(prefix + "_q")}')),
 scored AS (
-  SELECT q.qid, c.cid, round({dot}, 6) AS sim
+  SELECT q.qid, c.cid, round({sql_cosine("q.qv", "c.cv")}, 6) AS sim
   FROM q JOIN c USING (bucket) WHERE q.qid <> c.cid)
-SELECT qid, cid, sim, rn FROM (
-  SELECT qid, cid, sim,
-         row_number() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rn
-  FROM scored) WHERE rn <= {k}
+{sql_cosine_topk("scored", k)}
 """
 
 

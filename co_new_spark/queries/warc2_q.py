@@ -41,10 +41,9 @@ from pyspark.sql import functions as F
 
 from ..functions import gzipw, warc
 from ..sources.tables import load
+from .warc_q import response_record, uri_id, sql_response_records
 
 _GZ_SHARDS = 6
-_URI_PREFIX = "https://example.org/d"
-_DECOY = "WARC/1.0\r\n"
 
 
 def t_warc_gz(spark: SparkSession, sf: str) -> DataFrame:
@@ -55,8 +54,7 @@ def t_warc_gz(spark: SparkSession, sf: str) -> DataFrame:
         members = []
         for did, text in zip(pdf["doc_id"], pdf["text"]):
             did = int(did)
-            payload = ((_DECOY if did % 5 == 0 else "") + text).encode("utf-8")
-            rec = warc.build_record(f"{_URI_PREFIX}{did}", payload)
+            rec = response_record(did, text)
             fname = f"rec{did}.warc" if did % 3 == 0 else None
             m = bytearray(gzipw.build_member(rec, fname=fname))
             if did % 11 == 0:
@@ -78,7 +76,7 @@ def t_warc_gz(spark: SparkSession, sf: str) -> DataFrame:
                     f"member at {m['offset']} holds {len(inner)} records")
             r = inner[0]
             rows.append((shard,
-                         int(r["uri"].removeprefix(_URI_PREFIX)),
+                         uri_id(r["uri"]),
                          r["content_length"], r["header_length"],
                          int(m["fname"] is not None),
                          int(m["crc_ok"]), int(m["isize_ok"])))
@@ -106,25 +104,8 @@ def t_warc_gz(spark: SparkSession, sf: str) -> DataFrame:
             .orderBy("shard"))
 
 
-_CRLF_SQL = "chr(13) || chr(10)"
-
 SQL_WARC_GZ = f"""
-WITH d AS (
-  SELECT doc_id, doc_id % {_GZ_SHARDS} AS shard,
-         CASE WHEN doc_id % 5 = 0
-              THEN 'WARC/1.0' || {_CRLF_SQL} ELSE '' END || text AS payload
-  FROM documents
-), r AS (
-  SELECT shard, doc_id, CAST(strlen(payload) AS BIGINT) AS clen,
-         CAST(strlen(
-           'WARC/1.0' || {_CRLF_SQL} ||
-           'WARC-Type: response' || {_CRLF_SQL} ||
-           'WARC-Target-URI: {_URI_PREFIX}' || CAST(doc_id AS VARCHAR)
-             || {_CRLF_SQL} ||
-           'Content-Length: ' || CAST(strlen(payload) AS VARCHAR)
-             || {_CRLF_SQL} || {_CRLF_SQL}) AS BIGINT) AS hlen
-  FROM d
-)
+WITH {sql_response_records(_GZ_SHARDS)}
 SELECT shard, CAST(count(*) AS BIGINT) AS n_members,
        CAST(sum(clen) AS BIGINT) AS payload_bytes,
        CAST(sum(hlen) AS BIGINT) AS header_bytes,

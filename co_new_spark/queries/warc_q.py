@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import warc
@@ -41,6 +41,88 @@ from ..sources.tables import load
 _N_SHARDS = 8
 _URI_PREFIX = "https://example.org/d"
 _DECOY = "WARC/1.0\r\n"
+_CRLF_SQL = "chr(13) || chr(10)"
+
+
+# ---------------------------------------------------------------------------
+# The record frame, one builder per engine: the header string, the url-md5
+# shard (the container FILE unit) and the per-shard exclusive offset window
+# (a record's byte offset = the sum of the earlier records' sizes in its
+# shard).  functions/warc.build_record is the byte-level twin the
+# applyInPandas entries build with.
+# ---------------------------------------------------------------------------
+
+
+def warc_header(warc_type: str, uri: Column, content_length: Column) -> Column:
+    """The WARC/1.0 header block (CRLF lines, blank-line terminated)."""
+    return F.concat(
+        F.lit(f"WARC/1.0\r\nWARC-Type: {warc_type}\r\nWARC-Target-URI: "),
+        uri,
+        F.lit("\r\nContent-Length: "),
+        content_length.cast("string"),
+        F.lit("\r\n\r\n"))
+
+
+def url_shard(n_shards: int) -> Column:
+    """The record's shard: the first md5 byte of ``url`` mod ``n_shards``."""
+    return F.pmod(F.conv(F.substring(F.md5("url"), 1, 2), 16, 10).cast("long"),
+                  F.lit(n_shards))
+
+
+def shard_offset(size: Column, *order) -> Column:
+    """Exclusive running sum of ``size`` within ``shard`` in ``order``."""
+    wo = (Window.partitionBy("shard").orderBy(*order)
+          .rowsBetween(Window.unboundedPreceding, -1))
+    return F.coalesce(F.sum(size).over(wo), F.lit(0))
+
+
+def sql_warc_header(warc_type: str, uri: str, content_length: str,
+                    extra: str = "") -> str:
+    """The DuckDB twin of ``warc_header`` over SQL expressions; ``extra``
+    is a string expression of header lines (each CRLF-terminated) placed
+    between WARC-Target-URI and Content-Length, as build_record does."""
+    return (f"'WARC/1.0' || {_CRLF_SQL} || "
+            f"'WARC-Type: ' || {warc_type} || {_CRLF_SQL} || "
+            f"'WARC-Target-URI: ' || {uri} || {_CRLF_SQL} || {extra}"
+            f"'Content-Length: ' || CAST({content_length} AS VARCHAR) || "
+            f"{_CRLF_SQL} || {_CRLF_SQL}")
+
+
+def sql_url_shard(n_shards: int) -> str:
+    return f"CAST(concat('0x', substring(md5(url), 1, 2)) AS BIGINT) % {n_shards}"
+
+
+def sql_shard_offset(size: str, order: str) -> str:
+    return (f"COALESCE(sum({size}) OVER (PARTITION BY shard ORDER BY {order} "
+            "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)")
+
+
+def response_record(did: int, text: str) -> bytes:
+    """Document ``did``'s response record; every 5th payload leads with a
+    decoy ``WARC/1.0`` line (SQL twin: ``sql_response_records``)."""
+    payload = ((_DECOY if did % 5 == 0 else "") + text).encode("utf-8")
+    return warc.build_record(f"{_URI_PREFIX}{did}", payload)
+
+
+def uri_id(uri: str) -> int:
+    return int(uri.removeprefix(_URI_PREFIX))
+
+
+def sql_response_records(n_shards: int) -> str:
+    """CTEs ``d`` (shard, doc_id, payload) and ``r`` (shard, doc_id, clen,
+    hlen): the documents' response records, sized without building them."""
+    return f"""d AS (
+  SELECT doc_id, doc_id % {n_shards} AS shard,
+         CASE WHEN doc_id % 5 = 0
+              THEN 'WARC/1.0' || {_CRLF_SQL} ELSE '' END || text AS payload
+  FROM documents
+), r AS (
+  SELECT shard, doc_id, CAST(strlen(payload) AS BIGINT) AS clen,
+         CAST(strlen({sql_warc_header(
+             "'response'", f"'{_URI_PREFIX}' || CAST(doc_id AS VARCHAR)",
+             "strlen(payload)")}) AS BIGINT) AS hlen
+  FROM d
+)"""
 
 
 def t_warc_scan(spark: SparkSession, sf: str) -> DataFrame:
@@ -50,11 +132,8 @@ def t_warc_scan(spark: SparkSession, sf: str) -> DataFrame:
 
     def per_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("doc_id")
-        parts = []
-        for did, text in zip(pdf["doc_id"], pdf["text"]):
-            did = int(did)
-            payload = ((_DECOY if did % 5 == 0 else "") + text).encode("utf-8")
-            parts.append(warc.build_record(f"{_URI_PREFIX}{did}", payload))
+        parts = [response_record(int(did), text)
+                 for did, text in zip(pdf["doc_id"], pdf["text"])]
         recs = warc.parse_warc(b"".join(parts))
         if len(recs) != len(pdf):  # a mis-framed stream must not pass silently
             raise ValueError(
@@ -62,7 +141,7 @@ def t_warc_scan(spark: SparkSession, sf: str) -> DataFrame:
         shard = int(pdf["shard"].iloc[0])
         return pd.DataFrame(
             [(shard, r["offset"], r["content_length"], r["header_length"],
-              int(r["uri"].removeprefix(_URI_PREFIX))) for r in recs],
+              uri_id(r["uri"])) for r in recs],
             columns=["shard", "offset", "content_length", "header_length",
                      "uri_id"])
 
@@ -84,29 +163,10 @@ def t_warc_scan(spark: SparkSession, sf: str) -> DataFrame:
             .orderBy("shard"))
 
 
-_CRLF_SQL = "chr(13) || chr(10)"
-
 SQL_WARC_SCAN = f"""
-WITH d AS (
-  SELECT doc_id, doc_id % {_N_SHARDS} AS shard,
-         CASE WHEN doc_id % 5 = 0
-              THEN 'WARC/1.0' || {_CRLF_SQL} ELSE '' END || text AS payload
-  FROM documents
-), r AS (
-  SELECT shard, doc_id, CAST(strlen(payload) AS BIGINT) AS clen,
-         CAST(strlen(
-           'WARC/1.0' || {_CRLF_SQL} ||
-           'WARC-Type: response' || {_CRLF_SQL} ||
-           'WARC-Target-URI: {_URI_PREFIX}' || CAST(doc_id AS VARCHAR)
-             || {_CRLF_SQL} ||
-           'Content-Length: ' || CAST(strlen(payload) AS VARCHAR)
-             || {_CRLF_SQL} || {_CRLF_SQL}) AS BIGINT) AS hlen
-  FROM d
-), o AS (
+WITH {sql_response_records(_N_SHARDS)}, o AS (
   SELECT shard, doc_id, clen, hlen,
-         COALESCE(sum(hlen + clen + 4) OVER (
-           PARTITION BY shard ORDER BY doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
+         {sql_shard_offset("hlen + clen + 4", "doc_id")} AS off
   FROM r
 )
 SELECT shard, CAST(count(*) AS BIGINT) AS n_records,
@@ -121,7 +181,7 @@ FROM o GROUP BY shard ORDER BY shard
 
 # ---------------------------------------------------------------------------
 # web_wet_export — WET conversion records (the OTHER Common Crawl container:
-# WARC-Type: conversion, payload = the extracted text of the response it
+# record type 'conversion', payload = the extracted text of the response it
 # refers to).  A user of the CC ecosystem exports WET next to WARC; this
 # entry derives the full WET shard geometry — per-record header + payload
 # lengths, running byte offsets, extraction yield — from the pages fixture
@@ -139,36 +199,21 @@ _WET_SHARDS = 4
 
 
 def t_wet_export(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from ..functions import text as tx
-    from .webtext_q import _fixture
+    from .webtext_q import _fixture, latest_per_url
 
-    pg = _fixture(spark)
-    w = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
-    latest = (pg.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1))
-    ext = latest.select(
+    ext = latest_per_url(_fixture(spark)).select(
         "url",
         F.length("html").alias("html_bytes"),
         tx.extract_text(F.col("html")).alias("t"))
     rec = ext.select(
         "url", "html_bytes",
         F.octet_length("t").cast("long").alias("clen"),
-        F.pmod(F.conv(F.substring(F.md5("url"), 1, 2), 16, 10).cast("long"),
-               F.lit(_WET_SHARDS)).alias("shard"))
-    hdr = F.concat(
-        F.lit("WARC/1.0\r\nWARC-Type: conversion\r\nWARC-Target-URI: "),
-        F.col("url"),
-        F.lit("\r\nContent-Length: "),
-        F.col("clen").cast("string"),
-        F.lit("\r\n\r\n"))
+        url_shard(_WET_SHARDS).alias("shard"))
+    hdr = warc_header("conversion", F.col("url"), F.col("clen"))
     sized = rec.withColumn("hlen", F.octet_length(hdr).cast("long"))
-    wo = (Window.partitionBy("shard").orderBy("url")
-          .rowsBetween(Window.unboundedPreceding, -1))
     off = sized.withColumn(
-        "off", F.coalesce(F.sum(F.col("hlen") + F.col("clen") + 4).over(wo),
-                          F.lit(0)))
+        "off", shard_offset(F.col("hlen") + F.col("clen") + 4, "url"))
     return (off.groupBy("shard")
             .agg(F.count("*").alias("n_records"),
                  F.sum("clen").alias("text_bytes"),
@@ -182,33 +227,22 @@ def t_wet_export(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _sql_wet_export() -> str:
-    from .webtext_q import FIXTURE_PAGES, _sql_extract_expr
+    from .webtext_q import _sql_extract_expr, sql_latest_per_url
 
     return f"""
-WITH latest AS (
-  SELECT url, html, row_number() OVER (
-           PARTITION BY url ORDER BY warc_ts DESC) AS rn
-  FROM read_parquet('{FIXTURE_PAGES}')
-), rec AS (
+WITH rec AS (
   SELECT url,
          CAST(octet_length(html) AS BIGINT) AS html_bytes,
          CAST(strlen({_sql_extract_expr('decode(html)')}) AS BIGINT) AS clen,
-         CAST(concat('0x', substring(md5(url), 1, 2)) AS BIGINT)
-           % {_WET_SHARDS} AS shard
-  FROM latest WHERE rn = 1
+         {sql_url_shard(_WET_SHARDS)} AS shard
+  FROM {sql_latest_per_url()}
 ), sized AS (
-  SELECT *, CAST(strlen(
-    'WARC/1.0' || {_CRLF_SQL} ||
-    'WARC-Type: conversion' || {_CRLF_SQL} ||
-    'WARC-Target-URI: ' || url || {_CRLF_SQL} ||
-    'Content-Length: ' || CAST(clen AS VARCHAR) || {_CRLF_SQL} || {_CRLF_SQL}
-  ) AS BIGINT) AS hlen
+  SELECT *, CAST(strlen({sql_warc_header("'conversion'", "url", "clen")})
+                 AS BIGINT) AS hlen
   FROM rec
 ), o AS (
   SELECT shard, clen, hlen, html_bytes,
-         COALESCE(sum(hlen + clen + 4) OVER (
-           PARTITION BY shard ORDER BY url
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
+         {sql_shard_offset("hlen + clen + 4", "url")} AS off
   FROM sized
 )
 SELECT shard, CAST(count(*) AS BIGINT) AS n_records,
@@ -239,8 +273,6 @@ _CDX_SHARDS = 4
 
 
 def t_cdx_index(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from .webtext_q import _fixture
 
     pg = _fixture(spark)
@@ -251,24 +283,16 @@ def t_cdx_index(spark: SparkSession, sf: str) -> DataFrame:
         F.array_join(F.reverse(F.split(host, r"\.")), ","),
         F.lit(")"),
         F.when(path == "", "/").otherwise(path))
-    hdr = F.concat(
-        F.lit("WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: "),
-        F.col("url"),
-        F.lit("\r\nContent-Length: "),
-        F.length("html").cast("string"),
-        F.lit("\r\n\r\n"))
+    hdr = warc_header("response", F.col("url"), F.length("html"))
     rec = pg.select(
         "url",
         urlkey.alias("urlkey"),
         F.date_format("warc_ts", "yyyyMMddHHmmss").alias("ts_key"),
         (F.octet_length(hdr) + F.length("html") + 4).cast("long")
         .alias("rec_bytes"),
-        F.pmod(F.conv(F.substring(F.md5("url"), 1, 2), 16, 10).cast("long"),
-               F.lit(_CDX_SHARDS)).alias("shard"))
-    wo = (Window.partitionBy("shard").orderBy("urlkey", "ts_key", "url")
-          .rowsBetween(Window.unboundedPreceding, -1))
-    return (rec.withColumn("offset",
-                           F.coalesce(F.sum("rec_bytes").over(wo), F.lit(0)))
+        url_shard(_CDX_SHARDS).alias("shard"))
+    return (rec.withColumn("offset", shard_offset(
+                F.col("rec_bytes"), "urlkey", "ts_key", "url"))
             .select("shard", "urlkey", "ts_key", "offset", "rec_bytes")
             .orderBy("shard", "urlkey", "ts_key"))
 
@@ -288,21 +312,13 @@ WITH rec AS (
                   '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1)
            END AS urlkey,
          strftime(warc_ts, '%Y%m%d%H%M%S') AS ts_key,
-         CAST(strlen(
-           'WARC/1.0' || {_CRLF_SQL} ||
-           'WARC-Type: response' || {_CRLF_SQL} ||
-           'WARC-Target-URI: ' || url || {_CRLF_SQL} ||
-           'Content-Length: ' || CAST(octet_length(html) AS VARCHAR)
-             || {_CRLF_SQL} || {_CRLF_SQL})
+         CAST(strlen({sql_warc_header("'response'", "url", "octet_length(html)")})
            + octet_length(html) + 4 AS BIGINT) AS rec_bytes,
-         CAST(concat('0x', substring(md5(url), 1, 2)) AS BIGINT)
-           % {_CDX_SHARDS} AS shard
+         {sql_url_shard(_CDX_SHARDS)} AS shard
   FROM read_parquet('{FIXTURE_PAGES}')
 )
 SELECT shard, urlkey, ts_key,
-       COALESCE(sum(rec_bytes) OVER (
-         PARTITION BY shard ORDER BY urlkey, ts_key, url
-         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS offset,
+       {sql_shard_offset("rec_bytes", "urlkey, ts_key, url")} AS offset,
        rec_bytes
 FROM rec ORDER BY shard, urlkey, ts_key
 """
@@ -311,7 +327,7 @@ FROM rec ORDER BY shard, urlkey, ts_key
 # ---------------------------------------------------------------------------
 # web_wat_export — the metadata container (WAT) completing the CC trio:
 # WARC (web_warc_scan) / WET (web_wet_export) / CDX (web_cdx_index) + WAT.
-# One WARC-Type: metadata record per page whose payload is a JSON envelope
+# One 'metadata' record per page whose payload is a JSON envelope
 # carrying the WARC header echo, the actual content length, and the
 # extracted outlink list — the exact artifact the web-graph entries would
 # consume in production instead of re-parsing html.
@@ -356,8 +372,6 @@ def t_wat_export(spark: SparkSession, sf: str) -> DataFrame:
     hex digits as int64, summed per shard), so the oracle proves the JSON
     byte-identical, not just same-length.  Offsets ride the per-shard
     window exactly like WET/CDX — the shard is the WAT file unit."""
-    from pyspark.sql import Window
-
     from .mat import materialize
     from .webgraph import _link_pages
 
@@ -367,25 +381,16 @@ def t_wat_export(spark: SparkSession, sf: str) -> DataFrame:
         "url",
         n_links.alias("n_links"),
         payload.alias("payload"),
-        F.pmod(F.conv(F.substring(F.md5("url"), 1, 2), 16, 10).cast("long"),
-               F.lit(_WAT_SHARDS)).alias("shard"))
-    hdr = F.concat(
-        F.lit("WARC/1.0\r\nWARC-Type: metadata\r\nWARC-Target-URI: "),
-        F.col("url"),
-        F.lit("\r\nContent-Length: "),
-        F.octet_length("payload").cast("string"),
-        F.lit("\r\n\r\n"))
+        url_shard(_WAT_SHARDS).alias("shard"))
+    hdr = warc_header("metadata", F.col("url"), F.octet_length("payload"))
     sized = rec.select(
         "url", "n_links", "shard",
         F.octet_length("payload").cast("long").alias("jlen"),
         F.octet_length(hdr).cast("long").alias("hlen"),
         F.conv(F.substring(F.md5("payload"), 1, 13), 16, 10)
          .cast("long").alias("psum"))
-    wo = (Window.partitionBy("shard").orderBy("url")
-          .rowsBetween(Window.unboundedPreceding, -1))
     off = sized.withColumn(
-        "off", F.coalesce(F.sum(F.col("hlen") + F.col("jlen") + 4).over(wo),
-                          F.lit(0)))
+        "off", shard_offset(F.col("hlen") + F.col("jlen") + 4, "url"))
     return (off.groupBy("shard")
             .agg(F.count("*").alias("n_records"),
                  F.sum("n_links").alias("n_links"),
@@ -417,26 +422,19 @@ WITH pg AS (
            || ']}}}}}}}}' AS payload,
          CAST(len(regexp_extract_all(h, '{_LINK_PAT}', 1)) AS BIGINT)
            AS n_links,
-         CAST(concat('0x', substring(md5(url), 1, 2)) AS BIGINT)
-           % {_WAT_SHARDS} AS shard
+         {sql_url_shard(_WAT_SHARDS)} AS shard
   FROM pg
 ), sized AS (
   SELECT url, n_links, shard,
          CAST(octet_length(CAST(payload AS BLOB)) AS BIGINT) AS jlen,
-         CAST(strlen(
-           'WARC/1.0' || {_CRLF_SQL} ||
-           'WARC-Type: metadata' || {_CRLF_SQL} ||
-           'WARC-Target-URI: ' || url || {_CRLF_SQL} ||
-           'Content-Length: '
-             || CAST(octet_length(CAST(payload AS BLOB)) AS VARCHAR)
-             || {_CRLF_SQL} || {_CRLF_SQL}) AS BIGINT) AS hlen,
+         CAST(strlen({sql_warc_header(
+             "'metadata'", "url", "octet_length(CAST(payload AS BLOB))")})
+           AS BIGINT) AS hlen,
          CAST(concat('0x', substring(md5(payload), 1, 13)) AS BIGINT) AS psum
   FROM rec
 ), o AS (
   SELECT shard, n_links, jlen, hlen, psum,
-         COALESCE(sum(hlen + jlen + 4) OVER (
-           PARTITION BY shard ORDER BY url
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
+         {sql_shard_offset("hlen + jlen + 4", "url")} AS off
   FROM sized
 )
 SELECT shard, CAST(count(*) AS BIGINT) AS n_records,
@@ -471,8 +469,6 @@ _RV_SHARDS = 4
 
 
 def t_warc_revisit(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load(spark, sf, "documents").select("doc_id", "text")
     caps = (docs.select(
                 "doc_id", "text",
@@ -543,6 +539,16 @@ def t_warc_revisit(spark: SparkSession, sf: str) -> DataFrame:
             .orderBy("shard"))
 
 
+_RV_URI_SQL = f"'{_URI_PREFIX}' || CAST(doc_id AS VARCHAR)"
+_RV_HEADER_SQL = sql_warc_header(
+    "CASE WHEN is_resp THEN 'response' ELSE 'revisit' END", _RV_URI_SQL,
+    "CASE WHEN is_resp THEN strlen(text) ELSE 0 END",
+    f"""'WARC-Date: ' || dt || {_CRLF_SQL} ||
+           'WARC-Payload-Digest: md5:' || digest || {_CRLF_SQL} ||
+           CASE WHEN is_resp THEN '' ELSE
+             'WARC-Refers-To-Target-URI: ' || {_RV_URI_SQL} || {_CRLF_SQL} ||
+             'WARC-Refers-To-Date: ' || ref_date || {_CRLF_SQL} END || """)
+
 SQL_WARC_REVISIT = f"""
 WITH caps AS MATERIALIZED (
   SELECT d.doc_id, t.c, d.text, md5(d.text) AS digest,
@@ -568,27 +574,11 @@ r AS (
          CAST(strlen(text) AS BIGINT) AS logical_len,
          CAST(CASE WHEN is_resp THEN strlen(text) ELSE 0 END AS BIGINT)
            AS clen,
-         CAST(strlen(
-           'WARC/1.0' || {_CRLF_SQL} ||
-           'WARC-Type: ' || CASE WHEN is_resp THEN 'response'
-                                 ELSE 'revisit' END || {_CRLF_SQL} ||
-           'WARC-Target-URI: {_URI_PREFIX}' || CAST(doc_id AS VARCHAR)
-             || {_CRLF_SQL} ||
-           'WARC-Date: ' || dt || {_CRLF_SQL} ||
-           'WARC-Payload-Digest: md5:' || digest || {_CRLF_SQL} ||
-           CASE WHEN is_resp THEN '' ELSE
-             'WARC-Refers-To-Target-URI: {_URI_PREFIX}'
-               || CAST(doc_id AS VARCHAR) || {_CRLF_SQL} ||
-             'WARC-Refers-To-Date: ' || ref_date || {_CRLF_SQL} END ||
-           'Content-Length: ' || CAST(CASE WHEN is_resp THEN strlen(text)
-                                            ELSE 0 END AS VARCHAR)
-             || {_CRLF_SQL} || {_CRLF_SQL}) AS BIGINT) AS hlen
+         CAST(strlen({_RV_HEADER_SQL}) AS BIGINT) AS hlen
   FROM elect),
 o AS (
   SELECT shard, is_resp, logical_len, clen, hlen,
-         COALESCE(sum(hlen + clen + 4) OVER (
-           PARTITION BY shard ORDER BY doc_id, c
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
+         {sql_shard_offset("hlen + clen + 4", "doc_id, c")} AS off
   FROM r)
 SELECT shard, CAST(count(*) AS BIGINT) AS n_records,
        CAST(sum(CASE WHEN is_resp THEN 1 ELSE 0 END) AS BIGINT)

@@ -26,6 +26,20 @@ def _fixture(spark: SparkSession) -> DataFrame:
     return spark.read.parquet(FIXTURE_PAGES)
 
 
+def latest_per_url(pages: DataFrame) -> DataFrame:
+    """B9 url-dedup: each url's latest capture (greatest ``warc_ts``)."""
+    w = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
+    return (pages.withColumn("rn", F.row_number().over(w))
+                 .filter(F.col("rn") == 1).drop("rn"))
+
+
+def sql_latest_per_url(src: str = f"read_parquet('{FIXTURE_PAGES}')") -> str:
+    """The DuckDB twin of ``latest_per_url`` over the table ``src``, as a
+    parenthesized relation."""
+    return (f"(SELECT * FROM {src} QUALIFY row_number() OVER ("
+            "PARTITION BY url ORDER BY warc_ts DESC) = 1)")
+
+
 def host_sql(col: str) -> str:
     """THE DuckDB restatement of ``parse_url(col, 'HOST')`` — the one
     authority grammar (scheme, optional userinfo@, host stopped at :port /
@@ -41,16 +55,21 @@ def host_sql(col: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def w_extract_parity(spark: SparkSession, sf: str) -> DataFrame:
-    pg = _fixture(spark)
-    w = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
-    latest = pg.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    ext = latest.withColumn("extracted", tx.extract_text(F.col("html")))
+def extraction_parity(pages: DataFrame) -> DataFrame:
+    """A28 contract over (url, lang, warc_ts, html, text) captures: per
+    lang, the urls after B9 url-dedup (``n_urls``) and those whose engine
+    extraction of html equals the stored text (``n_bytes_identical``)."""
+    ext = latest_per_url(pages).withColumn(
+        "extracted", tx.extract_text(F.col("html")))
     return ext.groupBy("lang").agg(
         F.count("*").alias("n_urls"),
         F.sum(F.when(F.col("extracted") == F.col("text"), 1).otherwise(0))
         .cast("long").alias("n_bytes_identical"),
     )
+
+
+def w_extract_parity(spark: SparkSession, sf: str) -> DataFrame:
+    return extraction_parity(_fixture(spark))
 
 
 def _sql_extract_expr(src: str) -> str:
@@ -70,17 +89,20 @@ def _sql_extract_expr(src: str) -> str:
     return f"trim(regexp_replace({e}, '\\s+', ' ', 'g'))"
 
 
-SQL_EXTRACT_PARITY = f"""
+def sql_extraction_parity(src: str) -> str:
+    """The DuckDB twin of ``extraction_parity`` over the table ``src``."""
+    return f"""
 SELECT lang, CAST(count(*) AS BIGINT) AS n_urls,
        CAST(sum(CASE WHEN extracted = text THEN 1 ELSE 0 END) AS BIGINT)
          AS n_bytes_identical
 FROM (
-  SELECT lang, text,
-         {_sql_extract_expr('decode(html)')} AS extracted,
-         row_number() OVER (PARTITION BY url ORDER BY warc_ts DESC) AS rn
-  FROM read_parquet('{FIXTURE_PAGES}')
-) WHERE rn = 1 GROUP BY lang
+  SELECT lang, text, {_sql_extract_expr('decode(html)')} AS extracted
+  FROM {sql_latest_per_url(src)}
+) GROUP BY lang
 """
+
+
+SQL_EXTRACT_PARITY = sql_extraction_parity(f"read_parquet('{FIXTURE_PAGES}')")
 
 # ---------------------------------------------------------------------------
 # URL canonicalization: messy variant -> canon must round-trip to the original
@@ -565,9 +587,7 @@ def _ccnet_enrich(txt, url):
 
 def w_ccnet_funnel(spark: SparkSession, sf: str) -> DataFrame:
     pg = _fixture(spark)
-    w = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
-    latest = (pg.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1).drop("rn"))
+    latest = latest_per_url(pg)
     doc = latest.select(
         "url", "lang",
         _ccnet_enrich(tx.extract_text(F.col("html")), F.col("url")).alias("t"))
@@ -626,10 +646,7 @@ def w_ccnet_funnel(spark: SparkSession, sf: str) -> DataFrame:
 
 SQL_CCNET_FUNNEL = f"""
 WITH latest AS (
-  SELECT url, lang, html FROM (
-    SELECT url, lang, html,
-           row_number() OVER (PARTITION BY url ORDER BY warc_ts DESC) AS rn
-    FROM read_parquet('{FIXTURE_PAGES}')) WHERE rn = 1
+  SELECT url, lang, html FROM {sql_latest_per_url()}
 ), en AS (
   SELECT url, lang,
          {_sql_extract_expr('decode(html)')}

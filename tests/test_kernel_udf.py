@@ -64,7 +64,7 @@ CASES = {
     "ring_cells_d2": (CELL, knn.ring_cells_d2_udf(1),
                       [list(zip(RING_C12, D2)), [], [], []]),
     "inside": (XY, pip.pip_udf([RING]), [True, False, False, False]),
-    "clip_area": (CELL, coverage.clip_area_udf(RING), [1073741824.0, None, None, 0.0]),
+    "clip_area": (CELL, coverage.clip_area_udf(RING), [1073741824.0, None, None, None]),
     "clip_vertices": (CELL, coverage.clip_vertices_udf(RING),
                       [[(4890916.0, 2051344.0), (4890916.0, 2084112.0),
                         (4858148.0, 2084112.0), (4858148.0, 2051344.0)], [], [], []]),
